@@ -2,30 +2,40 @@
 per-partition lineage (north_rule: "resumable from checkpoint with
 per-partition lineage + metrics").
 
-Stage graph (each stage = parquet dir + manifest + lineage rows):
+Stage graph (each stage = parquet dir + manifest):
 
     documents ─> pages ─> extracted ─┬─> base_triples (R2RML mapping compile)
                                      ├─> alias_dict ─> mentions ─> mention_triples
-                                     └─> edges (MinHash-LSH) ─> canon ─> sameas_triples
+                                     └─> sigs ─> edges (MinHash-LSH) ─> canon ─> sameas_triples
     triples = union(...) ─> bucketed write by subject hash
 
-Resume contract: a stage whose manifest fingerprint (input fingerprint +
-stage version + params) matches on disk is NOT recomputed — its parquet is
-read back. Fingerprints chain, so changing any upstream stage or parameter
-invalidates everything downstream. Lineage rows record (stage, output file,
-row count, fingerprint, wall seconds) per output partition file.
+Commit contract: a stage launches no Spark job beyond its write.  The
+driver then lists its part files and reads each row count from the parquet
+footer.  Lineage lives in ``_manifests/<stage>.json`` (fingerprint, params,
+rows, read-back schema) as one row per output file; there is no
+``_lineage/`` directory.  The stage frame is read from that file list under
+that schema, so no schema-inference or listing job runs.
+
+Resume contract: a stage is NOT recomputed when its manifest fingerprint
+(input fingerprint + stage version + params + upstream fingerprints) matches,
+no upstream checkpoint was rewritten in this run, and every file the manifest
+lists is on disk with its recorded size.  Otherwise the stage, and so every
+checkpoint downstream of it, is recomputed.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
 import time
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from rdflib_r2r_spark import terms
 from rdflib_r2r_spark.compiler import SparkMappingCompiler
@@ -40,7 +50,7 @@ from rdflib_r2r_spark.mapping import (
 from rdflib_r2r_spark.web import components, linking, mentions as men, pages as pg
 from rdflib_r2r_spark.web.extract import EXTRACTOR_VERSION, extract_text
 
-PIPELINE_VERSION = "2"  # v2: mentions stage = distinct pair set (mention_entities)
+PIPELINE_VERSION = "3"  # v3: footer-derived manifests (file list + schema), no _lineage/
 EX = "http://ex.org/"
 
 
@@ -66,6 +76,37 @@ def pages_triples_map() -> TriplesMap:
     )
 
 
+# Spark lists more input paths than this in a parallel listing job; up to
+# it, the driver lists them itself.
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_NULLABLE_KEYS = ("nullable", "containsNull", "valueContainsNull")
+_LINEAGE_SCHEMA = "file string, rows bigint, stage string, fingerprint string, wall_seconds double"
+
+
+def _as_nullable(node):
+    """Schema JSON with every field, element and value nullable, as Spark
+    reads file sources back."""
+    if isinstance(node, list):
+        return [_as_nullable(v) for v in node]
+    if not isinstance(node, dict):
+        return node
+    return {k: True if k in _NULLABLE_KEYS else v if k == "metadata" else _as_nullable(v)
+            for k, v in node.items()}
+
+
+def _read_back_schema(written: StructType, partition_by: str | None, files: list[str]) -> StructType:
+    """The schema ``spark.read.parquet`` infers for the table a write of
+    ``written`` left as ``files``: the data columns made nullable, then the
+    (integral) partition column, int when every ``<col>=<value>/`` directory
+    value fits 32 bits, else long."""
+    fields = [_as_nullable(f.jsonValue()) for f in written.fields if f.name != partition_by]
+    if partition_by:
+        values = [int(f.split(os.sep, 1)[0].partition("=")[2]) for f in files]
+        typ = "integer" if all(-(2**31) <= v < 2**31 for v in values) else "long"
+        fields.append({"name": partition_by, "type": typ, "nullable": True, "metadata": {}})
+    return StructType.fromJson({"type": "struct", "fields": fields})
+
+
 @dataclass
 class StageResult:
     name: str
@@ -87,23 +128,18 @@ class KGPipeline:
     band_rows: int = 2
     threshold: float = 0.5
     resume: bool = True
-    count_rows: bool = True
-    # concurrent submission of independent stages pays off only when stages
-    # are overhead-dominated (small inputs); at scale the heavy stages thrash
-    # each other's executors, so default to sequential.
-    parallel_stages: bool = False
     # checkpoint_stages=False fuses all intermediate stages into one DAG:
     # multi-consumer intermediates are memory/disk-persisted instead of
     # parquet round-tripped, and only the final bucketed triple table (plus
-    # its lineage) hits storage. Use for throughput runs; checkpointed mode
+    # its manifest) hits storage. Use for throughput runs; checkpointed mode
     # (default) is the resumable production shape — on a cluster its writes
     # go to distributed storage, locally they serialize on one disk.
     checkpoint_stages: bool = True
-    # fused mode: persist ONLY small numeric intermediates. Persisting the
-    # big text stage is a measured pessimization (columnar cache of 2.5M
-    # strings reads slower than recomputing the extraction inline — inline
-    # keeps the whole chain pipelined in one codegen pass per consumer).
-    _MULTI_CONSUMER = ("sigs",)
+    # fused mode persists the multi-consumer frames.  'extracted' (big text,
+    # 4 consumers) is also materialized once: round-7 A/B at sf1.0 (min-of-2
+    # fused walls, widened scans) measured persist 7.64s < inline 8.46s <
+    # parquet round-trip 9.98s.
+    _PERSISTED = ("sigs", "extracted")
     results: dict[str, StageResult] = field(default_factory=dict)
 
     # -- checkpoint/lineage machinery ----------------------------------------
@@ -139,42 +175,61 @@ class KGPipeline:
     def _manifest_path(self, name: str) -> str:
         return os.path.join(self.workdir, "_manifests", f"{name}.json")
 
+    def _resumable(self, name: str, upstream: list[str], fp: str) -> dict | None:
+        """The stage's manifest if the stage may be read back instead of
+        recomputed: same fingerprint, no upstream checkpoint rewritten in
+        this run, and every listed file present with its recorded size (a
+        partial table is recomputed, never read)."""
+        if not self.resume or any(self.results[u].path and not self.results[u].resumed
+                                  for u in upstream):
+            return None
+        try:
+            with open(self._manifest_path(name)) as f:
+                manifest = json.load(f)
+        except OSError:
+            return None
+        if manifest.get("fingerprint") != fp:
+            return None
+        path = os.path.join(self.workdir, name)
+        for f in manifest["files"]:
+            p = os.path.join(path, f["file"])
+            if not os.path.isfile(p) or os.path.getsize(p) != f["bytes"]:
+                return None
+        return manifest
+
+    def _read(self, path: str, manifest: dict) -> DataFrame:
+        """The stage table, from the manifest's file list and schema: no
+        schema-inference job, and no listing job however many files."""
+        schema = StructType.fromJson(manifest["schema"])
+        files = [os.path.join(path, f["file"]) for f in manifest["files"]]
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        conf = self.spark.conf
+        threshold = conf.get(_LISTING_THRESHOLD)
+        conf.set(_LISTING_THRESHOLD, str(max(len(files), int(threshold))))
+        try:
+            return self.spark.read.schema(schema).option("basePath", path).parquet(*files)
+        finally:
+            conf.set(_LISTING_THRESHOLD, threshold)
+
     def stage(self, name: str, upstream: list[str], compute, partition_by: str | None = None) -> DataFrame:
-        """Run-or-resume one stage; persist parquet + manifest + lineage."""
+        """Run-or-resume one stage; persist parquet + manifest."""
         fp = self._fingerprint(name, upstream)
         path = os.path.join(self.workdir, name)
-        mpath = self._manifest_path(name)
         t0 = time.time()
-        # round-7 A/B at sf1.0 (min-of-2 fused walls, widened scans):
-        # persist 7.64s < inline 8.46s < parquet 9.98s — the columnar cache
-        # won once extraction went JVM-native and the scan was widened, so
-        # persist is now the default; env still selects the others.
-        extract_mat = os.environ.get("SPARK_GRAFT_EXTRACT_MAT", "persist")
-        fused_inline = {"triples"} if extract_mat != "parquet" else {"triples", "extracted"}
-        if not self.checkpoint_stages and name not in fused_inline:
-            # fused: no materialization, except persisting small numeric
-            # multi-consumer frames. 'extracted' (big text, 4 consumers)
-            # materialization strategy is measured, not assumed —
-            # SPARK_GRAFT_EXTRACT_MAT selects parquet round-trip (default;
-            # was fastest with the pandas-UDF extractor), persist
-            # (MEMORY_AND_DISK columnar cache; single-box disk write drops
-            # out), or inline (recompute per consumer; viable now the
-            # native extractor is pure codegen JVM regex).
+        if not self.checkpoint_stages and name != "triples":
             df = compute()
-            if name in self._MULTI_CONSUMER:
+            if name in self._PERSISTED:
                 df = df.persist()
-            elif name == "extracted" and extract_mat == "persist":
-                df = df.persist()
+            if name == "extracted":
                 df.count()  # materialize once, under this stage's wall
             self.results[name] = StageResult(name, "", fp, False, time.time() - t0, None)
             return df
-        if self.resume and os.path.exists(mpath):
-            with open(mpath) as f:
-                manifest = json.load(f)
-            if manifest.get("fingerprint") == fp:
-                self.results[name] = StageResult(name, path, fp, True, time.time() - t0,
-                                                 manifest.get("rows"))
-                return self.spark.read.parquet(path)
+        manifest = self._resumable(name, upstream, fp)
+        if manifest is not None:
+            self.results[name] = StageResult(name, path, fp, True, time.time() - t0,
+                                             manifest["rows"])
+            return self._read(path, manifest)
 
         df = compute()
         writer = df.write.mode("overwrite")
@@ -182,126 +237,70 @@ class KGPipeline:
             writer = writer.partitionBy(partition_by)
         writer.parquet(path)
 
-        out = self.spark.read.parquet(path)
-        lineage = (
-            out.withColumn("file", F.input_file_name())
-            .groupBy("file")
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumn("stage", F.lit(name))
-            .withColumn("fingerprint", F.lit(fp))
-            .withColumn("wall_seconds", F.lit(time.time() - t0))
-        )
-        lpath = os.path.join(self.workdir, "_lineage", name)
-        lineage.write.mode("overwrite").parquet(lpath)
-        rows = None
-        if self.count_rows:
-            lrows = self.spark.read.parquet(lpath).agg(F.sum("rows")).collect()[0][0]
-            rows = int(lrows or 0)
+        # lineage from the footers: metadata reads on the driver, no job
+        rels = sorted(glob.glob("**/*.parquet", root_dir=path, recursive=True))
+        files = [{"file": f, "rows": pq.read_metadata(os.path.join(path, f)).num_rows,
+                  "bytes": os.path.getsize(os.path.join(path, f))} for f in rels]
+        rows = sum(f["rows"] for f in files)
+        manifest = {"fingerprint": fp, "params": self._params(), "rows": rows,
+                    "schema": _read_back_schema(df.schema, partition_by, rels).jsonValue(),
+                    "files": files, "wall_seconds": time.time() - t0}
+        mpath = self._manifest_path(name)
         os.makedirs(os.path.dirname(mpath), exist_ok=True)
-        with open(mpath, "w") as f:
-            json.dump({"fingerprint": fp, "rows": rows, "params": self._params(),
-                       "wall_seconds": time.time() - t0}, f)
+        with open(mpath + ".tmp", "w") as f:
+            json.dump(manifest, f)
+        os.replace(mpath + ".tmp", mpath)
         self.results[name] = StageResult(name, path, fp, False, time.time() - t0, rows)
-        return out
+        return self._read(path, manifest)
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.workdir, "_lineage", "*"))
+        """One row per output file of every written stage, from the
+        manifests (no Spark job until an action)."""
+        rows = []
+        for mpath in sorted(glob.glob(os.path.join(self.workdir, "_manifests", "*.json"))):
+            with open(mpath) as f:
+                m = json.load(f)
+            name = os.path.basename(mpath).removesuffix(".json")
+            rows += [(os.path.join(self.workdir, name, f["file"]), f["rows"], name,
+                      m["fingerprint"], m["wall_seconds"]) for f in m.get("files", [])]
+        return self.spark.createDataFrame(rows, _LINEAGE_SCHEMA)
 
     # -- stages ---------------------------------------------------------------
-
-    def _parallel(self, jobs: dict[str, tuple]) -> dict[str, DataFrame]:
-        """Run independent stages concurrently — Spark's scheduler interleaves
-        their jobs across the executor pool, amortizing per-stage fixed costs
-        (write/read-back/lineage). Falls back to sequential when disabled."""
-        if not self.parallel_stages or len(jobs) == 1:
-            return {n: self.stage(n, up, fn, **kw) for n, (up, fn, kw) in jobs.items()}
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-            futs = {
-                n: pool.submit(self.stage, n, up, fn, **kw)
-                for n, (up, fn, kw) in jobs.items()
-            }
-            return {n: f.result() for n, f in futs.items()}
 
     def run(self) -> DataFrame:
         from rdflib_r2r_spark.session import widen_scan
 
         spark = self.spark
         docs_path = os.path.join(self.sf_dir, "documents.parquet")
-        docs = widen_scan(spark.read.parquet(docs_path), cache_key=docs_path)
-
-        pages = self.stage("pages", [], lambda: pg.pages_from_documents(docs))
-
-        extracted = self.stage(
-            "extracted",
-            ["pages"],
-            lambda: pages.select(
-                "url", "warc_ts", "lang", extract_text(F.col("html")).alias("text")
-            ),
-        )
-
-        branch = self._parallel(
-            {
-                "base_triples": (
-                    ["extracted"],
-                    lambda: SparkMappingCompiler(spark, {"pages": extracted}).compile(
-                        [pages_triples_map()]
-                    ),
-                    {},
-                ),
-                "alias_dict": (
-                    ["extracted"],
-                    lambda: men.build_alias_dict(extracted, size=self.dict_size),
-                    {},
-                ),
-                "sigs": (
-                    ["extracted"],
-                    lambda: linking.signatures(extracted, num_hashes=self.num_hashes),
-                    {},
-                ),
-            }
-        )
-        base_triples = branch["base_triples"]
-        alias_dict = branch["alias_dict"]
-        sigs = branch["sigs"]
-
+        # the corpus is opened only when 'pages' is computed: reading it
+        # infers its schema in a job, which a resumed run must not pay
+        pages = self.stage("pages", [], lambda: pg.pages_from_documents(
+            widen_scan(spark.read.parquet(docs_path), cache_key=docs_path)))
+        extracted = self.stage("extracted", ["pages"], lambda: pages.select(
+            "url", "warc_ts", "lang", extract_text(F.col("html")).alias("text")))
+        base_triples = self.stage("base_triples", ["extracted"], lambda: SparkMappingCompiler(
+            spark, {"pages": extracted}).compile([pages_triples_map()]))
+        alias_dict = self.stage("alias_dict", ["extracted"],
+                                lambda: men.build_alias_dict(extracted, size=self.dict_size))
+        sigs = self.stage("sigs", ["extracted"],
+                          lambda: linking.signatures(extracted, num_hashes=self.num_hashes))
         # minhash signatures are checkpointed above, so the candidate
         # self-join and verification read parquet instead of re-hashing
         # the corpus on every branch of the join.
-        edges = self.stage(
-            "edges",
-            ["sigs"],
-            lambda: linking.near_dup_edges(
-                extracted, num_hashes=self.num_hashes,
-                band_rows=self.band_rows, threshold=self.threshold,
-                sigs=sigs,
-            ),
-        )
-
-        branch2 = self._parallel(
-            {
-                "mentions": (
-                    ["extracted", "alias_dict"],
-                    # fast path: per-row array_intersect against the inlined
-                    # dict — no 100-tokens-per-doc explode row blowup; emits
-                    # the distinct (url, entity_id) pair set directly
-                    lambda: men.mention_entities(extracted, alias_dict),
-                    {},
-                ),
-                "canon": (
-                    ["edges"],
-                    # hops=3: near-dup clusters are shallow; 3 min-propagation
-                    # hops per checkpointed round covers diameter 3 in ONE
-                    # barrier (measured 3.7s vs 4.4s at hops=2 on the rep500
-                    # edge set) — the barrier count is the serial term
-                    lambda: components.canonical_map(edges, hops_per_round=3),
-                    {},
-                ),
-            }
-        )
-        mention_rows = branch2["mentions"]
-        canon = branch2["canon"]
+        edges = self.stage("edges", ["sigs"], lambda: linking.near_dup_edges(
+            extracted, num_hashes=self.num_hashes, band_rows=self.band_rows,
+            threshold=self.threshold, sigs=sigs))
+        # fast path: per-row array_intersect against the inlined dict — no
+        # 100-tokens-per-doc explode row blowup; emits the distinct
+        # (url, entity_id) pair set directly
+        mention_rows = self.stage("mentions", ["extracted", "alias_dict"],
+                                  lambda: men.mention_entities(extracted, alias_dict))
+        # hops=3: near-dup clusters are shallow; 3 min-propagation hops per
+        # checkpointed round covers diameter 3 in ONE barrier (measured 3.7s
+        # vs 4.4s at hops=2 on the rep500 edge set) — the barrier count is
+        # the serial term
+        canon = self.stage("canon", ["edges"],
+                           lambda: components.canonical_map(edges, hops_per_round=3))
 
         nb = self.num_buckets
 

@@ -107,13 +107,22 @@ def get_spark(
     return spark
 
 
-# (applicationId, defaultParallelism, caller key) -> bool.  The guard
-# probe (`df.rdd.getNumPartitions()`) costs a physical-planning pass plus
-# a Py4J round trip (measured 60-90 ms) PER CALL, and `_t()` pays it on
-# every read of a widen-eligible table even when the decision can never
-# change within a session (the inputs are static files).  Caching the
-# decision is purely a driver-overhead fix: the chosen plan is identical.
+# (applicationId, defaultParallelism, caller key) -> ((size, mtime_ns) of
+# the key's file, bool).  The guard probe (`df.rdd.getNumPartitions()`)
+# costs a physical-planning pass plus a Py4J round trip (measured 60-90 ms)
+# PER CALL, and `_t()` pays it on every read of a widen-eligible table.
+# Caching the decision is purely a driver-overhead fix: the chosen plan is
+# identical.  A rewritten input (new size or mtime) is probed again and
+# replaces its entry.
 _WIDEN_DECISION: dict = {}
+
+
+def _file_version(path: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:  # not a local path
+        return None
+    return st.st_size, st.st_mtime_ns
 
 
 def widen_scan(df, cache_key: str | None = None):
@@ -128,17 +137,20 @@ def widen_scan(df, cache_key: str | None = None):
     The exchange moves corpus bytes once; the starved stages it unblocks
     cost 10-100x more CPU per byte than the move.
 
-    ``cache_key`` (e.g. the parquet path) memoizes the narrow-scan probe
-    per (session, parallelism, key); pass it when the same static input is
-    read repeatedly in one session."""
+    ``cache_key`` (the parquet path) memoizes the narrow-scan probe per
+    (session, parallelism, key) and the file's size and mtime; pass it when
+    the same input is read repeatedly in one session."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     if cache_key is not None:
         key = (spark.sparkContext.applicationId, target, cache_key)
-        dec = _WIDEN_DECISION.get(key)
-        if dec is None:
+        version = _file_version(cache_key)
+        hit = _WIDEN_DECISION.get(key)
+        if hit is not None and hit[0] == version:
+            dec = hit[1]
+        else:
             dec = df.rdd.getNumPartitions() < target
-            _WIDEN_DECISION[key] = dec
+            _WIDEN_DECISION[key] = (version, dec)
     else:
         dec = df.rdd.getNumPartitions() < target
     if dec:

@@ -107,3 +107,29 @@ def test_never_numeric_regex_is_conservative():
     # and clearly-non-numeric lexicals are pruned
     for v in ["1997-05-01", "ASIA", "", "<http://x>", "12:30", "a1"]:
         assert _never_numeric_value(v), v
+
+
+def test_widen_decision_follows_input_rewrites(spark, tmp_path):
+    """The memoized narrow-scan decision is served while the input file is
+    unchanged and probed again once it is rewritten (new size / mtime)."""
+    import os
+
+    from rdflib_r2r_spark import session
+
+    target = spark.sparkContext.defaultParallelism
+    if target < 2:
+        pytest.skip("a one-core session never widens")
+    p = str(tmp_path / "narrow.parquet")
+    spark.range(10).coalesce(1).write.parquet(p)
+    assert session.widen_scan(spark.read.parquet(p), cache_key=p).rdd.getNumPartitions() == target
+    key = (spark.sparkContext.applicationId, target, p)
+    version, dec = session._WIDEN_DECISION[key]
+    assert dec is True and version == session._file_version(p)
+    # plant the opposite decision: an unchanged input is served from the cache
+    session._WIDEN_DECISION[key] = (version, False)
+    assert session.widen_scan(spark.read.parquet(p), cache_key=p).rdd.getNumPartitions() == 1
+    # rewrite the input: the stale entry is re-probed and replaced
+    spark.range(20).coalesce(1).write.mode("overwrite").parquet(p)
+    os.utime(p, ns=(version[1] + 10**9, version[1] + 10**9))
+    assert session.widen_scan(spark.read.parquet(p), cache_key=p).rdd.getNumPartitions() == target
+    assert session._WIDEN_DECISION[key] == (session._file_version(p), True)

@@ -65,12 +65,12 @@ def test_bi7_exists_matches_on_raw(registry, spark):
     assert "__raw0__exr" in plan, "bsbm_bi7 EXISTS fell back to lexical match"
 
 
-def test_raw_binding_eligibility_guards():
+def test_raw_binding_eligibility_guards(spark):
+    # Slot/F.col need an active session, hence the (unused) fixture
     from pyspark.sql import types as T
 
-    from rdflib_r2r_spark.mapping import LogicalSource, SubjectMap, TriplesMap
-    from rdflib_r2r_spark.sparql.bgp import BGPCompiler, Occurrence, Slot
     from rdflib_r2r_spark.mapping import TermMap
+    from rdflib_r2r_spark.sparql.bgp import BGPCompiler, Occurrence, Slot
 
     comp = BGPCompiler.__new__(BGPCompiler)  # _raw_binding needs no state
     comp.compiler = None

@@ -5,6 +5,12 @@ pure-Python reference emission, and checkpoint-resume semantics.
 
 from __future__ import annotations
 
+import glob
+import os
+import re
+import shutil
+from dataclasses import dataclass, field
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -168,6 +174,117 @@ def test_pipeline_pr_vs_reference(spark, docs_pd, tmp_path):
     pipe3 = KGPipeline(spark, SF_DIR, str(tmp_path / "kg"), dict_size=10)
     pipe3.run()
     assert not pipe3.results["alias_dict"].resumed
+
+
+STAGES = ("pages", "extracted", "base_triples", "alias_dict", "sigs", "edges",
+          "mentions", "canon", "triples")
+
+
+@dataclass
+class RecordingPipeline(KGPipeline):
+    """KGPipeline that keeps the frame each stage returned."""
+
+    frames: dict = field(default_factory=dict)
+
+    def stage(self, name, upstream, compute, partition_by=None):
+        self.frames[name] = super().stage(name, upstream, compute, partition_by)
+        return self.frames[name]
+
+
+def _jobs_of_run(spark, pipe, group):
+    """Run ``pipe`` under job group ``group``; the ids of the Spark jobs the
+    run launched before returning its triple frame."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        pipe.run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _assert_committed(spark, pipe, names):
+    """For every stage in ``names``: its lineage rows sum to
+    ``StageResult.rows`` and to a count of the written table, and the frame
+    the stage returned has the schema ``spark.read.parquet`` infers.  For
+    ``triples``, the lineage rows per ``subj_bucket=i`` directory equal a
+    ``groupBy`` on the written table."""
+    lineage = pipe.lineage().collect()
+    for name in names:
+        res = pipe.results[name]
+        written = spark.read.parquet(res.path)
+        lin_rows = sum(r["rows"] for r in lineage if r["stage"] == name)
+        assert lin_rows == res.rows == written.count(), name
+        assert pipe.frames[name].schema == written.schema, name
+    per_bucket: dict[int, int] = {}
+    for r in lineage:
+        if r["stage"] == "triples":
+            b = int(re.search(r"subj_bucket=(\d+)", r["file"]).group(1))
+            per_bucket[b] = per_bucket.get(b, 0) + r["rows"]
+    written = spark.read.parquet(pipe.results["triples"].path)
+    assert per_bucket == {r["subj_bucket"]: r["count"]
+                          for r in written.groupBy("subj_bucket").count().collect()}
+
+
+@pytest.fixture(scope="module")
+def built(spark, tmp_path_factory):
+    """A fresh checkpointed build: (workdir, pipeline)."""
+    wd = str(tmp_path_factory.mktemp("kg_built"))
+    pipe = RecordingPipeline(spark, SF_DIR, wd)
+    pipe.run()
+    return wd, pipe
+
+
+def test_checkpointed_stages_commit_from_footers(spark, built):
+    """Fresh and resumed checkpointed stages: footer lineage, rows and the
+    read-back schema agree with the written tables, and a fully resumed run
+    launches no Spark job before the caller's first action."""
+    wd, fresh = built
+    assert not any(r.resumed for r in fresh.results.values())
+    _assert_committed(spark, fresh, STAGES)
+    assert not os.path.exists(os.path.join(wd, "_lineage"))
+
+    resumed = RecordingPipeline(spark, SF_DIR, wd)
+    assert _jobs_of_run(spark, resumed, "resumed_run") == []
+    assert all(r.resumed for r in resumed.results.values())
+    _assert_committed(spark, resumed, STAGES)
+
+
+def test_fused_triples_commit_from_footers(spark, tmp_path):
+    wd = str(tmp_path / "kg")
+    try:
+        fresh = RecordingPipeline(spark, SF_DIR, wd, checkpoint_stages=False, resume=False)
+        fresh.run()
+        assert not fresh.results["triples"].resumed
+        _assert_committed(spark, fresh, ["triples"])
+        resumed = RecordingPipeline(spark, SF_DIR, wd, checkpoint_stages=False)
+        resumed.run()
+        assert resumed.results["triples"].resumed
+        _assert_committed(spark, resumed, ["triples"])
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_resume_recomputes_a_damaged_stage_and_downstream(spark, built, tmp_path):
+    """A part file the manifest lists that is missing (sigs) or has another
+    size (mentions) makes the stage recompute instead of reading what is
+    left, and every stage downstream of it recomputes too."""
+    src, fresh = built
+    wd = str(tmp_path / "kg")
+    shutil.copytree(src, wd)
+
+    def part_files(stage):
+        return sorted(glob.glob(os.path.join(wd, stage, "**", "*.parquet"), recursive=True))
+
+    os.remove(part_files("sigs")[0])
+    with open(part_files("mentions")[0], "ab") as f:
+        f.write(b"\0")
+    pipe = KGPipeline(spark, SF_DIR, wd)
+    triples = pipe.run()
+    recomputed = {n for n, r in pipe.results.items() if not r.resumed}
+    assert recomputed == {"sigs", "edges", "canon", "mentions", "triples"}
+    assert triples.count() == pipe.results["triples"].rows == fresh.results["triples"].rows
+    assert spark.read.parquet(os.path.join(wd, "sigs")).count() == fresh.results["sigs"].rows
 
 
 def test_numeric_band_values_give_same_candidates(spark, docs):
