@@ -1256,79 +1256,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["q_snapshot_diff"] = q_snapshot_diff
 
-    return _driver_window_order(q)
+    return q
 
 
-# The driver's correctness gate hashes only the FIRST 50 entries of queries()
-# in insertion order.  Put exactly one witness per SURVEY §2 operator family
-# plus every benchmark headliner (BSBM, TPC-H, dedup/ANN/multimodal) inside
-# that window; redundant second witnesses sit past position 50 and are
-# verified by scripts/check_contract.py instead.
 # mixture-sampling targets for q_mixture_sample (es exercises the default)
 MIXTURE_RATES = {"en": 0.9, "de": 0.5, "fr": 0.25, "zh": 0.1}
 # token-budget mixture targets (q_mixture_tokens): per-stratum subword-token
 # budgets sized so some strata saturate and some don't at sf0.01
 MIXTURE_TOKEN_BUDGETS = {"en": 20000.0, "de": 4000.0, "fr": 1500.0, "zh": 300.0}
-
-DRIVER_WINDOW: list[str] = [
-    # ROUND-7 ROTATION (accumulating coverage): positions 1-3 are the
-    # NEXT_WINDOW_HEAD queries pinned by round 6 — the only oracle-paired
-    # queries never driver-checked (round-6 verdict ask #1); position 4
-    # re-enters kg_mentions, whose implementation round 7 switched to the
-    # array-intersect fast path (same distinct pair set — the driver row
-    # hard-verifies that).  Displaced to make room: mm_audio_meta,
-    # mm_frame_sample, q_datetime_funcs, q_string_funcs — all r6-green
-    # and untouched this round, so CORRECTNESS_r05 ∪ r06 ∪ the r07 window
-    # still covers every registered query
-    # (tests/test_driver_window.py asserts the union property).
-    "q_tfidf_keywords", "q_corpus_stats", "q_snapshot_diff",
-    "kg_mentions",
-    "sparql_from_named", "q_url_dedup",
-    "kg_subject_lookup", "q_transitive_closure", "q_filter_project",
-    "q_join_inner", "q_left_join", "q_group_having", "q_exists_semijoin",
-    "q_subquery_topn", "q_window_session", "q_json_extract", "q_rollup",
-    "q_pivot_case", "q_percentile",
-    "q_sample_hash", "q_construct", "sparql_star_filter", "sparql_union",
-    "sparql_minus", "sparql_orderby_slice", "sparql_distinct",
-    "sparql_values_join", "sparql_exists", "sparql_path_seq", "sparql_bind",
-    "sparql_construct", "sparql_ask", "bsbm_explore1", "dedup_exact",
-    "dedup_minhash_sig", "dedup_simhash", "dedup_ngram_jaccard",
-    "dedup_clusters", "q_text_stats", "q_lang_id", "ann_cosine_topk",
-    "ann_ivf_topk",
-    # r5-green but round-6-CHANGED outputs, so they need a fresh driver
-    # check: banded multi-table SRP near-dup (verdict ask #5) and the
-    # checksum-gated PII v2 columns (ask #7); q_url_dedup (valueless
-    # tracking params) is already above
-    "dedup_embedding", "q_rolling_fingerprint",
-    "q_pii_scrub",
-    # NEW round-6 operators: real vocab-driven subword tokenization,
-    # token-unit context-window chunking, and token-budget mixture
-    # sampling (verdict ask #1 — q_mixture_tokens displaces the r5-green
-    # q_tpch_q5 headliner; the union property is unaffected)
-    "q_tokenize", "q_chunk_tokens", "q_mixture_tokens",
-    # NEW round-6 operators past the verdict asks: CCNet-style char-bigram
-    # LM perplexity filter and per-source quota sampling.  These displace
-    # the r5-green bsbm_bi4/kg_mentions headliners: the round-6 SPARQL
-    # compile fast path those headliners exercise is already re-checked by
-    # the 14 sparql_*/kg_*/bsbm_* rows above, and the displaced rows stay
-    # registered (scripts/check_contract.py covers them).
-    "q_perplexity", "q_source_cap",
-]
-
-# Round 7 rotated the three previously-pinned queries into the window
-# head (see DRIVER_WINDOW comment); every oracle-paired query now has a
-# driver row in CORRECTNESS_r05 ∪ r06 ∪ the prospective r07 set, so
-# nothing is pinned for the next rotation.
-NEXT_WINDOW_HEAD: list[str] = []
-
-
-def _driver_window_order(q: dict) -> dict:
-    missing = [n for n in DRIVER_WINDOW if n not in q]
-    if missing:  # fail loudly in tests rather than silently shrinking the window
-        raise KeyError(f"DRIVER_WINDOW names not registered: {missing}")
-    head = {n: q[n] for n in DRIVER_WINDOW}
-    tail = {n: fn for n, fn in q.items() if n not in head}
-    return {**head, **tail}
 
 
 # --------------------------------------------------------------------------

@@ -38,6 +38,7 @@ class QueryReport:
     first_row: tuple | None = None
     exec_error: str | None = None
     timed_out: bool = False
+    job_group: str | None = None  # Spark job group the execution ran in
 
 
 def convert_queries(store, sparqls: list[str]) -> list[QueryReport]:
@@ -74,8 +75,9 @@ def time_queries(
 
     Mutates and returns ``reports``; ``done`` makes the sweep resumable the
     way the reference's ``results``/``done_ids`` contract does.  Timeouts
-    cancel the underlying Spark job group (not just the Python wait), so a
-    runaway query does not keep burning executor time.
+    cancel the underlying Spark job group (not just the Python wait) and
+    return only once no job of the group is running, so a runaway query
+    does not keep burning executor time.
     """
     from pyspark import InheritableThread
 
@@ -84,7 +86,7 @@ def time_queries(
     for rep in reports:
         if rep.index in done or rep.status != "Success":
             continue
-        group = f"analyze-{rep.index}-{time.time_ns()}"
+        group = rep.job_group = f"analyze-{rep.index}-{time.time_ns()}"
         result: dict = {}
 
         def run(rep=rep, group=group, result=result):
@@ -103,8 +105,7 @@ def time_queries(
         worker.join(timeout_s)
         rep.seconds = round(time.time() - t0, 3)
         if worker.is_alive():
-            spark.sparkContext.cancelJobGroup(group)
-            worker.join(10.0)
+            _cancel_group(spark.sparkContext, group, worker)
             rep.timed_out = True
             rep.exec_error = f"timeout after {timeout_s}s (job group cancelled)"
         elif "error" in result:
@@ -115,6 +116,22 @@ def time_queries(
             rep.first_row = tuple(rows[0]) if rows else None
         done.add(rep.index)
     return reports
+
+
+def _cancel_group(sc, group: str, worker) -> None:
+    """Cancel ``group`` until its worker has returned and the status
+    tracker shows no job of the group running.  The first cancel can land
+    while the worker is still compiling, before its job exists, so the
+    cancel repeats."""
+    tracker = sc.statusTracker()
+
+    def running() -> bool:
+        infos = (tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group))
+        return any(i is not None and i.status == "RUNNING" for i in infos)
+
+    while worker.is_alive() or running():
+        sc.cancelJobGroup(group)
+        time.sleep(0.05)
 
 
 def analyze(store, sparqls: list[str], timeout_s: float = 300.0,

@@ -19,19 +19,21 @@ integer ratios never does in practice).  Callers who want a float can
 derive ``bits_per_char = lp_e6_sum / n_bigrams / 1e6`` and
 ``ppl = 2 ** bits_per_char``.
 
-Scale: LM training is one explode + groupBy over the REFERENCE SLICE only
-(bounded: char-bigram vocabulary <= 1369 entries for the [a-z0-9 ]
-alphabet, regardless of corpus size).  Scoring (round-7 rewrite, guide
-§2.4/§4.1) is a PER-ROW in-array aggregate: the trained LM is rendered —
-in Spark, with the exact same round/log2 expression, so the integers
-cannot drift — into a dense 1369-entry micro-bit cost table indexed by
-``37*code(c1)+code(c2)``, collected (alphabet-bounded, never
-corpus-sized) and inlined as an array literal; each document then sums
-``element_at(costs, gram_id+1)`` over its gram-id array.  No explode of
-the character stream, no joins, no groupBy(doc_id) — the score side has
-ZERO exchanges and is linear in corpus bytes.  (The previous shape —
-explode one row per character + two broadcast joins + re-agg by doc_id —
-was the round-6 bench outlier at 30s/sf1.0.)
+Scale: both sides are ``mapInArrow`` numpy kernels over the normalized
+string column.  Training counts gram ids ``37*code(c1)+code(c2)`` over the
+REFERENCE SLICE only, one partial count vector per task (bounded:
+char-bigram vocabulary <= 1369 entries for the [a-z0-9 ] alphabet,
+regardless of corpus size), summed by one small groupBy.  The trained LM is
+rendered — in Spark, with the exact same round/log2 expression, so the
+integers cannot drift — into a dense 1369-entry micro-bit cost table,
+collected (alphabet-bounded, never corpus-sized) and shipped to the score
+kernel, which sums each document's costs as a cumulative-sum difference
+over its byte span.  No explode of the character stream, no joins, no
+groupBy(doc_id) — the score side has ZERO exchanges and is linear in
+corpus bytes.
+
+NULL text contract (shared with the DuckDB twin): a NULL document has
+NULL ``n_bigrams``, ``lp_e6_sum`` 0 and NULL ``ppl_keep``.
 """
 
 from __future__ import annotations
@@ -67,39 +69,14 @@ def _norm_sql(expr: str) -> str:
     )
 
 
-def _code_col(ch: Column) -> Column:
-    """Alphabet code for one normalized char: ' '->0, '0'-'9'->1..10,
-    'a'-'z'->11..36.  Total over the normalized alphabet (``_norm_col``
-    strips everything else), so no fallback arm is needed."""
-    a = F.ascii(ch)
-    return F.when(a == 32, F.lit(0)).otherwise(
-        F.when(a <= 57, a - 47).otherwise(a - 86)
-    )
-
-
-def _gram_ids_col(codes: Column, n: Column) -> Column:
-    """Dense bigram ids ``37*code(c1)+code(c2)`` from a PRE-MATERIALIZED
-    char-code array column (and its length).  ``codes`` must be an
-    attribute reference, never the transform expression itself — array
-    lambdas get no CSE, so an inline expression would re-run the whole
-    split+code pass once per ``element_at`` (O(n^2) per doc).
-    Spark sequence(1, 0) DESCENDS — guard short strings explicitly."""
-    return F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.element_at(codes, i) * N_CODES
-            + F.element_at(codes, i + 1),
-        ),
-    ).otherwise(F.array().cast("array<int>"))
-
-
 N_CODES = 37  # |alphabet| — gram-id space is N_CODES * N_CODES
 
 
 def _char_code_lut():
-    """numpy byte->code LUT twin of :func:`_code_col` (normalized strings
-    are pure ASCII, so byte positions == char positions)."""
+    """numpy byte -> alphabet code LUT: ' '->0, '0'-'9'->1..10,
+    'a'-'z'->11..36.  Total over the normalized alphabet (``_norm_col``
+    strips everything else; normalized strings are pure ASCII, so byte
+    positions == char positions)."""
     import numpy as np
 
     lut = np.zeros(256, dtype=np.int64)
@@ -112,8 +89,7 @@ def _char_code_lut():
 
 def _string_spans(arr):
     """(offsets, data) numpy views over a pyarrow string array's buffers.
-    Null rows have zero-length spans (offset pairs are equal), which is
-    exactly the JVM when-guard semantics (NULL text -> 0 bigrams)."""
+    Null rows have zero-length spans (offset pairs are equal)."""
     import numpy as np
     import pyarrow as pa
 
@@ -172,7 +148,8 @@ def _count_kernel():
 def _score_kernel(costs):
     """mapInArrow score kernel: (key, normalized string) batches ->
     (key, n_bigrams, lp_e6_sum).  Exact int64 sums of the Spark-rendered
-    cost integers via a cumulative-sum difference per row span."""
+    cost integers via a cumulative-sum difference per row span; a NULL
+    string scores NULL n_bigrams (its empty span sums to 0)."""
 
     def fn(batches):
         import numpy as np
@@ -194,8 +171,9 @@ def _score_kernel(costs):
                 0,
             )
             nbig = np.where(big, lens - 1, 0)
+            null = b.column(1).is_null().to_numpy(zero_copy_only=False)
             yield pa.RecordBatch.from_arrays(
-                [b.column(0), pa.array(nbig), pa.array(lp)],
+                [b.column(0), pa.array(nbig, mask=null), pa.array(lp)],
                 ["k", "n_bigrams", "lp_e6_sum"],
             )
 
@@ -218,51 +196,25 @@ def lm_score(
     ``thresh_bits_e6`` micro-bits/char).  Smoothing is add-one over the
     fixed V_CHARS alphabet: P(c2|c1) = (cnt(c1c2)+1) / (cnt(c1·)+V).
 
-    Execution shape (round 7): train over the reference slice (explode of
-    INT gram ids + groupBy — partial aggs collapse to <=1369 keys per
-    partition), render the dense cost table IN SPARK with the identical
-    round/log2 expression (so the micro-bit integers are bit-identical to
-    the round-6 join formulation), collect its 1369 rows, and score each
-    doc with a per-row array aggregate over an inlined literal cost table
-    — no explode, no join, no shuffle on the scoring side.
+    NULL text gives NULL ``n_bigrams`` and NULL ``ppl_keep`` (``lp_e6_sum``
+    0), as :func:`lm_score_sql` does.
+
+    Execution shape: train over the reference slice with the count kernel
+    (<= 1369 partial rows per task), render the dense cost table IN SPARK
+    with the identical round/log2 expression, collect its 1369 rows, and
+    score each doc with the span kernel — no explode, no join, no shuffle
+    on the scoring side.
     """
     key = F.col(key_col)
-    # materialize the normalized string before the array lambda: Spark does
-    # no CSE inside lambdas, so an inline expr would re-run the regex chain
-    # once per character.
     nm = docs.select(key.alias(key_col), _norm_col(F.col(text_col)).alias("_s"))
-    import os
-
-    kernel = os.environ.get("SPARK_GRAFT_LM_KERNEL", "arrow")
-    spark = docs.sparkSession
-
-    if kernel == "arrow":
-        # guide §4.2: batch the (single, pre-normalized) string column to a
-        # numpy kernel — per-task partial counts, <= 1369 rows shuffled
-        lm = (
-            nm.filter(key % train_mod == 0).select("_s")
-            .mapInArrow(_count_kernel(), "gid int, c long")
-            .groupBy("gid")
-            .agg(F.sum("c").cast("bigint").alias("_c"))
-        )
-    else:
-        cd = nm.filter(key % train_mod == 0).select(
-            key_col,
-            F.length("_s").alias("_n"),
-            F.transform(F.split("_s", ""), _code_col).alias("_c"),
-        )
-        b_train = cd.select(
-            key_col, _gram_ids_col(F.col("_c"), F.col("_n")).alias("_g")
-        )
-        # NOTE: a plain explode here relies on session.py excluding
-        # Catalyst's InferFiltersFromGenerate rule — with the rule on, the
-        # inferred `size(_g) > 0` filter pushes below the projection and
-        # re-evaluates the whole per-char transform + regex chain per row.
-        lm = (
-            b_train.select(F.explode("_g").alias("gid"))
-            .groupBy("gid")
-            .agg(F.count("*").cast("bigint").alias("_c"))
-        )
+    # guide §4.2: batch the (single, pre-normalized) string column to a
+    # numpy kernel — per-task partial counts, <= 1369 rows shuffled
+    lm = (
+        nm.filter(key % train_mod == 0).select("_s")
+        .mapInArrow(_count_kernel(), "gid int, c long")
+        .groupBy("gid")
+        .agg(F.sum("c").cast("bigint").alias("_c"))
+    )
     # dense cost table over the full gram-id space, rendered with the SAME
     # round/log2 expression the round-6 scorer evaluated per occurrence:
     # micro-bit cost is > 0 always (cc >= c, so cc + V > c + 1), HALF_UP
@@ -276,7 +228,7 @@ def lm_score(
     ctx: dict[int, int] = {}
     for gid, c in cnt.items():
         ctx[gid // N_CODES] = ctx.get(gid // N_CODES, 0) + c
-    tbl = spark.createDataFrame(
+    tbl = docs.sparkSession.createDataFrame(
         [(gid, cnt.get(gid, 0), ctx.get(gid // N_CODES, 0))
          for gid in range(N_CODES * N_CODES)],
         "gid int, _c long, _cc long",
@@ -292,39 +244,15 @@ def lm_score(
              for r in tbl.select("gid", lp_e6.alias("_lp")).collect()}
     cost_list = [table[gid] for gid in range(N_CODES * N_CODES)]
 
-    if kernel == "arrow":
-        key_t = docs.schema[key_col].dataType.simpleString()
-        scored = (
-            nm.select(key_col, "_s")
-            .mapInArrow(
-                _score_kernel(cost_list),
-                f"k {key_t}, n_bigrams bigint, lp_e6_sum bigint",
-            )
-            .select(F.col("k").alias(key_col), "n_bigrams", "lp_e6_sum")
+    key_t = docs.schema[key_col].dataType.simpleString()
+    scored = (
+        nm.select(key_col, "_s")
+        .mapInArrow(
+            _score_kernel(cost_list),
+            f"k {key_t}, n_bigrams bigint, lp_e6_sum bigint",
         )
-    else:
-        costs = F.array(*[F.lit(v) for v in cost_list])
-        cd = nm.select(
-            key_col,
-            F.length("_s").alias("_n"),
-            F.transform(F.split("_s", ""), _code_col).alias("_c"),
-        )
-        b = cd.select(
-            key_col, _gram_ids_col(F.col("_c"), F.col("_n")).alias("_g")
-        )
-        score = F.aggregate(
-            F.col("_g"),
-            F.lit(0).cast("bigint"),
-            lambda acc, g: acc + F.element_at(costs, g + 1),
-        )
-        # materialize the aggregate once — referencing it from both
-        # lp_e6_sum and ppl_keep in one select would evaluate the array
-        # pass twice
-        scored = b.select(
-            key_col,
-            F.size("_g").cast("bigint").alias("n_bigrams"),
-            score.alias("lp_e6_sum"),
-        )
+        .select(F.col("k").alias(key_col), "n_bigrams", "lp_e6_sum")
+    )
     return scored.select(
         key_col,
         "n_bigrams",
@@ -343,7 +271,8 @@ def lm_score_sql(
     thresh_bits_e6: int = THRESH_BITS_E6,
 ) -> str:
     """DuckDB twin of :func:`lm_score` — same fixed alphabet, same integer
-    micro-bit rounding, same training slice."""
+    micro-bit rounding, same training slice, same NULL text contract (NULL
+    ``n_bigrams`` and ``ppl_keep``, ``lp_e6_sum`` 0)."""
     nm = _norm_sql(text_col)
     return f"""
 WITH nm AS (SELECT {key_col} AS doc_id, {nm} AS s FROM {table}),

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from rdflib_r2r_spark import terms
+from rdflib_r2r_spark import storage, terms
 from rdflib_r2r_spark.compiler import SparkMappingCompiler
 from rdflib_r2r_spark.mapping import (
     LogicalSource,
@@ -304,9 +304,6 @@ class KGPipeline:
 
         nb = self.num_buckets
 
-        def _bucket_of(subj_col):
-            return F.pmod(F.xxhash64(subj_col), F.lit(nb))
-
         def _wrap(c):
             return F.concat(F.lit("<"), c, F.lit(">"))
 
@@ -326,29 +323,25 @@ class KGPipeline:
                 # RENDERED triples — bucket + repartition them as-is
                 mt = men.mention_triples(mention_rows, pre_deduped=True)
                 allt = base_triples.unionByName(mt).unionByName(_same_triples(canon))
-                return allt.withColumn(
-                    "subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(nb))
-                ).repartition(nb, "subj_bucket")
+                return storage.with_bucket(allt, nb).repartition(nb, storage.BUCKET_COL)
             # fused mode: LATE RENDERING through the bucket exchange.  Every
             # triple's subject is the page url, so the subject-hash bucket is
             # computable from the raw row; shuffling the raw sources
             # (url+lang+ts / url+entity_id / node+canonical) moves ~20x fewer
             # bytes than shuffling 6 rendered string columns per triple, and
             # the IRI concats run once, post-exchange, on co-located rows.
-            pages_shuf = extracted.repartition(nb, _bucket_of(_wrap(F.col("url"))))
+            pages_shuf = extracted.repartition(nb, storage.bucket_of(_wrap(F.col("url")), nb))
             base = SparkMappingCompiler(
                 self.spark, {"pages": pages_shuf}
             ).compile([pages_triples_map()])
-            mp_shuf = mention_rows.repartition(nb, _bucket_of(_wrap(F.col("url"))))
+            mp_shuf = mention_rows.repartition(nb, storage.bucket_of(_wrap(F.col("url")), nb))
             mt = men.mention_triples(mp_shuf, pre_deduped=True)
-            canon_shuf = canon.repartition(nb, _bucket_of(_wrap(F.col("node"))))
+            canon_shuf = canon.repartition(nb, storage.bucket_of(_wrap(F.col("node")), nb))
             allt = base.unionByName(mt).unionByName(_same_triples(canon_shuf))
             # re-derive the bucket from the rendered subject (identical value
             # to the pre-shuffle expression — pure projection, no exchange)
-            return allt.withColumn(
-                "subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(nb))
-            )
+            return storage.with_bucket(allt, nb)
 
         triples = self.stage("triples", ["base_triples", "mentions", "canon"],
-                             build_triples, partition_by="subj_bucket")
+                             build_triples, partition_by=storage.BUCKET_COL)
         return triples

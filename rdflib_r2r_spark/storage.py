@@ -15,7 +15,7 @@ subject-grouped consumers prune to one bucket.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 BUCKET_COL = "subj_bucket"
@@ -30,8 +30,14 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
+def bucket_of(col: Column, n: int) -> Column:
+    """The subject bucket of ``col`` among ``n``: the one definition of the
+    bucket layout, shared by every writer and reader of the triple table."""
+    return F.pmod(F.xxhash64(col), F.lit(n))
+
+
 def with_bucket(df: DataFrame, num_buckets: int, subj_col: str = "subj") -> DataFrame:
-    return df.withColumn(BUCKET_COL, F.pmod(F.xxhash64(subj_col), F.lit(num_buckets)))
+    return df.withColumn(BUCKET_COL, bucket_of(F.col(subj_col), num_buckets))
 
 
 def write_triples(
@@ -73,6 +79,5 @@ def read_bucket(spark: SparkSession, target: str, subj: str, num_buckets: int = 
         # the bucket id as a FOLDABLE expression: Catalyst constant-folds
         # pmod(xxhash64(lit), N) at optimization time, so partition pruning
         # still fires — and no separate driver-side Spark job is submitted
-        bucket_expr = F.pmod(F.xxhash64(F.lit(subj)), F.lit(num_buckets))
-        df = df.filter(F.col(BUCKET_COL) == bucket_expr)
+        df = df.filter(F.col(BUCKET_COL) == bucket_of(F.lit(subj), num_buckets))
     return df.filter(F.col("subj") == subj)

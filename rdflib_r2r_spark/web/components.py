@@ -14,7 +14,8 @@ Scale notes:
   partial aggregation handle hub nodes; for extreme hubs the two-phase
   salted variant aggregates min per (node, salt) then per node —
   min is algebraic so the rewrite is exact (``salt_buckets > 1``);
-- convergence is a single scalar count per iteration, no collect of data.
+- convergence is a single scalar count per iteration, no collect of data;
+  a graph that has not converged after ``max_iter`` hops raises.
 
 The reference has no transitive closure at all (SPARQL paths '+'/'*' raise
 SparqlNotImplementedError — reference: rdflib_r2r/sql_converter.py:229-230,
@@ -46,6 +47,9 @@ def connected_components(
     scaling efficiency, so halving the number of barriers (2 hops/round
     covers diameter d in ceil(d/2) barriers) buys parallel fraction at the
     cost of one possibly-wasted hop after convergence.
+
+    Raises ``RuntimeError`` when a label still changed in the last round
+    ``max_iter`` allows.
     """
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     sym = e.unionByName(e.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
@@ -93,6 +97,12 @@ def connected_components(
         labels = new_labels.drop("_chg")
         if changed == 0:
             break
+    else:
+        # unconverged labels split components silently — fail loudly
+        raise RuntimeError(
+            f"connected_components did not converge within max_iter={max_iter} "
+            f"hops (hops_per_round={hops_per_round}); raise max_iter"
+        )
     return labels.select("node", F.col("label").alias("component"))
 
 

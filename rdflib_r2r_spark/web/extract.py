@@ -1,12 +1,12 @@
-"""HTML -> text extraction as an Arrow-vectorized pandas UDF — the one stage
-where Python is genuinely needed (north_star: "a vectorized Arrow-UDF stage
-for HTML->text extraction, byte-identical per url"). All string work is
-pandas ``.str`` vectorized ops over Arrow batches; no per-row Python.
+"""HTML -> text extraction compiled to Spark built-ins only: whole-stage
+codegen JVM regex, no Python worker.  ``reference_impl.extract_text_py`` is
+the independent Python oracle of the same spec.
 
 Extractor spec (versioned; EXTRACTOR_VERSION feeds stage fingerprints):
-1. decode UTF-8;
+1. decode UTF-8 (invalid bytes become U+FFFD);
 2. drop <script>/<style> subtrees;
-3. keep the first <article>...</article> body if present, else <body>;
+3. keep the first <article>...</article> body if one is closed, else the
+   first <body>...</body>, else the whole document;
 4. strip remaining tags;
 5. unescape &lt; &gt; &amp; (amp last).
 
@@ -17,87 +17,31 @@ strip-tags cannot eat content and unescape restores the original bytes).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql import functions as F
 
-EXTRACTOR_VERSION = "1"
+EXTRACTOR_VERSION = "2"  # v2: an unclosed <article> falls back to <body>
 
 _SCRIPT_RE = r"(?is)<(script|style)\b[^>]*>.*?</\1>"
+_HAS_ARTICLE_RE = r"(?is)<article\b[^>]*>.*?</article>"
 _ARTICLE_RE = r"(?is).*?<article\b[^>]*>(.*?)</article>.*"
 _BODY_RE = r"(?is).*?<body\b[^>]*>(.*?)</body>.*"
 _TAG_RE = r"(?s)<[^>]*>"
 
 
-def extract_text_pd(html: pd.Series) -> pd.Series:
-    # errors="replace" (invalid bytes -> U+FFFD) matches the JVM
-    # cast-binary-to-string semantics of the native path, so malformed
-    # UTF-8 produces identical bytes on both paths instead of crashing
-    # this one.
-    s = html.map(
-        lambda b: b.decode("utf-8", errors="replace")
-        if isinstance(b, (bytes, bytearray)) else b
-    )
-    s = s.str.replace(_SCRIPT_RE, "", regex=True)
-    art = s.str.replace(_ARTICLE_RE, r"\1", regex=True)
-    body = s.str.replace(_BODY_RE, r"\1", regex=True)
-    has_article = s.str.contains(r"(?is)<article\b", regex=True)
-    s = art.where(has_article, body)
-    s = s.str.replace(_TAG_RE, "", regex=True)
-    s = s.str.replace("&lt;", "<", regex=False)
-    s = s.str.replace("&gt;", ">", regex=False)
-    s = s.str.replace("&amp;", "&", regex=False)
-    return s
-
-
-_udf_cache = {}
-
-
-def extract_text_pandas(html: Column) -> Column:
-    """Arrow-batched pandas-UDF path (the north_star's vectorized Arrow-UDF
-    stage).  Kept as the fallback for extraction logic that genuinely needs
-    Python (a real HTML parser lib, charset sniffing); the spec regexes
-    themselves run faster JVM-side (extract_text_native)."""
-    # UDF creation needs an active SparkSession, so build lazily.
-    if "udf" not in _udf_cache:
-        from pyspark.sql import types as T
-
-        _udf_cache["udf"] = pandas_udf(extract_text_pd, T.StringType())
-    return _udf_cache["udf"](html)
-
-
-def extract_text_native(html: Column) -> Column:
-    """The same extractor spec as ``extract_text_pd`` compiled to Spark
-    built-ins only — whole-stage-codegen JVM regex, zero Python workers.
-
-    Byte-identical to the pandas path (pinned by
-    tests/test_web_pipeline.py::test_native_extractor_matches_pandas): both
-    are re.sub/replaceAll chains over the same patterns, and Java and Python
-    regex agree on every construct used ((?is), \\b, lazy quantifiers,
-    pattern backreference \\1).  Python-worker Arrow IPC was the measured
-    flat term in the extraction stage's core-count scaling — this path
-    removes the Python worker entirely.
+def extract_text(html: Column) -> Column:
+    """The extractor spec as a ``regexp_replace``/``replace`` chain.  Java
+    and Python regex agree on every construct used ((?is), \\b, lazy
+    quantifiers, pattern backreference \\1), and ``rlike`` searches like
+    ``re.search``, so the output equals ``extract_text_py`` byte for byte.
     """
-    from pyspark.sql import functions as F
-
     s = html.cast("string")  # UTF-8 decode for binary input
     s = F.regexp_replace(s, _SCRIPT_RE, "")
-    has_article = s.rlike(r"(?is)<article\b")
     s = F.when(
-        has_article, F.regexp_replace(s, _ARTICLE_RE, "$1")
+        s.rlike(_HAS_ARTICLE_RE), F.regexp_replace(s, _ARTICLE_RE, "$1")
     ).otherwise(F.regexp_replace(s, _BODY_RE, "$1"))
     s = F.regexp_replace(s, _TAG_RE, "")
     s = F.replace(s, F.lit("&lt;"), F.lit("<"))
     s = F.replace(s, F.lit("&gt;"), F.lit(">"))
     s = F.replace(s, F.lit("&amp;"), F.lit("&"))
     return s
-
-
-def extract_text(html: Column) -> Column:
-    """Dispatch: JVM-native by default; SPARK_GRAFT_EXTRACTOR=pandas selects
-    the Arrow-UDF path (same bytes out either way)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_EXTRACTOR", "native") == "pandas":
-        return extract_text_pandas(html)
-    return extract_text_native(html)

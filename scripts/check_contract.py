@@ -32,6 +32,19 @@ def value_hash(df: pd.DataFrame) -> str:
     return hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
 
 
+def mismatches(got: pd.DataFrame, want: pd.DataFrame) -> list[str]:
+    """How a Spark result differs from its oracle: row count, column
+    names, then the order-insensitive value hash."""
+    problems = []
+    if len(got) != len(want):
+        problems.append(f"rows {len(got)} != {len(want)}")
+    if sorted(got.columns) != sorted(want.columns):
+        problems.append(f"cols {sorted(got.columns)} != {sorted(want.columns)}")
+    elif value_hash(got) != value_hash(want):
+        problems.append("value hash mismatch")
+    return problems
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -67,13 +80,7 @@ def main() -> int:
             n_fail += 1
             continue
         t_duck = time.time() - t0
-        problems = []
-        if len(got) != len(want):
-            problems.append(f"rows {len(got)} != {len(want)}")
-        if sorted(got.columns) != sorted(want.columns):
-            problems.append(f"cols {sorted(got.columns)} != {sorted(want.columns)}")
-        elif value_hash(got) != value_hash(want):
-            problems.append("value hash mismatch")
+        problems = mismatches(got, want)
         if problems:
             n_fail += 1
             print(f"FAIL {name}: {'; '.join(problems)} [spark {t_spark:.1f}s duck {t_duck:.1f}s]")

@@ -73,6 +73,11 @@ def test_timeout_cancels_job(store):
     r = reports[0]
     assert r.timed_out and "timeout" in (r.exec_error or "")
     assert r.rows is None
+    # and no job of the cancelled group is left running
+    tracker = store.spark.sparkContext.statusTracker()
+    statuses = [tracker.getJobInfo(j).status
+                for j in tracker.getJobIdsForGroup(r.job_group)]
+    assert "RUNNING" not in statuses, statuses
 
 
 def test_resume_skips_done(store):
@@ -81,6 +86,7 @@ def test_resume_skips_done(store):
     time_queries(store, reports, timeout_s=120.0, done=done)
     assert reports[0].seconds is None      # skipped: already done
     assert reports[1].seconds is not None  # executed
+    assert not reports[1].timed_out        # no starved executors
     assert done == {0, 1}
 
 

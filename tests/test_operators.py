@@ -777,6 +777,19 @@ def test_lm_score_fixture(spark):
     assert got[0] == got[5] | {"doc_id": 0}
 
 
+# NULL, empty, 1-char and odd-whitespace docs next to fluent ones
+LM_EDGE_ROWS = [
+    (0, "the quick brown fox"),
+    (1, None),
+    (2, ""),
+    (3, "a"),
+    (4, "ab"),
+    (5, "Tabs\tand\x0bvertical"),
+    (10, "numbers 123 456 mixed"),
+    (15, "REPEAT " * 40),
+]
+
+
 def test_lm_score_matches_duckdb(spark, docs):
     import duckdb
 
@@ -790,6 +803,15 @@ def test_lm_score_matches_duckdb(spark, docs):
     # the gate must discriminate on real fixture docs
     keeps = {k for *_, k in got}
     assert keeps == {True} or len(keeps) == 2
+
+    edge = spark.createDataFrame(LM_EDGE_ROWS, "doc_id long, text string")
+    got = {tuple(r) for r in lm.lm_score(edge).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", LM_EDGE_ROWS)
+    want = set(map(tuple, con.execute(lm.lm_score_sql()).fetchall()))
+    assert got == want
+    assert (1, None, 0, None) in got  # NULL text: NULL count and verdict
 
 
 # -- per-source quota (operators/sampling.py source_cap) -------------------------

@@ -1,5 +1,5 @@
-"""Round-7 optimization pins: value parity of the gated IRI encoder, the
-LM kernel pair, and the plan-level guarantees the rewrites rely on."""
+"""Round-7 optimization pins: value parity of the gated IRI encoder and
+the plan-level guarantees the rewrites rely on."""
 
 from __future__ import annotations
 
@@ -42,33 +42,6 @@ def test_iri_safe_sql_spark_matches_frozen_dialect(spark):
     ).collect()
     assert sorted((r['v'] or '', r['enc'] or '') for r in gated) == \
         sorted((r['v'] or '', r['enc'] or '') for r in frozen)
-
-
-def test_lm_kernels_agree(spark, monkeypatch):
-    """arrow (numpy span kernel) and jvm (in-array aggregate) scoring must
-    be row-identical, including NULL/empty/1-char/odd-whitespace docs."""
-    import os
-
-    from rdflib_r2r_spark.operators import lm
-
-    rows = [
-        (0, "the quick brown fox"),
-        (1, None),
-        (2, ""),
-        (3, "a"),
-        (4, "ab"),
-        (5, "Tabs\tand\x0bvertical"),
-        (10, "numbers 123 456 mixed"),
-        (15, "REPEAT " * 40),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    outs = {}
-    for kernel in ("arrow", "jvm"):
-        monkeypatch.setenv("SPARK_GRAFT_LM_KERNEL", kernel)
-        outs[kernel] = sorted(
-            tuple(r) for r in lm.lm_score(docs).collect()
-        )
-    assert outs["arrow"] == outs["jvm"]
 
 
 def test_cmp_against_nonnumeric_literal_has_no_trycast(spark):

@@ -44,22 +44,39 @@ def test_extraction_byte_identical(spark, docs):
     assert out.count() == docs.count()
 
 
+# adversarial HTML checked against the Python reference extractor
+MESSY_HTML = [
+    b"<html><head><style>a{}</style></head><body>x <i>y</i> &amp;&lt;</body></html>",
+    b"<body><article>first</article><article>second</article></body>",
+    b"no tags at all",
+    b"<script>only script</script>",
+    b"<body><SCRIPT a=b>nested <b>tag</b></SCRIPT>kept</body>",
+    "<body>unicode é中文</body>".encode("utf-8"),
+    # invalid UTF-8: 0xFF can begin no sequence, 0xC3 is truncated; the JVM
+    # cast maps each to U+FFFD like decode(errors="replace")
+    b"<body>bad \xff byte and truncated \xc3</body>",
+]
+
+
 def test_extraction_handles_messy_html(spark):
     """Extractor is a real HTML extractor, not only our wrapper's inverse."""
     rows = [
         ("<html><body><p>Hello <b>world</b></p><script>evil()</script></body></html>", "Hello world"),
         ('<html><body><article class="x">A &amp; B &lt;ok&gt;</article><footer>no</footer></body></html>', "A & B <ok>"),
         ("<body>plain</body>", "plain"),
+        # an unclosed <article> is no article: fall back to <body>
+        ("head<body>x<article>y</body>tail", "xy"),
+        ("<p>a</p><article>b<body>c</body>", "c"),
     ]
-    df = spark.createDataFrame(
-        [(r[0].encode("utf-8"), r[1]) for r in rows], "html binary, want string"
-    )
-    got = df.select(extract_text(F.col("html")).alias("got"), "want").collect()
-    for r in got:
-        assert r["got"] == r["want"]
     # python mirror agrees
     for html, want in rows:
         assert ref.extract_text_py(html) == want
+    cases = [(html.encode("utf-8"), want) for html, want in rows] + [
+        (html, ref.extract_text_py(html.decode("utf-8", "replace"))) for html in MESSY_HTML
+    ]
+    df = spark.createDataFrame(cases, "html binary, want string")
+    got = df.select(extract_text(F.col("html")).alias("got"), "want").collect()
+    assert [r["got"] for r in got] == [want for _, want in cases]
 
 
 def test_alias_dict_and_mentions_match_reference(spark, docs, docs_pd):
@@ -141,6 +158,15 @@ def test_connected_components_golden(spark):
         for r in components.connected_components(edges, salt_buckets=4).collect()
     }
     assert cc2 == cc
+
+
+def test_connected_components_nonconvergence_raises(spark):
+    # a 10-node chain has diameter 9: two one-hop rounds cannot label it
+    edges = spark.createDataFrame([(i, i + 1) for i in range(9)], "a long, b long")
+    with pytest.raises(RuntimeError, match=r"max_iter=2 .*hops_per_round=1"):
+        components.connected_components(edges, max_iter=2, hops_per_round=1)
+    cc = components.connected_components(edges).collect()
+    assert {r["component"] for r in cc} == {0} and len(cc) == 10
 
 
 def test_pipeline_pr_vs_reference(spark, docs_pd, tmp_path):
@@ -325,36 +351,3 @@ def test_fused_edges_match_staged(spark, docs):
     staged = {(r["a"], r["b"], round(r["sim_est"], 6))
               for r in linking.near_dup_edges(pages, fused=False).collect()}
     assert fused == staged and len(fused) > 0
-
-
-def test_native_extractor_matches_pandas(spark, docs):
-    """The JVM-native extractor is BYTE-IDENTICAL to the Arrow-UDF path on
-    the full corpus plus adversarial HTML — this equality is what lets the
-    pipeline run extraction with zero Python workers."""
-    from rdflib_r2r_spark.web.extract import extract_text_native, extract_text_pandas
-
-    pages = pg.pages_from_documents(docs)
-    messy = spark.createDataFrame(
-        [
-            (b"<html><head><style>a{}</style></head><body>x <i>y</i> &amp;&lt;</body></html>",),
-            (b"<body><article>first</article><article>second</article></body>",),
-            (b"no tags at all",),
-            (b"<script>only script</script>",),
-            (b"<body><SCRIPT a=b>nested <b>tag</b></SCRIPT>kept</body>",),
-            ("<body>unicode é中文</body>".encode("utf-8"),),
-            # invalid UTF-8: 0xFF can begin no sequence, 0xC3 is truncated.
-            # JVM cast and pd decode(errors="replace") must both map each
-            # to U+FFFD, not crash the Python path.
-            (b"<body>bad \xff byte and truncated \xc3</body>",),
-        ],
-        "html binary",
-    ).select(F.col("html"))
-    for frame in (pages.select("html"), messy):
-        both = frame.select(
-            extract_text_native(F.col("html")).alias("nat"),
-            extract_text_pandas(F.col("html")).alias("pd"),
-        )
-        diff = both.filter(
-            ~F.col("nat").eqNullSafe(F.col("pd"))
-        ).count()
-        assert diff == 0
