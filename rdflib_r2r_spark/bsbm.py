@@ -371,7 +371,7 @@ WHERE {{
     ?product bsbm:productPropertyNumeric2 ?simProperty2 .
     FILTER (?simProperty2 < (?origProperty2 + 170) && ?simProperty2 > (?origProperty2 - 170))
 }}
-ORDER BY ?productLabel
+ORDER BY ?productLabel ?product
 LIMIT 5
 """
 
@@ -540,7 +540,7 @@ WHERE part.p_partkey <> 30
   AND part.p_size < orig.n1 + 20 AND part.p_size > orig.n1 - 20
   AND CAST(p_retailprice AS INT) < orig.n2 + 170
   AND CAST(p_retailprice AS INT) > orig.n2 - 170
-ORDER BY productLabel LIMIT 5
+ORDER BY productLabel, product LIMIT 5
 """
 
 BSBM_TABLES = ("part", "supplier", "nation", "lineitem", "orders", "customer")

@@ -92,7 +92,8 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text", key_col: str = "
 
 def _shingle_cte(table: str, text_col: str, key_col: str, k: int = SHINGLE_K) -> str:
     """tokens -> word k-gram shingle list via scalar range() + 1-based list
-    indexing (SQL twin of shingles_col); docs with < k tokens excluded."""
+    indexing (SQL twin of linking.shingles_from_tokens); docs with < k tokens
+    excluded."""
     toks = tokens_sql(text_col)
     gram = " || ' ' || ".join(f"toks[i + {j}]" for j in range(k))
     return f"""

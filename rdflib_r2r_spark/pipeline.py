@@ -7,7 +7,12 @@ Stage graph (each stage = parquet dir + manifest):
     documents ─> pages ─> extracted ─┬─> base_triples (R2RML mapping compile)
                                      ├─> alias_dict ─> mentions ─> mention_triples
                                      └─> sigs ─> edges (MinHash-LSH) ─> canon ─> sameas_triples
-    triples = union(...) ─> bucketed write by subject hash
+    triples = union(base, mention, sameas triples) ─> storage.bucketed ─> write
+
+Both ``checkpoint_stages`` modes run the same body for every stage; they
+differ only in what is materialized between stages.  The triple table is
+rendered first and then exchanged once on its subject bucket, so its write
+leaves one file per bucket.
 
 Commit contract: a stage launches no Spark job beyond its write.  The
 driver then lists its part files and reads each row count from the parquet
@@ -128,12 +133,12 @@ class KGPipeline:
     band_rows: int = 2
     threshold: float = 0.5
     resume: bool = True
-    # checkpoint_stages=False fuses all intermediate stages into one DAG:
+    # checkpoint_stages=False runs the same stage bodies as one DAG:
     # multi-consumer intermediates are memory/disk-persisted instead of
     # parquet round-tripped, and only the final bucketed triple table (plus
-    # its manifest) hits storage. Use for throughput runs; checkpointed mode
-    # (default) is the resumable production shape — on a cluster its writes
-    # go to distributed storage, locally they serialize on one disk.
+    # its manifest) hits storage. Checkpointed mode (default) is the
+    # resumable production shape — on a cluster its writes go to
+    # distributed storage, locally they serialize on one disk.
     checkpoint_stages: bool = True
     # fused mode persists the multi-consumer frames.  'extracted' (big text,
     # 4 consumers) is also materialized once: round-7 A/B at sf1.0 (min-of-2
@@ -288,8 +293,8 @@ class KGPipeline:
         # self-join and verification read parquet instead of re-hashing
         # the corpus on every branch of the join.
         edges = self.stage("edges", ["sigs"], lambda: linking.near_dup_edges(
-            extracted, num_hashes=self.num_hashes, band_rows=self.band_rows,
-            threshold=self.threshold, sigs=sigs))
+            sigs, num_hashes=self.num_hashes, band_rows=self.band_rows,
+            threshold=self.threshold))
         # fast path: per-row array_intersect against the inlined dict — no
         # 100-tokens-per-doc explode row blowup; emits the distinct
         # (url, entity_id) pair set directly
@@ -301,8 +306,6 @@ class KGPipeline:
         # the serial term
         canon = self.stage("canon", ["edges"],
                            lambda: components.canonical_map(edges, hops_per_round=3))
-
-        nb = self.num_buckets
 
         def _wrap(c):
             return F.concat(F.lit("<"), c, F.lit(">"))
@@ -318,29 +321,9 @@ class KGPipeline:
             )
 
         def build_triples() -> DataFrame:
-            if self.checkpoint_stages:
-                # resumable mode: sources are materialized parquet of
-                # RENDERED triples — bucket + repartition them as-is
-                mt = men.mention_triples(mention_rows, pre_deduped=True)
-                allt = base_triples.unionByName(mt).unionByName(_same_triples(canon))
-                return storage.with_bucket(allt, nb).repartition(nb, storage.BUCKET_COL)
-            # fused mode: LATE RENDERING through the bucket exchange.  Every
-            # triple's subject is the page url, so the subject-hash bucket is
-            # computable from the raw row; shuffling the raw sources
-            # (url+lang+ts / url+entity_id / node+canonical) moves ~20x fewer
-            # bytes than shuffling 6 rendered string columns per triple, and
-            # the IRI concats run once, post-exchange, on co-located rows.
-            pages_shuf = extracted.repartition(nb, storage.bucket_of(_wrap(F.col("url")), nb))
-            base = SparkMappingCompiler(
-                self.spark, {"pages": pages_shuf}
-            ).compile([pages_triples_map()])
-            mp_shuf = mention_rows.repartition(nb, storage.bucket_of(_wrap(F.col("url")), nb))
-            mt = men.mention_triples(mp_shuf, pre_deduped=True)
-            canon_shuf = canon.repartition(nb, storage.bucket_of(_wrap(F.col("node")), nb))
-            allt = base.unionByName(mt).unionByName(_same_triples(canon_shuf))
-            # re-derive the bucket from the rendered subject (identical value
-            # to the pre-shuffle expression — pure projection, no exchange)
-            return storage.with_bucket(allt, nb)
+            mt = men.mention_triples(mention_rows, pre_deduped=True)
+            allt = base_triples.unionByName(mt).unionByName(_same_triples(canon))
+            return storage.bucketed(allt, self.num_buckets)
 
         triples = self.stage("triples", ["base_triples", "mentions", "canon"],
                              build_triples, partition_by=storage.BUCKET_COL)

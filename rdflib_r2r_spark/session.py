@@ -22,35 +22,20 @@ def _ensure_pythonpath() -> None:
         os.environ["PYTHONPATH"] = (pp + os.pathsep if pp else "") + _REPO_ROOT
 
 
-def get_spark(
-    app_name: str = "rdflib_r2r_spark",
-    cores: int | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
-    """Build (or reuse) a SparkSession.
-
-    ``cores`` defaults to $SPARK_GRAFT_CPUS or ``*``. Shuffle partitions
-    default to the core count (local mode: shuffles are on-box, 200 default
-    just adds task overhead; on a real cluster the caller sizes this to
-    2-3x total cores).
+def get_spark(app_name: str = "rdflib_r2r_spark") -> SparkSession:
+    """Build (or reuse) a SparkSession on ``local[$SPARK_GRAFT_CPUS]``
+    (``local[*]`` when unset).  Shuffle partitions are the core count, at
+    least 8 (local mode: shuffles are on-box, 200 default just adds task
+    overhead; on a real cluster size this to 2-3x total cores).
     """
     _ensure_pythonpath()
-    if cores is None:
-        env = os.environ.get("SPARK_GRAFT_CPUS")
-        master = f"local[{env}]" if env else "local[*]"
-        n = int(env) if env else (os.cpu_count() or 8)
-    else:
-        master = f"local[{cores}]"
-        n = cores
-    if shuffle_partitions is not None:
-        sp = shuffle_partitions
-    else:
-        env_sp = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTS")
-        sp = int(env_sp) if env_sp else max(n, 8)
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    master = f"local[{env}]" if env else "local[*]"
+    n = int(env) if env else (os.cpu_count() or 8)
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(sp))
+        .config("spark.sql.shuffle.partitions", str(max(n, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -69,22 +54,13 @@ def get_spark(
         # signature stage 24s G1 -> 15.6s ParallelGC @ local[32]); batch
         # analytics prefers max-throughput stop-the-world collection. On a
         # cluster, set the same via spark.executor.extraJavaOptions.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_JAVA_OPTS", "-XX:+UseParallelGC"),
-        )
+        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         # default 128m packs this box's small inputs into fewer read
         # partitions than cores, starving map stages (e.g. 1.2GB corpus ->
         # 10 tasks on 32 cores). 32m keeps scans wide here; clusters reading
         # 100TB keep the default (splits are plentiful there).
-        .config("spark.sql.files.maxPartitionBytes", os.environ.get("SPARK_GRAFT_MAX_PART_BYTES", "33554432"))
-        # parquet codec: zstd trades (parallel) CPU for (serial, single-disk
-        # here) write bytes — a scaling lever on one box, and on clusters it
-        # cuts shuffle-stage-adjacent storage I/O; A/B via env
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "snappy"),
-        )
+        .config("spark.sql.files.maxPartitionBytes", str(32 << 20))
+        .config("spark.sql.parquet.compression.codec", "snappy")
         # InferFiltersFromGenerate adds `size(arr) > 0` under every
         # non-outer explode and pushes it below the projection, INLINING
         # the array expression into the filter — regex/tokenize/transform

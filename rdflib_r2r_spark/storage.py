@@ -36,8 +36,12 @@ def bucket_of(col: Column, n: int) -> Column:
     return F.pmod(F.xxhash64(col), F.lit(n))
 
 
-def with_bucket(df: DataFrame, num_buckets: int, subj_col: str = "subj") -> DataFrame:
-    return df.withColumn(BUCKET_COL, bucket_of(F.col(subj_col), num_buckets))
+def bucketed(df: DataFrame, num_buckets: int) -> DataFrame:
+    """``df`` with its ``subj_bucket`` column, hash-exchanged on it into
+    ``num_buckets`` partitions: every bucket's rows share one partition, so
+    a ``partitionBy`` write leaves one file per bucket directory."""
+    return (df.withColumn(BUCKET_COL, bucket_of(F.col("subj"), num_buckets))
+            .repartition(num_buckets, BUCKET_COL))
 
 
 def write_triples(
@@ -60,8 +64,7 @@ def write_triples(
         else:
             writer.append()
         return "iceberg"
-    bucketed = with_bucket(df, num_buckets).repartition(num_buckets, BUCKET_COL)
-    bucketed.write.mode(mode).partitionBy(BUCKET_COL).parquet(target)
+    bucketed(df, num_buckets).write.mode(mode).partitionBy(BUCKET_COL).parquet(target)
     return "parquet"
 
 

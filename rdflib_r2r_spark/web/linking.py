@@ -58,21 +58,6 @@ def shingles_from_tokens(toks: Column, k: int = SHINGLE_K) -> Column:
     )
 
 
-def shingles_col(text: Column, k: int = SHINGLE_K) -> Column:
-    """Shingles directly from text — only for single-use contexts."""
-    toks = F.filter(F.split(F.lower(text), "[^a-z0-9]+"), lambda t: t != "")
-    return shingles_from_tokens(toks, k)
-
-
-def base_hash_col(shingles: Column) -> Column:
-    """h(s) = crc32(s) mod p — one cheap hardware-CRC pass per shingle
-    (Python twin: zlib.crc32, bit-identical)."""
-    return F.transform(
-        shingles,
-        lambda s: F.crc32(F.encode(s, "UTF-8")).cast("bigint") % MINHASH_P,
-    )
-
-
 def _shingle_coeffs() -> tuple[int, int, int]:
     """(A1, A2, B): polynomial-combination coefficients, md5-seeded."""
     d = hashlib.md5(b"shingle-combine").hexdigest()
@@ -227,94 +212,14 @@ def verified_edges(pairs: DataFrame, sigs: DataFrame,
     )
 
 
-def fused_verified_edges(sigs: DataFrame,
-                         num_hashes: int = DEFAULT_NUM_HASHES,
-                         band_rows: int = DEFAULT_BAND_ROWS,
-                         threshold: float = 0.5) -> DataFrame:
-    """Band join that CARRIES the signature arrays and verifies inline.
-
-    The staged flow (candidate_pairs then verified_edges) shuffles the
-    corpus-sized signature table three times: once into the band self-join
-    and twice more to re-attach each side's signature for verification.  At
-    10^12 documents those two re-joins dominate.  Carrying the 8 minhashes
-    (~64 bytes) through the band exchange makes verification a per-row
-    expression on the join output — ONE corpus-wide exchange total — at the
-    cost of a modestly wider band shuffle.  Verification runs per band
-    collision instead of per distinct pair; the final distinct is on the
-    (small) verified edge set, and sim_est is deterministic per pair, so the
-    result set is identical to the staged flow."""
-    sig_arr = F.array(*[F.col(f"mh{j}") for j in range(num_hashes)])
-    bands = num_hashes // band_rows
-    if band_rows <= 2:
-        def val(i: int):
-            cols = [F.col(f"mh{i * band_rows + r}") for r in range(band_rows)]
-            acc = cols[0]
-            for c in cols[1:]:
-                acc = acc * F.lit(1 << 31) + c
-            return acc
-        arms = [F.struct(F.lit(i).alias("band_id"), val(i).alias("band_val"))
-                for i in range(bands)]
-    else:
-        arms = [
-            F.struct(
-                F.lit(i).alias("band_id"),
-                F.concat_ws("|", *[F.col(f"mh{i * band_rows + r}").cast("string")
-                                   for r in range(band_rows)]).alias("band_val"),
-            )
-            for i in range(bands)
-        ]
-    banded = (
-        sigs.select("key", sig_arr.alias("sig"), F.explode(F.array(*arms)).alias("b"))
-        .select("key", "sig", F.col("b.band_id").alias("band_id"),
-                F.col("b.band_val").alias("band_val"))
-        .filter(F.col("band_val").isNotNull())
-    )
-    if band_rows > 2:
-        # match band_df's string arm: concat_ws renders an all-NULL signature
-        # as '' — without this every empty-signature doc collides with every
-        # other in ALL bands (quadratic blowup; sim_est NULL keeps results
-        # correct but the self-join explodes on tokenless corpora)
-        banded = banded.filter(F.col("band_val") != "")
-    l, r = banded.alias("l"), banded.alias("r")
-    agree = F.zip_with(F.col("l.sig"), F.col("r.sig"),
-                       lambda x, y: (x == y).cast("int"))
-    est = F.aggregate(agree, F.lit(0), lambda a, x: a + x) / F.lit(float(num_hashes))
-    return (
-        l.join(r, (F.col("l.band_id") == F.col("r.band_id"))
-               & (F.col("l.band_val") == F.col("r.band_val"))
-               & (F.col("l.key") < F.col("r.key")), "inner")
-        .select(F.col("l.key").alias("a"), F.col("r.key").alias("b"),
-                est.alias("sim_est"))
-        .filter(F.col("sim_est") >= threshold)
-        .distinct()
-    )
-
-
-def near_dup_edges(df: DataFrame, text_col: str = "text", key_col: str = "url",
+def near_dup_edges(sigs: DataFrame,
                    num_hashes: int = DEFAULT_NUM_HASHES,
                    band_rows: int = DEFAULT_BAND_ROWS,
-                   threshold: float = 0.5,
-                   sigs: DataFrame | None = None,
-                   fused: bool = False) -> DataFrame:
-    """Pass precomputed ``sigs`` when available (e.g. a checkpointed stage).
-    Otherwise the signature plan is persisted here: it feeds BOTH sides of
-    the candidate self-join plus verification — without materialization the
-    minhash computation would re-execute 4x.
-
-    ``fused`` trades shuffles for collision work: the sig-carrying band join
-    (fused_verified_edges) does ONE corpus exchange but verifies every band
-    COLLISION, while the staged flow shuffles the signature table two extra
-    times but dedups candidates BEFORE verifying.  Measured on a
-    duplication-heavy corpus (replicate-100 sandbox run, 27M edges) staged
-    wins ~2x because collisions >> distinct pairs and the sig re-joins hit
-    the persisted stage; on a lightly-duplicated trillion-doc corpus where
-    signatures are NOT materialized, fused avoids two corpus-wide shuffles
-    and wins.  Default staged (matches the measured sandbox + checkpointed
-    pipeline shape)."""
-    own_sigs = sigs is None
-    if own_sigs:
-        sigs = signatures(df, text_col, key_col, num_hashes).persist()
-    if fused:
-        return fused_verified_edges(sigs, num_hashes, band_rows, threshold)
+                   threshold: float = 0.5) -> DataFrame:
+    """Verified near-duplicate edges (a, b, sim_est) of a ``signatures``
+    table: band the signatures, join on band buckets for the distinct
+    candidate pairs, then verify each pair once.  ``sigs`` feeds both sides
+    of the self-join and the verification, so pass a materialized table
+    (a checkpoint or a persisted frame)."""
     pairs = candidate_pairs(band_df(sigs, num_hashes, band_rows))
     return verified_edges(pairs, sigs, num_hashes, threshold)

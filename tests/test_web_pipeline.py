@@ -172,12 +172,7 @@ def test_connected_components_nonconvergence_raises(spark):
 def test_pipeline_pr_vs_reference(spark, docs_pd, tmp_path):
     pipe = KGPipeline(spark, SF_DIR, str(tmp_path / "kg"))
     triples = pipe.run()
-    got = {(r["subj"], r["pred"], r["obj"]) for r in triples.select("subj", "pred", "obj").collect()}
-    want = ref.reference_triples(docs_pd.to_dict("records"))
-    p, r = ref.precision_recall(got, want)
-    assert p >= 0.95 and r >= 0.95, (p, r, len(got), len(want))
-    # we actually expect exact agreement
-    assert p == 1.0 and r == 1.0
+    got = _assert_reference_triples(triples, docs_pd)
 
     # bucketed layout present
     assert "subj_bucket" in triples.columns
@@ -243,13 +238,26 @@ def _assert_committed(spark, pipe, names):
         assert lin_rows == res.rows == written.count(), name
         assert pipe.frames[name].schema == written.schema, name
     per_bucket: dict[int, int] = {}
+    files_per_bucket: dict[int, int] = {}
     for r in lineage:
         if r["stage"] == "triples":
             b = int(re.search(r"subj_bucket=(\d+)", r["file"]).group(1))
             per_bucket[b] = per_bucket.get(b, 0) + r["rows"]
+            files_per_bucket[b] = files_per_bucket.get(b, 0) + 1
     written = spark.read.parquet(pipe.results["triples"].path)
     assert per_bucket == {r["subj_bucket"]: r["count"]
                           for r in written.groupBy("subj_bucket").count().collect()}
+    # one exchange on the bucket column: each bucket is written by one task
+    assert set(files_per_bucket.values()) == {1}, files_per_bucket
+
+
+def _assert_reference_triples(triples, docs_pd):
+    """The (subj, pred, obj) set of ``triples``, after checking that it
+    equals the pure-Python reference emission: precision and recall 1.0."""
+    got = {(r["subj"], r["pred"], r["obj"]) for r in triples.select("subj", "pred", "obj").collect()}
+    want = ref.reference_triples(docs_pd.to_dict("records"))
+    assert ref.precision_recall(got, want) == (1.0, 1.0), (len(got), len(want))
+    return got
 
 
 @pytest.fixture(scope="module")
@@ -261,13 +269,14 @@ def built(spark, tmp_path_factory):
     return wd, pipe
 
 
-def test_checkpointed_stages_commit_from_footers(spark, built):
+def test_checkpointed_stages_commit_from_footers(spark, built, docs_pd):
     """Fresh and resumed checkpointed stages: footer lineage, rows and the
     read-back schema agree with the written tables, and a fully resumed run
     launches no Spark job before the caller's first action."""
     wd, fresh = built
     assert not any(r.resumed for r in fresh.results.values())
     _assert_committed(spark, fresh, STAGES)
+    _assert_reference_triples(fresh.frames["triples"], docs_pd)
     assert not os.path.exists(os.path.join(wd, "_lineage"))
 
     resumed = RecordingPipeline(spark, SF_DIR, wd)
@@ -276,13 +285,14 @@ def test_checkpointed_stages_commit_from_footers(spark, built):
     _assert_committed(spark, resumed, STAGES)
 
 
-def test_fused_triples_commit_from_footers(spark, tmp_path):
+def test_fused_triples_commit_from_footers(spark, tmp_path, docs_pd):
     wd = str(tmp_path / "kg")
     try:
         fresh = RecordingPipeline(spark, SF_DIR, wd, checkpoint_stages=False, resume=False)
         fresh.run()
         assert not fresh.results["triples"].resumed
         _assert_committed(spark, fresh, ["triples"])
+        _assert_reference_triples(fresh.frames["triples"], docs_pd)
         resumed = RecordingPipeline(spark, SF_DIR, wd, checkpoint_stages=False)
         resumed.run()
         assert resumed.results["triples"].resumed
@@ -340,14 +350,3 @@ def test_numeric_band_values_give_same_candidates(spark, docs):
     want = {(r["a"], r["b"]) for r in linking.candidate_pairs(legacy).collect()}
     assert got == want and len(got) > 0
     sigs.unpersist()
-
-
-def test_fused_edges_match_staged(spark, docs):
-    """The single-exchange sig-carrying band join must produce the exact
-    edge set of the staged candidate_pairs + verified_edges flow."""
-    pages = pg.pages_from_documents(docs)
-    fused = {(r["a"], r["b"], round(r["sim_est"], 6))
-             for r in linking.near_dup_edges(pages, fused=True).collect()}
-    staged = {(r["a"], r["b"], round(r["sim_est"], 6))
-              for r in linking.near_dup_edges(pages, fused=False).collect()}
-    assert fused == staged and len(fused) > 0
