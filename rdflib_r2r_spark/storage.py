@@ -1,16 +1,11 @@
-"""Triple-table storage adapter: Iceberg when a catalog is configured,
-bucketed-parquet emulation otherwise (SURVEY.md §7 constraint — no Iceberg
-runtime jar in the sandbox).
+"""Triple-table storage: bucketed parquet.
 
-Both paths produce the same logical layout per the north star: the triple
-table partitioned by subject-hash buckets, so subject-key lookups and
-subject-grouped consumers prune to one bucket.
-
-- Iceberg: ``df.writeTo(table).partitionedBy(bucket(N, 'subj'))`` — hidden
-  partitioning, snapshot isolation, compaction handled by the catalog.
-- Parquet emulation: explicit ``subj_bucket = pmod(xxhash64(subj), N)``
-  column + ``partitionBy('subj_bucket')`` dirs; readers prune via the
-  partition column (``read_bucket`` pushes an equality partition filter).
+The triple table is partitioned by subject-hash bucket, so subject-key
+lookups and subject-grouped consumers prune to one bucket.  ``bucketed``
+adds the ``subj_bucket = pmod(xxhash64(subj), N)`` column and exchanges
+the rows on it; the writer (``KGPipeline.stage("triples")``) lays the
+table out as ``partitionBy('subj_bucket')`` directories, one file each;
+``read_bucket`` pushes an equality filter on the partition column.
 """
 
 from __future__ import annotations
@@ -21,15 +16,6 @@ from pyspark.sql import functions as F
 BUCKET_COL = "subj_bucket"
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        jvm_class = "org.apache.iceberg.spark.SparkCatalog"
-        spark._jvm.java.lang.Class.forName(jvm_class)  # type: ignore[attr-defined]
-        return True
-    except Exception:
-        return False
-
-
 def bucket_of(col: Column, n: int) -> Column:
     """The subject bucket of ``col`` among ``n``: the one definition of the
     bucket layout, shared by every writer and reader of the triple table."""
@@ -37,47 +23,24 @@ def bucket_of(col: Column, n: int) -> Column:
 
 
 def bucketed(df: DataFrame, num_buckets: int) -> DataFrame:
-    """``df`` with its ``subj_bucket`` column, hash-exchanged on it into
-    ``num_buckets`` partitions: every bucket's rows share one partition, so
-    a ``partitionBy`` write leaves one file per bucket directory."""
+    """``df`` with its ``subj_bucket`` column, hash-exchanged on it.
+
+    The exchange is sized by the data, not by ``num_buckets``: it starts
+    at ``spark.sql.shuffle.partitions`` partitions and AQE coalesces them
+    to fit, so the write runs at most min(shuffle partitions, buckets)
+    non-empty tasks before coalescing and usually far fewer after.  Every
+    bucket hashes to exactly one shuffle partition and coalescing merges
+    whole partitions without splitting one, so a ``partitionBy`` write
+    still leaves one file per bucket directory.  (``rebalance`` would let
+    AQE split a partition, and so a bucket, across tasks.)"""
     return (df.withColumn(BUCKET_COL, bucket_of(F.col("subj"), num_buckets))
-            .repartition(num_buckets, BUCKET_COL))
-
-
-def write_triples(
-    spark: SparkSession,
-    df: DataFrame,
-    target: str,
-    num_buckets: int = 64,
-    mode: str = "overwrite",
-) -> str:
-    """Write the triple table bucketed by subject hash.
-
-    ``target`` is an Iceberg table name (contains a catalog dot and Iceberg
-    is on the classpath) or a filesystem path (parquet emulation). Returns
-    the storage kind used ('iceberg' | 'parquet').
-    """
-    if "." in target and not target.startswith(("/", "file:", "s3:", "hdfs:")) and iceberg_available(spark):
-        writer = df.writeTo(target).partitionedBy(F.bucket(num_buckets, F.col("subj")))
-        if mode == "overwrite":
-            writer.createOrReplace()
-        else:
-            writer.append()
-        return "iceberg"
-    bucketed(df, num_buckets).write.mode(mode).partitionBy(BUCKET_COL).parquet(target)
-    return "parquet"
-
-
-def read_triples(spark: SparkSession, target: str) -> DataFrame:
-    if "." in target and not target.startswith(("/", "file:", "s3:", "hdfs:")) and iceberg_available(spark):
-        return spark.table(target)
-    return spark.read.parquet(target)
+            .repartition(BUCKET_COL))
 
 
 def read_bucket(spark: SparkSession, target: str, subj: str, num_buckets: int = 64) -> DataFrame:
-    """Subject lookup that prunes to one bucket partition (parquet path) —
-    the read-side payoff of the bucketed layout."""
-    df = read_triples(spark, target)
+    """Subject lookup on the bucketed parquet table at ``target`` that
+    prunes to one bucket partition: the read-side payoff of the layout."""
+    df = spark.read.parquet(target)
     if BUCKET_COL in df.columns:
         # the bucket id as a FOLDABLE expression: Catalyst constant-folds
         # pmod(xxhash64(lit), N) at optimization time, so partition pruning

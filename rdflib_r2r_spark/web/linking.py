@@ -3,7 +3,9 @@
 Scale shape (north_star: "MinHash-LSH candidate blocking"):
 
 - signatures are computed per row with ``array_min(transform(...))`` over the
-  shingle array — NO explode, NO shuffle, pure whole-stage-codegen;
+  shingle array — NO explode, NO shuffle.  The higher-order ``transform``
+  lambda is a ``CodegenFallback`` expression, so the signature projection
+  runs as an interpreted projection outside whole-stage codegen;
 - banding turns the quadratic candidate problem into an equi-join keyed on
   band values: only documents sharing a band bucket ever meet, so the
   shuffle is bounded by corpus size x bands, never O(n^2);

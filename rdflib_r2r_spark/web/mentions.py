@@ -139,7 +139,9 @@ def mention_entities(pages: DataFrame, alias_dict: DataFrame,
     ``array_distinct(transform(.., amap))`` dedups the mapped ENTITY ids —
     so the pairs stay distinct even when several aliases link to one entity
     (alias->entity need not be injective) — and emits ONLY matches: no
-    token explode, no join, no extra shuffle, pure whole-stage codegen.
+    token explode, no join, no extra shuffle.  The ``transform`` lambda is
+    a ``CodegenFallback`` expression, so this runs as an interpreted
+    projection (and ``Generate``) outside whole-stage codegen.
     Falls back to the join path if the dict exceeds ``max_inline``.
     MEASURED (sf0.1 corpus, local[32], min-of-3 noop-sink walls): the
     broadcast join is FLAT at ~0.4s from 128 to 32k entries while the

@@ -838,3 +838,22 @@ def test_describe_honors_from_clause(quads_store):
     rows = only_names.collect()
     assert len(rows) == 1
     assert rows[0]["pred"] == "<http://ex.org/name>"
+
+
+def test_bsbm_compile_captures_no_call_site(spark, monkeypatch):
+    """The session turns off PySpark's per-call DataFrame call-site capture:
+    compiling a BSBM query walks no Python stack for error context."""
+    import pyspark.errors.utils as perr
+
+    from rdflib_r2r_spark import bsbm
+
+    calls = []
+    real = perr._capture_call_site
+    # re-read the session conf instead of a value cached by earlier calls
+    monkeypatch.setattr(perr, "_enable_debugging_cache", None)
+    monkeypatch.setattr(perr, "_capture_call_site",
+                        lambda *a, **k: calls.append(1) or real(*a, **k))
+    store = bsbm.bsbm_store(spark, {t: spark.read.parquet(f"/root/testdata/sf0.001/{t}.parquet")
+                                    for t in bsbm.BSBM_TABLES})
+    store.query(bsbm.QUERIES["bsbm_bi1"])
+    assert calls == []

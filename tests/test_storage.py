@@ -1,10 +1,13 @@
-"""Bucketed triple storage adapter: parquet emulation layout, bucket-pruned
-subject lookup, Iceberg detection fallback."""
+"""Bucketed triple storage: the parquet layout ``bucketed`` plus a
+``partitionBy`` write leaves (one file per bucket, with AQE on and off),
+and the bucket-pruned subject lookup."""
 
 from __future__ import annotations
 
+import glob
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from rdflib_r2r_spark import storage
@@ -21,22 +24,59 @@ def _small_triples(spark):
     return comp.compile(E.geo_tmaps())
 
 
+def _write_bucketed(df, target, num_buckets):
+    storage.bucketed(df, num_buckets).write.partitionBy(storage.BUCKET_COL).parquet(target)
+
+
+def _rows_per_bucket_file(target):
+    """{bucket: [row count of each part file in its directory]}."""
+    out: dict[int, list[int]] = {}
+    for f in glob.glob(os.path.join(target, f"{storage.BUCKET_COL}=*", "*.parquet")):
+        b = int(os.path.basename(os.path.dirname(f)).partition("=")[2])
+        out.setdefault(b, []).append(pq.read_metadata(f).num_rows)
+    return out
+
+
 def test_bucketed_write_layout(spark, tmp_path):
     triples = _small_triples(spark)
     target = str(tmp_path / "triples")
-    kind = storage.write_triples(spark, triples, target, num_buckets=8)
-    assert kind == "parquet"  # no Iceberg jar in this sandbox
+    _write_bucketed(triples, target, 8)
     dirs = [d for d in os.listdir(target) if d.startswith("subj_bucket=")]
     assert 1 <= len(dirs) <= 8
-    back = storage.read_triples(spark, target)
+    back = spark.read.parquet(target)
     assert back.count() == triples.count()
     assert "subj_bucket" in back.columns
+
+
+def test_more_buckets_than_shuffle_partitions_one_file_each(spark, tmp_path):
+    """64 buckets over fewer shuffle partitions: each non-empty bucket is
+    one file whether AQE coalesces the exchange or not, and the files'
+    row counts equal a groupBy on the bucket column."""
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) < 64
+    df = spark.range(3000).select(
+        F.concat(F.lit("<http://ex.org/s/"), (F.col("id") % 1000).cast("string"),
+                 F.lit(">")).alias("subj"),
+        F.col("id").cast("string").alias("obj"))
+    want = {r[storage.BUCKET_COL]: r["count"] for r in
+            storage.bucketed(df, 64).groupBy(storage.BUCKET_COL).count().collect()}
+    assert len(want) == 64
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        for enabled in ("true", "false"):
+            spark.conf.set("spark.sql.adaptive.enabled", enabled)
+            target = str(tmp_path / f"aqe_{enabled}")
+            _write_bucketed(df, target, 64)
+            got = _rows_per_bucket_file(target)
+            assert {b: len(v) for b, v in got.items()} == {b: 1 for b in want}, enabled
+            assert {b: v[0] for b, v in got.items()} == want, enabled
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
 def test_bucket_pruned_lookup(spark, tmp_path):
     triples = _small_triples(spark)
     target = str(tmp_path / "triples2")
-    storage.write_triples(spark, triples, target, num_buckets=8)
+    _write_bucketed(triples, target, 8)
     subj = "<http://ex.org/nation/7>"
     out = storage.read_bucket(spark, target, subj, num_buckets=8)
     rows = out.collect()
@@ -47,48 +87,12 @@ def test_bucket_pruned_lookup(spark, tmp_path):
     assert "subj_bucket" in plan
 
 
-def test_iceberg_detection_is_false_here(spark):
-    assert storage.iceberg_available(spark) is False
-
-
-def test_iceberg_branch_mocked(spark, monkeypatch):
-    """The writeTo/partitionedBy Iceberg path, exercised with a mocked
-    catalog (no Iceberg runtime jar in this sandbox): verifies table-name
-    dispatch, the bucket(N, subj) partition transform, and
-    createOrReplace/append mode selection."""
-    from unittest.mock import MagicMock
-
-    monkeypatch.setattr(storage, "iceberg_available", lambda _s: True)
-    df = MagicMock(name="df")
-    writer = df.writeTo.return_value
-    partitioned = writer.partitionedBy.return_value
-
-    kind = storage.write_triples(spark, df, "cat.db.triples", num_buckets=16)
-    assert kind == "iceberg"
-    df.writeTo.assert_called_once_with("cat.db.triples")
-    (transform,) = writer.partitionedBy.call_args.args
-    assert "bucket(16, subj)" in str(transform)
-    partitioned.createOrReplace.assert_called_once()
-
-    df2 = MagicMock(name="df2")
-    kind2 = storage.write_triples(spark, df2, "cat.db.triples", mode="append")
-    assert kind2 == "iceberg"
-    df2.writeTo.return_value.partitionedBy.return_value.append.assert_called_once()
-
-    # path-like targets never dispatch to Iceberg even with a catalog
-    real = _small_triples(spark)
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        assert storage.write_triples(spark, real, f"{d}/t") == "parquet"
-
-
 def test_read_bucket_prunes_without_extra_job(spark, tmp_path):
     """The bucket id folds into the plan (no driver-side hash job); only
     one partition directory survives pruning."""
     triples = _small_triples(spark)
     target = str(tmp_path / "triples3")
-    storage.write_triples(spark, triples, target, num_buckets=8)
+    _write_bucketed(triples, target, 8)
     out = storage.read_bucket(spark, target, "<http://ex.org/nation/7>", num_buckets=8)
     assert out.count() >= 3
     optimized = out._jdf.queryExecution().optimizedPlan().toString()

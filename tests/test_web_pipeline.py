@@ -251,6 +251,15 @@ def _assert_committed(spark, pipe, names):
     assert set(files_per_bucket.values()) == {1}, files_per_bucket
 
 
+def _assert_write_sized_by_data(spark, jobs):
+    """The last job of a run is the ``triples`` write, and its last stage
+    (AQE ran the shuffle map stages as jobs of their own) ran the write
+    tasks: at most the shuffle partition count, not one per bucket."""
+    st = spark.sparkContext.statusTracker()
+    tasks = st.getStageInfo(max(st.getJobInfo(max(jobs)).stageIds)).numCompletedTasks
+    assert 1 <= tasks <= int(spark.conf.get("spark.sql.shuffle.partitions")), tasks
+
+
 def _assert_reference_triples(triples, docs_pd):
     """The (subj, pred, obj) set of ``triples``, after checking that it
     equals the pure-Python reference emission: precision and recall 1.0."""
@@ -262,20 +271,20 @@ def _assert_reference_triples(triples, docs_pd):
 
 @pytest.fixture(scope="module")
 def built(spark, tmp_path_factory):
-    """A fresh checkpointed build: (workdir, pipeline)."""
+    """A fresh checkpointed build: (workdir, pipeline, ids of its jobs)."""
     wd = str(tmp_path_factory.mktemp("kg_built"))
     pipe = RecordingPipeline(spark, SF_DIR, wd)
-    pipe.run()
-    return wd, pipe
+    return wd, pipe, _jobs_of_run(spark, pipe, "fresh_run")
 
 
 def test_checkpointed_stages_commit_from_footers(spark, built, docs_pd):
     """Fresh and resumed checkpointed stages: footer lineage, rows and the
     read-back schema agree with the written tables, and a fully resumed run
     launches no Spark job before the caller's first action."""
-    wd, fresh = built
+    wd, fresh, jobs = built
     assert not any(r.resumed for r in fresh.results.values())
     _assert_committed(spark, fresh, STAGES)
+    _assert_write_sized_by_data(spark, jobs)
     _assert_reference_triples(fresh.frames["triples"], docs_pd)
     assert not os.path.exists(os.path.join(wd, "_lineage"))
 
@@ -289,9 +298,10 @@ def test_fused_triples_commit_from_footers(spark, tmp_path, docs_pd):
     wd = str(tmp_path / "kg")
     try:
         fresh = RecordingPipeline(spark, SF_DIR, wd, checkpoint_stages=False, resume=False)
-        fresh.run()
+        jobs = _jobs_of_run(spark, fresh, "fused_run")
         assert not fresh.results["triples"].resumed
         _assert_committed(spark, fresh, ["triples"])
+        _assert_write_sized_by_data(spark, jobs)
         _assert_reference_triples(fresh.frames["triples"], docs_pd)
         resumed = RecordingPipeline(spark, SF_DIR, wd, checkpoint_stages=False)
         resumed.run()
@@ -305,7 +315,7 @@ def test_resume_recomputes_a_damaged_stage_and_downstream(spark, built, tmp_path
     """A part file the manifest lists that is missing (sigs) or has another
     size (mentions) makes the stage recompute instead of reading what is
     left, and every stage downstream of it recomputes too."""
-    src, fresh = built
+    src, fresh, _ = built
     wd = str(tmp_path / "kg")
     shutil.copytree(src, wd)
 
