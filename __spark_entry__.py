@@ -34,7 +34,7 @@ from rdflib_r2r_spark.mapping import (
     direct_mapping,
 )
 from rdflib_r2r_spark.operators import dedup, multimodal, pii, similarity, textstats
-from rdflib_r2r_spark.paths import alt, eval_path, inv, seq, transitive_closure
+from rdflib_r2r_spark.paths import transitive_closure
 from rdflib_r2r_spark.rewrites import add_chain_maps
 from rdflib_r2r_spark.oracle import mapping_to_duckdb_sql
 from rdflib_r2r_spark.templates import invert_template_py
@@ -314,7 +314,7 @@ def entry(spark: SparkSession) -> DataFrame:
     pages = _pages_df(spark, SF1)
     base = SparkMappingCompiler(spark, {"pages": pages}).compile(pages_tmaps())
     adict = men.build_alias_dict(pages)
-    mt = men.mention_triples(men.detect_mentions(pages, adict))
+    mt = men.mention_triples(men.mention_entities(pages, adict))
     return base.unionByName(mt)
 
 
@@ -347,16 +347,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["kg_dump_pages"] = kg_dump_pages
 
     def kg_mentions(spark, sf):
-        # round 7: the pipeline's array-intersect fast path (guide §2.3 —
-        # no 100-tokens-per-doc posexplode blowup just to find ~0.3 matches
-        # per doc).  mention_entities emits the SAME distinct
-        # (url, entity_id) pair set detect_mentions + distinct produced, so
-        # the oracle hash is unchanged; pre_deduped skips the second
-        # distinct (urls are unique by construction in _pages_df).
         pages = _pages_df(spark, sf)
         adict = men.build_alias_dict(pages)
-        return men.mention_triples(men.mention_entities(pages, adict),
-                                   pre_deduped=True)
+        return men.mention_triples(men.mention_entities(pages, adict))
 
     q["kg_mentions"] = kg_mentions
 
@@ -375,19 +368,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["kg_chain_dump"] = kg_chain_dump
 
-    def _geo_dump(spark, sf):
-        comp = SparkMappingCompiler(
-            spark, {n: _t(spark, sf, n) for n in ("nation", "region")}
-        )
-        return comp.compile(geo_tmaps())
-
+    # property paths through the SPARQL front end: resolve_paths rewrites
+    # the sequence into a hop-variable join and the alternative into a union
     def q_path_seq(spark, sf):
-        return eval_path(_geo_dump(spark, sf), seq(EX + "inRegion", EX + "name"))
+        return _geo_store(spark, sf).query("SELECT ?s ?o { ?s ex:inRegion/ex:name ?o }")
 
     q["q_path_seq"] = q_path_seq
 
     def q_path_alt_inv(spark, sf):
-        return eval_path(_geo_dump(spark, sf), alt(EX + "name", inv(EX + "inRegion")))
+        return _geo_store(spark, sf).query(
+            "SELECT DISTINCT ?s ?o { ?s (ex:name|^ex:inRegion) ?o }"
+        )
 
     q["q_path_alt_inv"] = q_path_alt_inv
 

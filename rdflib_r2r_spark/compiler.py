@@ -22,8 +22,8 @@ Scale design (the part that matters at 100 TB):
 - **NULL guards** (R2RML: a NULL input column produces no triple) ride on
   concat's NULL propagation and one post-explode filter — no Python, fully
   codegen'd.
-- Small parent tables can be broadcast (``broadcast_parents``); otherwise
-  AQE picks the join strategy at runtime.
+- Referencing-object joins carry no hint: AQE picks the join strategy at
+  runtime (a small parent table becomes a broadcast join by its size).
 
 Output schema: ``subj, pred, obj, obj_dt, obj_lang, graph`` — all strings;
 term encoding per ``terms`` module.
@@ -63,15 +63,9 @@ class SparkMappingCompiler:
         self,
         spark: SparkSession,
         tables: dict[str, DataFrame] | None = None,
-        strategy: str = "explode",
-        broadcast_parents: bool = False,
     ):
         self.spark = spark
         self.tables = dict(tables or {})
-        if strategy not in ("explode", "union"):
-            raise MappingError(f"unknown strategy {strategy!r}")
-        self.strategy = strategy
-        self.broadcast_parents = broadcast_parents
 
     # -- sources ------------------------------------------------------------
 
@@ -283,11 +277,10 @@ class SparkMappingCompiler:
                     gcol.alias("graph"),
                 )
             )
-        if self.strategy == "explode" and len(structs) > 1:
+        if len(structs) > 1:
             out = df.select(F.explode(F.array(*structs)).alias("t")).select("t.*")
         else:
-            parts = [df.select(*[s[c].alias(c) for c in TRIPLE_COLS]) for s in structs]
-            out = reduce(lambda a, b: a.unionByName(b), parts)
+            out = df.select(*[structs[0][c].alias(c) for c in TRIPLE_COLS])
         return out.filter(
             F.col("subj").isNotNull() & F.col("pred").isNotNull() & F.col("obj").isNotNull()
         )
@@ -318,8 +311,6 @@ class SparkMappingCompiler:
         else:
             parent_src = self.source_df(parent_tmap.source)
             parent_df = parent_src.alias("__p")
-            if self.broadcast_parents:
-                parent_df = F.broadcast(parent_df)
             parent_types = self._schema_types(parent_src)
             cond = None
             for jc in obj.join_conditions:

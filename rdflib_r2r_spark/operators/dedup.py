@@ -309,8 +309,7 @@ def ngram_jaccard_pairs(docs: DataFrame, pairs: DataFrame,
 def dedup_clusters(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id",
                    num_hashes: int = linking.DEFAULT_NUM_HASHES,
                    band_rows: int = linking.DEFAULT_BAND_ROWS,
-                   threshold: float = 0.5,
-                   cc_kwargs: dict | None = None) -> DataFrame:
+                   threshold: float = 0.5) -> DataFrame:
     """(doc_id, cluster_id, keep) for EVERY document: the operator a
     training pipeline actually runs — near-dup pairs are only evidence,
     the pipeline drops all but one doc per duplicate cluster.
@@ -324,8 +323,7 @@ def dedup_clusters(docs: DataFrame, text_col: str = "text", key_col: str = "doc_
     from rdflib_r2r_spark.web.components import connected_components
 
     edges = lsh_dup_pairs(docs, text_col, key_col, num_hashes, band_rows, threshold)
-    comp = connected_components(edges.select("a", "b"), src="a", dst="b",
-                                **(cc_kwargs or {}))
+    comp = connected_components(edges.select("a", "b"), src="a", dst="b")
     out = docs.select(F.col(key_col).alias("doc_id")).join(
         comp.select(F.col("node").alias("doc_id"),
                     F.col("component").alias("_comp")),

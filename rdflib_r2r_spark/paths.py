@@ -1,26 +1,24 @@
-"""SPARQL-style property paths over the materialized triple table.
-
-Two layers, mirroring the reference:
+"""SPARQL-style property paths: the path AST, compile-time BGP rewriting
+and transitive closure.
 
 1. **Compile-time BGP rewriting** (`resolve_paths`) — the same algorithm as
    the reference's ``resolve_paths_in_triples`` (reference:
    rdflib_r2r/sql_converter.py:197-233): SequencePath chains through fresh
    variables, AlternativePath fans out alternative BGPs, InvPath swaps
-   subject/object. Pure Python, reusable verbatim at any scale.
+   subject/object. Pure Python, reusable verbatim at any scale.  The SPARQL
+   evaluator (``sparql/evaluator.py``) compiles the rewritten BGPs over
+   the mapping, so a sequence is a join on the hop variable and an
+   alternative a union.
 
-2. **Runtime evaluation** (`eval_path`) over the triple DataFrame:
-   sequence = self-join on the hop variable, alternative = union, inverse =
-   projection swap. Plus ``transitive_closure`` — the `+`/`*` paths the
-   reference explicitly does NOT support ("some day: recursive CTEs",
-   reference: plan.md:22, sql_converter.py:229-230) — implemented as an
-   iterative-doubling DataFrame loop with localCheckpoint lineage
-   truncation (doubling: O(log diameter) joins instead of O(diameter)).
+2. ``transitive_closure`` — the `+`/`*` paths the reference explicitly
+   does NOT support ("some day: recursive CTEs", reference: plan.md:22,
+   sql_converter.py:229-230) — implemented as a semi-naive frontier loop
+   over an edge DataFrame with localCheckpoint lineage truncation.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -122,99 +120,26 @@ def resolve_paths(bgp: list[tuple], fresh=None):
         raise NotImplementedError(f"unsupported path {p!r}")
 
 
-# -- runtime evaluation over DataFrame[subj, pred, obj] -----------------------
-
-def _pred_df(triples: DataFrame, iri: str) -> DataFrame:
-    return triples.filter(F.col("pred") == f"<{iri}>").select(
-        F.col("subj").alias("s"), F.col("obj").alias("o")
-    )
-
-
-def eval_path(triples: DataFrame, path) -> DataFrame:
-    """(s, o) pairs reachable via the path."""
-    path = _lift(path)
-    if isinstance(path, Pred):
-        return _pred_df(triples, path.iri)
-    if isinstance(path, Inv):
-        return eval_path(triples, path.part).select(
-            F.col("o").alias("s"), F.col("s").alias("o")
-        )
-    if isinstance(path, Alt):
-        return reduce(
-            lambda a, b: a.unionByName(b), (eval_path(triples, p) for p in path.parts)
-        ).distinct()
-    if isinstance(path, Seq):
-        out = eval_path(triples, path.parts[0])
-        for part in path.parts[1:]:
-            nxt = eval_path(triples, part).select(
-                F.col("s").alias("_m"), F.col("o").alias("_o")
-            )
-            out = (
-                out.join(nxt, out["o"] == nxt["_m"], "inner")
-                .select(out["s"].alias("s"), F.col("_o").alias("o"))
-            )
-        return out
-    if isinstance(path, NegSet):
-        # SPARQL 1.1 18.2.2.3: union of the forward NPS (any pred not in
-        # `forward`) and the inverse of the NPS over the `^` members; the
-        # constant-pred NOT IN folds per dump arm at plan time
-        parts = []
-        if path.forward or not path.inverse:
-            df = triples
-            if path.forward:
-                df = df.filter(
-                    ~F.col("pred").isin([f"<{i}>" for i in path.forward])
-                )
-            parts.append(df.select(F.col("subj").alias("s"), F.col("obj").alias("o")))
-        if path.inverse:
-            df = triples
-            if path.inverse:
-                df = df.filter(
-                    ~F.col("pred").isin([f"<{i}>" for i in path.inverse])
-                )
-            parts.append(df.select(F.col("obj").alias("s"), F.col("subj").alias("o")))
-        return reduce(lambda a, b: a.unionByName(b), parts)
-    raise NotImplementedError(f"unsupported path {path!r}")
-
+# -- transitive closure over an edge DataFrame -------------------------------
 
 def transitive_closure(edges: DataFrame, src: str = "src", dst: str = "dst",
-                       max_iter: int = 50, strategy: str = "frontier") -> DataFrame:
+                       max_iter: int = 50) -> DataFrame:
     """All (src, dst) pairs connected by >= 1 directed hop.
 
-    ``strategy='frontier'`` (default) is semi-naive evaluation: each round
-    joins only the NEW pairs discovered last round against the edge list and
-    anti-joins them against the accumulated reach — per-round shuffle is
-    O(|delta|), not O(|closure|), which is what survives a 100x scale-up
-    (the closure relation itself is the blow-up; re-distincting all of it
-    every round is the scale-killer). ``strategy='doubling'`` composes paths
-    of length 2^k per round — fewer rounds (O(log diameter)), heavier rounds;
-    useful for small, deep graphs. Both localCheckpoint per round to truncate
-    lineage. The reference has no closure support at all ("some day:
-    recursive CTEs", reference: plan.md:22, sql_converter.py:229-230).
+    Semi-naive evaluation: each round joins only the NEW pairs discovered
+    last round against the edge list and anti-joins them against the
+    accumulated reach — per-round shuffle is O(|delta|), not O(|closure|),
+    which is what survives a 100x scale-up (the closure relation itself is
+    the blow-up; re-distincting all of it every round is the scale-killer).
+    Each round localCheckpoints to truncate lineage. The reference has no
+    closure support at all ("some day: recursive CTEs", reference:
+    plan.md:22, sql_converter.py:229-230).
+
+    Raises ``RuntimeError`` when new pairs still appear in the last round
+    ``max_iter`` allows.
     """
     base = edges.select(F.col(src).alias("s"), F.col(dst).alias("o")).distinct()
     base = base.localCheckpoint(eager=True)
-    if strategy == "doubling":
-        reach = base
-        n = reach.count()
-        for _ in range(max_iter):
-            hop = reach.select(F.col("s").alias("_m"), F.col("o").alias("_o"))
-            doubled = (
-                reach.join(hop, reach["o"] == hop["_m"], "inner")
-                .select(reach["s"].alias("s"), F.col("_o").alias("o"))
-            )
-            new_reach = reach.unionByName(doubled).distinct().localCheckpoint(eager=True)
-            n2 = new_reach.count()
-            reach = new_reach
-            if n2 == n:
-                break
-            n = n2
-        else:
-            raise RuntimeError(
-                f"transitive_closure(doubling) did not converge within "
-                f"max_iter={max_iter} rounds; raise max_iter"
-            )
-        return reach.select(F.col("s").alias(src), F.col("o").alias(dst))
 
     # semi-naive: reach accumulates, frontier = pairs first seen last round
     edge_hop = base.select(F.col("s").alias("_m"), F.col("o").alias("_o"))

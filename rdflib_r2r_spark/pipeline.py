@@ -295,17 +295,10 @@ class KGPipeline:
         edges = self.stage("edges", ["sigs"], lambda: linking.near_dup_edges(
             sigs, num_hashes=self.num_hashes, band_rows=self.band_rows,
             threshold=self.threshold))
-        # fast path: per-row array_intersect against the inlined dict — no
-        # 100-tokens-per-doc explode row blowup; emits the distinct
-        # (url, entity_id) pair set directly
+        # the distinct (url, entity_id) pair set
         mention_rows = self.stage("mentions", ["extracted", "alias_dict"],
                                   lambda: men.mention_entities(extracted, alias_dict))
-        # hops=3: near-dup clusters are shallow; 3 min-propagation hops per
-        # checkpointed round covers diameter 3 in ONE barrier (measured 3.7s
-        # vs 4.4s at hops=2 on the rep500 edge set) — the barrier count is
-        # the serial term
-        canon = self.stage("canon", ["edges"],
-                           lambda: components.canonical_map(edges, hops_per_round=3))
+        canon = self.stage("canon", ["edges"], lambda: components.canonical_map(edges))
 
         def _wrap(c):
             return F.concat(F.lit("<"), c, F.lit(">"))
@@ -321,7 +314,7 @@ class KGPipeline:
             )
 
         def build_triples() -> DataFrame:
-            mt = men.mention_triples(mention_rows, pre_deduped=True)
+            mt = men.mention_triples(mention_rows)
             allt = base_triples.unionByName(mt).unionByName(_same_triples(canon))
             return storage.bucketed(allt, self.num_buckets)
 

@@ -37,9 +37,14 @@ def bucketed(df: DataFrame, num_buckets: int) -> DataFrame:
             .repartition(BUCKET_COL))
 
 
-def read_bucket(spark: SparkSession, target: str, subj: str, num_buckets: int = 64) -> DataFrame:
+def read_bucket(spark: SparkSession, target: str, subj: str, *, num_buckets: int) -> DataFrame:
     """Subject lookup on the bucketed parquet table at ``target`` that
-    prunes to one bucket partition: the read-side payoff of the layout."""
+    prunes to one bucket partition: the read-side payoff of the layout.
+
+    ``num_buckets`` must be the count the table was written with: another
+    count names another bucket, and the lookup silently finds nothing.  The
+    layout itself does not record it; ``KGPipeline`` records it in
+    ``_manifests/triples.json`` under ``params.num_buckets``."""
     df = spark.read.parquet(target)
     if BUCKET_COL in df.columns:
         # the bucket id as a FOLDABLE expression: Catalyst constant-folds

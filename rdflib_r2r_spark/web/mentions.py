@@ -1,10 +1,13 @@
-"""Mention detection + entity linking against a broadcast alias dictionary.
+"""Mention detection + entity linking against a bounded alias dictionary.
 
-All tokenization is Spark SQL built-ins (split/posexplode — JVM-side); the
-alias dictionary is tiny by construction and joined with an explicit
-``F.broadcast`` hint (north_star: "batched mention detection and entity-link
-scoring ... plus a broadcast alias dictionary"), so mention detection is a
-map-only stage with zero shuffle for the join itself.
+All tokenization is Spark SQL built-ins (split/filter — JVM-side).
+``mention_entities`` is the one mention API: it emits the distinct
+(url, entity_id) pair set.  A dictionary of up to ``MAX_INLINE`` entries
+(the pipeline's is 24 by default) is inlined into the plan as an array
+literal and matched per row, with no token explode and no join; a larger
+one is joined with an explicit ``F.broadcast`` hint (north_star: "batched
+mention detection and entity-link scoring ... plus a broadcast alias
+dictionary"), so even then the corpus side is never shuffled for the join.
 """
 
 from __future__ import annotations
@@ -15,18 +18,9 @@ from pyspark.sql import functions as F
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 DEFAULT_DICT_SIZE = 24
 MIN_ALIAS_LEN = 4
+# largest alias dict that mention_entities inlines into the plan (see there)
+MAX_INLINE = 512
 ENTITY_BASE = "http://ex.org/entity/"
-
-
-def tokens_df(pages: DataFrame, text_col: str = "text", key_col: str = "url") -> DataFrame:
-    """(key, pos, token) — lowercased, non-alphanumeric-delimited tokens."""
-    return (
-        pages.select(
-            F.col(key_col).alias("key"),
-            F.posexplode(F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE)).alias("pos", "token"),
-        )
-        .filter(F.col("token") != "")
-    )
 
 
 def build_alias_dict(
@@ -82,38 +76,14 @@ def build_alias_dict(
     )
 
 
-def detect_mentions(pages: DataFrame, alias_dict: DataFrame,
-                    text_col: str = "text", key_col: str = "url") -> DataFrame:
-    """(url, mention, pos, entity_id, prior): every token occurrence that
-    matches an alias. Broadcast hash join — no shuffle of the corpus side."""
-    tok = tokens_df(pages, text_col, key_col)
+def mention_triples(pairs: DataFrame) -> DataFrame:
+    """(doc, ex:mentions, entity) triples in the engine's term encoding
+    from the distinct (url, entity_id) pair set ``mention_entities`` emits.
+    Late IRI rendering: the `<iri>` strings are concatenated only on the
+    already-deduplicated raw pairs (E18 applied to the materialization
+    path)."""
     return (
-        tok.join(F.broadcast(alias_dict), tok["token"] == alias_dict["alias"], "inner")
-        .select(
-            F.col("key").alias("url"),
-            F.col("token").alias("mention"),
-            F.col("pos"),
-            F.col("entity_id"),
-            F.col("prior"),
-        )
-    )
-
-
-def mention_triples(mentions: DataFrame, pre_deduped: bool = False) -> DataFrame:
-    """Distinct (doc, ex:mentions, entity) triples in the engine's term
-    encoding.  Late IRI rendering: the distinct shuffles the RAW
-    (url, entity_id) pair — one short string + one bigint — and the
-    `<iri>` strings are concatenated only once, after the exchange, on the
-    already-deduplicated rows (E18 applied to the materialization path).
-    ``pre_deduped`` skips the distinct when the input is already a pair set
-    (mention_entities output — per-doc dedup of ENTITY ids plus distinct
-    urls makes the pairs globally distinct; url is the page key, unique by
-    construction in pages_df/extract)."""
-    pairs = mentions.select("url", "entity_id")
-    if not pre_deduped:
-        pairs = pairs.distinct()
-    return (
-        pairs
+        pairs.select("url", "entity_id")
         .select(
             F.concat(F.lit("<"), F.col("url"), F.lit(">")).alias("subj"),
             F.lit("<http://ex.org/mentions>").alias("pred"),
@@ -126,32 +96,31 @@ def mention_triples(mentions: DataFrame, pre_deduped: bool = False) -> DataFrame
 
 
 def mention_entities(pages: DataFrame, alias_dict: DataFrame,
-                     text_col: str = "text", key_col: str = "url",
-                     max_inline: int = 512) -> DataFrame:
-    """Distinct (url, entity_id) pairs — the pipeline's mention fast path.
+                     text_col: str = "text", key_col: str = "url") -> DataFrame:
+    """Distinct (url, entity_id) pairs: every entity whose alias occurs as
+    a token of the page (``key_col`` is the page key, one row per page).
 
-    detect_mentions explodes EVERY token into its own row (url duplicated
-    per token) before the broadcast join; for N docs x ~100 tokens that is
-    a 100N-row intermediate just to find ~0.3N matches.  The alias dict is
-    bounded by construction (``size`` param), so inline it as an array
-    literal and map tokens to entities per row: ``array_intersect(tokens,
+    Up to ``MAX_INLINE`` entries, the dict is inlined as an array literal
+    and tokens are mapped to entities per row: ``array_intersect(tokens,
     aliases)`` dedups matched ALIASES within the doc, then
     ``array_distinct(transform(.., amap))`` dedups the mapped ENTITY ids —
     so the pairs stay distinct even when several aliases link to one entity
     (alias->entity need not be injective) — and emits ONLY matches: no
-    token explode, no join, no extra shuffle.  The ``transform`` lambda is
-    a ``CodegenFallback`` expression, so this runs as an interpreted
+    token explode (N docs x ~100 tokens rows to find ~0.3N matches), no
+    join, no extra shuffle.  The ``transform`` lambda is a
+    ``CodegenFallback`` expression, so this runs as an interpreted
     projection (and ``Generate``) outside whole-stage codegen.
-    Falls back to the join path if the dict exceeds ``max_inline``.
+
+    A larger dict takes the broadcast join: each doc's distinct tokens are
+    exploded and joined against the dict, then the (url, entity_id) pairs
+    are deduplicated.  The branch is chosen by the dict's observed size.
     MEASURED (sf0.1 corpus, local[32], min-of-3 noop-sink walls): the
     broadcast join is FLAT at ~0.4s from 128 to 32k entries while the
     inline literal degrades linearly once the expression tree dominates —
     dict=30: 0.18s inline / 0.38s join; 512: 0.34 / 0.42; 1024: 0.50 /
-    0.42 (crossover); 8192: 5.2 / 0.41; 32768: 23.3 / 0.42.  The default
-    sits at 512, comfortably on the winning side of the crossover;
-    real alias dictionaries (thousands of entries) take the join path.
-    Position/prior attribution stays on detect_mentions — this path feeds
-    mention_triples, which only needs the distinct pair set.
+    0.42 (crossover); 8192: 5.2 / 0.41; 32768: 23.3 / 0.42.  ``MAX_INLINE``
+    sits at 512, comfortably on the winning side of the crossover; real
+    alias dictionaries (thousands of entries) take the join.
     """
     rows = alias_dict.select("alias", "entity_id").collect()
     if not rows:
@@ -164,17 +133,20 @@ def mention_entities(pages: DataFrame, alias_dict: DataFrame,
                 F.lit(None).cast("long").alias("entity_id"),
             ).limit(0)
         )
-    if len(rows) > max_inline:
+    toks = F.filter(
+        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != ""
+    )
+    if len(rows) > MAX_INLINE:
+        tok = pages.select(F.col(key_col).alias("url"),
+                           F.explode(F.array_distinct(toks)).alias("token"))
         return (
-            detect_mentions(pages, alias_dict, text_col, key_col)
-            .select("url", "entity_id").distinct()
+            tok.join(F.broadcast(alias_dict), tok["token"] == alias_dict["alias"], "inner")
+            .select("url", "entity_id")
+            .distinct()
         )
     aliases = F.array(*[F.lit(r["alias"]) for r in rows])
     amap = F.create_map(
         *[x for r in rows for x in (F.lit(r["alias"]), F.lit(int(r["entity_id"])))]
-    )
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != ""
     )
     ents = F.array_distinct(
         F.transform(F.array_intersect(toks, aliases), lambda t: amap[t])

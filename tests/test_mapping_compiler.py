@@ -87,11 +87,10 @@ def northwind_maps():
     return [orders, shippers]
 
 
-def run_both(spark, tmaps, tables, strategy="explode"):
+def run_both(spark, tmaps, tables):
     comp = SparkMappingCompiler(
         spark,
         {name: spark.createDataFrame(pdf) for name, pdf in tables.items()},
-        strategy=strategy,
     )
     got = comp.compile(tmaps).toPandas()
     con = duckdb.connect()
@@ -109,9 +108,8 @@ def as_sorted_tuples(df):
     )
 
 
-@pytest.mark.parametrize("strategy", ["explode", "union"])
-def test_northwind_dump_matches_oracle(spark, strategy):
-    got, want = run_both(spark, northwind_maps(), {"Orders": ORDERS, "Shippers": SHIPPERS}, strategy)
+def test_northwind_dump_matches_oracle(spark):
+    got, want = run_both(spark, northwind_maps(), {"Orders": ORDERS, "Shippers": SHIPPERS})
     assert as_sorted_tuples(got) == as_sorted_tuples(want)
     # NULL guard: order 3 has NULL CustomerID and ShipCity -> no such triples
     assert not any("orders/3" in s and p.endswith(("customerid>", "city>")) for s, p, *_ in as_sorted_tuples(got))

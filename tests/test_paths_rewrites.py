@@ -1,5 +1,6 @@
-"""Property paths (B6), transitive closure, chain-map rewrite (B7) and
-subordination detection (B8), mirroring the reference's tests
+"""Property paths (B6) through the SPARQL front end, transitive closure,
+chain-map rewrite (B7) and subordination detection (B8), mirroring the
+reference's tests
 (tests/test_resolve_path_in_triples.py, test_sql_converter.py:228-232,
 482-484, 686-700)."""
 
@@ -15,10 +16,9 @@ from rdflib_r2r_spark.mapping import (
     LogicalSource, PredicateObjectMap, SubjectMap, TermMap, TriplesMap, const_iri,
 )
 from rdflib_r2r_spark.oracle import mapping_to_duckdb_sql
-from rdflib_r2r_spark.paths import (
-    Pred, alt, eval_path, inv, resolve_paths, seq, transitive_closure,
-)
+from rdflib_r2r_spark.paths import alt, inv, resolve_paths, seq, transitive_closure
 from rdflib_r2r_spark.rewrites import add_chain_maps, chain_pred, subordination_links
+from rdflib_r2r_spark.sparql import SparkR2RStore
 
 EX = "http://ex.org/"
 
@@ -47,34 +47,47 @@ def test_resolve_inverse_and_combination():
         assert b[0][1] == EX + "a" and b[0][2] == "?s"  # inverted first hop
 
 
-# -- runtime path evaluation over triples -------------------------------------
+# -- path evaluation through SPARQL over the geo mapping ----------------------
 
 @pytest.fixture(scope="module")
-def geo_triples(spark):
+def geo_store(spark):
     import __spark_entry__ as E
 
-    comp = SparkMappingCompiler(
+    return SparkR2RStore(
         spark,
         {n: spark.read.parquet(f"/root/testdata/sf0.001/{n}.parquet") for n in ("nation", "region")},
+        E.geo_tmaps(),
+        init_ns={"ex": EX},
     )
-    return comp.compile(E.geo_tmaps()).cache()
 
 
-def test_eval_seq_path(spark, geo_triples):
-    out = eval_path(geo_triples, seq(EX + "inRegion", EX + "name")).collect()
-    assert len(out) == 25  # every nation reaches its region's name
-    assert all(r["s"].startswith("<http://ex.org/nation/") for r in out)
-    names = {r["o"] for r in out}
+def _pairs(df):
+    rows = df.select("s", "o").collect()
+    assert len(rows) == len(set(rows))  # no duplicate rows
+    return {(r[0], r[1]) for r in rows}
+
+
+def test_eval_seq_path(geo_store):
+    """ex:inRegion/ex:name is the explicit two-triple BGP."""
+    got = _pairs(geo_store.query("SELECT ?s ?o { ?s ex:inRegion/ex:name ?o }"))
+    want = _pairs(geo_store.query("SELECT ?s ?o { ?s ex:inRegion ?r . ?r ex:name ?o }"))
+    assert got == want
+    assert len(got) == 25  # every nation reaches its region's name
+    assert all(s.startswith("<http://ex.org/nation/") for s, _ in got)
+    names = {o for _, o in got}
     assert "ASIA" in names and len(names) == 5
 
 
-def test_eval_alt_inv_path(spark, geo_triples):
-    out = eval_path(geo_triples, alt(Pred(EX + "name"), inv(EX + "inRegion")))
-    rows = out.collect()
-    # region->nation inverted edges present
-    assert any(r["s"].startswith("<http://ex.org/region/") and r["o"].startswith("<http://ex.org/nation/") for r in rows)
-    # plus the name edges
-    assert any(r["o"] == "ASIA" for r in rows)
+def test_eval_alt_inv_path(geo_store):
+    """(ex:name|^ex:inRegion) is the UNION of the plain and swapped arms."""
+    got = _pairs(geo_store.query("SELECT DISTINCT ?s ?o { ?s (ex:name|^ex:inRegion) ?o }"))
+    want = _pairs(geo_store.query(
+        "SELECT DISTINCT ?s ?o { { ?s ex:name ?o } UNION { ?o ex:inRegion ?s } }"))
+    assert got == want
+    # region->nation inverted edges present, plus the name edges
+    assert any(s.startswith("<http://ex.org/region/") and o.startswith("<http://ex.org/nation/")
+               for s, o in got)
+    assert any(o == "ASIA" for _, o in got)
 
 
 def test_transitive_closure_chain(spark):
@@ -166,12 +179,13 @@ def test_chain_maps_rewrite_and_compile(spark):
 
     cp = chain_pred(EX + "regionref", EX + "regionkey")
     chain_rows = dump.filter(F.col("pred") == cp)
-    # no join in the chain arm: values match the explicit 2-hop evaluation
-    from rdflib_r2r_spark.paths import eval_path, seq as pseq
-
-    two_hop = eval_path(dump, pseq(EX + "regionref", EX + "regionkey"))
+    # no join in the chain arm: values match the explicit 2-hop join
+    ref = dump.filter(F.col("pred") == f"<{EX}regionref>").select("subj", F.col("obj").alias("_m"))
+    key = dump.filter(F.col("pred") == f"<{EX}regionkey>").select(
+        F.col("subj").alias("_m"), F.col("obj").alias("o"))
+    two_hop = ref.join(key, "_m").select("subj", "o")
     a = {(r["subj"], r["obj"]) for r in chain_rows.select("subj", "obj").collect()}
-    b = {(r["s"], r["o"]) for r in two_hop.collect()}
+    b = {(r["subj"], r["o"]) for r in two_hop.collect()}
     assert a == b and len(a) == 25
 
 
@@ -237,37 +251,3 @@ def test_transitive_closure_nonconvergence_raises(spark):
     # and with enough rounds the same graph converges fine
     tc = {(r["src"], r["dst"]) for r in transitive_closure(edges, max_iter=10).collect()}
     assert (0, 6) in tc and len(tc) == 21
-
-
-def test_transitive_closure_doubling_nonconvergence_raises(spark):
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(9)], "src int, dst int"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        transitive_closure(edges, max_iter=2, strategy="doubling")
-    tc = {(r["src"], r["dst"]) for r in
-          transitive_closure(edges, max_iter=6, strategy="doubling").collect()}
-    assert (0, 9) in tc and len(tc) == 45
-
-
-def test_eval_negset_path(spark, geo_triples):
-    from rdflib_r2r_spark.paths import NegSet
-
-    all_rows = geo_triples.count()
-    # forward NPS: everything except inRegion edges
-    out = eval_path(geo_triples, NegSet(forward=(EX + "inRegion",)))
-    n_inregion = geo_triples.filter(
-        F.col("pred") == f"<{EX}inRegion>"
-    ).count()
-    assert out.count() == all_rows - n_inregion
-    # all-inverse NPS: !(^p) flips every non-p edge
-    inv_out = eval_path(geo_triples, NegSet(inverse=(EX + "inRegion",)))
-    assert inv_out.count() == all_rows - n_inregion
-    flipped = {(r["s"], r["o"]) for r in inv_out.collect()}
-    straight = {(r["o"], r["s"]) for r in out.collect()}
-    assert flipped == straight
-    # mixed = union of both branches (multiset)
-    both = eval_path(
-        geo_triples, NegSet(forward=(EX + "inRegion",), inverse=(EX + "inRegion",))
-    )
-    assert both.count() == 2 * (all_rows - n_inregion)

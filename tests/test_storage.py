@@ -8,6 +8,7 @@ import glob
 import os
 
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from rdflib_r2r_spark import storage
@@ -98,3 +99,17 @@ def test_read_bucket_prunes_without_extra_job(spark, tmp_path):
     optimized = out._jdf.queryExecution().optimizedPlan().toString()
     # constant-folded literal bucket comparison, not an unevaluated hash
     assert "xxhash64" not in optimized.lower()
+
+
+def test_read_bucket_requires_the_written_bucket_count(spark, tmp_path):
+    """Another bucket count names another bucket: the lookup would find
+    nothing, so the count has no default and must be named."""
+    triples = _small_triples(spark)
+    target = str(tmp_path / "triples4")
+    _write_bucketed(triples, target, 8)
+    subj = "<http://ex.org/nation/7>"
+    with pytest.raises(TypeError, match="num_buckets"):
+        storage.read_bucket(spark, target, subj)
+    with pytest.raises(TypeError):
+        storage.read_bucket(spark, target, subj, 8)  # positional: not named
+    assert storage.read_bucket(spark, target, subj, num_buckets=8).count() >= 3

@@ -79,7 +79,7 @@ def test_extraction_handles_messy_html(spark):
     assert [r["got"] for r in got] == [want for _, want in cases]
 
 
-def test_alias_dict_and_mentions_match_reference(spark, docs, docs_pd):
+def test_alias_dict_and_mentions_match_reference(spark, docs, docs_pd, monkeypatch):
     pages = pg.pages_from_documents(docs)
     adict = men.build_alias_dict(pages)
     got = {(r["alias"], r["entity_id"]) for r in adict.collect()}
@@ -89,8 +89,6 @@ def test_alias_dict_and_mentions_match_reference(spark, docs, docs_pd):
     want = {(a, i) for a, i in ref.alias_dict_py(texts).items()}
     assert got == want
 
-    mentions = men.detect_mentions(pages, adict)
-    got_m = {(r["url"], r["entity_id"]) for r in mentions.select("url", "entity_id").distinct().collect()}
     aliases = ref.alias_dict_py(texts)
     want_m = {
         (url, aliases[t])
@@ -98,10 +96,16 @@ def test_alias_dict_and_mentions_match_reference(spark, docs, docs_pd):
         for t in set(ref.tokens_py(text))
         if t in aliases
     }
-    assert got_m == want_m
+    # the inlined dict, then the broadcast join a larger dict takes
+    for limit in (men.MAX_INLINE, 0):
+        monkeypatch.setattr(men, "MAX_INLINE", limit)
+        rows = men.mention_entities(pages, adict).collect()
+        got_m = {(r["url"], r["entity_id"]) for r in rows}
+        assert len(got_m) == len(rows), limit  # a pair set: no duplicates
+        assert got_m == want_m, limit
 
 
-def test_mention_entities_non_injective_alias_dict(spark):
+def test_mention_entities_non_injective_alias_dict(spark, monkeypatch):
     """ADVICE r4 (medium): with several aliases mapping to ONE entity — the
     normal shape of a real alias dictionary — the inline fast path must
     still emit globally distinct (url, entity_id) pairs.  Also pins the
@@ -120,9 +124,9 @@ def test_mention_entities_non_injective_alias_dict(spark):
     assert fast == {("u1", 7), ("u2", 7), ("u2", 3)}
     # and no duplicate rows at all (the set comparison would hide them)
     assert men.mention_entities(pages, adict).count() == 3
-    slow = {(r["url"], r["entity_id"])
-            for r in men.mention_entities(pages, adict, max_inline=0).collect()}
-    assert slow == fast
+    monkeypatch.setattr(men, "MAX_INLINE", 0)
+    slow = men.mention_entities(pages, adict).collect()
+    assert {(r["url"], r["entity_id"]) for r in slow} == fast and len(slow) == 3
 
 
 def test_mention_entities_empty_alias_dict(spark):
@@ -152,19 +156,14 @@ def test_connected_components_golden(spark):
     )
     cc = {r["node"]: r["component"] for r in components.connected_components(edges).collect()}
     assert cc == {1: 1, 2: 1, 3: 1, 4: 1, 8: 1, 10: 1, 5: 5, 6: 5, 7: 5}
-    # salted variant is exact
-    cc2 = {
-        r["node"]: r["component"]
-        for r in components.connected_components(edges, salt_buckets=4).collect()
-    }
-    assert cc2 == cc
 
 
 def test_connected_components_nonconvergence_raises(spark):
-    # a 10-node chain has diameter 9: two one-hop rounds cannot label it
+    # a 10-node chain has diameter 9: max_iter=2 allows one round of
+    # HOPS_PER_ROUND (3) hops, which cannot label it
     edges = spark.createDataFrame([(i, i + 1) for i in range(9)], "a long, b long")
-    with pytest.raises(RuntimeError, match=r"max_iter=2 .*hops_per_round=1"):
-        components.connected_components(edges, max_iter=2, hops_per_round=1)
+    with pytest.raises(RuntimeError, match=r"max_iter=2 .*3 per round"):
+        components.connected_components(edges, max_iter=2)
     cc = components.connected_components(edges).collect()
     assert {r["component"] for r in cc} == {0} and len(cc) == 10
 
