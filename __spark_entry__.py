@@ -55,9 +55,9 @@ TABLES = [
 ]
 
 
-# payload tables whose per-row work dwarfs their byte size: a single-row-
-# group parquet caps their scan at 1-2 partitions, so widen after read
-# (session.widen_scan is a guarded no-op on well-split inputs)
+# payload tables read through session.widen_scan: it widens a scan only up
+# to the partition count Spark's split rule gives the table's bytes, so the
+# testdata tables (all under the 4 MB split floor) stay one partition
 _WIDEN_TABLES = {"documents", "embeddings"}
 
 

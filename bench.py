@@ -9,8 +9,8 @@ bucketed write), per BASELINE.json. Secondary: per-query seconds for the
 relational/dedup headliners.
 
 $SPARK_GRAFT_REPLICATE (default 1) fans the documents corpus out N-fold
-inside the job (deterministic doc_id offsets) — used by scripts/scaling.py
-to give the scaling runs enough work to measure parallel efficiency.
+inside the job (deterministic doc_id offsets), to give the pipeline
+enough work to measure at a larger input than the testdata's.
 """
 
 from __future__ import annotations
@@ -68,11 +68,10 @@ def _loadavg() -> list[float]:
 
 
 def _wait_for_quiet() -> dict:
-    """Quiet-window gate (ported from scripts/scaling.py, round-5 verdict
-    ask #3): this sandbox shares its host with co-tenant storms that move
-    per-query walls 13-59% (BENCH_r05 regressed uniformly, including
-    queries whose code did not change, and the artifact could not prove it
-    was noise).  Block until the 1-min loadavg drops below
+    """Quiet-window gate: on a shared host, co-tenant load moves per-query
+    walls 13-59% (BENCH_r05 regressed uniformly, including queries whose
+    code did not change, and the artifact could not prove it was noise).
+    Block until the 1-min loadavg drops below
     SPARK_GRAFT_QUIET_LOAD (default 4.0) or SPARK_GRAFT_QUIET_WAIT seconds
     (default 600) elapse; record what happened either way so the committed
     BENCH JSON carries its own noise context."""

@@ -140,9 +140,12 @@ FROM mx
 """
 
 
+# salt cells per domain in source_cap's stage 1
+SALT_BUCKETS = 8
+
+
 def source_cap(docs: DataFrame, k: int = 20, group_col: str = "source",
-               rank_col: str = "n_chars", key_col: str = "doc_id",
-               salt_buckets: int = 8) -> DataFrame:
+               rank_col: str = "n_chars", key_col: str = "doc_id") -> DataFrame:
     """Per-domain quota sampling: keep the top-``k`` documents of each
     ``group_col`` (domain/source) ranked by ``rank_col`` DESC with the key
     as the deterministic tiebreak — the "domain balancing" cap every crawl
@@ -151,8 +154,8 @@ def source_cap(docs: DataFrame, k: int = 20, group_col: str = "source",
     Scale: a naive ``row_number() OVER (PARTITION BY domain)`` ships EVERY
     row of a domain to one task — a mega-host at 100 TB is a straggler.
     This runs the standard two-stage salted top-k instead: stage 1 ranks
-    within (domain, salt) — ``salt_buckets`` bounded cells per domain — and
-    keeps k per cell; stage 2 ranks the <= k*salt_buckets survivors per
+    within (domain, salt) — ``SALT_BUCKETS`` bounded cells per domain — and
+    keeps k per cell; stage 2 ranks the <= k*SALT_BUCKETS survivors per
     domain.  The global per-domain top-k is always a subset of the union
     of per-salt top-ks, so semantics equal the single-window form (which
     is the DuckDB oracle twin).
@@ -164,7 +167,7 @@ def source_cap(docs: DataFrame, k: int = 20, group_col: str = "source",
     order = [F.desc(rank_col), F.asc(key_col)]
     s1 = docs.select(
         key_col, group_col, rank_col,
-        F.pmod(F.xxhash64(F.col(key_col)), F.lit(salt_buckets)).alias("_salt"),
+        F.pmod(F.xxhash64(F.col(key_col)), F.lit(SALT_BUCKETS)).alias("_salt"),
     )
     w1 = Window.partitionBy(group_col, "_salt").orderBy(*order)
     s1 = s1.withColumn("_rn1", F.row_number().over(w1)).filter(F.col("_rn1") <= k)

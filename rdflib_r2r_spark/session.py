@@ -93,13 +93,14 @@ def get_spark(app_name: str = "rdflib_r2r_spark") -> SparkSession:
     return spark
 
 
-# (applicationId, defaultParallelism, caller key) -> ((size, mtime_ns) of
-# the key's file, bool).  The guard probe (`df.rdd.getNumPartitions()`)
-# costs a physical-planning pass plus a Py4J round trip (measured 60-90 ms)
-# PER CALL, and `_t()` pays it on every read of a widen-eligible table.
+# (applicationId, target, caller key) -> ((size, mtime_ns) of the key's
+# file, bool).  The guard probe (`df.rdd.getNumPartitions()`) costs a
+# physical-planning pass plus a Py4J round trip (measured 60-90 ms) PER
+# CALL, and `_t()` pays it on every read of a widen-eligible table.
 # Caching the decision is purely a driver-overhead fix: the chosen plan is
-# identical.  A rewritten input (new size or mtime) is probed again and
-# replaces its entry.
+# identical.  The target is part of the key, so a decision is never served
+# for another target; a rewritten input (new size or mtime) is probed
+# again and replaces its entry.
 _WIDEN_DECISION: dict = {}
 
 
@@ -111,25 +112,47 @@ def _file_version(path: str) -> tuple[int, int] | None:
     return st.st_size, st.st_mtime_ns
 
 
+def _scan_target(df) -> int:
+    """The partition count Spark's file-split rule
+    (``FilePartition.maxSplitBytes``) gives ``df``'s bytes, as if its file
+    were splittable, capped at the default parallelism:
+    ``min(parallelism, ceil(bytes / split))`` with ``split =
+    min(maxPartitionBytes, max(openCostInBytes, bytes / parallelism))``.
+    ``bytes`` is ``sizeInBytes`` from the optimized plan's statistics, so
+    the rule holds on any filesystem."""
+    spark = df.sparkSession
+    cores = spark.sparkContext.defaultParallelism
+    conf = spark._jsparkSession.sessionState().conf()
+    nbytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    split = max(1, min(conf.filesMaxPartitionBytes(),
+                       max(conf.filesOpenCostInBytes(), nbytes // cores)))
+    return min(cores, -(-nbytes // split))
+
+
 def widen_scan(df, cache_key: str | None = None):
-    """Guide §2.5 ("input skew: one huge unsplittable file ... repartition
-    immediately after the read"): the sandbox corpus parquet is written as
-    a SINGLE row group, so the file scan yields 1-2 partitions no matter
-    what ``maxPartitionBytes`` says, and every per-row text stage runs on
-    1-2 of the session's cores.  Round-robin repartition right after the
-    read — but ONLY when the scan is narrower than the session's default
-    parallelism, so on a cluster reading well-split 100 TB inputs this is
-    a no-op (the guard is derived from the runtime, not a tuned constant).
-    The exchange moves corpus bytes once; the starved stages it unblocks
-    cost 10-100x more CPU per byte than the move.
+    """Spread a narrow scan over the partitions its bytes call for (guide
+    §2.5, "input skew: one huge unsplittable file ... repartition
+    immediately after the read").
+
+    The target is :func:`_scan_target`, the count Spark's own split rule
+    gives the same bytes.  A round-robin repartition to it follows the
+    read only when the scan yields fewer partitions, as an unsplittable
+    file or source does.  An input under the split floor
+    (``openCostInBytes``, 4 MB) has target 1: no exchange and no probe,
+    because each extra task and part file in the narrow stages after it
+    costs more than its slice of work.  A 1.2 GB input on 32 cores still
+    gets target 32.  The probe counts partitions, not row groups: a
+    parquet file is split by bytes even when it holds one row group, so
+    its scan already yields the target.
 
     ``cache_key`` (the parquet path) memoizes the narrow-scan probe per
-    (session, parallelism, key) and the file's size and mtime; pass it when
+    (session, target, key) and the file's size and mtime; pass it when
     the same input is read repeatedly in one session."""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
+    target = _scan_target(df)
+    if target <= 1:
+        return df
     if cache_key is not None:
-        key = (spark.sparkContext.applicationId, target, cache_key)
+        key = (df.sparkSession.sparkContext.applicationId, target, cache_key)
         version = _file_version(cache_key)
         hit = _WIDEN_DECISION.get(key)
         if hit is not None and hit[0] == version:

@@ -9,15 +9,17 @@ iterations — near-dup clusters are shallow, so typically 2-4.
 Scale notes:
 - ``localCheckpoint(eager=True)`` per round truncates lineage (otherwise
   the plan doubles every round and the driver OOMs planning at scale);
-- the neighbor-min aggregation is a groupBy on node id, and ``min`` is
-  algebraic, so Spark plans it in two phases without any rewrite here:
-  ``explain`` of one hop shows ``HashAggregate(keys=[node],
-  functions=[partial_min(label)])`` below the ``hashpartitioning(node)``
-  exchange and ``min(label)`` above it.  Each map task ships at most one
-  row per (task, node), so a hub node's fan-in is bounded before the
-  shuffle; a salted (node, salt) pre-aggregation would only repeat that;
-- convergence is a single scalar count per round, no collect of data;
-  a graph that has not converged after ``max_iter`` hops raises.
+- each hop is one join and one groupBy on node id over the neighbour
+  labels and the node's own, and ``min`` is algebraic, so Spark plans it
+  in two phases without any rewrite here: ``explain`` of one hop shows
+  ``HashAggregate(keys=[node], functions=[partial_min(cand), ...])``
+  below the ``hashpartitioning(node)`` exchange and ``min(cand)`` above
+  it.  Each map task ships at most one row per (task, node), so a hub
+  node's fan-in is bounded before the shuffle; a salted (node, salt)
+  pre-aggregation would only repeat that;
+- convergence is an ``Observation`` ``count_if`` on each round's
+  checkpoint job, no extra job and no collect of data; a graph that has
+  not converged after ``max_iter`` hops raises.
 
 The reference has no transitive closure at all (SPARQL paths '+'/'*' raise
 SparqlNotImplementedError — reference: rdflib_r2r/sql_converter.py:229-230,
@@ -27,7 +29,7 @@ the Spark-native way.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -54,43 +56,40 @@ def connected_components(
     ``max_iter`` hops allow.
     """
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    sym = e.unionByName(e.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
+    # no distinct(): a duplicate edge only repeats a candidate of a min
+    sym = e.unionByName(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
     sym = sym.localCheckpoint(eager=True)
 
-    labels = (
-        sym.select(F.col("s").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-
     def one_hop(lbls: DataFrame) -> DataFrame:
-        nbr = (
-            sym.join(lbls, sym["d"] == lbls["node"], "inner")
-            .select(sym["s"].alias("node"), F.col("label"))
-            .groupBy("node").agg(F.min("label").alias("cand"))
-        )
+        # neighbour labels plus the node's own (which carries the old label
+        # for _chg): one join and one grouped min per hop
+        nbr = sym.join(lbls, sym["d"] == lbls["node"], "inner").select(
+            sym["s"].alias("node"), F.col("label").alias("cand"), F.lit(None).alias("old"))
+        own = lbls.select("node", F.col("label").alias("cand"), F.col("label").alias("old"))
         return (
-            lbls.join(nbr, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("cand"), F.col("label"))).alias("label"),
-                (F.col("cand").isNotNull() & (F.col("cand") < F.col("label"))).alias("_chg"),
-            )
+            nbr.unionByName(own)
+            .groupBy("node").agg(F.min("cand").alias("label"), F.max("old").alias("old"))
+            .select("node", "label", (F.col("label") < F.col("old")).alias("_chg"))
         )
 
+    # round 1 starts from the first hop off the identity labeling, read
+    # straight from the edge list: label = least(node, min neighbour)
+    stepped = sym.groupBy("s").agg(F.min("d").alias("cand")).select(
+        F.col("s").alias("node"), F.least(F.col("s"), F.col("cand")).alias("label"),
+        (F.col("cand") < F.col("s")).alias("_chg"))
     rounds = max(1, (max_iter + HOPS_PER_ROUND - 1) // HOPS_PER_ROUND)
-    for _i in range(rounds):
-        stepped = labels
-        for _h in range(HOPS_PER_ROUND):
+    for i in range(rounds):
+        for _h in range(HOPS_PER_ROUND - (i == 0)):
             stepped = one_hop(stepped.select("node", "label"))
         # min-propagation is monotone: if the LAST hop changed nothing, the
-        # labels are a fixpoint — one flag per round suffices
-        new_labels = stepped.localCheckpoint(eager=True)
-        changed = new_labels.filter(F.col("_chg")).limit(1).count()
-        labels = new_labels.drop("_chg")
-        if changed == 0:
+        # labels are a fixpoint — one flag per round suffices, counted by
+        # the checkpoint job itself
+        obs = Observation()
+        labels = stepped.observe(obs, F.count_if(F.col("_chg")).alias("changed")) \
+            .localCheckpoint(eager=True).drop("_chg")
+        if obs.get["changed"] == 0:
             break
+        stepped = labels
     else:
         # unconverged labels split components silently — fail loudly
         raise RuntimeError(

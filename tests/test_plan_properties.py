@@ -109,11 +109,10 @@ NEW_OPS = ["q_quality_filter", "q_repetition", "q_pii_scrub",
 def test_per_row_ops_have_no_exchange(registry, spark, name):
     # these curation operators are pure per-row column math (+ explode for
     # chunking): any KEYED exchange in the plan means a shuffle crept into
-    # a linear corpus scan.  The single round-robin repartition right
-    # after the scan (session.widen_scan — the round-7 fix for the
-    # single-row-group corpus parquet capping scan parallelism at 1-2
-    # tasks) is allowed; it carries no key and exists only when the scan
-    # is narrower than the session's parallelism.
+    # a linear corpus scan.  A round-robin repartition right after the scan
+    # (session.widen_scan) is allowed: it carries no key, and it appears
+    # only on inputs above the split floor (openCostInBytes) whose scan is
+    # narrower than the partition count their bytes call for.
     plan = _plan(registry, spark, name)
     assert "hashpartitioning" not in plan, f"{name} plans a keyed shuffle"
     assert "SinglePartition" not in plan

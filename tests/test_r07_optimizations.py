@@ -83,26 +83,63 @@ def test_never_numeric_regex_is_conservative():
 
 
 def test_widen_decision_follows_input_rewrites(spark, tmp_path):
-    """The memoized narrow-scan decision is served while the input file is
-    unchanged and probed again once it is rewritten (new size / mtime)."""
+    """``widen_scan`` leaves an input under the split floor as it is,
+    widens a narrow scan to the partition count Spark's split rule gives
+    its bytes, serves that decision from the memo while the input file is
+    unchanged, and probes it again once the file is rewritten.
+
+    The input is one gzip JSON file: Spark cannot split it, so its scan
+    is one partition whatever the split confs say.  (A parquet file is
+    split by bytes even when it holds one row group, so its scan already
+    yields the rule's count.)"""
+    import glob
     import os
 
     from rdflib_r2r_spark import session
 
-    target = spark.sparkContext.defaultParallelism
-    if target < 2:
+    cores = spark.sparkContext.defaultParallelism
+    if cores < 2:
         pytest.skip("a one-core session never widens")
-    p = str(tmp_path / "narrow.parquet")
-    spark.range(10).coalesce(1).write.parquet(p)
-    assert session.widen_scan(spark.read.parquet(p), cache_key=p).rdd.getNumPartitions() == target
-    key = (spark.sparkContext.applicationId, target, p)
-    version, dec = session._WIDEN_DECISION[key]
-    assert dec is True and version == session._file_version(p)
-    # plant the opposite decision: an unchanged input is served from the cache
-    session._WIDEN_DECISION[key] = (version, False)
-    assert session.widen_scan(spark.read.parquet(p), cache_key=p).rdd.getNumPartitions() == 1
-    # rewrite the input: the stale entry is re-probed and replaced
-    spark.range(20).coalesce(1).write.mode("overwrite").parquet(p)
-    os.utime(p, ns=(version[1] + 10**9, version[1] + 10**9))
-    assert session.widen_scan(spark.read.parquet(p), cache_key=p).rdd.getNumPartitions() == target
-    assert session._WIDEN_DECISION[key] == (session._file_version(p), True)
+    p = str(tmp_path / "narrow.json")
+
+    def write():
+        spark.range(10).coalesce(1).write.mode("overwrite").option("compression", "gzip").json(p)
+        return sum(os.path.getsize(f) for f in glob.glob(f"{p}/part-*.json.gz"))
+
+    def read():
+        return session.widen_scan(spark.read.schema("id long").json(p), cache_key=p)
+
+    nbytes = write()
+    # a few dozen bytes, under openCostInBytes: no exchange and no probe
+    df = read()
+    assert df.rdd.getNumPartitions() == 1
+    assert "RoundRobinPartitioning" not in df._jdf.queryExecution().executedPlan().toString()
+    assert not [k for k in session._WIDEN_DECISION if k[2] == p]
+
+    # lower both split confs so that split = maxPartitionBytes:
+    # min(split, max(2 * split, bytes / cores)) == split
+    split = -(-nbytes // min(cores, 3))
+    target = -(-nbytes // split)
+    assert 2 <= target <= cores
+    confs = {"spark.sql.files.maxPartitionBytes": str(split),
+             "spark.sql.files.openCostInBytes": str(2 * split)}
+    saved = {c: spark.conf.get(c) for c in confs}
+    try:
+        for c, v in confs.items():
+            spark.conf.set(c, v)
+        assert read().rdd.getNumPartitions() == target
+        key = (spark.sparkContext.applicationId, target, p)
+        version, dec = session._WIDEN_DECISION[key]
+        assert dec is True and version == session._file_version(p)
+        # plant the opposite decision: an unchanged input is served from the cache
+        session._WIDEN_DECISION[key] = (version, False)
+        assert read().rdd.getNumPartitions() == 1
+        # rewrite the input (same bytes, so the same target): the stale
+        # entry is re-probed and replaced
+        assert write() == nbytes
+        os.utime(p, ns=(version[1] + 10**9, version[1] + 10**9))
+        assert read().rdd.getNumPartitions() == target
+        assert session._WIDEN_DECISION[key] == (session._file_version(p), True)
+    finally:
+        for c, v in saved.items():
+            spark.conf.set(c, v)

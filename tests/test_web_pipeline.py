@@ -6,6 +6,7 @@ pure-Python reference emission, and checkpoint-resume semantics.
 from __future__ import annotations
 
 import glob
+import json
 import os
 import re
 import shutil
@@ -168,6 +169,27 @@ def test_connected_components_nonconvergence_raises(spark):
     assert {r["component"] for r in cc} == {0} and len(cc) == 10
 
 
+def test_canonical_map_jobs(spark):
+    """canonical_map on the FIXTURES.md F5 edge list, collected: one job
+    for the symmetric edge checkpoint, then per round one checkpoint whose
+    change flag is observed on the same job, then the collect.  AQE runs
+    each shuffle map stage and broadcast as a job of its own: 12 jobs in
+    all, 13 when AQE re-plans a join while its stages run (up to one run
+    in five)."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (5, 6), (6, 7), (10, 1), (10, 4), (10, 8)],
+        "a long, b long",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("canonical_map_jobs", "canonical_map_jobs")
+    try:
+        got = dict(map(tuple, components.canonical_map(edges).collect()))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == {2: 1, 3: 1, 4: 1, 8: 1, 10: 1, 6: 5, 7: 5}
+    assert len(sc.statusTracker().getJobIdsForGroup("canonical_map_jobs")) <= 13
+
+
 def test_pipeline_pr_vs_reference(spark, docs_pd, tmp_path):
     pipe = KGPipeline(spark, SF_DIR, str(tmp_path / "kg"))
     triples = pipe.run()
@@ -286,6 +308,11 @@ def test_checkpointed_stages_commit_from_footers(spark, built, docs_pd):
     _assert_write_sized_by_data(spark, jobs)
     _assert_reference_triples(fresh.frames["triples"], docs_pd)
     assert not os.path.exists(os.path.join(wd, "_lineage"))
+    # a corpus under the split floor is not widened: one task, one file,
+    # per narrow stage
+    for name in ("pages", "extracted", "base_triples", "sigs"):
+        with open(os.path.join(wd, "_manifests", f"{name}.json")) as f:
+            assert len(json.load(f)["files"]) == 1, name
 
     resumed = RecordingPipeline(spark, SF_DIR, wd)
     assert _jobs_of_run(spark, resumed, "resumed_run") == []
@@ -298,6 +325,8 @@ def test_fused_triples_commit_from_footers(spark, tmp_path, docs_pd):
     try:
         fresh = RecordingPipeline(spark, SF_DIR, wd, checkpoint_stages=False, resume=False)
         jobs = _jobs_of_run(spark, fresh, "fused_run")
+        pages_plan = fresh.frames["pages"]._jdf.queryExecution().executedPlan().toString()
+        assert "RoundRobinPartitioning" not in pages_plan
         assert not fresh.results["triples"].resumed
         _assert_committed(spark, fresh, ["triples"])
         _assert_write_sized_by_data(spark, jobs)
