@@ -55,20 +55,20 @@ TABLES = [
 ]
 
 
-# payload tables read through session.widen_scan: it widens a scan only up
-# to the partition count Spark's split rule gives the table's bytes, so the
-# testdata tables (all under the 4 MB split floor) stay one partition
+# payload tables read through session.widen_scan: it widens a table with
+# fewer row groups than the partition count Spark's split rule gives its
+# bytes to that count, so the testdata tables (all under the 4 MB split
+# floor) stay one partition
 _WIDEN_TABLES = {"documents", "embeddings"}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str, widen: bool = True) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
     if widen and name in _WIDEN_TABLES:
         from rdflib_r2r_spark.session import widen_scan
 
-        df = widen_scan(df, cache_key=path)
-    return df
+        return widen_scan(spark, path)
+    return spark.read.parquet(path)
 
 
 # long-lived store objects, as a real deployment holds them: SPARQL stores

@@ -280,7 +280,7 @@ class KGPipeline:
         # the corpus is opened only when 'pages' is computed: reading it
         # infers its schema in a job, which a resumed run must not pay
         pages = self.stage("pages", [], lambda: pg.pages_from_documents(
-            widen_scan(spark.read.parquet(docs_path), cache_key=docs_path)))
+            widen_scan(spark, docs_path)))
         extracted = self.stage("extracted", ["pages"], lambda: pages.select(
             "url", "warc_ts", "lang", extract_text(F.col("html")).alias("text")))
         base_triples = self.stage("base_triples", ["extracted"], lambda: SparkMappingCompiler(

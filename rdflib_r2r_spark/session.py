@@ -8,7 +8,7 @@ from __future__ import annotations
 import os
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Python workers (pandas UDFs) are separate processes: they need this package
 # importable regardless of the driver's cwd/sys.path. On a cluster the same
@@ -93,75 +93,45 @@ def get_spark(app_name: str = "rdflib_r2r_spark") -> SparkSession:
     return spark
 
 
-# (applicationId, target, caller key) -> ((size, mtime_ns) of the key's
-# file, bool).  The guard probe (`df.rdd.getNumPartitions()`) costs a
-# physical-planning pass plus a Py4J round trip (measured 60-90 ms) PER
-# CALL, and `_t()` pays it on every read of a widen-eligible table.
-# Caching the decision is purely a driver-overhead fix: the chosen plan is
-# identical.  The target is part of the key, so a decision is never served
-# for another target; a rewritten input (new size or mtime) is probed
-# again and replaces its entry.
-_WIDEN_DECISION: dict = {}
-
-
-def _file_version(path: str) -> tuple[int, int] | None:
-    try:
-        st = os.stat(path)
-    except OSError:  # not a local path
-        return None
-    return st.st_size, st.st_mtime_ns
-
-
-def _scan_target(df) -> int:
+def _scan_target(spark: SparkSession, nbytes: int) -> int:
     """The partition count Spark's file-split rule
-    (``FilePartition.maxSplitBytes``) gives ``df``'s bytes, as if its file
-    were splittable, capped at the default parallelism:
-    ``min(parallelism, ceil(bytes / split))`` with ``split =
-    min(maxPartitionBytes, max(openCostInBytes, bytes / parallelism))``.
-    ``bytes`` is ``sizeInBytes`` from the optimized plan's statistics, so
-    the rule holds on any filesystem."""
-    spark = df.sparkSession
+    (``FilePartition.maxSplitBytes``) gives ``nbytes`` of splittable
+    files, capped at the default parallelism: ``min(parallelism,
+    ceil(bytes / split))`` with ``split = min(maxPartitionBytes,
+    max(openCostInBytes, bytes / parallelism))``."""
     cores = spark.sparkContext.defaultParallelism
     conf = spark._jsparkSession.sessionState().conf()
-    nbytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     split = max(1, min(conf.filesMaxPartitionBytes(),
                        max(conf.filesOpenCostInBytes(), nbytes // cores)))
     return min(cores, -(-nbytes // split))
 
 
-def widen_scan(df, cache_key: str | None = None):
-    """Spread a narrow scan over the partitions its bytes call for (guide
-    §2.5, "input skew: one huge unsplittable file ... repartition
-    immediately after the read").
+def widen_scan(spark: SparkSession, path: str) -> DataFrame:
+    """Read the parquet file or directory at ``path``, spread over the
+    partitions its bytes call for (guide §2.5, "input skew: one huge
+    unsplittable file ... repartition immediately after the read").
 
-    The target is :func:`_scan_target`, the count Spark's own split rule
-    gives the same bytes.  A round-robin repartition to it follows the
-    read only when the scan yields fewer partitions, as an unsplittable
-    file or source does.  An input under the split floor
-    (``openCostInBytes``, 4 MB) has target 1: no exchange and no probe,
-    because each extra task and part file in the narrow stages after it
-    costs more than its slice of work.  A 1.2 GB input on 32 cores still
-    gets target 32.  The probe counts partitions, not row groups: a
-    parquet file is split by bytes even when it holds one row group, so
-    its scan already yields the target.
+    The target is :func:`_scan_target` of the files' bytes, the count
+    Spark's own split rule gives them.  Spark splits parquet by bytes, so
+    the scan already yields about that many partitions, but a split holds
+    rows only if a row group starts in it: a file with one row group
+    scans as ``target`` partitions with every row in one of them.  So the
+    read is followed by a round-robin repartition to the target exactly
+    when the footers list fewer row groups than the target.  An input
+    under the split floor (``openCostInBytes``, 4 MB) has target 1 and is
+    returned as read, because each extra task and part file in the
+    narrow stages after it costs more than its slice of work.
 
-    ``cache_key`` (the parquet path) memoizes the narrow-scan probe per
-    (session, target, key) and the file's size and mtime; pass it when
-    the same input is read repeatedly in one session."""
-    target = _scan_target(df)
-    if target <= 1:
-        return df
-    if cache_key is not None:
-        key = (df.sparkSession.sparkContext.applicationId, target, cache_key)
-        version = _file_version(cache_key)
-        hit = _WIDEN_DECISION.get(key)
-        if hit is not None and hit[0] == version:
-            dec = hit[1]
-        else:
-            dec = df.rdd.getNumPartitions() < target
-            _WIDEN_DECISION[key] = (version, dec)
-    else:
-        dec = df.rdd.getNumPartitions() < target
-    if dec:
+    Sizes come from the file listing and row-group counts from the
+    footers, both read by pyarrow (no Spark job), so ``path`` is a local
+    path or a URI pyarrow's filesystems open (``hdfs://``, ``s3://``,
+    ``gs://``)."""
+    import pyarrow.dataset as ds
+
+    df = spark.read.parquet(path)
+    files = ds.dataset(path, format="parquet")
+    nbytes = sum(f.size for f in files.filesystem.get_file_info(files.files))
+    target = _scan_target(spark, nbytes)
+    if target > 1 and sum(f.num_row_groups for f in files.get_fragments()) < target:
         return df.repartition(target)
     return df

@@ -111,8 +111,8 @@ def test_per_row_ops_have_no_exchange(registry, spark, name):
     # chunking): any KEYED exchange in the plan means a shuffle crept into
     # a linear corpus scan.  A round-robin repartition right after the scan
     # (session.widen_scan) is allowed: it carries no key, and it appears
-    # only on inputs above the split floor (openCostInBytes) whose scan is
-    # narrower than the partition count their bytes call for.
+    # only on inputs above the split floor (openCostInBytes) whose footers
+    # list fewer row groups than the partition count their bytes call for.
     plan = _plan(registry, spark, name)
     assert "hashpartitioning" not in plan, f"{name} plans a keyed shuffle"
     assert "SinglePartition" not in plan

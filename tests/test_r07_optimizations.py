@@ -84,37 +84,35 @@ def test_never_numeric_regex_is_conservative():
 
 def test_widen_decision_follows_input_rewrites(spark, tmp_path):
     """``widen_scan`` leaves an input under the split floor as it is,
-    widens a narrow scan to the partition count Spark's split rule gives
-    its bytes, serves that decision from the memo while the input file is
-    unchanged, and probes it again once the file is rewritten.
-
-    The input is one gzip JSON file: Spark cannot split it, so its scan
-    is one partition whatever the split confs say.  (A parquet file is
-    split by bytes even when it holds one row group, so its scan already
-    yields the rule's count.)"""
-    import glob
+    widens a single-row-group parquet file to the partition count Spark's
+    split rule gives its bytes, and decides again from the footers when
+    the same path is rewritten: with as many row groups as that count the
+    scan is already spread and is not widened."""
     import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from rdflib_r2r_spark import session
 
     cores = spark.sparkContext.defaultParallelism
     if cores < 2:
         pytest.skip("a one-core session never widens")
-    p = str(tmp_path / "narrow.json")
+    p = str(tmp_path / "corpus.parquet")
+    rows = pa.table({"id": pa.array(range(10_000), pa.int64())})
 
-    def write():
-        spark.range(10).coalesce(1).write.mode("overwrite").option("compression", "gzip").json(p)
-        return sum(os.path.getsize(f) for f in glob.glob(f"{p}/part-*.json.gz"))
+    def write(row_groups):
+        pq.write_table(rows, p, row_group_size=len(rows) // row_groups)
+        assert pq.ParquetFile(p).num_row_groups == row_groups
+        return os.path.getsize(p)
 
-    def read():
-        return session.widen_scan(spark.read.schema("id long").json(p), cache_key=p)
+    def round_robin(df):
+        return "RoundRobinPartitioning" in df._jdf.queryExecution().executedPlan().toString()
 
-    nbytes = write()
-    # a few dozen bytes, under openCostInBytes: no exchange and no probe
-    df = read()
-    assert df.rdd.getNumPartitions() == 1
-    assert "RoundRobinPartitioning" not in df._jdf.queryExecution().executedPlan().toString()
-    assert not [k for k in session._WIDEN_DECISION if k[2] == p]
+    # tens of KB, under openCostInBytes: one partition, no exchange
+    nbytes = write(1)
+    df = session.widen_scan(spark, p)
+    assert df.rdd.getNumPartitions() == 1 and not round_robin(df)
 
     # lower both split confs so that split = maxPartitionBytes:
     # min(split, max(2 * split, bytes / cores)) == split
@@ -127,19 +125,26 @@ def test_widen_decision_follows_input_rewrites(spark, tmp_path):
     try:
         for c, v in confs.items():
             spark.conf.set(c, v)
-        assert read().rdd.getNumPartitions() == target
-        key = (spark.sparkContext.applicationId, target, p)
-        version, dec = session._WIDEN_DECISION[key]
-        assert dec is True and version == session._file_version(p)
-        # plant the opposite decision: an unchanged input is served from the cache
-        session._WIDEN_DECISION[key] = (version, False)
-        assert read().rdd.getNumPartitions() == 1
-        # rewrite the input (same bytes, so the same target): the stale
-        # entry is re-probed and replaced
-        assert write() == nbytes
-        os.utime(p, ns=(version[1] + 10**9, version[1] + 10**9))
-        assert read().rdd.getNumPartitions() == target
-        assert session._WIDEN_DECISION[key] == (session._file_version(p), True)
+        # the plain scan is split into `target` byte ranges, but only the
+        # one holding the row group's start reads rows
+        per_split = spark.read.parquet(p).rdd.glom().map(len).collect()
+        assert len(per_split) == target and sorted(per_split)[-2:] == [0, len(rows)]
+        df = session.widen_scan(spark, p)
+        assert round_robin(df)
+        assert sorted(df.rdd.glom().map(len).collect()) == sorted(
+            len(rows) // target + (k < len(rows) % target) for k in range(target))
+
+        # rewritten with 10 row groups (more than the target): the scan
+        # already spreads its rows, so it is read as it is
+        many = write(10)
+        assert 10 >= -(-many // split)
+        df = session.widen_scan(spark, p)
+        assert not round_robin(df)
+        assert sum(1 for n in df.rdd.glom().map(len).collect() if n) > 1
+
+        # and rewritten back to one row group: widened again
+        write(1)
+        assert round_robin(session.widen_scan(spark, p))
     finally:
         for c, v in saved.items():
             spark.conf.set(c, v)
