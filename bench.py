@@ -63,42 +63,10 @@ def replicate_documents(spark, sf_dir: str, factor: int, out_dir: str) -> str:
     return out_dir
 
 
-def _loadavg() -> list[float]:
-    return [float(x) for x in Path("/proc/loadavg").read_text().split()[:3]]
-
-
-def _wait_for_quiet() -> dict:
-    """Quiet-window gate: on a shared host, co-tenant load moves per-query
-    walls 13-59% (BENCH_r05 regressed uniformly, including queries whose
-    code did not change, and the artifact could not prove it was noise).
-    Block until the 1-min loadavg drops below
-    SPARK_GRAFT_QUIET_LOAD (default 4.0) or SPARK_GRAFT_QUIET_WAIT seconds
-    (default 600) elapse; record what happened either way so the committed
-    BENCH JSON carries its own noise context."""
-    thresh = float(os.environ.get("SPARK_GRAFT_QUIET_LOAD", "4.0"))
-    max_wait = int(os.environ.get("SPARK_GRAFT_QUIET_WAIT", "600"))
-    t0 = time.time()
-    la = _loadavg()
-    if thresh <= 0:
-        return {"threshold": thresh, "waited_s": 0.0, "met": None,
-                "load_at_launch": la}
-    while la[0] >= thresh and time.time() - t0 < max_wait:
-        time.sleep(15)
-        la = _loadavg()
-    return {
-        "threshold": thresh,
-        "waited_s": round(time.time() - t0, 1),
-        "met": la[0] < thresh,
-        "load_at_launch": la,
-    }
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     replicate = int(os.environ.get("SPARK_GRAFT_REPLICATE", "1"))
     sf_label = sf_dir.rstrip("/").split("sf")[-1]
-    load_start = _loadavg()
-    quiet_gate = _wait_for_quiet()
     spark = get_spark("bench")
 
     import __spark_entry__ as E
@@ -107,14 +75,6 @@ def main() -> None:
     # warm up JVM / codegen / parquet reader so timings reflect steady state
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
     spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-
-    # pinned host-ceiling probe (scripts/probe.py, version frozen): its
-    # wall in THIS run is the noise yardstick — a round-over-round query
-    # regression with an unchanged probe wall is real; with an inflated
-    # probe wall it's the host
-    from scripts.probe import PROBE_VERSION, probe_wall
-
-    probe_secs = round(probe_wall(spark), 3)
 
     timings: dict[str, float] = {}
 
@@ -204,13 +164,6 @@ def main() -> None:
                 "triples_per_sec": round(tps, 1),
                 "replicate": replicate,
                 "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
-                # noise context (round-5 verdict ask #3): shared-host
-                # loadavg around the run + pinned-probe wall as the
-                # attributability yardstick
-                "host_loadavg_start": load_start,
-                "host_loadavg_end": _loadavg(),
-                "quiet_gate": quiet_gate,
-                "probe": {"version": PROBE_VERSION, "wall": probe_secs},
                 # pinned methodology so round-over-round deltas are
                 # attributable (round-2 verdict "What's wrong" #4)
                 "method": {

@@ -66,11 +66,21 @@ class SparkMappingCompiler:
     ):
         self.spark = spark
         self.tables = dict(tables or {})
+        self._types: dict[str, dict] = {}
 
     # -- sources ------------------------------------------------------------
 
     def register(self, name: str, df: DataFrame) -> None:
         self.tables[name] = df
+        self._types.clear()
+
+    def source_types(self, source: LogicalSource) -> dict:
+        """Column name -> Spark type of a logical source, read once."""
+        key = source.key()
+        if key not in self._types:
+            self._types[key] = {
+                f.name: f.dataType for f in self.source_df(source).schema.fields}
+        return self._types[key]
 
     def source_df(self, source: LogicalSource) -> DataFrame:
         """rr:tableName -> registered/catalog table; rr:sqlQuery -> Spark SQL

@@ -18,9 +18,12 @@ assignment, UNION ALL them) re-expressed as DataFrame plans:
   conversion_utils.py:517-531) into typed filters on raw columns, so the
   parquet scan sees ``o_orderkey = 1317``, never a string-concat comparison.
 - **Raw-key joins**: shared variables between slots join on raw columns
-  whenever both renders are the same template skeleton or same-typed columns
+  when both renders have the same ``templates.render_key`` (an injective
+  render: integral or string slots, and between two integral slots a
+  non-empty separator that starts with a non-digit); assignments whose
+  renders can never collide (``templates.may_collide``) are pruned
   (the reference's template-aware equality, conversion_utils.py:293-353);
-  rendered-lexical equality is the fallback.
+  rendered (lex, dt, lang) equality is the fallback.
 
 Variables surface as term-encoded columns ``{v}`` plus ``{v}__dt`` /
 ``{v}__lang`` / ``{v}__num`` (numeric shadow for typed filters/aggregates).
@@ -42,8 +45,9 @@ from rdflib_r2r_spark.sparql.ast_nodes import BNodeT, IRI, Lit, Var
 from rdflib_r2r_spark.sparql.parser import RDF_TYPE, SparqlNotImplemented
 from rdflib_r2r_spark.templates import (
     invert_template_py,
-    parse_template,
-    templates_compatible,
+    may_collide,
+    raw_columns,
+    render_key,
 )
 from rdflib_r2r_spark.terms import iri_unsafe_py
 
@@ -138,11 +142,11 @@ class RawBinding:
     frame-level joins) can key on the raws — 8-byte bigints — instead of
     the rendered IRI string, and re-render AFTER the exchange; Catalyst
     then prunes the per-row render entirely.  Two bindings with equal
-    ``prov`` render identically, so raw equality <=> lexical equality
-    (same template skeleton + same slot types; the injectivity argument is
-    the template-aware raw-key join bgp-internal equality already relies
-    on, restricted further to integral/single-column slots so renders
-    cannot collide across slot boundaries).
+    ``prov`` render identically, so raw equality <=> term equality:
+    ``prov`` is the ``templates.render_key`` of an IRI template whose slots
+    are integral or string columns read once, and whose two or more slots
+    are all integral with a non-empty separator starting with a non-digit
+    between each two (``{a}-{b}``; ``{a}{b}`` and ``{a}1{b}`` have no key).
 
     ``cols``   — the raw shadow column names present in the frame's df.
     ``prov``   — hashable provenance key; equal prov => same render fn.
@@ -156,9 +160,6 @@ class RawBinding:
     render: object  # Callable[[list[Column]], tuple[Column, Column, Column, Column]]
 
 
-_RAW_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-
-
 def _term_key(t) -> tuple:
     if isinstance(t, Var):
         return ("v", t.name)
@@ -167,10 +168,6 @@ def _term_key(t) -> tuple:
     if isinstance(t, IRI):
         return ("c", t.value)
     return ("l", getattr(t, "value", str(t)), getattr(t, "datatype", None))
-
-
-def _tm_render_kind(tm: TermMap, position: str) -> str:
-    return tm.inferred_term_type(position)
 
 
 def _effective_dt(tm: TermMap, slot: Slot) -> str | None:
@@ -208,56 +205,26 @@ class BGPCompiler:
         # keep the arm and add a render-equality condition later
         return True
 
-    def _subject_static_ok(self, arm: Arm, s) -> bool:
-        if isinstance(s, (Var, BNodeT)):
+    def _static_ok(self, term, tm: TermMap, position: str) -> bool:
+        """Can the term map render the pattern's constant term?  (A literal
+        only needs a literal map: its value is filtered at run time.)"""
+        if isinstance(term, (Var, BNodeT)):
             return True
-        if isinstance(s, Lit):
-            return False
-        sm = arm.tmap.subject_map
-        if sm.inferred_term_type("S") != "IRI":
-            return False
-        if sm.constant is not None:
-            return sm.constant == s.value
-        if sm.template is not None:
-            return invert_template_py(s.value, sm.template) is not None
-        return True  # column-IRI: runtime filter
-
-    def _object_static_ok(self, arm: Arm, o) -> bool:
-        if isinstance(o, (Var, BNodeT)):
-            return True
-        if arm.parent is not None:
-            # referencing-object arm renders the parent subject IRI
-            if not isinstance(o, IRI):
-                return False
-            psm = arm.parent.subject_map
-            if psm.template is not None:
-                return invert_template_py(o.value, psm.template) is not None
-            return True
-        tm = arm.obj_tm
-        kind = tm.inferred_term_type("O")
-        if isinstance(o, IRI):
-            if kind != "IRI":
-                return False
-            if tm.constant is not None:
-                return tm.constant == o.value
-            if tm.template is not None:
-                return invert_template_py(o.value, tm.template) is not None
-            return True
-        # literal object
-        if kind != "Literal":
-            return False
-        if tm.constant is not None:
-            return tm.constant == o.value
-        return True
+        if isinstance(term, Lit):
+            return tm.inferred_term_type(position) == "Literal" \
+                and tm.constant in (None, term.value)
+        const = TermMap(constant=term.value, term_type="IRI")
+        return may_collide(const, position, {}, tm, position, {})
 
     def candidates(self, s, p, o, g, dataset=None) -> list[Arm]:
         out = []
         for arm in self.arms:
             if not self._pred_matches(arm, p):
                 continue
-            if not self._subject_static_ok(arm, s):
+            if not self._static_ok(s, arm.tmap.subject_map, "S"):
                 continue
-            if not self._object_static_ok(arm, o):
+            if not (self._static_ok(o, arm.parent.subject_map, "S")
+                    if arm.parent is not None else self._static_ok(o, arm.obj_tm, "O")):
                 continue
             if dataset is None:
                 # graph dispatch: GRAPH-scoped patterns only match arms with
@@ -279,8 +246,6 @@ class BGPCompiler:
                     continue
                 const = arm.graph_tm.constant
                 if const is None:
-                    from rdflib_r2r_spark.sparql.parser import SparqlNotImplemented
-
                     raise SparqlNotImplemented(
                         "non-constant graph map under a dataset clause"
                     )
@@ -303,9 +268,8 @@ class BGPCompiler:
         key = source.key()
         if key not in self._source_cache:
             self._source_cache[key] = self.compiler.source_df(source)
-        src = self._source_cache[key]
-        return Slot(alias=alias, df=src.alias(alias),
-                    types={f.name: f.dataType for f in src.schema.fields})
+        return Slot(alias=alias, df=self._source_cache[key].alias(alias),
+                    types=self.compiler.source_types(source))
 
     def _typed_lit(self, value: str, col: str, slot: Slot) -> Column:
         dtype = slot.types.get(col)
@@ -359,54 +323,40 @@ class BGPCompiler:
         raise _Prune()
 
     def _unify(self, a: Occurrence, b: Occurrence) -> list[Column]:
-        """Equality conditions making two renderings of one variable agree.
-
-        Raw-column equality whenever the renders share a template skeleton or
-        are same-typed columns (equality of raw values <=> equality of the
-        injective rendered lexical); rendered-lexical equality otherwise.
-        """
+        """Equality conditions making two renderings of one variable agree:
+        raw-column equality when both renders have the same
+        ``render_key``, a pruned assignment when they can never collide,
+        and rendered (lex, dt, lang) equality otherwise."""
         ta, tb = a.tm, b.tm
-        ka = _tm_render_kind(ta, a.position)
-        kb = _tm_render_kind(tb, b.position)
-        if {ka, kb} == {"IRI", "Literal"} or "BlankNode" in (ka, kb) and ka != kb:
+        if not may_collide(ta, a.position, a.slot.types,
+                           tb, b.position, b.slot.types):
             raise _Prune()
         if ta.constant is not None and tb.constant is not None:
-            if ta.constant != tb.constant:
-                raise _Prune()
             return []
-        if ta.constant is not None:
-            term = IRI(ta.constant) if ka == "IRI" else Lit(ta.constant)
-            return self._const_conditions(term, tb, b.slot, b.position)
         if tb.constant is not None:
-            term = IRI(tb.constant) if kb == "IRI" else Lit(tb.constant)
-            return self._const_conditions(term, ta, a.slot, a.position)
-        if ta.template is not None and tb.template is not None:
-            if not templates_compatible(ta.template, tb.template):
-                # different skeletons never render equal IRIs in practice —
-                # the reference prunes these assignments too
-                # (conversion_utils.py try_match_templates)
-                raise _Prune()
-            args_a = [p.column for p in parse_template(ta.template) if p.column]
-            args_b = [p.column for p in parse_template(tb.template) if p.column]
+            a, b, ta, tb = b, a, tb, ta
+        if ta.constant is not None:
+            term = IRI if ta.inferred_term_type(a.position) == "IRI" else Lit
+            return self._const_conditions(term(ta.constant), tb, b.slot, b.position)
+        key = render_key(ta, a.position, a.slot.types)
+        if key is not None and key == render_key(tb, b.position, b.slot.types):
+            # a shared variable already unified to one physical column
+            # needs no `x == x` condition
             return [
-                c
-                for ca, cb in zip(args_a, args_b)
-                if (c := self._col_eq(a.slot, ca, b.slot, cb)) is not None
+                a.slot.col(ca) == b.slot.col(cb)
+                for ca, cb in zip(raw_columns(ta), raw_columns(tb))
+                if (a.slot.alias, ca) != (b.slot.alias, cb)
             ]
-        if ta.column is not None and tb.column is not None:
-            c = self._col_eq(a.slot, ta.column, b.slot, tb.column)
-            return [] if c is None else [c]
-        # mixed template/column: fall back to rendered equality
-        lex_a = self._render(a)[0]
-        lex_b = self._render(b)[0]
-        return [lex_a == lex_b]
+        lex_a, dt_a, lang_a = self._render(a)
+        lex_b, dt_b, lang_b = self._render(b)
+        return [(lex_a == lex_b) & dt_a.eqNullSafe(dt_b)
+                & lang_a.eqNullSafe(lang_b)]
 
     def _col_eq(self, sa: Slot, ca: str, sb: Slot, cb: str) -> Column | None:
+        """Equality of an R2RML join condition's child and parent columns."""
         if sa.alias == sb.alias and ca == cb:
-            # same slot + same column: two occurrences of a shared variable
-            # already unified to one physical expression — emitting the
-            # condition would put a trivially-true `x == x` filter in every
-            # star-pattern plan (dead work + Spark WARN spam)
+            # same-table referencing map: a trivially-true `x == x` filter
+            # would be dead work (and Spark WARN spam)
             return None
         if type(sa.types.get(ca)) is type(sb.types.get(cb)):
             return sa.col(ca) == sb.col(cb)
@@ -415,22 +365,13 @@ class BGPCompiler:
     def _raw_null_guard(self, occ: Occurrence) -> Column | None:
         """IS NOT NULL condition on the raw inputs of one term map, or None
         when the term can never be NULL (constants)."""
-        tm = occ.tm
-        if tm.constant is not None:
+        tm, cols = occ.tm, raw_columns(occ.tm)
+        if cols:
+            return _and_all([occ.slot.col(c).isNotNull() for c in cols])
+        if tm.constant is not None or tm.template is not None:
             return None
-        if tm.column is not None:
-            return occ.slot.col(tm.column).isNotNull()
-        if tm.template is not None:
-            cols = [p.column for p in parse_template(tm.template) if p.column]
-            if not cols:
-                return None
-            cond = occ.slot.col(cols[0]).isNotNull()
-            for c in cols[1:]:
-                cond = cond & occ.slot.col(c).isNotNull()
-            return cond
         # exotic term maps: fall back to the rendered lexical
-        lex, _, _ = self._render(occ)
-        return lex.isNotNull()
+        return self._render(occ)[0].isNotNull()
 
     def _render(self, occ: Occurrence) -> tuple[Column, Column, Column]:
         # slots are SQL-addressable aliased scans, so hand term_columns the
@@ -448,7 +389,7 @@ class BGPCompiler:
         if tm.column is not None and isinstance(occ.slot.types.get(tm.column), _NUMERIC_SPARK):
             return occ.slot.col(tm.column).cast("double")
         dt = _effective_dt(tm, occ.slot)
-        if _tm_render_kind(tm, occ.position) == "Literal" and (dt is None or dt in _NUMERIC_XSD):
+        if tm.inferred_term_type(occ.position) == "Literal" and (dt is None or dt in _NUMERIC_XSD):
             return lex.try_cast("double")
         return F.lit(None).cast("double")
 
@@ -456,42 +397,29 @@ class BGPCompiler:
         """Cheap metadata-only unification check so impossible assignments
         (the big product of the reference's queryBGP) never build slots or
         plans — the reference's try_match_templates pruning, done eagerly."""
-        occs: dict[str, list[tuple[TermMap, str]]] = {}
+        occs: dict[str, list[tuple]] = {}
 
-        def add(term, tm: TermMap, position: str) -> None:
+        def add(term, tm: TermMap, position: str, tmap: TriplesMap) -> None:
             if isinstance(term, Var):
-                occs.setdefault(term.name, []).append((tm, position))
+                occs.setdefault(term.name, []).append((tm, position, tmap.source))
             elif isinstance(term, BNodeT):
-                occs.setdefault("__bn_" + term.label, []).append((tm, position))
+                occs.setdefault("__bn_" + term.label, []).append(
+                    (tm, position, tmap.source))
 
         for (s, p, o), arm in zip(patterns, assignment):
-            add(s, arm.tmap.subject_map, "S")
-            add(p, arm.pred_tm, "P")
+            add(s, arm.tmap.subject_map, "S", arm.tmap)
+            add(p, arm.pred_tm, "P", arm.tmap)
             if arm.parent is not None:
-                add(o, arm.parent.subject_map, "S")
+                add(o, arm.parent.subject_map, "S", arm.parent)
             else:
-                add(o, arm.obj_tm, "O")
+                add(o, arm.obj_tm, "O", arm.tmap)
 
-        for _name, olist in occs.items():
-            ta, pa = olist[0]
-            for tb, pb in olist[1:]:
-                if not self._tm_compatible(ta, pa, tb, pb):
-                    return False
-        return True
-
-    def _tm_compatible(self, ta: TermMap, pa: str, tb: TermMap, pb: str) -> bool:
-        ka, kb = ta.inferred_term_type(pa), tb.inferred_term_type(pb)
-        if ka != kb and ({ka, kb} == {"IRI", "Literal"} or "BlankNode" in (ka, kb)):
-            return False
-        if ta.constant is not None and tb.constant is not None:
-            return ta.constant == tb.constant
-        if ta.constant is not None and tb.template is not None:
-            return invert_template_py(ta.constant, tb.template) is not None
-        if tb.constant is not None and ta.template is not None:
-            return invert_template_py(tb.constant, ta.template) is not None
-        if ta.template is not None and tb.template is not None:
-            return templates_compatible(ta.template, tb.template)
-        return True
+        types = self.compiler.source_types
+        return all(
+            may_collide(ta, pa, types(sa), tb, pb, types(sb))
+            for (ta, pa, sa), *others in occs.values()
+            for tb, pb, sb in others
+        )
 
     def compile_assignment(self, patterns: list, assignment: list[Arm],
                            graph_term) -> tuple[DataFrame, dict] | None:
@@ -637,50 +565,24 @@ class BGPCompiler:
         self, name: str, occ: Occurrence
     ) -> tuple[list[tuple[str, Column]], RawBinding] | None:
         """Raw-key provenance for one variable occurrence, or None when the
-        render is not provably injective from raw columns.
-
-        Eligible: IRI template whose slots are all integral columns, or a
-        single integral/string column.  Integral multi-slot renders are
-        injective for any template (a digit string absorbs '-' only as a
-        leading sign, so a fixed separator cannot migrate across slot
-        boundaries); string slots are percent-encoded (injective) but only
-        single-slot, because an unencoded separator character inside a
-        string value could otherwise alias the separator.  Floating-point
-        slots are excluded outright: grouping normalizes -0.0/NaN while
-        their rendered lexicals stay distinct.
+        render is not provably injective from raw columns: an IRI template
+        with a ``render_key`` (see :class:`RawBinding`).  Floating-point
+        slots have no key: grouping normalizes -0.0/NaN while their
+        rendered lexicals stay distinct.
         """
         tm, pos, slot = occ.tm, occ.position, occ.slot
         if tm.template is None or tm.inferred_term_type(pos) != "IRI":
             return None
-        all_slots = [p.column for p in parse_template(tm.template) if p.column]
-        cols = list(dict.fromkeys(all_slots))
-        # a repeated column would break the slot<->raw correspondence that
-        # prov-based pairing relies on (arity is part of the provenance)
-        if not cols or len(cols) != len(all_slots):
+        prov = render_key(tm, pos, slot.types)
+        if prov is None:
             return None
-        types = [slot.types.get(c) for c in cols]
-        if len(cols) == 1:
-            ok = isinstance(types[0], _RAW_INTEGRAL + (T.StringType,))
-        else:
-            ok = all(isinstance(t, _RAW_INTEGRAL) for t in types)
-        if not ok:
-            return None
+        cols = raw_columns(tm)
         raw_names = tuple(f"{name}__raw{i}" for i in range(len(cols)))
-        # provenance keys on the template SKELETON (literal parts), not the
-        # full template: the render is lit0+enc(cast(raw0))+lit1+... — a
-        # function of the literals and slot types only, so two arms that
-        # render the same skeleton from different source columns (e.g.
-        # Product{p_partkey} vs Product{l_partkey}) are raw-comparable.
-        # This is templates_compatible's equivalence, narrowed to equal
-        # slot types.
-        skeleton = tuple(p.prefix for p in parse_template(tm.template))
-        prov = ("tmpl", skeleton, tuple(t.simpleString() for t in types))
-        types_by_name = dict(zip(cols, types))
+        types_by_name = {c: slot.types[c] for c in cols}
         compiler = self.compiler
-        tmpl_cols = tuple(cols)
 
         def render(raw_cols: list) -> tuple[Column, Column, Column, Column]:
-            by = dict(zip(tmpl_cols, raw_cols))
+            by = dict(zip(cols, raw_cols))
             lex, dt, lang = compiler.term_columns(
                 tm, pos, lambda c: by[c], types_by_name
             )
@@ -735,9 +637,9 @@ class BGPCompiler:
             df, raws = parts[0]
             return df, var_names, raws
         # multi-arm union: a variable keeps its raw shadows only when EVERY
-        # arm binds it with the same provenance (same skeleton + slot
-        # types) — the raw columns then line up by name and raw equality
-        # still implies lexical equality across arms; anything else drops
+        # arm binds it with the same provenance (render key) — the raw
+        # columns then line up by name and raw equality still implies
+        # lexical equality across arms; anything else drops
         first_raws = parts[0][1]
         keep: dict[str, RawBinding] = {
             v: rb for v, rb in first_raws.items()

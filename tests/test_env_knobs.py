@@ -13,8 +13,6 @@ ROOT = Path(__file__).resolve().parents[1]
 KNOBS = {
     "SPARK_GRAFT_CHECKPOINT",
     "SPARK_GRAFT_CPUS",
-    "SPARK_GRAFT_QUIET_LOAD",
-    "SPARK_GRAFT_QUIET_WAIT",
     "SPARK_GRAFT_REPLICATE",
     "SPARK_GRAFT_SF_DIR",
     "SPARK_GRAFT_SKIP_CKPT",

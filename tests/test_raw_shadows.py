@@ -85,6 +85,12 @@ def test_raw_binding_eligibility_guards(spark):
                                         {"a": T.LongType(), "b": T.IntegerType()}))
     assert rb is not None and len(rb[1].cols) == 2
 
+    # an empty or digit-led separator lets digits shift across the slot
+    # boundary ((1,23) and (12,3) both render http://x/123) — out
+    for template in ("http://x/{a}{b}", "http://x/{a}1{b}"):
+        assert comp._raw_binding("v", occ_for(
+            template, {"a": T.LongType(), "b": T.IntegerType()})) is None
+
     # float slot: grouping normalizes -0.0/NaN while lexicals differ — out
     assert comp._raw_binding("v", occ_for("http://x/{a}",
                                           {"a": T.DoubleType()})) is None

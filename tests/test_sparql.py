@@ -712,6 +712,48 @@ def test_construct_full_form_dataset_position():
         )
 
 
+# -- template-term equality must be sound for any mapping ---------------------
+
+_X = "http://x/"
+
+
+def _tmap(name, subject, *pomaps):
+    return TriplesMap(
+        name=name, source=LogicalSource(table=name),
+        subject_map=SubjectMap(template=_X + subject, classes=(_X + "C",)),
+        pomaps=tuple(PredicateObjectMap(predicates=(const_iri(_X + p),),
+                                        objects=(TermMap(column=c),))
+                     for p, c in pomaps),
+    )
+
+
+@pytest.mark.parametrize("tables, tmaps, query, expected", [
+    pytest.param(
+        # (1,23) and (12,3) both render <http://x/123>
+        {"T": ("a int, b int", [(1, 23), (12, 3)])},
+        [_tmap("T", "{a}{b}")],
+        "SELECT (COUNT(DISTINCT ?s) AS ?n) { ?s a <http://x/C> }",
+        [(1,)], id="adjacent-integral-slots"),
+    pytest.param(
+        # different skeletons, one IRI: http://x/{a} (a=12) = http://x/1{b} (b=2)
+        {"A": ("a int, x int", [(12, 5)]), "B": ("b int, y int", [(2, 6)])},
+        [_tmap("A", "{a}", ("p", "x")), _tmap("B", "1{b}", ("q", "y"))],
+        "SELECT ?s { ?s <http://x/p> ?x . ?s <http://x/q> ?y }",
+        [("<http://x/12>",)], id="skeletons-collide"),
+    pytest.param(
+        # "1"^^xsd:integer and the plain literal "1" are different terms
+        {"A": ("a int, v int", [(1, 1)]), "B": ("b int, w string", [(2, "1")])},
+        [_tmap("A", "a{a}", ("p", "v")), _tmap("B", "b{b}", ("q", "w"))],
+        "SELECT ?s ?t { ?s <http://x/p> ?o . ?t <http://x/q> ?o }",
+        [], id="typed-vs-plain-literal"),
+])
+def test_template_term_equality_is_sound(spark, tables, tmaps, query, expected):
+    dfs = {name: spark.createDataFrame(rows, schema)
+           for name, (schema, rows) in tables.items()}
+    got = SparkR2RStore(spark, dfs, tmaps).query(query).collect()
+    assert sorted(tuple(r) for r in got) == expected
+
+
 # -- FROM / FROM NAMED dataset clauses (SPARQL 1.1 13.2) --------------------
 
 
