@@ -12,11 +12,11 @@ CAST(x AS STRING) in both Spark and DuckDB:
 - ``xsd:dateTime``: a ``T`` between date and time — both engines CAST with a
   space (TC0016b/c).
 
-Each transform ships as a synchronized twin: a Spark ``Column`` builder and a
-portable SQL-text builder that evaluates identically on Spark AND DuckDB
-(STRING alias, instr/substr/regexp_replace subset common to both).  Both
-operate on the engine's CAST-to-string output, which for doubles is the
-shortest round-trip representation in either engine — the digit sequence is
+Each transform is portable SQL text that evaluates identically on Spark AND
+DuckDB (STRING alias, instr/substr/regexp_replace subset common to both);
+the double one also has a compact Spark-only twin.  Both operate on the
+engine's CAST-to-string output, which for doubles is the shortest
+round-trip representation in either engine — the digit sequence is
 therefore identical across engines even when the notation differs
 (Java prints ``1.0E7`` where DuckDB prints ``10000000.0``), so the
 canonicalized forms agree.
@@ -24,43 +24,41 @@ canonicalized forms agree.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 
 # -- xsd:double ---------------------------------------------------------------
 
-def canonical_double_col(col: Column) -> Column:
-    """Spark: canonical xsd:double lexical of a double/float column."""
-    s = col.cast("string")
-    neg = F.when(s.startswith("-"), F.lit("-")).otherwise(F.lit(""))
-    u = F.upper(F.when(s.startswith("-"), s.substr(F.lit(2), F.length(s))).otherwise(s))
-    epos = F.instr(u, "E")
-    mant = F.when(epos > 0, u.substr(F.lit(1), epos - 1)).otherwise(u)
-    exp0 = F.when(epos > 0, u.substr(epos + 1, F.length(u)).cast("int")).otherwise(F.lit(0))
-    dpos = F.instr(mant, ".")
-    ip = F.when(dpos > 0, mant.substr(F.lit(1), dpos - 1)).otherwise(mant)
-    digits = F.replace(mant, F.lit("."), F.lit(""))
-    stripped = F.regexp_replace(digits, "^0+", "")
-    k = F.length(digits) - F.length(stripped) + 1
-    e = (exp0 + F.length(ip) - k).cast("int")
-    first = stripped.substr(F.lit(1), F.lit(1))
-    rest0 = F.regexp_replace(stripped.substr(F.lit(2), F.length(stripped)), "0+$", "")
-    frac = F.when(rest0 == "", F.lit("0")).otherwise(rest0)
-    main = F.concat(neg, first, F.lit("."), frac, F.lit("E"), e.cast("string"))
+# Spark's CAST(double AS STRING) is Java's Double.toString: digits, a point,
+# digits, and an exponent only outside [1e-3, 1e7)
+_JAVA_DOUBLE = r"'^-?([0-9]+)(?:\\.([0-9]*))?(?:E(-?[0-9]+))?$'"
+
+
+def canonical_double_spark_sql(x: str) -> str:
+    """Spark-ONLY SQL: canonical xsd:double lexical of the double/float
+    expression ``x``, value-identical to :func:`canonical_double_sql`
+    (parity pinned by tests).  The digits come out of Java's rendering by
+    ``regexp_extract`` and ``trim``, so the text names each intermediate
+    a few times instead of nesting them: Spark parses and analyzes a
+    fraction of the portable text's expression tree."""
+    s = f"CAST({x} AS STRING)"
+    ip = f"regexp_extract({s}, {_JAVA_DOUBLE}, 1)"
+    fp = f"regexp_extract({s}, {_JAVA_DOUBLE}, 2)"
+    exp0 = f"coalesce(CAST(nullif(regexp_extract({s}, {_JAVA_DOUBLE}, 3), '') AS INT), 0)"
+    digits = f"trim(LEADING '0' FROM concat({ip}, {fp}))"  # no leading zeros
+    neg = f"regexp_extract({s}, '^(-?)', 1)"
+    e = f"{exp0} - 1 - length({fp}) + length({digits})"
+    frac = f"coalesce(nullif(trim(TRAILING '0' FROM substr({digits}, 2)), ''), '0')"
     return (
-        F.when(s.isNull(), F.lit(None).cast("string"))
-        .when(s.isin("Infinity", "inf", "INF"), F.lit("INF"))
-        .when(s.isin("-Infinity", "-inf", "-INF"), F.lit("-INF"))
-        .when(s.isin("NaN", "nan"), F.lit("NaN"))
-        .when(stripped == "", F.concat(neg, F.lit("0.0E0")))
-        .otherwise(main)
+        f"(CASE WHEN {s} IN ('Infinity', 'inf', 'INF') THEN 'INF' "
+        f"WHEN {s} IN ('-Infinity', '-inf', '-INF') THEN '-INF' "
+        f"WHEN {s} IN ('NaN', 'nan') THEN 'NaN' "
+        f"WHEN {digits} = '' THEN concat({neg}, '0.0E0') "
+        f"ELSE concat({neg}, left({digits}, 1), '.', {frac}, 'E', CAST({e} AS STRING)) END)"
     )
 
 
 def canonical_double_sql(x: str) -> str:
     """Portable (Spark+DuckDB) SQL: canonical xsd:double lexical of the
-    numeric expression ``x``.  Mirrors :func:`canonical_double_col`."""
+    numeric expression ``x``: the frozen oracle dialect."""
     s = f"(CAST({x} AS STRING))"
     neg = f"(CASE WHEN {s} LIKE '-%' THEN '-' ELSE '' END)"
     u = f"(upper(CASE WHEN {s} LIKE '-%' THEN substr({s}, 2) ELSE {s} END))"
@@ -105,11 +103,6 @@ def column_types_for_canonical(schema) -> dict[str, str]:
 
 
 # -- xsd:dateTime -------------------------------------------------------------
-
-def canonical_datetime_col(col: Column) -> Column:
-    """Spark: canonical xsd:dateTime lexical (``T`` separator)."""
-    return F.replace(col.cast("string"), F.lit(" "), F.lit("T"))
-
 
 def canonical_datetime_sql(x: str) -> str:
     return f"(replace(CAST({x} AS STRING), ' ', 'T'))"

@@ -24,6 +24,11 @@ Scale design (the part that matters at 100 TB):
   codegen'd.
 - Referencing-object joins carry no hint: AQE picks the join strategy at
   runtime (a small parent table becomes a broadcast join by its size).
+- **Renders are Spark SQL text.** ``term_columns`` returns SQL text for
+  every term map, so a caller parses all of its renders in one call (one
+  ``selectExpr`` per arm group here, one statement per BGP assignment in
+  ``sparql/bgp.py``), not one gateway round trip per function.  Each
+  logical source is built once per compiler.
 
 Output schema: ``subj, pred, obj, obj_dt, obj_lang, graph`` — all strings;
 term encoding per ``terms`` module.
@@ -31,31 +36,40 @@ term encoding per ``terms`` module.
 
 from __future__ import annotations
 
+import itertools
 from collections import defaultdict
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rdflib_r2r_spark import terms
-from rdflib_r2r_spark.canonical import canonical_datetime_col, canonical_double_col
+from rdflib_r2r_spark.canonical import canonical_datetime_sql, canonical_double_spark_sql
 from rdflib_r2r_spark.mapping import (
     LogicalSource,
     TermMap,
     TriplesMap,
     xsd_for_spark_type,
 )
-from rdflib_r2r_spark.templates import template_to_column, template_to_spark_expr
+from rdflib_r2r_spark.templates import template_columns, template_to_spark_sql
 
 TRIPLE_COLS = ["subj", "pred", "obj", "obj_dt", "obj_lang", "graph"]
+_TRIPLE_GUARD = "subj IS NOT NULL AND pred IS NOT NULL AND obj IS NOT NULL"
 
 
 class MappingError(ValueError):
     pass
 
 
-def _null_str() -> Column:
-    return F.lit(None).cast("string")
+_NULL_STR = "CAST(NULL AS STRING)"
+# unique temp view names for the process (view names are session-wide);
+# a counter, not an address, keeps plan texts the same from run to run
+_VIEW_IDS = itertools.count(1)
+
+
+def sql_ident(name: str) -> str:
+    """Backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 class SparkMappingCompiler:
@@ -66,13 +80,19 @@ class SparkMappingCompiler:
     ):
         self.spark = spark
         self.tables = dict(tables or {})
+        # per logical source key, built on first use: the DataFrame, its
+        # column types and the temp view one SQL statement reads it by
+        self._sources: dict[str, DataFrame] = {}
         self._types: dict[str, dict] = {}
+        self._views: dict[str, str] = {}
 
     # -- sources ------------------------------------------------------------
 
     def register(self, name: str, df: DataFrame) -> None:
         self.tables[name] = df
+        self._sources.clear()
         self._types.clear()
+        self._views.clear()
 
     def source_types(self, source: LogicalSource) -> dict:
         """Column name -> Spark type of a logical source, read once."""
@@ -84,16 +104,42 @@ class SparkMappingCompiler:
 
     def source_df(self, source: LogicalSource) -> DataFrame:
         """rr:tableName -> registered/catalog table; rr:sqlQuery -> Spark SQL
-        view (reference: rdflib_r2r/r2r_mapping.py:28-40 ``_get_table``)."""
-        if source.table is not None:
-            if source.table in self.tables:
-                return self.tables[source.table]
-            return self.spark.table(source.table)
-        if source.sql_query is not None:
+        over the tables as temp views (reference:
+        rdflib_r2r/r2r_mapping.py:28-40 ``_get_table``).  Built once per
+        compiler (see :meth:`build_sources`)."""
+        self.build_sources([source])
+        return self._sources[source.key()]
+
+    def build_sources(self, sources) -> None:
+        """Build each logical source not built yet, registering the tables'
+        temp views once for all the rr:sqlQuery sources among them.
+        ``spark.sql`` analyzes a query against the views as they are bound
+        at that moment, so a later re-binding of a view name (another
+        compiler over other tables) does not reach a built source."""
+        missing = {s.key(): s for s in sources if s.key() not in self._sources}
+        if any(s.sql_query is not None for s in missing.values()):
             for name, df in self.tables.items():
                 df.createOrReplaceTempView(name)
-            return self.spark.sql(source.sql_query)
-        raise MappingError("logical source needs table or sql_query")
+        for key, source in missing.items():
+            if source.table is not None:
+                df = self.tables.get(source.table)
+                self._sources[key] = (df if df is not None
+                                      else self.spark.table(source.table))
+            elif source.sql_query is not None:
+                self._sources[key] = self.spark.sql(source.sql_query)
+            else:
+                raise MappingError("logical source needs table or sql_query")
+
+    def source_view(self, source: LogicalSource) -> str:
+        """Name of a temp view of the logical source, registered once per
+        compiler under a name no other compiler uses (temp views are
+        session-wide), so one SQL statement can read several sources."""
+        key = source.key()
+        if key not in self._views:
+            name = f"__r2r_source{next(_VIEW_IDS)}"
+            self.source_df(source).createOrReplaceTempView(name)
+            self._views[key] = name
+        return self._views[key]
 
     # -- term maps ----------------------------------------------------------
 
@@ -101,95 +147,77 @@ class SparkMappingCompiler:
         self,
         tm: TermMap,
         position: str,
-        resolve,
+        sql_qualify,
         schema_types: dict,
-        sql_qualify=None,
-    ) -> tuple[Column, Column, Column]:
-        """(lexical, datatype, language) Columns for one term map.
+    ) -> tuple[str, str, str]:
+        """(lexical, datatype, language) Spark SQL texts for one term map.
 
         Mirrors the constant/column/template dispatch of
         ``match_node_to_term_map`` (reference: rdflib_r2r/sql_converter.py:81-176).
 
-        ``sql_qualify(colname) -> str`` (optional) enables the one-Py4J-call
-        template fast path (templates.template_to_spark_expr): callers whose
-        source columns are SQL-addressable (aliased scans) pass it so a
-        template render costs one ``F.expr`` parse instead of ~100 gateway
-        round trips.  Semantics are identical (parity-pinned).
+        ``sql_qualify(colname) -> str`` returns the SQL text of a source
+        column (e.g. backtick-qualified ``alias.col``): a caller parses all
+        its renders in one statement, not one gateway round trip per
+        function.  Fixed texts go out through ``terms.spark_str_sql``.
         """
         from pyspark.sql import types as T
 
-        raw_resolve = resolve
+        def col(c):  # binary columns render as uppercase hex (xsd:hexBinary)
+            s = sql_qualify(c)
+            return f"hex({s})" if isinstance(schema_types.get(c), T.BinaryType) else s
 
-        def resolve(c):  # noqa: F811 - binary columns render as uppercase hex
-            col = raw_resolve(c)
-            if isinstance(schema_types.get(c), T.BinaryType):
-                return F.hex(col)  # natural RDF lexical of binary (xsd:hexBinary)
-            return col
-
-        raw_qualify = sql_qualify
-
-        if raw_qualify is not None:
-            def sql_qualify(c):  # noqa: F811 - same hex wrapper, SQL flavor
-                s = raw_qualify(c)
-                if isinstance(schema_types.get(c), T.BinaryType):
-                    return f"hex({s})"
-                return s
-
+        lit = terms.spark_str_sql
         ttype = tm.inferred_term_type(position)
-        dt = F.lit(tm.datatype).cast("string") if tm.datatype else _null_str()
-        lang = F.lit(tm.language).cast("string") if tm.language else _null_str()
+        dt = lit(tm.datatype) if tm.datatype else _NULL_STR
+        lang = lit(tm.language) if tm.language else _NULL_STR
 
         if tm.constant is not None:
             if ttype == "RawIRI":  # pre-rendered lexical (chain predicates)
-                return F.lit(tm.constant), _null_str(), _null_str()
+                return lit(tm.constant), _NULL_STR, _NULL_STR
             if ttype == "IRI":
-                return F.lit(terms.wrap_iri(tm.constant)), _null_str(), _null_str()
+                return lit(terms.wrap_iri(tm.constant)), _NULL_STR, _NULL_STR
             if ttype == "BlankNode":
-                return F.lit("_:" + tm.constant), _null_str(), _null_str()
-            return F.lit(tm.constant), dt, lang
+                return lit("_:" + tm.constant), _NULL_STR, _NULL_STR
+            return lit(tm.constant), dt, lang
 
         if tm.column is not None:
-            col = resolve(tm.column)
+            c = col(tm.column)
             if ttype == "IRI":
                 # rr:termType rr:IRI on a column: value IS the IRI (no
                 # encoding); RELATIVE values resolve against the mapping base
                 # (R2RML §7.4), absolute ones pass through
-                val = col.cast("string")
+                val = f"CAST({c} AS STRING)"
                 if tm.base_iri:
-                    val = F.when(
-                        val.rlike("^[A-Za-z][A-Za-z0-9+.-]*:"), val
-                    ).otherwise(F.concat(F.lit(tm.base_iri), val))
-                return F.concat(F.lit("<"), val, F.lit(">")), _null_str(), _null_str()
+                    val = (f"CASE WHEN {val} RLIKE '^[A-Za-z][A-Za-z0-9+.-]*:' "
+                           f"THEN {val} ELSE concat({lit(tm.base_iri)}, {val}) END")
+                return f"concat('<', {val}, '>')", _NULL_STR, _NULL_STR
             if ttype == "BlankNode":
-                return F.concat(F.lit("_:"), terms.iri_safe_col(col)), _null_str(), _null_str()
+                return f"concat('_:', {terms.iri_safe_sql_spark(c)})", _NULL_STR, _NULL_STR
             if tm.datatype is None:
                 inferred = xsd_for_spark_type(schema_types[tm.column]) if tm.column in schema_types else None
-                dt = F.lit(inferred).cast("string") if inferred else _null_str()
+                dt = lit(inferred) if inferred else _NULL_STR
             # natural RDF lexical form = canonical XSD lexical of the column
             # VALUE (R2RML §10.2; W3C TC0005a/b, TC0012a/e, TC0016b/c) —
             # doubles render scientific (2.0E1), dateTimes get the 'T'
             src_t = schema_types.get(tm.column)
             if isinstance(src_t, (T.DoubleType, T.FloatType)):
-                return canonical_double_col(col), dt, lang
+                return canonical_double_spark_sql(c), dt, lang
             if isinstance(src_t, T.TimestampType):
-                return canonical_datetime_col(col), dt, lang
-            return col.cast("string"), dt, lang
+                return canonical_datetime_sql(c), dt, lang
+            return f"CAST({c} AS STRING)", dt, lang
 
         if tm.template is not None:
-            if sql_qualify is not None:
-                render = lambda iri, wrap: template_to_spark_expr(  # noqa: E731
-                    tm.template, sql_qualify, iri=iri, wrap=wrap)
-            else:
-                render = lambda iri, wrap: template_to_column(  # noqa: E731
-                    tm.template, resolve, iri=iri, wrap=wrap)
+            integral = {c for c in template_columns(tm.template)
+                        if xsd_for_spark_type(schema_types.get(c)) == terms.XSD_INTEGER}
+
+            def render(iri: bool, wrap: bool) -> str:
+                return template_to_spark_sql(tm.template, col, iri=iri, wrap=wrap,
+                                             integral=integral)
+
             if ttype == "IRI":
-                return render(True, True), _null_str(), _null_str()
+                return render(True, True), _NULL_STR, _NULL_STR
             if ttype == "BlankNode":
-                return (
-                    F.concat(F.lit("_:"), render(True, False)),
-                    _null_str(),
-                    _null_str(),
-                )
+                return f"concat('_:', {render(True, False)})", _NULL_STR, _NULL_STR
             return render(False, False), dt, lang
 
         raise MappingError(f"term map has no constant/column/template: {tm}")
@@ -253,47 +281,30 @@ class SparkMappingCompiler:
             raise MappingError("no arms to compile")
         return reduce(lambda a, b: a.unionByName(b), parts)
 
-    def _schema_types(self, df: DataFrame) -> dict:
-        return {f.name: f.dataType for f in df.schema.fields}
-
     def _compile_scan_arms(self, arms) -> DataFrame:
         """All join-free arms over one logical source: ONE scan + explode."""
-        tmap0 = arms[0][0]
-        df = self.source_df(tmap0.source)
-        schema_types = self._schema_types(df)
-        resolve = lambda c: df[c]  # noqa: E731
+        source = arms[0][0].source
+        df = self.source_df(source)
+        types = self.source_types(source)
 
-        structs: list[Column] = []
+        rows: list[list[str]] = []
         for tmap, pred, obj, g in arms:
-            subj, _, _ = self.term_columns(tmap.subject_map, "S", resolve, schema_types)
+            subj = self.term_columns(tmap.subject_map, "S", sql_ident, types)[0]
             if pred is None:  # class arm
-                p = F.lit(terms.wrap_iri(terms.RDF_TYPE))
-                o, odt, olang = F.lit(terms.wrap_iri(obj.constant)), _null_str(), _null_str()
+                p = terms.spark_str_sql(terms.wrap_iri(terms.RDF_TYPE))
+                o = (terms.spark_str_sql(terms.wrap_iri(obj.constant)), _NULL_STR, _NULL_STR)
             else:
-                p, _, _ = self.term_columns(pred, "P", resolve, schema_types)
-                o, odt, olang = self.term_columns(obj, "O", resolve, schema_types)
-            gcol = (
-                self.term_columns(g, "G", resolve, schema_types)[0]
-                if g is not None
-                else _null_str()
-            )
-            structs.append(
-                F.struct(
-                    subj.alias("subj"),
-                    p.alias("pred"),
-                    o.alias("obj"),
-                    odt.alias("obj_dt"),
-                    olang.alias("obj_lang"),
-                    gcol.alias("graph"),
-                )
-            )
-        if len(structs) > 1:
-            out = df.select(F.explode(F.array(*structs)).alias("t")).select("t.*")
+                p = self.term_columns(pred, "P", sql_ident, types)[0]
+                o = self.term_columns(obj, "O", sql_ident, types)
+            gcol = (self.term_columns(g, "G", sql_ident, types)[0]
+                    if g is not None else _NULL_STR)
+            rows.append(_triple_exprs(subj, p, o, gcol))
+        if len(rows) > 1:
+            structs = ", ".join(f"struct({', '.join(r)})" for r in rows)
+            out = df.selectExpr(f"explode(array({structs})) AS t").select("t.*")
         else:
-            out = df.select(*[structs[0][c].alias(c) for c in TRIPLE_COLS])
-        return out.filter(
-            F.col("subj").isNotNull() & F.col("pred").isNotNull() & F.col("obj").isNotNull()
-        )
+            out = df.selectExpr(*rows[0])
+        return out.filter(_TRIPLE_GUARD)
 
     def _compile_join_arm(self, tmap, pred, obj, g, by_name) -> DataFrame:
         """Referencing-object map: equi-join child->parent on
@@ -305,8 +316,7 @@ class SparkMappingCompiler:
             raise MappingError(f"unknown parentTriplesMap {parent_name!r}")
         parent_tmap = by_name[parent_name]
         child_df = self.source_df(tmap.source)
-        child_types = self._schema_types(child_df)
-        res_child = lambda c: child_df[c]  # noqa: E731
+        child_types = self.source_types(tmap.source)
 
         same_table = (
             not obj.join_conditions
@@ -314,41 +324,33 @@ class SparkMappingCompiler:
         )
         if same_table:
             # R2RML: no joinCondition + same logical table => same row, no join.
+            res_child = res_parent = sql_ident
             parent_types = child_types
-            subj, _, _ = self.term_columns(tmap.subject_map, "S", res_child, child_types)
-            o, _, _ = self.term_columns(parent_tmap.subject_map, "S", res_child, parent_types)
             joined = child_df
         else:
-            parent_src = self.source_df(parent_tmap.source)
-            parent_df = parent_src.alias("__p")
-            parent_types = self._schema_types(parent_src)
-            cond = None
-            for jc in obj.join_conditions:
-                c = child_df[jc.child] == parent_df[jc.parent]
-                cond = c if cond is None else (cond & c)
-            if cond is None:
+            if not obj.join_conditions:
                 raise MappingError("cross-table referencing map needs joinCondition")
-            res_parent = lambda c: parent_df[c]  # noqa: E731
-            subj, _, _ = self.term_columns(tmap.subject_map, "S", res_child, child_types)
-            o, _, _ = self.term_columns(parent_tmap.subject_map, "S", res_parent, parent_types)
-            joined = child_df.join(parent_df, cond, "inner")
+            res_child = lambda c: "`__c`." + sql_ident(c)  # noqa: E731
+            res_parent = lambda c: "`__p`." + sql_ident(c)  # noqa: E731
+            parent_types = self.source_types(parent_tmap.source)
+            cond = " AND ".join(f"{res_child(jc.child)} = {res_parent(jc.parent)}"
+                                for jc in obj.join_conditions)
+            joined = child_df.alias("__c").join(
+                self.source_df(parent_tmap.source).alias("__p"), F.expr(cond), "inner")
 
-        p, _, _ = self.term_columns(pred, "P", res_child, child_types)
-        gcol = (
-            self.term_columns(g, "G", res_child, child_types)[0]
-            if g is not None
-            else _null_str()
-        )
-        return joined.select(
-            subj.alias("subj"),
-            p.alias("pred"),
-            o.alias("obj"),
-            _null_str().alias("obj_dt"),
-            _null_str().alias("obj_lang"),
-            gcol.alias("graph"),
-        ).filter(
-            F.col("subj").isNotNull() & F.col("pred").isNotNull() & F.col("obj").isNotNull()
-        )
+        subj = self.term_columns(tmap.subject_map, "S", res_child, child_types)[0]
+        o = self.term_columns(parent_tmap.subject_map, "S", res_parent, parent_types)[0]
+        p = self.term_columns(pred, "P", res_child, child_types)[0]
+        gcol = (self.term_columns(g, "G", res_child, child_types)[0]
+                if g is not None else _NULL_STR)
+        return joined.selectExpr(
+            *_triple_exprs(subj, p, (o, _NULL_STR, _NULL_STR), gcol)
+        ).filter(_TRIPLE_GUARD)
+
+
+def _triple_exprs(subj: str, p: str, o: tuple[str, str, str], g: str) -> list[str]:
+    """``expr AS col`` texts of one arm's six triple columns."""
+    return [f"{e} AS {c}" for e, c in zip((subj, p, *o, g), TRIPLE_COLS)]
 
 
 def terms_const_iri_typeobj(cls: str) -> TermMap:

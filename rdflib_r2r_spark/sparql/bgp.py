@@ -3,7 +3,9 @@
 This is the reference's core query algorithm (reference:
 rdflib_r2r/sql_converter.py:291-329 ``queryBGP``: enumerate every consistent
 assignment of triple patterns to triples-map arms, emit one SELECT per
-assignment, UNION ALL them) re-expressed as DataFrame plans:
+assignment, UNION ALL them) re-expressed for Spark: each assignment is ONE
+``spark.sql`` statement over per-store temp views of the logical sources,
+with the query's constants bound as named parameters:
 
 - **Predicate index**: a pattern with a constant predicate only ever touches
   the arms that can produce that predicate — no scan of the full dump.
@@ -16,7 +18,9 @@ assignment, UNION ALL them) re-expressed as DataFrame plans:
 - **Constant pushdown**: constant subjects/objects are inverted through the
   term-map template (reference: rdflib_r2r/sql_converter.py:148-161,
   conversion_utils.py:517-531) into typed filters on raw columns, so the
-  parquet scan sees ``o_orderkey = 1317``, never a string-concat comparison.
+  parquet scan sees ``o_orderkey = 1317``, never a string-concat comparison
+  — when the render is injective (``templates.render_key``) and the split
+  renders the constant again; any other render compares its lexical.
 - **Raw-key joins**: shared variables between slots join on raw columns
   when both renders have the same ``templates.render_key`` (an injective
   render: integral or string slots, and between two integral slots a
@@ -34,16 +38,16 @@ from __future__ import annotations
 import itertools
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from rdflib_r2r_spark import terms
-from rdflib_r2r_spark.compiler import SparkMappingCompiler
+from rdflib_r2r_spark.compiler import SparkMappingCompiler, sql_ident
 from rdflib_r2r_spark.mapping import TermMap, TriplesMap, xsd_for_spark_type
 from rdflib_r2r_spark.sparql.ast_nodes import BNodeT, IRI, Lit, Var
 from rdflib_r2r_spark.sparql.parser import RDF_TYPE, SparqlNotImplemented
 from rdflib_r2r_spark.templates import (
+    expand_template_py,
     invert_template_py,
     may_collide,
     raw_columns,
@@ -62,6 +66,10 @@ _NUMERIC_SPARK = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
     T.FloatType, T.DoubleType, T.DecimalType,
 )
+
+
+# a term variable ``v`` is four columns: these suffixes on ``v``
+SHADOWS = ("", "__dt", "__lang", "__num")
 
 
 class _Prune(Exception):
@@ -118,11 +126,12 @@ def enumerate_arms(tmaps: list[TriplesMap]) -> list[Arm]:
 @dataclass
 class Slot:
     alias: str
-    df: DataFrame
+    view: str  # temp view of the logical source (compiler.source_view)
     types: dict  # column -> spark DataType
 
-    def col(self, name: str) -> Column:
-        return F.col(f"{self.alias}.{name}")
+    def col(self, name: str) -> str:
+        """SQL text of one of the slot's columns."""
+        return sql_ident(self.alias) + "." + sql_ident(name)
 
 
 @dataclass
@@ -150,14 +159,14 @@ class RawBinding:
 
     ``cols``   — the raw shadow column names present in the frame's df.
     ``prov``   — hashable provenance key; equal prov => same render fn.
-    ``render`` — list of raw Columns (in ``cols`` order) ->
-                 (lex, dt, lang, num) Columns, byte-identical to the
-                 BGP-boundary render of the same raws.
+    ``render`` — () -> (lex, dt, lang, num) Spark SQL texts over the
+                 ``cols`` columns, byte-identical to the BGP-boundary
+                 render of the same raws.
     """
 
     cols: tuple
     prov: tuple
-    render: object  # Callable[[list[Column]], tuple[Column, Column, Column, Column]]
+    render: object  # Callable[[], tuple[str, str, str, str]]
 
 
 def _term_key(t) -> tuple:
@@ -178,6 +187,17 @@ def _effective_dt(tm: TermMap, slot: Slot) -> str | None:
     return None
 
 
+def _same_literal_type(term: Lit, dt: str | None, lang: str | None) -> bool:
+    """Can a pattern literal match a term map of datatype ``dt`` and
+    language ``lang``?  Tags compare case-insensitively; a plain literal is
+    an xsd:string; a numeric literal matches any numeric datatype by value,
+    as the reference's SQL comparison does."""
+    if term.language or lang:
+        return (term.language or "").lower() == (lang or "").lower()
+    a, b = term.datatype or terms.XSD_STRING, dt or terms.XSD_STRING
+    return a == b or (a in _NUMERIC_XSD and b in _NUMERIC_XSD)
+
+
 class BGPCompiler:
     """Compiles a list of (s, p_iri, o) patterns (constant predicates) into
     one DataFrame of variable bindings."""
@@ -189,9 +209,7 @@ class BGPCompiler:
         self.compiler = compiler
         self.arms = enumerate_arms(tmaps)
         self._alias_n = 0
-        # one source DataFrame per logical source (sqlQuery sources parse
-        # once, not once per slot); slots alias it
-        self._source_cache: dict[str, DataFrame] = {}
+        self._args: dict = {}  # named parameters of the statement being built
 
     # -- candidate matching ---------------------------------------------------
 
@@ -260,41 +278,63 @@ class BGPCompiler:
             out.append(arm)
         return out
 
-    # -- one assignment -> DataFrame -------------------------------------------
+    # -- one assignment -> one SQL statement --------------------------------------
 
     def _new_slot(self, source) -> Slot:
         self._alias_n += 1
-        alias = f"bgp{self._alias_n}"
-        key = source.key()
-        if key not in self._source_cache:
-            self._source_cache[key] = self.compiler.source_df(source)
-        return Slot(alias=alias, df=self._source_cache[key].alias(alias),
+        return Slot(alias=f"bgp{self._alias_n}",
+                    view=self.compiler.source_view(source),
                     types=self.compiler.source_types(source))
 
-    def _typed_lit(self, value: str, col: str, slot: Slot) -> Column:
-        dtype = slot.types.get(col)
-        lit = F.lit(value)
-        if dtype is not None:
-            if isinstance(dtype, _NUMERIC_SPARK):
-                try:
-                    num = float(value) if "." in value or "e" in value.lower() else int(value)
-                except ValueError:
-                    # non-numeric lexical can never equal a numeric column
-                    raise _Prune() from None
-                return F.lit(num).cast(dtype)
-            return lit.cast(dtype)
-        return lit
+    def _param(self, value) -> str:
+        """Bind a query constant as a named parameter of the statement
+        (never spliced into the text)."""
+        name = f"c{len(self._args)}"
+        self._args[name] = value
+        return ":" + name
 
-    def _invert_filters(self, const: str, template: str, slot: Slot) -> list[Column]:
-        binding = invert_template_py(const, template)
+    def _typed_lit(self, value: str, col: str, slot: Slot) -> str:
+        dtype = slot.types.get(col)
+        if dtype is None:
+            return self._param(value)
+        if isinstance(dtype, _NUMERIC_SPARK):
+            try:
+                num = float(value) if "." in value or "e" in value.lower() else int(value)
+            except ValueError:
+                # non-numeric lexical can never equal a numeric column
+                raise _Prune() from None
+            return f"CAST({self._param(num)} AS {dtype.simpleString()})"
+        return f"CAST({self._param(value)} AS {dtype.simpleString()})"
+
+    def _lex_eq(self, tm: TermMap, slot: Slot, position: str, lex: str) -> list[str]:
+        """The term map's rendered lexical equals ``lex``."""
+        rendered = self._render(Occurrence(tm=tm, slot=slot, position=position))[0]
+        return [f"{rendered} = {self._param(lex)}"]
+
+    def _invert_filters(self, const: str, tm: TermMap, slot: Slot,
+                        position: str) -> list[str]:
+        """Conditions binding a template term map to a constant.  An
+        injective render (``render_key``) splits the constant into raw
+        values (integral slots match ``-?[0-9]+``), kept only when they
+        render the constant again: typed equalities on raw columns the scan
+        can push down.  Any other render compares its rendered lexical."""
+        iri = tm.inferred_term_type(position) == "IRI"
+        if render_key(tm, position, slot.types) is None:
+            return self._lex_eq(tm, slot, position,
+                                terms.wrap_iri(const) if iri else const)
+        ints = {c for c in raw_columns(tm)
+                if not isinstance(slot.types[c], T.StringType)}
+        binding = invert_template_py(const, tm.template, ints)
         if binding is None:
             raise _Prune()
-        return [
-            slot.col(c) == self._typed_lit(iri_unsafe_py(raw), c, slot)
-            for c, raw in binding.items()
-        ]
+        values = {c: int(raw) if c in ints else iri_unsafe_py(raw) if iri else raw
+                  for c, raw in binding.items()}
+        if expand_template_py(tm.template, values, iri=iri) != const:
+            raise _Prune()
+        return [f"{slot.col(c)} = {self._typed_lit(str(v), c, slot)}"
+                for c, v in values.items()]
 
-    def _const_conditions(self, term, tm: TermMap, slot: Slot, position: str) -> list[Column]:
+    def _const_conditions(self, term, tm: TermMap, slot: Slot, position: str) -> list[str]:
         """Conditions binding a constant pattern term to a term map."""
         kind = tm.inferred_term_type(position)
         if isinstance(term, IRI):
@@ -305,24 +345,28 @@ class BGPCompiler:
                     raise _Prune()
                 return []
             if tm.template is not None:
-                return self._invert_filters(term.value, tm.template, slot)
+                return self._invert_filters(term.value, tm, slot, position)
+            if tm.column is not None and not tm.base_iri:
+                return [f"CAST({slot.col(tm.column)} AS STRING) = {self._param(term.value)}"]
             if tm.column is not None:
-                return [slot.col(tm.column).cast("string") == F.lit(term.value)]
+                return self._lex_eq(tm, slot, position, terms.wrap_iri(term.value))
             raise _Prune()
         if isinstance(term, Lit):
-            if kind != "Literal":
+            if kind != "Literal" or not _same_literal_type(
+                    term, _effective_dt(tm, slot), tm.language):
                 raise _Prune()
             if tm.constant is not None:
                 if tm.constant != term.value:
                     raise _Prune()
                 return []
             if tm.column is not None:
-                return [slot.col(tm.column) == self._typed_lit(term.value, tm.column, slot)]
+                return [f"{slot.col(tm.column)} = "
+                        f"{self._typed_lit(term.value, tm.column, slot)}"]
             if tm.template is not None:
-                return self._invert_filters(term.value, tm.template, slot)
+                return self._invert_filters(term.value, tm, slot, position)
         raise _Prune()
 
-    def _unify(self, a: Occurrence, b: Occurrence) -> list[Column]:
+    def _unify(self, a: Occurrence, b: Occurrence) -> list[str]:
         """Equality conditions making two renderings of one variable agree:
         raw-column equality when both renders have the same
         ``render_key``, a pruned assignment when they can never collide,
@@ -336,62 +380,55 @@ class BGPCompiler:
         if tb.constant is not None:
             a, b, ta, tb = b, a, tb, ta
         if ta.constant is not None:
-            term = IRI if ta.inferred_term_type(a.position) == "IRI" else Lit
-            return self._const_conditions(term(ta.constant), tb, b.slot, b.position)
+            term = (IRI(ta.constant) if ta.inferred_term_type(a.position) == "IRI"
+                    else Lit(ta.constant, ta.datatype, ta.language))
+            return self._const_conditions(term, tb, b.slot, b.position)
         key = render_key(ta, a.position, a.slot.types)
         if key is not None and key == render_key(tb, b.position, b.slot.types):
             # a shared variable already unified to one physical column
-            # needs no `x == x` condition
+            # needs no `x = x` condition
             return [
-                a.slot.col(ca) == b.slot.col(cb)
+                f"{a.slot.col(ca)} = {b.slot.col(cb)}"
                 for ca, cb in zip(raw_columns(ta), raw_columns(tb))
                 if (a.slot.alias, ca) != (b.slot.alias, cb)
             ]
         lex_a, dt_a, lang_a = self._render(a)
         lex_b, dt_b, lang_b = self._render(b)
-        return [(lex_a == lex_b) & dt_a.eqNullSafe(dt_b)
-                & lang_a.eqNullSafe(lang_b)]
+        return [f"({lex_a} = {lex_b}) AND ({dt_a} <=> {dt_b}) AND ({lang_a} <=> {lang_b})"]
 
-    def _col_eq(self, sa: Slot, ca: str, sb: Slot, cb: str) -> Column | None:
+    def _col_eq(self, sa: Slot, ca: str, sb: Slot, cb: str) -> str | None:
         """Equality of an R2RML join condition's child and parent columns."""
         if sa.alias == sb.alias and ca == cb:
-            # same-table referencing map: a trivially-true `x == x` filter
+            # same-table referencing map: a trivially-true `x = x` filter
             # would be dead work (and Spark WARN spam)
             return None
         if type(sa.types.get(ca)) is type(sb.types.get(cb)):
-            return sa.col(ca) == sb.col(cb)
-        return sa.col(ca).cast("string") == sb.col(cb).cast("string")
+            return f"{sa.col(ca)} = {sb.col(cb)}"
+        return f"CAST({sa.col(ca)} AS STRING) = CAST({sb.col(cb)} AS STRING)"
 
-    def _raw_null_guard(self, occ: Occurrence) -> Column | None:
+    def _raw_null_guard(self, occ: Occurrence) -> str | None:
         """IS NOT NULL condition on the raw inputs of one term map, or None
         when the term can never be NULL (constants)."""
         tm, cols = occ.tm, raw_columns(occ.tm)
         if cols:
-            return _and_all([occ.slot.col(c).isNotNull() for c in cols])
+            return " AND ".join(f"{occ.slot.col(c)} IS NOT NULL" for c in cols)
         if tm.constant is not None or tm.template is not None:
             return None
         # exotic term maps: fall back to the rendered lexical
-        return self._render(occ)[0].isNotNull()
+        return f"({self._render(occ)[0]}) IS NOT NULL"
 
-    def _render(self, occ: Occurrence) -> tuple[Column, Column, Column]:
-        # slots are SQL-addressable aliased scans, so hand term_columns the
-        # sql_qualify fast path (template renders become one F.expr parse
-        # instead of ~100 Py4J round trips — bi4's compile was 2.1s, ~1.5s
-        # of it in these chains)
-        alias = occ.slot.alias
+    def _render(self, occ: Occurrence) -> tuple[str, str, str]:
         return self.compiler.term_columns(
-            occ.tm, occ.position, lambda c: occ.slot.col(c), occ.slot.types,
-            sql_qualify=lambda c: f"`{alias}`.`" + c.replace("`", "``") + "`",
-        )
+            occ.tm, occ.position, occ.slot.col, occ.slot.types)
 
-    def _num_col(self, occ: Occurrence, lex: Column) -> Column:
+    def _num_col(self, occ: Occurrence, lex: str) -> str:
         tm = occ.tm
         if tm.column is not None and isinstance(occ.slot.types.get(tm.column), _NUMERIC_SPARK):
-            return occ.slot.col(tm.column).cast("double")
+            return f"CAST({occ.slot.col(tm.column)} AS DOUBLE)"
         dt = _effective_dt(tm, occ.slot)
         if tm.inferred_term_type(occ.position) == "Literal" and (dt is None or dt in _NUMERIC_XSD):
-            return lex.try_cast("double")
-        return F.lit(None).cast("double")
+            return f"try_cast({lex} AS DOUBLE)"
+        return "CAST(NULL AS DOUBLE)"
 
     def _statically_consistent(self, patterns: list, assignment) -> bool:
         """Cheap metadata-only unification check so impossible assignments
@@ -423,13 +460,18 @@ class BGPCompiler:
 
     def compile_assignment(self, patterns: list, assignment: list[Arm],
                            graph_term) -> tuple[DataFrame, dict] | None:
-        """One consistent assignment -> (joined/filtered DataFrame, raw
-        bindings per variable), or None if statically inconsistent."""
+        """One consistent assignment -> (DataFrame, raw bindings per
+        variable), or None if statically inconsistent.  The DataFrame is ONE
+        ``spark.sql`` statement: the slots joined on their ANDed conditions,
+        one WHERE with the constant conditions and the NULL guards, one
+        projection of every variable's term and raw shadow columns; query
+        constants are bound as named parameters."""
+        self._args = {}
         # slot keying merges stars AND parent slots with object-variable stars
         slots: dict[tuple, Slot] = {}
         occurrences: dict[str, list[Occurrence]] = {}
-        conditions: list[tuple[Slot | None, Slot | None, Column]] = []
-        null_guards: list[tuple[Occurrence]] = []
+        conditions: list[tuple[Slot, Slot, str]] = []
+        null_guards: list[Occurrence] = []
 
         def slot_for(term, tmap: TriplesMap) -> Slot:
             key = (_term_key(term), tmap.name, tmap.source.key())
@@ -442,10 +484,11 @@ class BGPCompiler:
             if isinstance(term, (Var, BNodeT)):
                 name = term.name if isinstance(term, Var) else "__bn_" + term.label
                 occurrences.setdefault(name, []).append(occ)
+                null_guards.append(occ)
             else:
+                # equalities with a constant reject NULL: no guard needed
                 for cond in self._const_conditions(term, tm, slot, position):
                     conditions.append((slot, slot, cond))
-            null_guards.append((occ,))
 
         try:
             for (s, p, o), arm in zip(patterns, assignment):
@@ -477,9 +520,12 @@ class BGPCompiler:
         except _Prune:
             return None
 
-        # fold slots along the condition graph (equality conds become join
-        # conditions; single-slot conds become filters; disconnected slots
-        # cross-join, which only happens for genuinely disconnected patterns)
+        # fold slots along the condition graph into the FROM clause: all
+        # conditions between the same two components become ONE join with
+        # an ANDed condition, same-component conditions go to the WHERE,
+        # and disconnected components (only genuinely disconnected
+        # patterns) cross-join.  The smallest pair merges first, so each
+        # component grows left-deep, one slot per join.
         slot_list = list(slots.values())
         parent_of: dict[str, str] = {s.alias: s.alias for s in slot_list}
 
@@ -489,58 +535,43 @@ class BGPCompiler:
                 a = parent_of[a]
             return a
 
-        frames: dict[str, DataFrame] = {s.alias: s.df for s in slot_list}
+        frames = {s.alias: f"{sql_ident(s.view)} AS {sql_ident(s.alias)}"
+                  for s in slot_list}
+        where: list[str] = []
         pending = list(conditions)
         while True:
-            # same-component conditions become filters (applied and dropped);
-            # all conditions between the same two components become ONE join
-            # with an ANDed condition
             by_pair: dict[tuple, list] = {}
             for sa, sb, cond in pending:
                 ra, rb = find(sa.alias), find(sb.alias)
                 if ra == rb:
-                    frames[ra] = frames[ra].filter(cond)
+                    where.append(cond)
                 else:
                     by_pair.setdefault(tuple(sorted((ra, rb))), []).append((sa, sb, cond))
             if not by_pair:
                 break
             # merge exactly one pair per round, then re-bucket (other pairs
-            # may have become same-component and must turn into filters)
+            # may have become same-component and must go to the WHERE)
             (ra, rb), items = sorted(by_pair.items())[0]
-            frames[ra] = frames[ra].join(
-                frames[rb], on=_and_all([c for _, _, c in items]), how="inner"
-            )
+            on = " AND ".join(f"({c})" for _, _, c in items)
+            frames[ra] = f"{frames[ra]} JOIN {frames[rb]} ON {on}"
             parent_of[rb] = ra
             pending = [t for pair, its in by_pair.items() if pair != (ra, rb) for t in its]
-
-        roots = {find(s.alias) for s in slot_list}
-        if not roots:
-            df = self.spark.range(1).select(F.lit(1).alias("__one"))
-        else:
-            it = iter(sorted(roots))
-            df = frames[next(it)]
-            for r in it:
-                df = df.crossJoin(frames[r])
+        roots = sorted({find(s.alias) for s in slot_list})
+        source = (frames[roots[0]] if len(roots) == 1
+                  else " CROSS JOIN ".join(f"({frames[r]})" for r in roots))
 
         # project variables (first occurrence; all are condition-equal)
-        out_cols: list[Column] = []
-        guards: list[Column] = []
+        proj: list[str] = []
         raws: dict[str, RawBinding] = {}
         for name, occs in occurrences.items():
             occ = occs[0]
             lex, dt, lang = self._render(occ)
-            out_cols.extend(
-                [
-                    lex.alias(name),
-                    dt.alias(f"{name}__dt"),
-                    lang.alias(f"{name}__lang"),
-                    self._num_col(occ, lex).alias(f"{name}__num"),
-                ]
-            )
+            proj += [f"{e} AS {sql_ident(name + s)}" for e, s in
+                     zip((lex, dt, lang, self._num_col(occ, lex)), SHADOWS)]
             rb = self._raw_binding(name, occ)
             if rb is not None:
                 raw_cols, binding = rb
-                out_cols.extend(col.alias(rc) for rc, col in raw_cols)
+                proj += [f"{c} AS {sql_ident(rc)}" for rc, c in raw_cols]
                 raws[name] = binding
         # R2RML NULL guard: every term of every matched triple is non-NULL.
         # Guard on the RAW source columns, not the rendered lexical — a
@@ -550,20 +581,15 @@ class BGPCompiler:
         # a query never reads the lexical (e.g. aggregates over the numeric
         # shadow: the canonical-double render would otherwise be evaluated
         # per row just to feed this filter).
-        for (occ,) in null_guards:
-            g = self._raw_null_guard(occ)
-            if g is not None:
-                guards.append(g)
-        if not out_cols:
-            out_cols = [F.lit(1).alias("__one")]
-        out = df
-        for gcond in guards:
-            out = out.filter(gcond)
-        return out.select(*out_cols), raws
+        where += [g for g in map(self._raw_null_guard, null_guards) if g is not None]
+        text = f"SELECT {', '.join(proj or ['1 AS __one'])} FROM {source}"
+        if where:
+            text += " WHERE " + " AND ".join(f"({w})" for w in where)
+        return self.spark.sql(text, args=self._args), raws
 
     def _raw_binding(
         self, name: str, occ: Occurrence
-    ) -> tuple[list[tuple[str, Column]], RawBinding] | None:
+    ) -> tuple[list[tuple[str, str]], RawBinding] | None:
         """Raw-key provenance for one variable occurrence, or None when the
         render is not provably injective from raw columns: an IRI template
         with a ``render_key`` (see :class:`RawBinding`).  Floating-point
@@ -578,15 +604,14 @@ class BGPCompiler:
             return None
         cols = raw_columns(tm)
         raw_names = tuple(f"{name}__raw{i}" for i in range(len(cols)))
+        by = dict(zip(cols, raw_names))
         types_by_name = {c: slot.types[c] for c in cols}
         compiler = self.compiler
 
-        def render(raw_cols: list) -> tuple[Column, Column, Column, Column]:
-            by = dict(zip(cols, raw_cols))
+        def render() -> tuple[str, str, str, str]:
             lex, dt, lang = compiler.term_columns(
-                tm, pos, lambda c: by[c], types_by_name
-            )
-            return lex, dt, lang, F.lit(None).cast("double")
+                tm, pos, lambda c: sql_ident(by[c]), types_by_name)
+            return lex, dt, lang, "CAST(NULL AS DOUBLE)"
 
         return (
             [(rn, slot.col(c)) for rn, c in zip(raw_names, cols)],
@@ -611,6 +636,11 @@ class BGPCompiler:
         if isinstance(graph_term, Var):
             var_names.add(graph_term.name)
 
+        # every logical source of the mapping is built and gets its view on
+        # the first query, so later queries register none
+        self.compiler.build_sources([tmap.source for tmap in self.tmaps])
+        for tmap in self.tmaps:
+            self.compiler.source_view(tmap.source)
         cand_lists = [self.candidates(s, p, o, graph_term, dataset)
                       for (s, p, o) in patterns]
         n_assignments = 1
@@ -669,10 +699,3 @@ class BGPCompiler:
         if not fields:
             fields = [T.StructField("__one", T.IntegerType())]
         return self.spark.createDataFrame([], T.StructType(fields))
-
-
-def _and_all(conds: list[Column]) -> Column:
-    out = conds[0]
-    for c in conds[1:]:
-        out = out & c
-    return out

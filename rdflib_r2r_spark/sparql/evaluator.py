@@ -43,7 +43,8 @@ from rdflib_r2r_spark.sparql.ast_nodes import (
     Op,
     Var,
 )
-from rdflib_r2r_spark.sparql.bgp import BGPCompiler
+from rdflib_r2r_spark.compiler import sql_ident
+from rdflib_r2r_spark.sparql.bgp import SHADOWS, BGPCompiler
 from rdflib_r2r_spark.sparql.parser import SparqlNotImplemented
 
 XSD = terms.XSD
@@ -52,7 +53,16 @@ _NUMERIC_XSD = {
     XSD + "float", XSD + "int", XSD + "long",
 }
 
-SHADOWS = ("", "__dt", "__lang", "__num")
+
+def _render_raws(df: DataFrame, raw_vars: dict) -> DataFrame:
+    """Append each raw-keyed var's four term columns, rendered from its raw
+    shadows (``RawBinding.render``), in one projection."""
+    if not raw_vars:
+        return df
+    return df.selectExpr("*", *[
+        f"{e} AS {sql_ident(v + s)}"
+        for v, rb in raw_vars.items() for e, s in zip(rb.render(), SHADOWS)
+    ])
 
 
 def encode_term(t) -> tuple[str | None, str | None, str | None]:
@@ -422,13 +432,8 @@ class Evaluator:
             # render is pruned; shadows are re-rendered per distinct row.
             if out.raw_vars:
                 drop_cols = [v + s for v in out.raw_vars for s in SHADOWS]
-                ddf = out.df.drop(*drop_cols).distinct()
-                for v, rb in out.raw_vars.items():
-                    lex, dt, lang, num = rb.render([F.col(c) for c in rb.cols])
-                    ddf = (ddf.withColumn(v, lex)
-                              .withColumn(f"{v}__dt", dt)
-                              .withColumn(f"{v}__lang", lang)
-                              .withColumn(f"{v}__num", num))
+                ddf = _render_raws(out.df.drop(*drop_cols).distinct(),
+                                   out.raw_vars)
                 out = BindingFrame(ddf, out.term_vars, out.native_vars,
                                    out.maybe_null, out.raw_vars)
             else:
@@ -511,13 +516,7 @@ class Evaluator:
             gdf = bf.df.groupBy(*[F.col(c) for c in key_cols]).agg(*agg_cols)
         else:
             gdf = bf.df.agg(*agg_cols) if agg_cols else bf.df.limit(1)
-        for v in raw_keyed:
-            rb = bf.raw_vars[v]
-            lex, dt, lang, num = rb.render([F.col(c) for c in rb.cols])
-            gdf = (gdf.withColumn(v, lex)
-                      .withColumn(f"{v}__dt", dt)
-                      .withColumn(f"{v}__lang", lang)
-                      .withColumn(f"{v}__num", num))
+        gdf = _render_raws(gdf, {v: bf.raw_vars[v] for v in raw_keyed})
 
         out = BindingFrame(
             gdf,
@@ -533,13 +532,12 @@ class Evaluator:
                 out.native_vars[n] = "str"
             elif c.name in ("MIN", "MAX") and self._agg_arg_kind(c, bf) == "term":
                 # unpack the term struct back into term-var shadow columns
-                out.df = (
-                    out.df
-                    .withColumn(f"{n}__dt", F.col(n)["dt"])
-                    .withColumn(f"{n}__lang", F.col(n)["lang"])
-                    .withColumn(f"{n}__num", F.col(n)["num"])
-                    .withColumn(n, F.col(n)["lex"])
-                )
+                out.df = out.df.withColumns({
+                    f"{n}__dt": F.col(n)["dt"],
+                    f"{n}__lang": F.col(n)["lang"],
+                    f"{n}__num": F.col(n)["num"],
+                    n: F.col(n)["lex"],
+                })
                 out.term_vars.add(n)
             elif c.name == "SAMPLE" and self._agg_arg_kind(c, bf) == "term":
                 out.native_vars[n] = "str"
@@ -914,28 +912,24 @@ class Evaluator:
         # vars that can actually be unbound (maybe_null) get the relaxed
         # condition — everything else stays a plain equi-join (hash-joinable).
         compat = {v for v in shared if v in a.maybe_null or v in b.maybe_null}
+        shared = sorted(shared)
         # raw shadows survive only the plain inner equi-join path; outer
         # joins and compat vars pick sides per row, which raws do not model
         if how != "inner":
             a, b = self._strip_raw(a), self._strip_raw(b)
         elif compat:
             a, b = self._strip_raw(a, compat), self._strip_raw(b, compat)
-        for v in compat:
+        for v in sorted(compat):
             # normalize kind so both sides carry the 4-column term encoding
             if (v in a.term_vars) != (v in b.term_vars):
                 a = self._coerce_to_term(a, v)
                 b = self._coerce_to_term(b, v)
         # rename ALL b columns (raw shadows included) to avoid ambiguity
-        ren = {}
-        bdf = b.df
-        for v in b.all_vars:
-            for c in b.columns_for(v):
-                ren[c] = c + "__rj"
-                bdf = bdf.withColumnRenamed(c, c + "__rj")
-        for v, rb in b.raw_vars.items():
-            for c in rb.cols:
-                ren[c] = c + "__rj"
-                bdf = bdf.withColumnRenamed(c, c + "__rj")
+        bdf = b.df.withColumnsRenamed({
+            c: c + "__rj"
+            for v in sorted(b.all_vars)
+            for c in b.columns_for(v) + list(b.raw_vars[v].cols if v in b.raw_vars else ())
+        })
         cond = F.lit(True)
         for v in shared:
             if (
@@ -970,7 +964,7 @@ class Evaluator:
         # keep a's columns for shared vars (merged solutions adopt the bound
         # side for compat vars); adopt b's for b-only vars
         out_cols = []
-        for v in a.all_vars:
+        for v in sorted(a.all_vars):
             if v in compat:
                 # the merged binding takes whichever side is bound; shadow
                 # columns must follow the lex column's side
@@ -1026,21 +1020,28 @@ class Evaluator:
         # raw shadows are not comparable across union branches
         a, b = self._strip_raw(a), self._strip_raw(b)
         # coerce kind mismatches to term columns
-        for v in a.all_vars & b.all_vars:
+        for v in sorted(a.all_vars & b.all_vars):
             if (v in a.term_vars) != (v in b.term_vars):
                 a = self._coerce_to_term(a, v)
                 b = self._coerce_to_term(b, v)
-        # pad missing shadow sets before unionByName
-        df_a, df_b = a.df, b.df
-        for v in b.all_vars - a.all_vars:
-            for c in b.columns_for(v):
-                df_a = df_a.withColumn(c, F.lit(None).cast(dict(b.df.dtypes)[c]))
-        for v in a.all_vars - b.all_vars:
-            for c in a.columns_for(v):
-                df_b = df_b.withColumn(c, F.lit(None).cast(dict(a.df.dtypes)[c]))
-        df_b = df_b.select(*df_a.columns)
+        # both sides in one column order, each padding the other's vars with
+        # NULL (a term shadow typed by its suffix, a native var by the union)
+        names = sorted(a.all_vars | b.all_vars)
+
+        def padded(f: BindingFrame, other: BindingFrame) -> DataFrame:
+            exprs: list[str] = []
+            for v in names:
+                if v in f.all_vars:
+                    exprs += [sql_ident(c) for c in f.columns_for(v)]
+                elif v in other.term_vars:
+                    exprs += [f"CAST(NULL AS {'DOUBLE' if s == '__num' else 'STRING'})"
+                              f" AS {sql_ident(v + s)}" for s in SHADOWS]
+                else:
+                    exprs.append(f"NULL AS {sql_ident(v)}")
+            return f.df.selectExpr(*exprs)
+
         return BindingFrame(
-            df_a.unionByName(df_b),
+            padded(a, b).union(padded(b, a)),
             a.term_vars | b.term_vars,
             {**a.native_vars, **{k: v for k, v in b.native_vars.items()
                                  if k not in a.term_vars}},
@@ -1052,13 +1053,12 @@ class Evaluator:
         if v in bf.term_vars:
             return bf
         kind = bf.native_vars.pop(v)
-        df = bf.df.withColumn(f"{v}__num", F.col(v).try_cast("double"))
-        df = df.withColumn(
-            f"{v}__dt",
-            F.lit(XSD + "double" if kind == "num" else None).cast("string"),
-        )
-        df = df.withColumn(f"{v}__lang", F.lit(None).cast("string"))
-        df = df.withColumn(v, F.col(v).cast("string"))
+        df = bf.df.withColumns({
+            f"{v}__num": F.col(v).try_cast("double"),
+            f"{v}__dt": F.lit(XSD + "double" if kind == "num" else None).cast("string"),
+            f"{v}__lang": F.lit(None).cast("string"),
+            v: F.col(v).cast("string"),
+        })
         bf.term_vars.add(v)
         return BindingFrame(df, bf.term_vars, bf.native_vars, bf.maybe_null,
                             bf.raw_vars)
@@ -1068,10 +1068,9 @@ class Evaluator:
         if not shared:
             return a  # disjoint domains: nothing is compatible, remove nothing
         nullable = {v for v in shared if v in a.maybe_null or v in b.maybe_null}
-        bdf = b.df
-        for v in shared:
-            for c in b.columns_for(v):
-                bdf = bdf.withColumnRenamed(c, c + "__rj")
+        shared = sorted(shared)
+        bdf = b.df.withColumnsRenamed(
+            {c: c + "__rj" for v in shared for c in b.columns_for(v)})
         cond = F.lit(True)
         for v in shared:
             eq = F.col(v) == F.col(v + "__rj")
@@ -1244,11 +1243,12 @@ class Evaluator:
         bf, expr = self._materialize_exists(bf, expr)
         ev = self.compile_expr(expr, bf)
         if ev.kind == "term":
-            df = (bf.df
-                  .withColumn(name, ev.as_lex())
-                  .withColumn(f"{name}__dt", ev.dt_col())
-                  .withColumn(f"{name}__lang", ev.lang_col())
-                  .withColumn(f"{name}__num", ev.as_num()))
+            df = bf.df.withColumns({
+                name: ev.as_lex(),
+                f"{name}__dt": ev.dt_col(),
+                f"{name}__lang": ev.lang_col(),
+                f"{name}__num": ev.as_num(),
+            })
             tv = set(bf.term_vars)
             tv.add(name)
             # a BIND whose expression errors leaves the var unbound (NULL)

@@ -126,11 +126,14 @@ class SparkR2RStore:
         joining a one-row VALUES relation onto the pattern."""
         if not init_bindings:
             # prepared-plan cache: compiling SPARQL to a DataFrame costs
-            # real driver time (BGP candidate enumeration + expression
-            # construction); DataFrames are immutable, so repeated query
-            # TEXT reuses the compiled plan exactly like a prepared
-            # statement.  Keyed on (text, extra namespaces); bindings
-            # mutate the AST, so bound queries skip the cache.
+            # real driver time (BGP candidate enumeration, one spark.sql
+            # statement per BGP assignment, the evaluator's DataFrame
+            # calls, each analyzed by Spark); DataFrames are immutable, so
+            # repeated query TEXT reuses the compiled plan exactly like a
+            # prepared statement.  The logical sources and their views are
+            # built once per store by the mapping compiler, not here.
+            # Keyed on (text, extra namespaces); bindings mutate the AST,
+            # so bound queries skip the cache.
             key = (sparql, tuple(sorted((init_ns or {}).items())))
             hit = self._plan_cache.get(key)
             if hit is not None:

@@ -1,5 +1,5 @@
 """R2RML IRI/literal templates: parse, expand, invert — in Python, Spark
-Column, and DuckDB SQL form.
+SQL and DuckDB SQL form.
 
 Semantics mirror the reference exactly:
 
@@ -20,18 +20,16 @@ import re
 from dataclasses import dataclass
 from string import Formatter
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rdflib_r2r_spark import terms
 from rdflib_r2r_spark.mapping import xsd_for_spark_type
 from rdflib_r2r_spark.terms import (
     PERCENT_PAIRS,
-    iri_safe_col,
     iri_safe_py,
     iri_safe_sql,
     iri_safe_sql_spark,
+    spark_str_sql,
 )
 
 
@@ -78,52 +76,27 @@ def _canonical_str(v) -> str:
     return str(v)  # str(20.0) keeps '20.0', as both engines render it
 
 
-def template_to_column(
-    template: str,
-    resolve,
-    iri: bool = True,
-    wrap: bool = True,
-) -> Column:
-    """Build a Spark Column that renders the template.
-
-    ``resolve(colname) -> Column`` lets the caller qualify columns
-    (aliases, joined parents). NULL in any slot propagates to NULL via
-    F.concat's null semantics. ``wrap`` adds the ``<...>`` IRI lexical
-    wrapper of our term encoding.
-    """
-    exprs: list[Column] = []
-    for part in parse_template(template):
-        if part.prefix:
-            exprs.append(F.lit(part.prefix))
-        if part.column:
-            c = resolve(part.column).cast("string")
-            exprs.append(iri_safe_col(c) if iri else c)
-    if wrap and iri:
-        exprs = [F.lit("<"), *exprs, F.lit(">")]
-    if not exprs:
-        return F.lit("")
-    return F.concat(*exprs)
-
-
-def template_to_spark_expr(
+def template_to_spark_sql(
     template: str,
     qualify,
     iri: bool = True,
     wrap: bool = True,
-) -> Column:
-    """Fast-path twin of :func:`template_to_column`: the same render as one
-    Spark-SQL text parsed by a single ``F.expr`` call — one Py4J round trip
-    instead of ~100 (one per replace/lit in the iri-safe chain).  Slots use
-    the RLIKE-gated :func:`terms.iri_safe_sql_spark`; the oracle side keeps
-    the ungated ``template_to_sql`` text.  Value parity is pinned by tests.
+    integral=frozenset(),
+) -> str:
+    """Spark SQL text that renders the template (the Spark side of
+    :func:`template_to_sql`: same bytes).  Slots use the RLIKE-gated
+    :func:`terms.iri_safe_sql_spark`, except the ``integral`` columns: a
+    decimal (``-?[0-9]+``) is left as is by the encoding.  Fixed texts use
+    :func:`terms.spark_str_sql`, which keeps ``${`` out of the text.
 
-    ``qualify(colname) -> str`` must return a Spark-SQL expression string
-    for the source column (e.g. backtick-qualified ``alias.col``).
+    ``qualify(colname) -> str`` returns the SQL text of a source column
+    (e.g. backtick-qualified ``alias.col``).  NULL in any slot propagates
+    to NULL through ``||``.  ``wrap`` adds the ``<...>`` IRI lexical
+    wrapper of our term encoding.
     """
-    return F.expr(
-        template_to_sql(template, qualify=qualify, iri=iri, wrap=wrap,
-                        _safe_fn=iri_safe_sql_spark)
-    )
+    return _template_sql(
+        template, qualify, iri, wrap, spark_str_sql,
+        lambda col, text: text if col in integral else iri_safe_sql_spark(text))
 
 
 def template_to_sql(
@@ -131,15 +104,9 @@ def template_to_sql(
     qualify=lambda c: f'"{c}"',
     iri: bool = True,
     wrap: bool = True,
-    _safe_fn=None,
 ) -> str:
-    """DuckDB-SQL twin of :func:`template_to_column` (same bytes).
-
-    Uses ``||`` concatenation, which propagates NULL like F.concat.
-    Default text is the FROZEN oracle dialect; ``_safe_fn`` lets the
-    Spark fast path substitute the gated encoder (never reaches DuckDB).
-    """
-    safe = _safe_fn or iri_safe_sql
+    """DuckDB-SQL text of the template render: the FROZEN oracle dialect,
+    byte-identical in value to :func:`template_to_spark_sql`."""
     def lit_sql(s: str) -> str:
         # engine-neutral string literal: Spark C-escapes backslashes inside
         # quotes, DuckDB does not — emit backslash as chr(92) so the same
@@ -148,13 +115,21 @@ def template_to_sql(
         quoted = ["'" + p.replace("'", "''") + "'" for p in parts]
         return " || chr(92) || ".join(quoted) if len(quoted) > 1 else quoted[0]
 
+    return _template_sql(template, qualify, iri, wrap, lit_sql,
+                         lambda _col, text: iri_safe_sql(text))
+
+
+def _template_sql(template: str, qualify, iri: bool, wrap: bool,
+                  lit_sql, safe) -> str:
+    """``lit_sql(text)`` quotes a fixed text, ``safe(column, sql)``
+    percent-encodes an IRI slot."""
     exprs: list[str] = []
     for part in parse_template(template):
         if part.prefix:
             exprs.append(lit_sql(part.prefix))
         if part.column:
             c = f"CAST({qualify(part.column)} AS STRING)"
-            exprs.append(safe(c) if iri else c)
+            exprs.append(safe(part.column, c) if iri else c)
     if wrap and iri:
         exprs = ["'<'", *exprs, "'>'"]
     if not exprs:
@@ -162,9 +137,11 @@ def template_to_sql(
     return " || ".join(exprs)
 
 
-def invert_template_py(s: str, template: str) -> dict[str, str] | None:
+def invert_template_py(s: str, template: str,
+                       integral=frozenset()) -> dict[str, str] | None:
     """Match a concrete string against the template; greedy ``(.*)`` per
-    column, full match (reference parse_with_template semantics). Returns
+    column, full match (reference parse_with_template semantics), except
+    that the ``integral`` columns match a decimal (``-?[0-9]+``). Returns
     still-percent-encoded captured strings."""
     pattern: list[str] = []
     columns: list[str] = []
@@ -173,7 +150,7 @@ def invert_template_py(s: str, template: str) -> dict[str, str] | None:
             pattern.append(re.escape(part.prefix))
         if part.column:
             columns.append(part.column)
-            pattern.append("(.*)")
+            pattern.append("(-?[0-9]+)" if part.column in integral else "(.*)")
     m = re.fullmatch("".join(pattern), s)
     if not m:
         return None

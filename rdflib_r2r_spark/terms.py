@@ -21,6 +21,7 @@ Spark and DuckDB so all three backends are byte-identical on our corpora.
 from __future__ import annotations
 
 import hashlib
+import re
 import urllib.parse
 
 from pyspark.sql import Column
@@ -114,6 +115,25 @@ def iri_safe_sql_spark(expr: str) -> str:
     # Spark single-quoted literal: backslash must be doubled, quote escaped
     rx = _UNSAFE_CLASS.replace("\\", "\\\\").replace("'", "\\'")
     return f"(CASE WHEN {s} RLIKE '{rx}' THEN {out} ELSE {s} END)"
+
+
+def spark_str_sql(value: str) -> str:
+    """Spark-ONLY SQL string literal of ``value``.  Backslash and ``$`` go
+    out as chr(92) / chr(36): Spark C-unescapes backslashes inside quotes,
+    and its variable substitution rewrites ``${...}`` anywhere in a SQL
+    text, string literals included.  Constant folding turns the pieces
+    back into one literal."""
+    pieces = []
+    for p in re.split(r"([\\$])", value):
+        if p == "\\":
+            pieces.append("chr(92)")
+        elif p == "$":
+            pieces.append("chr(36)")
+        elif p:
+            pieces.append("'" + p.replace("'", "''") + "'")
+    if not pieces:
+        return "''"
+    return pieces[0] if len(pieces) == 1 else "(" + " || ".join(pieces) + ")"
 
 
 # ---------------------------------------------------------------------------

@@ -162,31 +162,29 @@ def test_nt_term():
     assert terms.term_to_nt('say "hi"\n') == '"say \\"hi\\"\\n"'
 
 
-def test_template_spark_expr_fast_path_parity(spark):
-    # templates.template_to_spark_expr (one F.expr parse) must render the
-    # SAME bytes as the Column-API slow path, including percent-unsafe
-    # chars, quotes, and backslashes in both the column VALUES and the
-    # template PREFIX text
-    from pyspark.sql import functions as F
+def test_template_spark_sql_matches_python(spark):
+    # templates.template_to_spark_sql must render the bytes of
+    # expand_template_py, including percent-unsafe chars, quotes,
+    # backslashes and `$` in both the column VALUES and the template PREFIX
+    # text, and integral slots (no encoding) with negative values
+    from rdflib_r2r_spark.templates import template_to_spark_sql
 
-    from rdflib_r2r_spark.templates import (
-        template_to_column, template_to_spark_expr)
-
-    df = spark.createDataFrame(
-        [("a b/c", 1), ("x'y\"z", 2), ("back\\slash", 3), ("plain", 4),
-         (None, 5)],
-        "v string, k int",
-    ).alias("t")
+    rows = [("a b/c", 1), ("x'y\"z", -2), ("back\\slash", 3), ("${env:HOME}", 4),
+            ("plain", None), (None, 5)]
+    df = spark.createDataFrame(rows, "v string, k bigint")
     cases = [
         ("http://ex.org/{v}/{k}", True, True),
         ("pre'fix\\x-{v}", False, False),
         ("{k}-{v}", True, False),
+        ("http://x/$\\{env:HOME\\}/{k}$", True, True),
     ]
     for tpl, iri, wrap in cases:
-        slow = template_to_column(tpl, lambda c: F.col(f"t.{c}"),
-                                  iri=iri, wrap=wrap)
-        fast = template_to_spark_expr(tpl, lambda c: f"`t`.`{c}`",
-                                      iri=iri, wrap=wrap)
-        rows = df.select(slow.alias("s"), fast.alias("f")).collect()
-        for r in rows:
-            assert r["s"] == r["f"], (tpl, r["s"], r["f"])
+        for integral in (frozenset(), {"k"}):
+            text = template_to_spark_sql(tpl, lambda c: f"`{c}`", iri=iri,
+                                         wrap=wrap, integral=integral)
+            got = [r[0] for r in df.selectExpr(text).collect()]
+            want = []
+            for v, k in rows:
+                out = expand_template_py(tpl, {"v": v, "k": k}, iri=iri)
+                want.append(f"<{out}>" if out is not None and wrap and iri else out)
+            assert got == want, (tpl, integral, got, want)
