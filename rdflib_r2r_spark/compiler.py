@@ -88,12 +88,6 @@ class SparkMappingCompiler:
 
     # -- sources ------------------------------------------------------------
 
-    def register(self, name: str, df: DataFrame) -> None:
-        self.tables[name] = df
-        self._sources.clear()
-        self._types.clear()
-        self._views.clear()
-
     def source_types(self, source: LogicalSource) -> dict:
         """Column name -> Spark type of a logical source, read once."""
         key = source.key()

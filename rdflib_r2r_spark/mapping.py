@@ -97,10 +97,6 @@ def const_iri(iri: str) -> TermMap:
     return TermMap(constant=iri, term_type="IRI")
 
 
-def const_literal(v: str, datatype: str | None = None, language: str | None = None) -> TermMap:
-    return TermMap(constant=v, term_type="Literal", datatype=datatype, language=language)
-
-
 # ---------------------------------------------------------------------------
 # Direct mapping from a Spark schema
 # ---------------------------------------------------------------------------

@@ -7,10 +7,9 @@ signature + IHDR chunk, or a valid JPEG SOI + SOF0 segment) built entirely
 JVM-side (hex/unhex/concat — no Python in the generation path), and
 ``decode_image_meta`` is a genuine header parser: PNG dimensions read from
 the IHDR big-endian fields, JPEG dimensions found by walking the marker
-segments to the first SOF. Pixel decode (``decode_pixels``) would require an
-image codec library not present in this container and stays a documented
-stub; everything up to it — schema, Arrow batching, partition behavior,
-header parsing — is real and oracle-checked.
+segments to the first SOF. Pixel decode would need an image codec library
+(PIL/opencv) and is not provided; everything up to it — schema, Arrow
+batching, partition behavior, header parsing — is real and oracle-checked.
 """
 
 from __future__ import annotations
@@ -273,16 +272,6 @@ SELECT doc_id,
        'wav' AS format
 FROM {table}
 """
-
-
-def decode_pixels(df: DataFrame) -> DataFrame:
-    """Full pixel decode — requires an image codec library (PIL/opencv) not
-    present in this container. The distributed plumbing is
-    decode_image_meta's; only the per-batch body changes."""
-    raise NotImplementedError(
-        "pixel decode requires PIL/opencv in the executor image; "
-        "use decode_image_meta for the header/metadata path"
-    )
 
 
 def frame_sample_stub(df: DataFrame, every_n: int = 10) -> DataFrame:

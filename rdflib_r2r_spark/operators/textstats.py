@@ -3,7 +3,9 @@ scoring, language-ID heuristic, document fingerprinting.
 
 Everything is built-in pyspark.sql.functions (JVM, codegen) with an exact
 DuckDB-SQL twin per operator so the driver's oracle gate covers each one.
-The shared tokenization is the same split used by mention detection.
+``tokens_col`` is the one tokenizer: every Spark caller — these operators,
+dedup, mention detection, the alias dictionary and the LSH signatures —
+builds its tokens with it, and ``tokens_sql`` is its DuckDB twin.
 """
 
 from __future__ import annotations

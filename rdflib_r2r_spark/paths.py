@@ -61,22 +61,6 @@ class NegSet:
     inverse: tuple = ()
 
 
-def seq(*parts):
-    return Seq(tuple(_lift(p) for p in parts))
-
-
-def alt(*parts):
-    return Alt(tuple(_lift(p) for p in parts))
-
-
-def inv(part):
-    return Inv(_lift(part))
-
-
-def _lift(p):
-    return Pred(p) if isinstance(p, str) else p
-
-
 # -- compile-time BGP rewriting (reference-equivalent) ------------------------
 
 def resolve_paths(bgp: list[tuple], fresh=None):
@@ -93,7 +77,7 @@ def resolve_paths(bgp: list[tuple], fresh=None):
         yield []
         return
     (s, p, o), rest = bgp[0], list(bgp[1:])
-    p = _lift(p) if isinstance(p, str) else p
+    p = Pred(p) if isinstance(p, str) else p
     if isinstance(p, Pred):
         for tail in resolve_paths(rest, fresh):
             yield [(s, p.iri, o)] + tail

@@ -115,38 +115,3 @@ def const_iri_raw(lexical: str) -> TermMap:
     verbatim (no <> wrapping) — chain predicates are '<p1>/<p2>' composites,
     not plain IRIs."""
     return TermMap(constant=lexical, term_type="RawIRI")
-
-
-def subordination_links(tmaps: list[TriplesMap]) -> dict[str, str]:
-    """Detect subordinate maps: two triples-maps over the same logical table
-    where a predicate-object map of one renders the OTHER's subject template
-    as object (reference: rdflib_r2r/sql_converter.py:427-455
-    ``add_subordinate_map_links``). Returns {predicate: subordinate tmap
-    name}. In this engine the shared scan is automatic (all join-free arms
-    over one logical source fold into a single explode pass), so the links
-    are informational/verification metadata rather than a required rewrite.
-    """
-    by_table: dict[str, list[TriplesMap]] = {}
-    for t in tmaps:
-        if t.source.table is not None:
-            by_table.setdefault(t.source.table, []).append(t)
-    links: dict[str, str] = {}
-    for tms in by_table.values():
-        if len(tms) < 2:
-            continue
-        for parent in tms:
-            for child in tms:
-                if parent is child or not child.subject_map.template:
-                    continue
-                for pom in parent.pomaps:
-                    for obj in pom.objects:
-                        if obj.template and obj.template == child.subject_map.template:
-                            for pred in pom.predicates:
-                                if pred.constant:
-                                    if pred.constant in links:
-                                        raise ValueError(
-                                            "multiple subordinate maps share predicate "
-                                            + pred.constant
-                                        )
-                                    links[pred.constant] = child.name
-    return links

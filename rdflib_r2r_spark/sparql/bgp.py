@@ -36,7 +36,7 @@ Variables surface as term-encoded columns ``{v}`` plus ``{v}__dt`` /
 from __future__ import annotations
 
 import itertools
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -45,7 +45,7 @@ from rdflib_r2r_spark import terms
 from rdflib_r2r_spark.compiler import SparkMappingCompiler, sql_ident
 from rdflib_r2r_spark.mapping import TermMap, TriplesMap, xsd_for_spark_type
 from rdflib_r2r_spark.sparql.ast_nodes import BNodeT, IRI, Lit, Var
-from rdflib_r2r_spark.sparql.parser import RDF_TYPE, SparqlNotImplemented
+from rdflib_r2r_spark.sparql.parser import SparqlNotImplemented
 from rdflib_r2r_spark.templates import (
     expand_template_py,
     invert_template_py,
@@ -56,11 +56,6 @@ from rdflib_r2r_spark.templates import (
 from rdflib_r2r_spark.terms import iri_unsafe_py
 
 MAX_ASSIGNMENTS = 5000
-
-_NUMERIC_XSD = {
-    terms.XSD_INTEGER, terms.XSD_DOUBLE, terms.XSD_DECIMAL,
-    terms.XSD + "float", terms.XSD + "int", terms.XSD + "long",
-}
 
 _NUMERIC_SPARK = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -99,7 +94,7 @@ def enumerate_arms(tmaps: list[TriplesMap]) -> list[Arm]:
                 arms.append(
                     Arm(
                         tmap=tmap,
-                        pred_tm=TermMap(constant=RDF_TYPE, term_type="IRI"),
+                        pred_tm=TermMap(constant=terms.RDF_TYPE, term_type="IRI"),
                         obj_tm=TermMap(constant=cls, term_type="IRI"),
                         graph_tm=g,
                         parent=None,
@@ -195,7 +190,7 @@ def _same_literal_type(term: Lit, dt: str | None, lang: str | None) -> bool:
     if term.language or lang:
         return (term.language or "").lower() == (lang or "").lower()
     a, b = term.datatype or terms.XSD_STRING, dt or terms.XSD_STRING
-    return a == b or (a in _NUMERIC_XSD and b in _NUMERIC_XSD)
+    return a == b or (a in terms.NUMERIC_XSD and b in terms.NUMERIC_XSD)
 
 
 class BGPCompiler:
@@ -426,7 +421,7 @@ class BGPCompiler:
         if tm.column is not None and isinstance(occ.slot.types.get(tm.column), _NUMERIC_SPARK):
             return f"CAST({occ.slot.col(tm.column)} AS DOUBLE)"
         dt = _effective_dt(tm, occ.slot)
-        if tm.inferred_term_type(occ.position) == "Literal" and (dt is None or dt in _NUMERIC_XSD):
+        if tm.inferred_term_type(occ.position) == "Literal" and (dt is None or dt in terms.NUMERIC_XSD):
             return f"try_cast({lex} AS DOUBLE)"
         return "CAST(NULL AS DOUBLE)"
 

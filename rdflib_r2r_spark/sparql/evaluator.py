@@ -47,12 +47,6 @@ from rdflib_r2r_spark.compiler import sql_ident
 from rdflib_r2r_spark.sparql.bgp import SHADOWS, BGPCompiler
 from rdflib_r2r_spark.sparql.parser import SparqlNotImplemented
 
-XSD = terms.XSD
-_NUMERIC_XSD = {
-    terms.XSD_INTEGER, terms.XSD_DOUBLE, terms.XSD_DECIMAL,
-    XSD + "float", XSD + "int", XSD + "long",
-}
-
 
 def _render_raws(df: DataFrame, raw_vars: dict) -> DataFrame:
     """Append each raw-keyed var's four term columns, rendered from its raw
@@ -168,7 +162,7 @@ class EV:
         assert lex is not None
         n = self.as_num()
         is_bool_dt = (
-            self.dt.eqNullSafe(F.lit(XSD + "boolean"))
+            self.dt.eqNullSafe(F.lit(terms.XSD_BOOLEAN))
             if self.dt is not None
             else F.lit(False)
         )
@@ -905,6 +899,34 @@ class Evaluator:
             {v: rb for v, rb in bf.raw_vars.items() if v not in victims},
         )
 
+    @staticmethod
+    def _var_eq(v: str, a: BindingFrame, b: BindingFrame,
+                sfx: str) -> tuple[Column, list[str]]:
+        """Equality of the RDF terms ``v`` binds in a row of ``a`` (columns
+        as named) and a row of ``b`` (columns renamed with ``sfx``), and the
+        ``b`` columns it reads.  The one rule of JOIN, MINUS and EXISTS;
+        each keeps its own handling of unbound vars.
+
+        Raw shadows of equal provenance compare componentwise (raw equality
+        <=> term equality); two term vars compare (lex, dt, lang), so
+        ``"1"^^xsd:integer`` is not ``"1"``; two native vars compare values;
+        a term against a native var compares lexicals."""
+        ra, rb = a.raw_vars.get(v), b.raw_vars.get(v)
+        if ra is not None and rb is not None and ra.prov == rb.prov:
+            eq = F.lit(True)
+            for ca, cb in zip(ra.cols, rb.cols):
+                eq = eq & (F.col(ca) == F.col(cb + sfx))
+            return eq, list(rb.cols)
+        if v in a.term_vars and v in b.term_vars:
+            dt, lang = v + "__dt", v + "__lang"
+            eq = ((F.col(v) == F.col(v + sfx))
+                  & F.col(dt).eqNullSafe(F.col(dt + sfx))
+                  & F.col(lang).eqNullSafe(F.col(lang + sfx)))
+            return eq, [v, dt, lang]
+        if v in a.native_vars and v in b.native_vars:
+            return F.col(v) == F.col(v + sfx), [v]
+        return F.col(v).cast("string") == F.col(v + sfx).cast("string"), [v]
+
     def _join(self, a: BindingFrame, b: BindingFrame, how: str = "inner",
               filter_expr=None) -> BindingFrame:
         shared = a.all_vars & b.all_vars
@@ -932,24 +954,7 @@ class Evaluator:
         })
         cond = F.lit(True)
         for v in shared:
-            if (
-                v in a.raw_vars and v in b.raw_vars
-                and a.raw_vars[v].prov == b.raw_vars[v].prov
-            ):
-                # equal provenance: raw equality <=> (lex, dt, lang)
-                # equality, and the join keys become narrow raw columns
-                eq = F.lit(True)
-                for ca, cb in zip(a.raw_vars[v].cols, b.raw_vars[v].cols):
-                    eq = eq & (F.col(ca) == F.col(cb + "__rj"))
-            elif v in a.term_vars and v in b.term_vars:
-                eq = (F.col(v) == F.col(v + "__rj")) \
-                    & F.col(v + "__dt").eqNullSafe(F.col(v + "__dt__rj")) \
-                    & F.col(v + "__lang").eqNullSafe(F.col(v + "__lang__rj"))
-            elif (v in a.native_vars) and (v in b.native_vars):
-                eq = F.col(v) == F.col(v + "__rj")
-            else:
-                # term on one side, native on the other: compare lexically
-                eq = F.col(v).cast("string") == F.col(v + "__rj").cast("string")
+            eq, _ = self._var_eq(v, a, b, "__rj")
             if v in compat:
                 eq = F.col(v).isNull() | F.col(v + "__rj").isNull() | eq
             cond = cond & eq
@@ -1055,7 +1060,7 @@ class Evaluator:
         kind = bf.native_vars.pop(v)
         df = bf.df.withColumns({
             f"{v}__num": F.col(v).try_cast("double"),
-            f"{v}__dt": F.lit(XSD + "double" if kind == "num" else None).cast("string"),
+            f"{v}__dt": F.lit(terms.XSD_DOUBLE if kind == "num" else None).cast("string"),
             f"{v}__lang": F.lit(None).cast("string"),
             v: F.col(v).cast("string"),
         })
@@ -1068,23 +1073,24 @@ class Evaluator:
         if not shared:
             return a  # disjoint domains: nothing is compatible, remove nothing
         nullable = {v for v in shared if v in a.maybe_null or v in b.maybe_null}
-        shared = sorted(shared)
-        bdf = b.df.withColumnsRenamed(
-            {c: c + "__rj" for v in shared for c in b.columns_for(v)})
-        cond = F.lit(True)
-        for v in shared:
-            eq = F.col(v) == F.col(v + "__rj")
+        # an unbound var has no raws to compare
+        b = self._strip_raw(b, nullable)
+        cond, bcols = F.lit(True), []
+        for v in sorted(shared):
+            eq, cols = self._var_eq(v, a, b, "__rj")
             if v in nullable:
                 eq = F.col(v).isNull() | F.col(v + "__rj").isNull() | eq
             cond = cond & eq
-        if nullable:
+            bcols += cols
+        if nullable == shared:
             # MINUS removes μ1 only if a compatible μ2 shares ≥1 BOUND var
+            # (always so when a shared var is never unbound)
             dom = F.lit(False)
-            for v in shared:
+            for v in sorted(shared):
                 dom = dom | (F.col(v).isNotNull() & F.col(v + "__rj").isNotNull())
             cond = cond & dom
-        out = a.df.join(bdf.select(*[F.col(c + "__rj") for v in shared for c in [v]]).distinct(),
-                        on=cond, how="left_anti")
+        bdf = b.df.select(*[F.col(c).alias(c + "__rj") for c in bcols]).distinct()
+        out = a.df.join(bdf, on=cond, how="left_anti")
         return BindingFrame(out, a.term_vars, a.native_vars, a.maybe_null,
                             a.raw_vars)
 
@@ -1107,7 +1113,7 @@ class Evaluator:
                 if lex is None:  # UNDEF: unbound wildcard, matches anything
                     undef_vars.add(v.name)
                 num = None
-                if isinstance(t, Lit) and (t.datatype in _NUMERIC_XSD):
+                if isinstance(t, Lit) and (t.datatype in terms.NUMERIC_XSD):
                     num = float(t.value)
                 out.extend([lex, dt, lang, num])
             rows.append(tuple(out))
@@ -1168,37 +1174,19 @@ class Evaluator:
                     # never-null shared vars with equal raw provenance on
                     # both sides match on the raw shadows — the inner
                     # side's per-row IRI render is then pruned entirely
-                    raw_ok = {
-                        v for v in shared
-                        if v not in nullable
-                        and v in bf.raw_vars and v in inner.raw_vars
-                        and bf.raw_vars[v].prov == inner.raw_vars[v].prov
-                    }
-                    sel, exr_cols = [], []
+                    inner = self._strip_raw(inner, set(nullable))
+                    cond, icols = F.lit(True), []
                     for v in shared:
-                        if v in raw_ok:
-                            for c in inner.raw_vars[v].cols:
-                                sel.append(F.col(c).alias(c + "__exr"))
-                                exr_cols.append(c + "__exr")
-                        else:
-                            sel.append(F.col(v).alias(v + "__exr"))
-                            exr_cols.append(v + "__exr")
-                    idf = inner.df.select(*sel).distinct().withColumn(marker, F.lit(True))
-                    cond = F.lit(True)
-                    for v in shared:
-                        if v in raw_ok:
-                            eq = F.lit(True)
-                            for ca, cb in zip(bf.raw_vars[v].cols,
-                                              inner.raw_vars[v].cols):
-                                eq = eq & (F.col(ca) == F.col(cb + "__exr"))
-                            cond = cond & eq
-                            continue
-                        eq = F.col(v) == F.col(v + "__exr")
+                        eq, cols = self._var_eq(v, bf, inner, "__exr")
                         if v in bf.maybe_null:
                             eq = F.col(v).isNull() | eq
                         if v in inner.maybe_null:
                             eq = F.col(v + "__exr").isNull() | eq
                         cond = cond & eq
+                        icols += cols
+                    exr_cols = [c + "__exr" for c in icols]
+                    idf = (inner.df.select(*[F.col(c).alias(c + "__exr") for c in icols])
+                           .distinct().withColumn(marker, F.lit(True)))
                     if not nullable:
                         joined = (
                             bf.df.join(idf, on=cond, how="left_outer")
@@ -1302,11 +1290,11 @@ class Evaluator:
             return EV(lex=null_s, num=F.lit(None).cast("double"),
                       dt=null_s, lang=null_s, kind="term")
         if isinstance(e, Lit):
-            if e.datatype in _NUMERIC_XSD:
+            if e.datatype in terms.NUMERIC_XSD:
                 val = float(e.value)
-                return EV(num=F.lit(val), native=F.lit(int(val) if val.is_integer() and e.datatype == XSD + "integer" else val),
+                return EV(num=F.lit(val), native=F.lit(int(val) if val.is_integer() and e.datatype == terms.XSD_INTEGER else val),
                           lex=F.lit(e.value), kind="num")
-            if e.datatype == XSD + "boolean":
+            if e.datatype == terms.XSD_BOOLEAN:
                 return ev_bool(F.lit(e.value == "true"))
             return EV(lex=F.lit(e.value), dt=F.lit(e.datatype).cast("string"),
                       lang=F.lit(e.language).cast("string"),
@@ -1423,7 +1411,7 @@ class Evaluator:
                 | (F.lower(args[0].as_str()) == F.lower(args[1].as_str()))
             )
         if name == "DATATYPE":
-            return ev_str(F.coalesce(args[0].dt_col(), F.lit(XSD + "string")))
+            return ev_str(F.coalesce(args[0].dt_col(), F.lit(terms.XSD_STRING)))
         if name == "BOUND":
             return ev_bool(args[0].as_lex().isNotNull())
         if name in ("IRI", "URI"):

@@ -48,9 +48,8 @@ from rdflib_r2r_spark.sparql.ast_nodes import (
     ValuesPat,
     Var,
 )
+from rdflib_r2r_spark.terms import RDF_TYPE, XSD
 
-XSD = "http://www.w3.org/2001/XMLSchema#"
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 
 class SparqlSyntaxError(ValueError):

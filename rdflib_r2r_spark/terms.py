@@ -20,7 +20,6 @@ Spark and DuckDB so all three backends are byte-identical on our corpora.
 
 from __future__ import annotations
 
-import hashlib
 import re
 import urllib.parse
 
@@ -38,6 +37,10 @@ XSD_DATE = XSD + "date"
 XSD_DATETIME = XSD + "dateTime"
 XSD_STRING = XSD + "string"
 XSD_HEXBINARY = XSD + "hexBinary"
+# datatypes whose literals SPARQL compares by numeric value
+NUMERIC_XSD = frozenset({
+    XSD_INTEGER, XSD_DOUBLE, XSD_DECIMAL, XSD + "float", XSD + "int", XSD + "long",
+})
 
 # Everything urllib.parse.quote(safe="") percent-encodes, within printable
 # ASCII. '%' MUST come first (it appears in every replacement). Safe set per
@@ -150,44 +153,6 @@ def is_iri_lex(lex: str) -> bool:
 
 def is_bnode_lex(lex: str) -> bool:
     return lex.startswith("_:")
-
-
-def skolem_bnode_py(*parts: str) -> str:
-    """Deterministic blank node: stable per logical row so referencing joins
-    and re-runs agree (SURVEY.md §1.4). Exact labels are irrelevant to the
-    isomorphism checker."""
-    h = hashlib.sha256("\x1f".join(parts).encode("utf-8")).hexdigest()
-    return "_:b" + h[:32]
-
-
-def skolem_bnode_col(*cols: Column) -> Column:
-    """Spark twin of :func:`skolem_bnode_py` — sha2 over the same
-    0x1f-joined byte string. NULL in any part propagates to NULL (so the
-    R2RML null-guard also suppresses bnode terms)."""
-    joined = F.concat_ws("", *[
-        c if i == 0 else F.concat(F.lit("\x1f"), c)
-        for i, c in enumerate(cols)
-    ])
-    # concat_ws skips NULLs; re-impose NULL propagation explicitly.
-    any_null = None
-    for c in cols:
-        cond = c.isNull()
-        any_null = cond if any_null is None else (any_null | cond)
-    h = F.concat(F.lit("_:b"), F.substring(F.sha2(joined, 256), 1, 32))
-    return F.when(any_null, F.lit(None).cast("string")).otherwise(h)
-
-
-def skolem_bnode_sql(*exprs: str) -> str:
-    parts = []
-    for i, e in enumerate(exprs):
-        e = f"CAST({e} AS STRING)"
-        parts.append(e if i == 0 else f"chr(31) || {e}")
-    joined = " || ".join(parts)
-    null_guard = " OR ".join(f"({e}) IS NULL" for e in exprs)
-    return (
-        f"CASE WHEN {null_guard} THEN NULL "
-        f"ELSE '_:b' || substring(sha256({joined}), 1, 32) END"
-    )
 
 
 # ---------------------------------------------------------------------------

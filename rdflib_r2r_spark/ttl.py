@@ -189,11 +189,6 @@ class _Parser:
         self._expect(".")
 
 
-def parse_ttl(text: str) -> tuple[list[tuple], dict[str, str]]:
-    p = _Parser(text)
-    return p.parse(), p.prefixes
-
-
 def parse_ttl_with_base(text: str) -> tuple[list[tuple], dict[str, str], str | None]:
     p = _Parser(text)
     return p.parse(), p.prefixes, p.base

@@ -28,6 +28,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rdflib_r2r_spark.operators.textstats import tokens_col
+
 DEFAULT_NUM_HASHES = 8
 DEFAULT_BAND_ROWS = 2  # hashes per band -> bands = num_hashes // band_rows
 SHINGLE_K = 3
@@ -131,8 +133,7 @@ def signatures(df: DataFrame, text_col: str = "text", key_col: str = "url",
     # cheap attributes (array lambdas get no CSE — never inline expensive
     # exprs). Shingle hashes are numeric combinations of token hashes —
     # no shingle strings exist anywhere in this plan.
-    toks = F.filter(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda t: t != "")
-    step1 = df.select(F.col(key_col).alias("key"), toks.alias("_toks"))
+    step1 = df.select(F.col(key_col).alias("key"), tokens_col(F.col(text_col)).alias("_toks"))
     step2 = step1.select("key", token_hash_col(F.col("_toks")).alias("_th"))
     step3 = step2.select("key", shingle_hash_col(F.col("_th")).alias("_hv"))
     return step3.select("key", *minhash_sig_cols(F.col("_hv"), num_hashes))

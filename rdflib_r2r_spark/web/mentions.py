@@ -1,6 +1,6 @@
 """Mention detection + entity linking against a bounded alias dictionary.
 
-All tokenization is Spark SQL built-ins (split/filter — JVM-side).
+Tokens come from ``textstats.tokens_col`` (Spark SQL built-ins, JVM-side).
 ``mention_entities`` is the one mention API: it emits the distinct
 (url, entity_id) pair set.  A dictionary of up to ``MAX_INLINE`` entries
 (the pipeline's is 24 by default) is inlined into the plan as an array
@@ -15,7 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-TOKEN_SPLIT_RE = "[^a-z0-9]+"
+from rdflib_r2r_spark.operators.textstats import tokens_col
+
 DEFAULT_DICT_SIZE = 24
 MIN_ALIAS_LEN = 4
 # largest alias dict that mention_entities inlines into the plan (see there)
@@ -35,14 +36,10 @@ def build_alias_dict(
     prior = corpus frequency share. (alias, entity_id, prior) — FIXTURES.md F5.
     """
     # dictionary building needs neither positions nor short tokens: filter
-    # INSIDE the token array (length >= min_len subsumes != "" for
-    # min_len >= 1) and plain-explode — the exploded row count drops by the
-    # short-token share (~40% of web tokens) and no pos int is carried.
-    # Same counts as the posexplode+post-filter formulation, cheaper rows.
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE),
-        lambda t: (t != "") & (F.length(t) >= min_len),
-    )
+    # INSIDE the token array and plain-explode — the exploded row count
+    # drops by the short-token share (~40% of web tokens) and no pos int is
+    # carried.
+    toks = F.filter(tokens_col(F.col(text_col)), lambda t: F.length(t) >= min_len)
     counts = (
         pages.select(F.explode(toks).alias("token"))
         .groupBy("token")
@@ -133,9 +130,7 @@ def mention_entities(pages: DataFrame, alias_dict: DataFrame,
                 F.lit(None).cast("long").alias("entity_id"),
             ).limit(0)
         )
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != ""
-    )
+    toks = tokens_col(F.col(text_col))
     if len(rows) > MAX_INLINE:
         tok = pages.select(F.col(key_col).alias("url"),
                            F.explode(F.array_distinct(toks)).alias("token"))

@@ -27,13 +27,6 @@ def html_escape_col(col: Column) -> Column:
     return out
 
 
-def html_escape_sql(expr: str) -> str:
-    out = expr
-    for ch, ent in ESCAPE_PAIRS:
-        out = f"replace({out}, '{ch}', '{ent}')"
-    return out
-
-
 def html_wrap_col(text: Column, lang: Column, doc_id: Column) -> Column:
     """Deterministic synthetic HTML document around the text."""
     return F.concat(
@@ -42,15 +35,6 @@ def html_wrap_col(text: Column, lang: Column, doc_id: Column) -> Column:
         F.lit("</title><script>var x=1;</script></head><body><nav>skip</nav><article>"),
         html_escape_col(text),
         F.lit("</article><footer>(c) example</footer></body></html>"),
-    )
-
-
-def html_wrap_sql(text: str, lang: str, doc_id: str) -> str:
-    return (
-        f"'<html lang=\"' || {lang} || '\"><head><title>doc ' || CAST({doc_id} AS VARCHAR)"
-        " || '</title><script>var x=1;</script></head><body><nav>skip</nav><article>'"
-        f" || {html_escape_sql(text)}"
-        " || '</article><footer>(c) example</footer></body></html>'"
     )
 
 

@@ -1,6 +1,6 @@
 """Property paths (B6) through the SPARQL front end, transitive closure,
-chain-map rewrite (B7) and subordination detection (B8), mirroring the
-reference's tests
+chain-map rewrite (B7) and the shared scan of subordinate maps (B8),
+mirroring the reference's tests
 (tests/test_resolve_path_in_triples.py, test_sql_converter.py:228-232,
 482-484, 686-700)."""
 
@@ -16,8 +16,8 @@ from rdflib_r2r_spark.mapping import (
     LogicalSource, PredicateObjectMap, SubjectMap, TermMap, TriplesMap, const_iri,
 )
 from rdflib_r2r_spark.oracle import mapping_to_duckdb_sql
-from rdflib_r2r_spark.paths import alt, inv, resolve_paths, seq, transitive_closure
-from rdflib_r2r_spark.rewrites import add_chain_maps, chain_pred, subordination_links
+from rdflib_r2r_spark.paths import Alt, Inv, Pred, Seq, resolve_paths, transitive_closure
+from rdflib_r2r_spark.rewrites import add_chain_maps, chain_pred
 from rdflib_r2r_spark.sparql import SparkR2RStore
 
 EX = "http://ex.org/"
@@ -26,7 +26,7 @@ EX = "http://ex.org/"
 # -- resolve_paths: compile-time rewriting (reference semantics) --------------
 
 def test_resolve_sequence_path():
-    bgps = list(resolve_paths([("?s", seq(EX + "p1", EX + "p2"), "?o")]))
+    bgps = list(resolve_paths([("?s", Seq((Pred(EX + "p1"), Pred(EX + "p2"))), "?o")]))
     assert len(bgps) == 1
     (t1, t2) = bgps[0]
     assert t1[0] == "?s" and t1[1] == EX + "p1"
@@ -35,13 +35,14 @@ def test_resolve_sequence_path():
 
 
 def test_resolve_alternative_path():
-    bgps = list(resolve_paths([("?s", alt(EX + "a", EX + "b"), "?o")]))
+    bgps = list(resolve_paths([("?s", Alt((Pred(EX + "a"), Pred(EX + "b"))), "?o")]))
     assert len(bgps) == 2
     assert {b[0][1] for b in bgps} == {EX + "a", EX + "b"}
 
 
 def test_resolve_inverse_and_combination():
-    bgps = list(resolve_paths([("?s", seq(inv(EX + "a"), alt(EX + "b", EX + "c")), "?o")]))
+    path = Seq((Inv(Pred(EX + "a")), Alt((Pred(EX + "b"), Pred(EX + "c")))))
+    bgps = list(resolve_paths([("?s", path, "?o")]))
     assert len(bgps) == 2
     for b in bgps:
         assert b[0][1] == EX + "a" and b[0][2] == "?s"  # inverted first hop
@@ -189,34 +190,7 @@ def test_chain_maps_rewrite_and_compile(spark):
     assert a == b and len(a) == 25
 
 
-# -- subordination links (B8) ---------------------------------------------------
-
-def test_subordination_links_detected():
-    main = TriplesMap(
-        name="main",
-        source=LogicalSource(table="T"),
-        subject_map=SubjectMap(template=EX + "main/{id}"),
-        pomaps=(
-            PredicateObjectMap(
-                predicates=(const_iri(EX + "aux"),),
-                objects=(TermMap(template=EX + "aux/{id}", term_type="IRI"),),
-            ),
-        ),
-    )
-    aux = TriplesMap(
-        name="auxmap",
-        source=LogicalSource(table="T"),
-        subject_map=SubjectMap(template=EX + "aux/{id}"),
-        pomaps=(
-            PredicateObjectMap(
-                predicates=(const_iri(EX + "v"),),
-                objects=(TermMap(column="v"),),
-            ),
-        ),
-    )
-    links = subordination_links([main, aux])
-    assert links == {EX + "aux": "auxmap"}
-
+# -- subordinate maps (B8) ----------------------------------------------------
 
 def test_same_table_tmaps_share_one_scan(spark):
     """B8's goal (shared scan) is structural in this compiler: all join-free

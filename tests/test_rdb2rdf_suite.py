@@ -4,7 +4,9 @@ Spark tables -> mapping_from_ttl -> SparkMappingCompiler, compared under
 blank-node isomorphism.
 
 The suite zip is read from the reference checkout at test time (public W3C
-test data — nothing vendored); the suite cases skip if it is absent.
+test data — nothing vendored); the suite cases skip if it is absent.  The
+cases under ``r2rml_cases/`` are written by hand from the R2RML
+recommendation and run through the same ``run_case`` in every run.
 EXPECTED_PASS pins the cases this engine conforms on — a superset of the
 reference's own passing set for the shared cases (docs/test-results/
 rdb2rdf.md); the remainder are negative/invalid-mapping cases or exercise
@@ -13,12 +15,16 @@ datatype canonicalization this engine intentionally handles differently.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from rdflib_r2r_spark import rdb2rdf
+from rdflib_r2r_spark.compiler import MappingError
 from rdflib_r2r_spark.isomorphism import graph_diff
 
 ZIP = rdb2rdf.find_suite_zip()
+CASES_DIR = Path(__file__).parent / "r2rml_cases"
 
 
 # pinned by scripts/rdb2rdf_sweep.py. A strict superset of the reference's
@@ -72,6 +78,36 @@ def test_r2rml_conformance(spark, case):
 def test_r2rml_invalid_mappings_rejected(spark, case):
     with pytest.raises(Exception):
         rdb2rdf.run_case(spark, case)
+
+
+def _in_repo_case(name: str) -> rdb2rdf.SuiteCase:
+    """A case under ``r2rml_cases/<name>/``: ``create.sql``, ``mapping.ttl``
+    and, for a valid mapping, ``expected.nq``."""
+    d = CASES_DIR / name
+    nq = d / "expected.nq"
+    return rdb2rdf.SuiteCase(
+        case_id=name, directory=str(d),
+        create_sql=(d / "create.sql").read_text(),
+        mapping_ttl=(d / "mapping.ttl").read_text(),
+        expected_nq=nq.read_text() if nq.exists() else None,
+    )
+
+
+def test_in_repo_case_conforms(spark):
+    """Percent-encoded template values, a language-tagged column, a natural
+    xsd:integer column, a referencing object map with a join condition and
+    a constant graph map, against quads written from the spec."""
+    case = _in_repo_case("emp_dept")
+    produced, expected = rdb2rdf.run_case(spark, case)
+    _both, only_produced, only_expected = graph_diff(produced, expected)
+    assert not only_produced and not only_expected, (
+        sorted(only_produced), sorted(only_expected))
+    assert len(expected) == 14
+
+
+def test_in_repo_literal_subject_rejected(spark):
+    with pytest.raises(MappingError, match="Literal"):
+        rdb2rdf.run_case(spark, _in_repo_case("literal_subject"))
 
 
 def test_char_widths_ddl_variants():

@@ -587,6 +587,35 @@ def test_exists_oracle_is_discriminating(store):
     assert n_with == 3 and n_without == 4  # order 4 has NULL shippeddate
 
 
+@pytest.fixture(scope="module")
+def typed_vs_plain(spark):
+    # x:p gives "1"^^xsd:integer for <http://x/1>, x:q the plain "1"
+    return _store_over(
+        spark, [(1, 1, "1"), (2, 2, "3")], "id bigint, n bigint, s string",
+        [_tmap("http://x/{id}",
+               ("http://x/p", TermMap(column="n", datatype=terms.XSD_INTEGER)),
+               ("http://x/q", TermMap(column="s")))])
+
+
+def test_minus_compares_terms_not_lexicals(typed_vs_plain):
+    # "1"^^xsd:integer and "1" are different terms (SPARQL 1.1 18.5), so
+    # no x:q solution is compatible with an x:p one and MINUS removes none
+    df = typed_vs_plain.query(
+        "SELECT ?s ?o { ?s <http://x/p> ?o MINUS { ?s <http://x/q> ?o } }")
+    assert rows(df, "s") == {("<http://x/1>",), ("<http://x/2>",)}
+    joined = typed_vs_plain.query("SELECT ?s { ?s <http://x/p> ?o . ?s <http://x/q> ?o }")
+    assert joined.count() == 0
+
+
+def test_not_exists_compares_terms_not_lexicals(typed_vs_plain):
+    df = typed_vs_plain.query(
+        "SELECT ?s ?o { ?s <http://x/p> ?o FILTER NOT EXISTS { ?s <http://x/q> ?o } }")
+    assert rows(df, "s") == {("<http://x/1>",), ("<http://x/2>",)}
+    df = typed_vs_plain.query(
+        "SELECT ?s ?o { ?s <http://x/p> ?o FILTER EXISTS { ?s <http://x/q> ?o } }")
+    assert df.count() == 0
+
+
 # -- negated property sets (SPARQL 1.1 9.1 — beyond the reference's
 # Seq/Alt/Inv coverage, sql_converter.py:208-229) ---------------------------
 

@@ -147,13 +147,6 @@ def test_template_equality_examples():
                            TermMap(column="b"), "O", {"b": T.StringType()})
 
 
-def test_bnode_skolem_stable():
-    a = terms.skolem_bnode_py("t1", "1", "x")
-    b = terms.skolem_bnode_py("t1", "1", "x")
-    c = terms.skolem_bnode_py("t1", "2", "x")
-    assert a == b and a != c and a.startswith("_:b")
-
-
 def test_nt_term():
     assert terms.term_to_nt("<http://x>") == "<http://x>"
     assert terms.term_to_nt("_:b1") == "_:b1"

@@ -12,7 +12,7 @@ import pytest
 from rdflib_r2r_spark.compiler import SparkMappingCompiler
 from rdflib_r2r_spark.isomorphism import canonicalize, graph_diff, isomorphic
 from rdflib_r2r_spark.oracle import mapping_to_duckdb_sql
-from rdflib_r2r_spark.ttl import mapping_from_ttl, parse_ttl
+from rdflib_r2r_spark.ttl import mapping_from_ttl, parse_ttl_with_base
 
 # -- D009/D014-style: FK ref-object map, sqlQuery source, bnode subjects ----
 
@@ -51,7 +51,7 @@ LIKES = pd.DataFrame({"id": [1, 2], "likeType": ["dog", "cat"], "likedObj": ["Re
 
 
 def test_parse_ttl_basics():
-    triples, prefixes = parse_ttl(EMP_TTL)
+    triples, prefixes, _base = parse_ttl_with_base(EMP_TTL)
     assert prefixes["rr"] == "http://www.w3.org/ns/r2rml#"
     tmaps = mapping_from_ttl(EMP_TTL)
     assert len(tmaps) == 3
