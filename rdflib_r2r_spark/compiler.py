@@ -26,9 +26,10 @@ Scale design (the part that matters at 100 TB):
   runtime (a small parent table becomes a broadcast join by its size).
 - **Renders are Spark SQL text.** ``term_columns`` returns SQL text for
   every term map, so a caller parses all of its renders in one call (one
-  ``selectExpr`` per arm group here, one statement per BGP assignment in
+  ``selectExpr`` per arm group here, one statement per BGP in
   ``sparql/bgp.py``), not one gateway round trip per function.  Each
-  logical source is built once per compiler.
+  logical source is built once per compiler; ``source_sql`` is its text in
+  a FROM clause, over one compiler-private temp view per table.
 
 Output schema: ``subj, pred, obj, obj_dt, obj_lang, graph`` — all strings;
 term encoding per ``terms`` module.
@@ -62,9 +63,9 @@ class MappingError(ValueError):
 
 
 _NULL_STR = "CAST(NULL AS STRING)"
-# unique temp view names for the process (view names are session-wide);
-# a counter, not an address, keeps plan texts the same from run to run
-_VIEW_IDS = itertools.count(1)
+# numbers the tables' temp views: view names are session-wide, and a
+# counter, not an address, keeps plan texts the same from run to run
+_TABLE_NUMBERS = itertools.count(1)
 
 
 def sql_ident(name: str) -> str:
@@ -80,11 +81,13 @@ class SparkMappingCompiler:
     ):
         self.spark = spark
         self.tables = dict(tables or {})
-        # per logical source key, built on first use: the DataFrame, its
-        # column types and the temp view one SQL statement reads it by
+        # per logical source key, built on first use: the DataFrame and its
+        # column types
         self._sources: dict[str, DataFrame] = {}
         self._types: dict[str, dict] = {}
-        self._views: dict[str, str] = {}
+        # table name -> the temp view SQL text reads it by, registered
+        # for every table at once the first time SQL text needs one
+        self._table_view: dict[str, str] | None = None
 
     # -- sources ------------------------------------------------------------
 
@@ -97,43 +100,53 @@ class SparkMappingCompiler:
         return self._types[key]
 
     def source_df(self, source: LogicalSource) -> DataFrame:
-        """rr:tableName -> registered/catalog table; rr:sqlQuery -> Spark SQL
-        over the tables as temp views (reference:
-        rdflib_r2r/r2r_mapping.py:28-40 ``_get_table``).  Built once per
-        compiler (see :meth:`build_sources`)."""
+        """rr:tableName -> registered/catalog table; rr:sqlQuery -> its
+        :meth:`source_sql` text (reference: rdflib_r2r/r2r_mapping.py:28-40
+        ``_get_table``).  Built once per compiler (see
+        :meth:`build_sources`)."""
         self.build_sources([source])
         return self._sources[source.key()]
 
     def build_sources(self, sources) -> None:
-        """Build each logical source not built yet, registering the tables'
-        temp views once for all the rr:sqlQuery sources among them.
-        ``spark.sql`` analyzes a query against the views as they are bound
-        at that moment, so a later re-binding of a view name (another
-        compiler over other tables) does not reach a built source."""
-        missing = {s.key(): s for s in sources if s.key() not in self._sources}
-        if any(s.sql_query is not None for s in missing.values()):
-            for name, df in self.tables.items():
-                df.createOrReplaceTempView(name)
-        for key, source in missing.items():
+        """Build each logical source not built yet: a table source is the
+        table's DataFrame itself, an rr:sqlQuery source one ``spark.sql``
+        over its :meth:`source_sql` text."""
+        for source in sources:
+            key = source.key()
+            if key in self._sources:
+                continue
             if source.table is not None:
                 df = self.tables.get(source.table)
                 self._sources[key] = (df if df is not None
                                       else self.spark.table(source.table))
-            elif source.sql_query is not None:
-                self._sources[key] = self.spark.sql(source.sql_query)
             else:
-                raise MappingError("logical source needs table or sql_query")
+                self._sources[key] = self.spark.sql(
+                    "SELECT * FROM " + self.source_sql(source))
 
-    def source_view(self, source: LogicalSource) -> str:
-        """Name of a temp view of the logical source, registered once per
-        compiler under a name no other compiler uses (temp views are
-        session-wide), so one SQL statement can read several sources."""
-        key = source.key()
-        if key not in self._views:
-            name = f"__r2r_source{next(_VIEW_IDS)}"
-            self.source_df(source).createOrReplaceTempView(name)
-            self._views[key] = name
-        return self._views[key]
+    def source_sql(self, source: LogicalSource) -> str:
+        """SQL text of a logical source in a FROM clause.  Each table of the
+        compiler is read through a temp view private to it (temp views are
+        session-wide, so a user's view of the same name stays as it is):
+        an rr:tableName source is that view, an rr:sqlQuery source a
+        derived table whose CTEs give the tables their mapping names over
+        the views, so the query reads this compiler's tables whatever the
+        session binds those names to.  A table the compiler was not given
+        is read from the catalog by its name."""
+        if self._table_view is None:
+            self._table_view = {}
+            for name, df in self.tables.items():
+                view = f"__r2r_t{next(_TABLE_NUMBERS)}"
+                df.createOrReplaceTempView(view)
+                self._table_view[name] = view
+        if source.table is not None:
+            view = self._table_view.get(source.table)
+            return source.table if view is None else sql_ident(view)
+        if source.sql_query is None:
+            raise MappingError("logical source needs table or sql_query")
+        ctes = ", ".join(f"{sql_ident(name)} AS (SELECT * FROM {sql_ident(view)})"
+                         for name, view in self._table_view.items())
+        with_ = f"WITH {ctes} " if ctes else ""
+        return f"({with_}SELECT * FROM ({source.sql_query}))"
 
     # -- term maps ----------------------------------------------------------
 

@@ -3,9 +3,10 @@
 This is the reference's core query algorithm (reference:
 rdflib_r2r/sql_converter.py:291-329 ``queryBGP``: enumerate every consistent
 assignment of triple patterns to triples-map arms, emit one SELECT per
-assignment, UNION ALL them) re-expressed for Spark: each assignment is ONE
-``spark.sql`` statement over per-store temp views of the logical sources,
-with the query's constants bound as named parameters:
+assignment, UNION ALL them) re-expressed for Spark: the whole BGP is ONE
+``spark.sql`` statement, its assignments' SELECTs UNION ALLed in the text,
+each reading the logical sources by their ``SparkMappingCompiler.source_sql``
+text, with the query's constants bound as named parameters:
 
 - **Predicate index**: a pattern with a constant predicate only ever touches
   the arms that can produce that predicate — no scan of the full dump.
@@ -121,7 +122,7 @@ def enumerate_arms(tmaps: list[TriplesMap]) -> list[Arm]:
 @dataclass
 class Slot:
     alias: str
-    view: str  # temp view of the logical source (compiler.source_view)
+    source: str  # SQL text of the logical source (compiler.source_sql)
     types: dict  # column -> spark DataType
 
     def col(self, name: str) -> str:
@@ -164,11 +165,19 @@ class RawBinding:
     render: object  # Callable[[], tuple[str, str, str, str]]
 
 
-def _term_key(t) -> tuple:
+def _var_name(t) -> str | None:
+    """Column name of a pattern variable (a blank node is one too), or
+    None for a constant term."""
     if isinstance(t, Var):
-        return ("v", t.name)
+        return t.name
     if isinstance(t, BNodeT):
-        return ("v", "__bn_" + t.label)
+        return "__bn_" + t.label
+    return None
+
+
+def _term_key(t) -> tuple:
+    if (name := _var_name(t)) is not None:
+        return ("v", name)
     if isinstance(t, IRI):
         return ("c", t.value)
     return ("l", getattr(t, "value", str(t)), getattr(t, "datatype", None))
@@ -204,7 +213,7 @@ class BGPCompiler:
         self.compiler = compiler
         self.arms = enumerate_arms(tmaps)
         self._alias_n = 0
-        self._args: dict = {}  # named parameters of the statement being built
+        self._args: dict = {}  # named parameters of the BGP being built
 
     # -- candidate matching ---------------------------------------------------
 
@@ -278,12 +287,12 @@ class BGPCompiler:
     def _new_slot(self, source) -> Slot:
         self._alias_n += 1
         return Slot(alias=f"bgp{self._alias_n}",
-                    view=self.compiler.source_view(source),
+                    source=self.compiler.source_sql(source),
                     types=self.compiler.source_types(source))
 
     def _param(self, value) -> str:
-        """Bind a query constant as a named parameter of the statement
-        (never spliced into the text)."""
+        """Bind a query constant as a named parameter of the BGP's
+        statement (never spliced into the text)."""
         name = f"c{len(self._args)}"
         self._args[name] = value
         return ":" + name
@@ -432,11 +441,8 @@ class BGPCompiler:
         occs: dict[str, list[tuple]] = {}
 
         def add(term, tm: TermMap, position: str, tmap: TriplesMap) -> None:
-            if isinstance(term, Var):
-                occs.setdefault(term.name, []).append((tm, position, tmap.source))
-            elif isinstance(term, BNodeT):
-                occs.setdefault("__bn_" + term.label, []).append(
-                    (tm, position, tmap.source))
+            if (name := _var_name(term)) is not None:
+                occs.setdefault(name, []).append((tm, position, tmap.source))
 
         for (s, p, o), arm in zip(patterns, assignment):
             add(s, arm.tmap.subject_map, "S", arm.tmap)
@@ -454,14 +460,14 @@ class BGPCompiler:
         )
 
     def compile_assignment(self, patterns: list, assignment: list[Arm],
-                           graph_term) -> tuple[DataFrame, dict] | None:
-        """One consistent assignment -> (DataFrame, raw bindings per
-        variable), or None if statically inconsistent.  The DataFrame is ONE
-        ``spark.sql`` statement: the slots joined on their ANDed conditions,
-        one WHERE with the constant conditions and the NULL guards, one
-        projection of every variable's term and raw shadow columns; query
-        constants are bound as named parameters."""
-        self._args = {}
+                           graph_term) -> tuple[dict, str, dict] | None:
+        """One consistent assignment -> (columns, tail, raw bindings per
+        variable), or None if statically inconsistent.  ``columns`` maps
+        each output column to its SQL text: every variable's term columns,
+        then its raw shadows.  ``tail`` is the SELECT's ``FROM ... WHERE``:
+        the slots joined on their ANDed conditions, one WHERE with the
+        constant conditions and the NULL guards.  Query constants become
+        named parameters of the BGP's statement."""
         # slot keying merges stars AND parent slots with object-variable stars
         slots: dict[tuple, Slot] = {}
         occurrences: dict[str, list[Occurrence]] = {}
@@ -476,8 +482,7 @@ class BGPCompiler:
 
         def add_occ(term, tm: TermMap, slot: Slot, position: str) -> None:
             occ = Occurrence(tm=tm, slot=slot, position=position)
-            if isinstance(term, (Var, BNodeT)):
-                name = term.name if isinstance(term, Var) else "__bn_" + term.label
+            if (name := _var_name(term)) is not None:
                 occurrences.setdefault(name, []).append(occ)
                 null_guards.append(occ)
             else:
@@ -530,7 +535,7 @@ class BGPCompiler:
                 a = parent_of[a]
             return a
 
-        frames = {s.alias: f"{sql_ident(s.view)} AS {sql_ident(s.alias)}"
+        frames = {s.alias: f"{s.source} AS {sql_ident(s.alias)}"
                   for s in slot_list}
         where: list[str] = []
         pending = list(conditions)
@@ -556,17 +561,17 @@ class BGPCompiler:
                   else " CROSS JOIN ".join(f"({frames[r]})" for r in roots))
 
         # project variables (first occurrence; all are condition-equal)
-        proj: list[str] = []
+        columns: dict[str, str] = {}
         raws: dict[str, RawBinding] = {}
         for name, occs in occurrences.items():
             occ = occs[0]
             lex, dt, lang = self._render(occ)
-            proj += [f"{e} AS {sql_ident(name + s)}" for e, s in
-                     zip((lex, dt, lang, self._num_col(occ, lex)), SHADOWS)]
+            columns.update(zip((name + s for s in SHADOWS),
+                               (lex, dt, lang, self._num_col(occ, lex))))
             rb = self._raw_binding(name, occ)
             if rb is not None:
                 raw_cols, binding = rb
-                proj += [f"{c} AS {sql_ident(rc)}" for rc, c in raw_cols]
+                columns.update(raw_cols)
                 raws[name] = binding
         # R2RML NULL guard: every term of every matched triple is non-NULL.
         # Guard on the RAW source columns, not the rendered lexical — a
@@ -577,10 +582,10 @@ class BGPCompiler:
         # shadow: the canonical-double render would otherwise be evaluated
         # per row just to feed this filter).
         where += [g for g in map(self._raw_null_guard, null_guards) if g is not None]
-        text = f"SELECT {', '.join(proj or ['1 AS __one'])} FROM {source}"
+        tail = f"FROM {source}"
         if where:
-            text += " WHERE " + " AND ".join(f"({w})" for w in where)
-        return self.spark.sql(text, args=self._args), raws
+            tail += " WHERE " + " AND ".join(f"({w})" for w in where)
+        return columns, tail, raws
 
     def _raw_binding(
         self, name: str, occ: Occurrence
@@ -615,27 +620,28 @@ class BGPCompiler:
 
     def compile(self, patterns: list, graph_term=None,
                 dataset=None) -> tuple[DataFrame, set[str], dict]:
-        """All consistent assignments, UNION ALLed.
+        """All consistent assignments as ONE ``spark.sql`` statement: their
+        SELECTs UNION ALLed in the text, with named parameters numbered
+        across the whole BGP.
 
-        Returns (df, var names, raw bindings).  Raw bindings (see
-        :class:`RawBinding`) are only reported for a single-assignment BGP:
-        across a union of arms the same variable can be rendered from
-        different templates, so the raw columns would not be comparable."""
-        var_names: set[str] = set()
+        Returns (df, var names, raw bindings).  Every arm projects the same
+        columns in the same order: each variable's four term columns (a
+        typed NULL where an arm does not bind it), followed by its raw
+        shadows (see :class:`RawBinding`) when every arm binds it with the
+        same provenance (render key) — the raw columns then line up and raw
+        equality still implies lexical equality across arms.  With no
+        consistent assignment the statement is the typed-NULL SELECT with
+        ``WHERE false``."""
+        names: list[str] = []
         for s, p, o in patterns:
-            for t in (s, p, o):
-                if isinstance(t, Var):
-                    var_names.add(t.name)
-                elif isinstance(t, BNodeT):
-                    var_names.add("__bn_" + t.label)
-        if isinstance(graph_term, Var):
-            var_names.add(graph_term.name)
+            for t in (s, p, graph_term, o):
+                name = _var_name(t)
+                if name is not None and name not in names:
+                    names.append(name)
 
-        # every logical source of the mapping is built and gets its view on
-        # the first query, so later queries register none
+        # every logical source of the mapping is built on the first query,
+        # so later queries analyze only their own statement
         self.compiler.build_sources([tmap.source for tmap in self.tmaps])
-        for tmap in self.tmaps:
-            self.compiler.source_view(tmap.source)
         cand_lists = [self.candidates(s, p, o, graph_term, dataset)
                       for (s, p, o) in patterns]
         n_assignments = 1
@@ -646,51 +652,31 @@ class BGPCompiler:
                 f"BGP has {n_assignments} arm assignments (> {MAX_ASSIGNMENTS})"
             )
 
-        parts: list[tuple[DataFrame, dict]] = []
+        self._args = {}
+        arms: list[tuple[dict, str, dict]] = []
         for assignment in itertools.product(*cand_lists):
             if len(assignment) != len(patterns):
                 continue
             if not self._statically_consistent(patterns, assignment):
-                continue  # pruned before any DataFrame work
-            res = self.compile_assignment(patterns, list(assignment), graph_term)
-            if res is not None:
-                parts.append(res)
+                continue  # pruned before any SQL text is built
+            arm = self.compile_assignment(patterns, list(assignment), graph_term)
+            if arm is not None:
+                arms.append(arm)
+        arms = arms or [({}, "WHERE false", {})]
 
-        if not parts:
-            return self._empty(var_names), var_names, {}
-        if len(parts) == 1:
-            df, raws = parts[0]
-            return df, var_names, raws
-        # multi-arm union: a variable keeps its raw shadows only when EVERY
-        # arm binds it with the same provenance (render key) — the raw
-        # columns then line up by name and raw equality still implies
-        # lexical equality across arms; anything else drops
-        first_raws = parts[0][1]
         keep: dict[str, RawBinding] = {
-            v: rb for v, rb in first_raws.items()
-            if all(v in r and r[v].prov == rb.prov for _, r in parts[1:])
+            v: rb for v, rb in arms[0][2].items()
+            if all(v in r and r[v].prov == rb.prov for _, _, r in arms[1:])
         }
-        dfs = []
-        for df, raws in parts:
-            raw_cols = [c for v, rb in raws.items() if v not in keep
-                        for c in rb.cols]
-            dfs.append(df.drop(*raw_cols) if raw_cols else df)
-        out = dfs[0]
-        for p in dfs[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out, var_names, keep
-
-    def _empty(self, var_names: set[str]) -> DataFrame:
-        fields = []
-        for v in sorted(var_names):
-            fields.extend(
-                [
-                    T.StructField(v, T.StringType()),
-                    T.StructField(f"{v}__dt", T.StringType()),
-                    T.StructField(f"{v}__lang", T.StringType()),
-                    T.StructField(f"{v}__num", T.DoubleType()),
-                ]
-            )
-        if not fields:
-            fields = [T.StructField("__one", T.IntegerType())]
-        return self.spark.createDataFrame([], T.StructType(fields))
+        out: list[tuple[str, str]] = []  # (column, typed NULL)
+        for v in names:
+            out += [(v + s, f"CAST(NULL AS {'DOUBLE' if s == '__num' else 'STRING'})")
+                    for s in SHADOWS]
+            # every arm projects a kept raw column: it needs no NULL
+            out += [(c, "") for c in (keep[v].cols if v in keep else ())]
+        out = out or [("__one", "1")]
+        text = " UNION ALL ".join(
+            "SELECT " + ", ".join(f"{columns.get(c, null)} AS {sql_ident(c)}"
+                                  for c, null in out) + " " + tail
+            for columns, tail, _ in arms)
+        return self.spark.sql(text, args=self._args), set(names), keep

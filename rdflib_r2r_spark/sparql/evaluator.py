@@ -59,6 +59,20 @@ def _render_raws(df: DataFrame, raw_vars: dict) -> DataFrame:
     ])
 
 
+def _term_columns(name: str, lex: Column, dt: Column | None = None,
+                  lang: Column | None = None, num: Column | None = None
+                  ) -> list[Column]:
+    """Term variable ``name``'s four columns from its lexical, datatype,
+    language and numeric shadow; a missing one is a typed NULL."""
+    null = F.lit(None)
+    return [c.alias(name + s) for c, s in zip(
+        (lex,
+         null.cast("string") if dt is None else dt,
+         null.cast("string") if lang is None else lang,
+         null.cast("double") if num is None else num),
+        SHADOWS)]
+
+
 def encode_term(t) -> tuple[str | None, str | None, str | None]:
     """(lex, dt, lang) of a constant AST term in the engine's encoding."""
     if isinstance(t, IRI):
@@ -777,12 +791,9 @@ class Evaluator:
             if isinstance(term, (Var, BNodeT)):
                 name = term.name if isinstance(term, Var) else "__bn_" + term.label
                 term_vars.add(name)
-                cols.extend([
-                    F.col(lex_col).alias(name),
-                    (F.col(dt_col) if dt_col else F.lit(None).cast("string")).alias(f"{name}__dt"),
-                    (F.col(lang_col) if lang_col else F.lit(None).cast("string")).alias(f"{name}__lang"),
-                    F.col(lex_col).try_cast("double").alias(f"{name}__num"),
-                ])
+                cols.extend(_term_columns(
+                    name, F.col(lex_col), dt_col and F.col(dt_col),
+                    lang_col and F.col(lang_col), F.col(lex_col).try_cast("double")))
             else:
                 lex, dt, lang = encode_term(term)
                 df = df.filter(F.col(lex_col) == lex)
@@ -794,12 +805,7 @@ class Evaluator:
         bind(o, "obj", "obj_dt", "obj_lang")
         if isinstance(graph, Var):
             term_vars.add(graph.name)
-            cols.extend([
-                F.col("graph").alias(graph.name),
-                F.lit(None).cast("string").alias(f"{graph.name}__dt"),
-                F.lit(None).cast("string").alias(f"{graph.name}__lang"),
-                F.lit(None).cast("double").alias(f"{graph.name}__num"),
-            ])
+            cols.extend(_term_columns(graph.name, F.col("graph")))
             if ds is None:
                 df = df.filter(F.col("graph").isNotNull())
             elif ds.named:
@@ -871,12 +877,8 @@ class Evaluator:
             if isinstance(term, (Var, BNodeT)):
                 name = term.name if isinstance(term, Var) else "__bn_" + term.label
                 term_vars.add(name)
-                cols.extend([
-                    F.col(col).alias(name),
-                    F.lit(None).cast("string").alias(f"{name}__dt"),
-                    F.lit(None).cast("string").alias(f"{name}__lang"),
-                    F.col(col).try_cast("double").alias(f"{name}__num"),
-                ])
+                cols.extend(_term_columns(name, F.col(col),
+                                          num=F.col(col).try_cast("double")))
             else:
                 lex, _, _ = encode_term(term)
                 df = df.filter(F.col(col) == lex)

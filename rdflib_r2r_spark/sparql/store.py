@@ -127,10 +127,10 @@ class SparkR2RStore:
         if not init_bindings:
             # prepared-plan cache: compiling SPARQL to a DataFrame costs
             # real driver time (BGP candidate enumeration, one spark.sql
-            # statement per BGP assignment, the evaluator's DataFrame
-            # calls, each analyzed by Spark); DataFrames are immutable, so
-            # repeated query TEXT reuses the compiled plan exactly like a
-            # prepared statement.  The logical sources and their views are
+            # statement per BGP, the evaluator's DataFrame calls, each
+            # analyzed by Spark); DataFrames are immutable, so repeated
+            # query TEXT reuses the compiled plan exactly like a prepared
+            # statement.  The logical sources and the tables' views are
             # built once per store by the mapping compiler, not here.
             # Keyed on (text, extra namespaces); bindings mutate the AST,
             # so bound queries skip the cache.
@@ -254,11 +254,6 @@ class SparkR2RStore:
         }
         return mapping_to_duckdb_sql(self.tmaps, table_names=table_names,
                                      column_types=col_types)
-
-    def register_views(self) -> None:
-        """Register source tables as temp views so get_sql() output runs."""
-        for name, df in self.tables.items():
-            df.createOrReplaceTempView(name)
 
 
 def _encode_for_match(v) -> str:

@@ -76,7 +76,7 @@ def test_raw_binding_eligibility_guards(spark):
     comp.compiler = None
 
     def occ_for(template, types):
-        slot = Slot(alias="t0", view=None, types=types)
+        slot = Slot(alias="t0", source=None, types=types)
         return Occurrence(tm=TermMap(template=template, term_type="IRI"),
                           slot=slot, position="S")
 

@@ -105,6 +105,34 @@ def test_in_repo_case_conforms(spark):
     assert len(expected) == 14
 
 
+def test_in_repo_sql_query_case_conforms(spark):
+    """An rr:sqlQuery joining two tables with double-quoted identifiers,
+    and a referencing object map from it to an rr:tableName map."""
+    produced, expected = rdb2rdf.run_case(spark, _in_repo_case("sql_query"))
+    _both, only_produced, only_expected = graph_diff(produced, expected)
+    assert not only_produced and not only_expected, (
+        sorted(only_produced), sorted(only_expected))
+    assert len(expected) == 14
+
+
+def test_in_repo_sql_query_case_through_sparql(spark):
+    """Each predicate's ``SELECT ?s ?o { ?s <p> ?o }`` through a store, which
+    inlines the rr:sqlQuery into its BGP statement, answers the triples
+    the case expects with that predicate."""
+    from rdflib_r2r_spark.sparql import SparkR2RStore
+    from rdflib_r2r_spark.ttl import mapping_from_ttl
+
+    case = _in_repo_case("sql_query")
+    store = SparkR2RStore(spark, rdb2rdf.tables_from_sql(spark, case.create_sql),
+                          mapping_from_ttl(case.mapping_ttl))
+    expected = rdb2rdf.parse_nq(case.expected_nq)
+    for pred in sorted({q[1] for q in expected}):
+        df = store._query_bf(f"SELECT ?s ?o {{ ?s {pred} ?o }}").df
+        got = {(r["s"], pred, r["o"], r["o__dt"] or "", r["o__lang"] or "", "")
+               for r in df.collect()}
+        assert got == {q for q in expected if q[1] == pred}, pred
+
+
 def test_in_repo_literal_subject_rejected(spark):
     with pytest.raises(MappingError, match="Literal"):
         rdb2rdf.run_case(spark, _in_repo_case("literal_subject"))

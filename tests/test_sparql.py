@@ -355,7 +355,6 @@ def test_store_stats(store, spark):
     # reference: r2r_store.py:96-119 — verified against DuckDB on the dump
     import duckdb
 
-    store.register_views()
     con = duckdb.connect()
     o = store.tables["Orders"].toPandas()
     s = store.tables["Shippers"].toPandas()
@@ -371,7 +370,10 @@ def test_store_stats(store, spark):
 
 
 def test_get_sql_roundtrip(store, spark):
-    store.register_views()
+    # get_sql names the tables as the mapping does: its text runs over
+    # views of those names
+    for name, df in store.tables.items():
+        df.createOrReplaceTempView(name)
     via_sql = spark.sql(store.get_sql())
     direct = store.dump()
     assert via_sql.exceptAll(direct).count() == 0
@@ -746,7 +748,7 @@ def test_construct_full_form_dataset_position():
 _X = "http://x/"
 
 
-def _tmap(name, subject, *pomaps):
+def _class_tmap(name, subject, *pomaps):
     return TriplesMap(
         name=name, source=LogicalSource(table=name),
         subject_map=SubjectMap(template=_X + subject, classes=(_X + "C",)),
@@ -760,19 +762,19 @@ def _tmap(name, subject, *pomaps):
     pytest.param(
         # (1,23) and (12,3) both render <http://x/123>
         {"T": ("a int, b int", [(1, 23), (12, 3)])},
-        [_tmap("T", "{a}{b}")],
+        [_class_tmap("T", "{a}{b}")],
         "SELECT (COUNT(DISTINCT ?s) AS ?n) { ?s a <http://x/C> }",
         [(1,)], id="adjacent-integral-slots"),
     pytest.param(
         # different skeletons, one IRI: http://x/{a} (a=12) = http://x/1{b} (b=2)
         {"A": ("a int, x int", [(12, 5)]), "B": ("b int, y int", [(2, 6)])},
-        [_tmap("A", "{a}", ("p", "x")), _tmap("B", "1{b}", ("q", "y"))],
+        [_class_tmap("A", "{a}", ("p", "x")), _class_tmap("B", "1{b}", ("q", "y"))],
         "SELECT ?s { ?s <http://x/p> ?x . ?s <http://x/q> ?y }",
         [("<http://x/12>",)], id="skeletons-collide"),
     pytest.param(
         # "1"^^xsd:integer and the plain literal "1" are different terms
         {"A": ("a int, v int", [(1, 1)]), "B": ("b int, w string", [(2, "1")])},
-        [_tmap("A", "a{a}", ("p", "v")), _tmap("B", "b{b}", ("q", "w"))],
+        [_class_tmap("A", "a{a}", ("p", "v")), _class_tmap("B", "b{b}", ("q", "w"))],
         "SELECT ?s ?t { ?s <http://x/p> ?o . ?t <http://x/q> ?o }",
         [], id="typed-vs-plain-literal"),
 ])
@@ -932,22 +934,25 @@ def test_bsbm_compile_captures_no_call_site(spark, monkeypatch):
 
 def test_bsbm_compile_budget(spark, monkeypatch):
     """Compiling the 8 BSBM shapes through one store is a few coarse calls:
-    the py4j round trips stay under a pinned ceiling, each rr:sqlQuery
-    source is one spark.sql per store, and no temp view is registered after
-    the first query."""
+    the py4j round trips stay under a pinned ceiling, each BGP is ONE
+    spark.sql statement, each rr:sqlQuery source is analyzed once per
+    store, and the only temp views are one per table, registered during the
+    first query under names no table has."""
     import py4j.clientserver as cs
     from pyspark.sql import SparkSession
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
     from rdflib_r2r_spark import bsbm
+    from rdflib_r2r_spark.sparql.bgp import BGPCompiler
 
     store = bsbm.bsbm_store(spark, {t: spark.read.parquet(f"/root/testdata/sf0.001/{t}.parquet")
                                     for t in bsbm.BSBM_TABLES})
-    sent, texts, views = [0], [], []
+    sent, texts, views, per_bgp = [0], [], [], []
     query_no = [0]
     real_send = cs.ClientServerConnection.send_command
     real_sql = SparkSession.sql
     real_view = ClassicDataFrame.createOrReplaceTempView
+    real_compile = BGPCompiler.compile
 
     def send(self, command, *a, **k):
         # py4j's releases of Python-side proxies ("m" commands) follow the
@@ -960,22 +965,68 @@ def test_bsbm_compile_budget(spark, monkeypatch):
         return real_sql(self, text, *a, **k)
 
     def view(self, name):
-        views.append(query_no[0])
+        views.append((query_no[0], name))
         return real_view(self, name)
+
+    def compile_bgp(self, *a, **k):
+        first = len(texts)
+        out = real_compile(self, *a, **k)
+        per_bgp.append(texts[first:])
+        return out
 
     monkeypatch.setattr(cs.ClientServerConnection, "send_command", send)
     monkeypatch.setattr(SparkSession, "sql", sql)
     monkeypatch.setattr(ClassicDataFrame, "createOrReplaceTempView", view)
+    monkeypatch.setattr(BGPCompiler, "compile", compile_bgp)
     for name in ("bsbm_bi1", "bsbm_bi2", "bsbm_bi3", "bsbm_bi4",
                  "bsbm_bi5", "bsbm_bi7", "bsbm_explore1", "bsbm_explore5"):
         store.query(bsbm.QUERIES[name])
         query_no[0] += 1
-    # measured 3,558 at sf0.001, plus 20%
-    assert sent[0] < 4270, sent[0]
-    for tm in bsbm.bsbm_tmaps():
-        if tm.source.sql_query is not None:
-            assert texts.count(tm.source.sql_query) == 1, tm.name
-    assert views and set(views) == {0}, views
+    # measured 3,491 at sf0.001, plus 20%
+    assert sent[0] < 4190, sent[0]
+    source_texts = {"SELECT * FROM " + store.compiler.source_sql(tm.source)
+                    for tm in bsbm.bsbm_tmaps() if tm.source.sql_query is not None}
+    for text in source_texts:
+        assert texts.count(text) == 1, text
+    assert per_bgp and all(
+        len([t for t in bgp if t not in source_texts]) == 1 for bgp in per_bgp
+    ), [len(bgp) for bgp in per_bgp]
+    assert views and {q for q, _ in views} == {0}, views
+    assert len(views) <= len(bsbm.BSBM_TABLES), views
+    assert not {n.lower() for _, n in views} & set(bsbm.BSBM_TABLES), views
+
+
+def test_store_leaves_the_session_namespace_alone(spark):
+    """A store reads its tables through temp views private to it: a user's
+    view named like a mapping table stays the user's, and two stores over
+    different tables of one name, read by an rr:sqlQuery, each answer from
+    their own table."""
+    from rdflib_r2r_spark import bsbm
+
+    spark.createDataFrame([("mine",)], "who string").createOrReplaceTempView("part")
+    try:
+        store = bsbm.bsbm_store(spark, {
+            t: spark.read.parquet(f"/root/testdata/sf0.001/{t}.parquet")
+            for t in bsbm.BSBM_TABLES})
+        store.query(bsbm.QUERIES["bsbm_bi1"]).collect()
+        assert [tuple(r) for r in spark.table("part").collect()] == [("mine",)]
+    finally:
+        spark.catalog.dropTempView("part")
+
+    tmaps = [TriplesMap(
+        name="q", source=LogicalSource(sql_query='SELECT "id", "v" FROM "t"'),
+        subject_map=SubjectMap(template="http://x/{id}"),
+        pomaps=(PredicateObjectMap(predicates=(const_iri("http://x/p"),),
+                                   objects=(TermMap(column="v"),)),),
+    )]
+    one, two = (SparkR2RStore(spark, {"t": spark.createDataFrame([row], "id int, v string")},
+                              tmaps)
+                for row in ((1, "a"), (2, "b")))
+    query = "SELECT ?s ?v { ?s <http://x/p> ?v }"
+    for store, want in ((one, ("<http://x/1>", "a")), (two, ("<http://x/2>", "b")),
+                        (one, ("<http://x/1>", "a"))):
+        assert rows(store.query(query), "s", "v") == {want}
+        assert rows(store.dump(), "subj", "obj") == {want}
 
 
 def _store_over(spark, rows: list[tuple], schema: str, tmaps) -> SparkR2RStore:
