@@ -15,6 +15,7 @@ Cross-engine parity rules used throughout:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -62,13 +63,40 @@ TABLES = [
 _WIDEN_TABLES = {"documents", "embeddings"}
 
 
+# table reads, keyed like _STORE_CACHE plus the sizes and modification
+# times of the files: a read lists the files and reads their schema (a
+# widened one also their footers), so a query built again reuses it, and a
+# rewritten file is read again, never served stale
+_READ_CACHE: dict = {}
+
+
+def _file_stamps(path: str) -> tuple:
+    """(file, size, mtime_ns) of the file at ``path`` or of every file
+    under it."""
+    files = ([os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs]
+             if os.path.isdir(path) else [path])
+    return tuple((f, st.st_size, st.st_mtime_ns)
+                 for f in sorted(files) for st in [os.stat(f)])
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str, widen: bool = True) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
-    if widen and name in _WIDEN_TABLES:
+    widen = widen and name in _WIDEN_TABLES
+    if not os.path.exists(path):
+        return spark.read.parquet(path)  # remote or missing: no stamps to key on
+    key = (spark.sparkContext.applicationId, path, widen)
+    stamps = _file_stamps(path)
+    hit = _READ_CACHE.get(key)
+    if hit is not None and hit[0] == stamps:
+        return hit[1]
+    if widen:
         from rdflib_r2r_spark.session import widen_scan
 
-        return widen_scan(spark, path)
-    return spark.read.parquet(path)
+        df = widen_scan(spark, path)
+    else:
+        df = spark.read.parquet(path)
+    _READ_CACHE[key] = (stamps, df)
+    return df
 
 
 # long-lived store objects, as a real deployment holds them: SPARQL stores

@@ -16,6 +16,16 @@ text, with the query's constants bound as named parameters:
   parent slot merges with the star of the object variable when the parent
   map matches, so ``?n ex:inRegion ?r . ?r ex:name ?rn`` is a single
   child->parent join, not a three-way self-join.
+- **Arm folding**: a pattern with a variable object whose candidate arms
+  share a triples map, predicate map and graph map (two pomaps of one
+  predicate, a class arm beside an ``rdf:type`` pomap) is ONE choice, not
+  one assignment per arm: the star's slot unrolls the alternatives per row
+  with ``LATERAL VIEW inline(array(struct(<alt render>), ...))`` (the SQL
+  form of the dump compiler's ``explode(array(struct...))``), so the
+  source is scanned once per slot and the assignments are a sum over the
+  arms, not a product.  Alternatives that can never agree with another
+  occurrence of the variable (``templates.may_collide``) are dropped
+  first; one that is left compiles as a plain arm.
 - **Constant pushdown**: constant subjects/objects are inverted through the
   term-map template (reference: rdflib_r2r/sql_converter.py:148-161,
   conversion_utils.py:517-531) into typed filters on raw columns, so the
@@ -37,7 +47,8 @@ Variables surface as term-encoded columns ``{v}`` plus ``{v}__dt`` /
 from __future__ import annotations
 
 import itertools
-from dataclasses import dataclass
+import math
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -120,23 +131,51 @@ def enumerate_arms(tmaps: list[TriplesMap]) -> list[Arm]:
 # --------------------------------------------------------------------------
 
 @dataclass
+class Lateral:
+    """A folded pattern's object alternatives, unrolled per row of the
+    star's slot: the generated columns ``<prefix>lex``, ``dt``, ``lang``,
+    ``num``, ``ok`` (the alternative's NULL guard) and, when every
+    alternative has the same ``render_key``, ``raw0``... (its raw
+    columns)."""
+
+    prefix: str
+    alts: tuple  # the alternatives' object term maps
+    key: tuple | None  # their common render_key, or None
+    view: str  # the LATERAL VIEW clause
+
+
+@dataclass
 class Slot:
     alias: str
     source: str  # SQL text of the logical source (compiler.source_sql)
     types: dict  # column -> spark DataType
+    laterals: list = field(default_factory=list)
 
     def col(self, name: str) -> str:
         """SQL text of one of the slot's columns."""
         return sql_ident(self.alias) + "." + sql_ident(name)
 
+    def from_sql(self) -> str:
+        """The slot in a FROM clause.  With folded patterns it is a derived
+        table under the same alias, so a join on a generated column is an
+        equi-join like any other."""
+        named = f"{self.source} AS {sql_ident(self.alias)}"
+        if not self.laterals:
+            return named
+        views = " ".join(lat.view for lat in self.laterals)
+        ok = " AND ".join(sql_ident(lat.prefix + "ok") for lat in self.laterals)
+        return f"(SELECT * FROM {named} {views} WHERE {ok}) AS {sql_ident(self.alias)}"
+
 
 @dataclass
 class Occurrence:
-    """One rendering of a variable: a term map evaluated in a slot."""
+    """One rendering of a variable: a term map evaluated in a slot, or a
+    folded pattern's alternatives (``lateral``; ``tm`` is then None)."""
 
-    tm: TermMap
+    tm: TermMap | None
     slot: Slot
     position: str  # S/P/O/G
+    lateral: Lateral | None = None
 
 
 @dataclass(frozen=True)
@@ -282,6 +321,27 @@ class BGPCompiler:
             out.append(arm)
         return out
 
+    def choices(self, patterns: list, graph_term=None,
+                dataset=None) -> list[list[tuple[Arm, ...]]]:
+        """Each pattern's choices of arms: a pattern with a variable object
+        folds its arms of one triples map, predicate map and graph map (no
+        referencing-object arm) into one choice; every other arm is a
+        choice of its own."""
+        out = []
+        for s, p, o in patterns:
+            groups: dict = {}
+            for i, arm in enumerate(self.candidates(s, p, o, graph_term, dataset)):
+                key = (i,) if arm.parent is not None or _var_name(o) is None \
+                    else (arm.tmap.name, arm.pred_tm, arm.graph_tm)
+                groups.setdefault(key, []).append(arm)
+            out.append([tuple(arms) for arms in groups.values()])
+        return out
+
+    def assignment_count(self, patterns: list, graph_term=None, dataset=None) -> int:
+        """How many assignments ``compile`` enumerates for the patterns."""
+        return math.prod(max(len(c), 1)
+                         for c in self.choices(patterns, graph_term, dataset))
+
     # -- one assignment -> one SQL statement --------------------------------------
 
     def _new_slot(self, source) -> Slot:
@@ -375,27 +435,27 @@ class BGPCompiler:
         raw-column equality when both renders have the same
         ``render_key``, a pruned assignment when they can never collide,
         and rendered (lex, dt, lang) equality otherwise."""
-        ta, tb = a.tm, b.tm
-        if not may_collide(ta, a.position, a.slot.types,
-                           tb, b.position, b.slot.types):
-            raise _Prune()
-        if ta.constant is not None and tb.constant is not None:
-            return []
-        if tb.constant is not None:
-            a, b, ta, tb = b, a, tb, ta
-        if ta.constant is not None:
-            term = (IRI(ta.constant) if ta.inferred_term_type(a.position) == "IRI"
-                    else Lit(ta.constant, ta.datatype, ta.language))
-            return self._const_conditions(term, tb, b.slot, b.position)
-        key = render_key(ta, a.position, a.slot.types)
-        if key is not None and key == render_key(tb, b.position, b.slot.types):
+        if a.lateral is None and b.lateral is None:
+            # (folded alternatives were matched by _statically_consistent)
+            ta, tb = a.tm, b.tm
+            if not may_collide(ta, a.position, a.slot.types,
+                               tb, b.position, b.slot.types):
+                raise _Prune()
+            if ta.constant is not None and tb.constant is not None:
+                return []
+            if tb.constant is not None:
+                a, b, ta, tb = b, a, tb, ta
+            if ta.constant is not None:
+                term = (IRI(ta.constant) if ta.inferred_term_type(a.position) == "IRI"
+                        else Lit(ta.constant, ta.datatype, ta.language))
+                return self._const_conditions(term, tb, b.slot, b.position)
+        key = self._render_key(a)
+        if key is not None and key == self._render_key(b):
             # a shared variable already unified to one physical column
             # needs no `x = x` condition
-            return [
-                f"{a.slot.col(ca)} = {b.slot.col(cb)}"
-                for ca, cb in zip(raw_columns(ta), raw_columns(tb))
-                if (a.slot.alias, ca) != (b.slot.alias, cb)
-            ]
+            return [f"{ca} = {cb}"
+                    for ca, cb in zip(self._raw_cols(a), self._raw_cols(b))
+                    if ca != cb]
         lex_a, dt_a, lang_a = self._render(a)
         lex_b, dt_b, lang_b = self._render(b)
         return [f"({lex_a} = {lex_b}) AND ({dt_a} <=> {dt_b}) AND ({lang_a} <=> {lang_b})"]
@@ -410,9 +470,26 @@ class BGPCompiler:
             return f"{sa.col(ca)} = {sb.col(cb)}"
         return f"CAST({sa.col(ca)} AS STRING) = CAST({sb.col(cb)} AS STRING)"
 
+    @staticmethod
+    def _render_key(occ: Occurrence) -> tuple | None:
+        if occ.lateral is not None:
+            return occ.lateral.key
+        return render_key(occ.tm, occ.position, occ.slot.types)
+
+    @staticmethod
+    def _raw_cols(occ: Occurrence) -> list[str]:
+        """SQL texts of the raw columns an occurrence renders, in slot order."""
+        if occ.lateral is not None:
+            n = len(raw_columns(occ.lateral.alts[0]))
+            return [occ.slot.col(f"{occ.lateral.prefix}raw{i}") for i in range(n)]
+        return [occ.slot.col(c) for c in raw_columns(occ.tm)]
+
     def _raw_null_guard(self, occ: Occurrence) -> str | None:
         """IS NOT NULL condition on the raw inputs of one term map, or None
-        when the term can never be NULL (constants)."""
+        when the term can never be NULL (constants; folded alternatives
+        are guarded inside their slot)."""
+        if occ.lateral is not None:
+            return None
         tm, cols = occ.tm, raw_columns(occ.tm)
         if cols:
             return " AND ".join(f"{occ.slot.col(c)} IS NOT NULL" for c in cols)
@@ -422,10 +499,15 @@ class BGPCompiler:
         return f"({self._render(occ)[0]}) IS NOT NULL"
 
     def _render(self, occ: Occurrence) -> tuple[str, str, str]:
+        if occ.lateral is not None:
+            return tuple(occ.slot.col(occ.lateral.prefix + f)
+                         for f in ("lex", "dt", "lang"))
         return self.compiler.term_columns(
             occ.tm, occ.position, occ.slot.col, occ.slot.types)
 
     def _num_col(self, occ: Occurrence, lex: str) -> str:
+        if occ.lateral is not None:
+            return occ.slot.col(occ.lateral.prefix + "num")
         tm = occ.tm
         if tm.column is not None and isinstance(occ.slot.types.get(tm.column), _NUMERIC_SPARK):
             return f"CAST({occ.slot.col(tm.column)} AS DOUBLE)"
@@ -434,35 +516,55 @@ class BGPCompiler:
             return f"try_cast({lex} AS DOUBLE)"
         return "CAST(NULL AS DOUBLE)"
 
-    def _statically_consistent(self, patterns: list, assignment) -> bool:
+    def _statically_consistent(self, patterns: list,
+                               assignment) -> list[tuple[Arm, ...]] | None:
         """Cheap metadata-only unification check so impossible assignments
         (the big product of the reference's queryBGP) never build slots or
-        plans — the reference's try_match_templates pruning, done eagerly."""
-        occs: dict[str, list[tuple]] = {}
-
-        def add(term, tm: TermMap, position: str, tmap: TriplesMap) -> None:
-            if (name := _var_name(term)) is not None:
-                occs.setdefault(name, []).append((tm, position, tmap.source))
-
-        for (s, p, o), arm in zip(patterns, assignment):
-            add(s, arm.tmap.subject_map, "S", arm.tmap)
-            add(p, arm.pred_tm, "P", arm.tmap)
-            if arm.parent is not None:
-                add(o, arm.parent.subject_map, "S", arm.parent)
-            else:
-                add(o, arm.obj_tm, "O", arm.tmap)
-
+        plans — the reference's try_match_templates pruning, done eagerly.
+        Returns the assignment with each folded choice narrowed to the
+        alternatives that may agree with every other occurrence of the
+        variable, or None when some occurrence has none left."""
         types = self.compiler.source_types
-        return all(
-            may_collide(ta, pa, types(sa), tb, pb, types(sb))
-            for (ta, pa, sa), *others in occs.values()
-            for tb, pb, sb in others
-        )
+        occs: dict[str, list[list[tuple]]] = {}
+        objects: list[list[tuple]] = []
 
-    def compile_assignment(self, patterns: list, assignment: list[Arm],
+        def add(term, alts: list[tuple]) -> list[tuple]:
+            if (name := _var_name(term)) is not None:
+                occs.setdefault(name, []).append(alts)
+            return alts
+
+        for (s, p, o), choice in zip(patterns, assignment):
+            arm = choice[0]
+            add(s, [(arm.tmap.subject_map, "S", types(arm.tmap.source), arm)])
+            add(p, [(arm.pred_tm, "P", types(arm.tmap.source), arm)])
+            if arm.parent is not None:
+                objects.append(add(o, [(arm.parent.subject_map, "S",
+                                        types(arm.parent.source), arm)]))
+            else:
+                objects.append(add(o, [(a.obj_tm, "O", types(a.tmap.source), a)
+                                       for a in choice]))
+
+        def agree(x: tuple, others: list[tuple]) -> bool:
+            return any(may_collide(*x[:3], *y[:3]) for y in others)
+
+        for lists in occs.values():
+            changed = True
+            while changed:
+                changed = False
+                for alts in lists:
+                    kept = [x for x in alts
+                            if all(agree(x, other) for other in lists if other is not alts)]
+                    if not kept:
+                        return None
+                    changed |= len(kept) < len(alts)
+                    alts[:] = kept
+        return [tuple(x[3] for x in alts) for alts in objects]
+
+    def compile_assignment(self, patterns: list, assignment: list[tuple[Arm, ...]],
                            graph_term) -> tuple[dict, str, dict] | None:
-        """One consistent assignment -> (columns, tail, raw bindings per
-        variable), or None if statically inconsistent.  ``columns`` maps
+        """One consistent assignment (a choice of arms per pattern) ->
+        (columns, tail, raw bindings per variable), or None if statically
+        inconsistent.  ``columns`` maps
         each output column to its SQL text: every variable's term columns,
         then its raw shadows.  ``tail`` is the SELECT's ``FROM ... WHERE``:
         the slots joined on their ANDed conditions, one WHERE with the
@@ -491,7 +593,8 @@ class BGPCompiler:
                     conditions.append((slot, slot, cond))
 
         try:
-            for (s, p, o), arm in zip(patterns, assignment):
+            for (s, p, o), choice in zip(patterns, assignment):
+                arm = choice[0]
                 child = slot_for(s, arm.tmap)
                 add_occ(s, arm.tmap.subject_map, child, "S")
                 add_occ(p, arm.pred_tm, child, "P")
@@ -508,6 +611,9 @@ class BGPCompiler:
                     else:
                         # same-table referencing map: same row, no join
                         add_occ(o, arm.parent.subject_map, child, "S")
+                elif len(choice) > 1:
+                    occ = self._fold(child, [a.obj_tm for a in choice])
+                    occurrences.setdefault(_var_name(o), []).append(occ)
                 else:
                     add_occ(o, arm.obj_tm, child, "O")
 
@@ -535,8 +641,7 @@ class BGPCompiler:
                 a = parent_of[a]
             return a
 
-        frames = {s.alias: f"{s.source} AS {sql_ident(s.alias)}"
-                  for s in slot_list}
+        frames = {s.alias: s.from_sql() for s in slot_list}
         where: list[str] = []
         pending = list(conditions)
         while True:
@@ -596,10 +701,11 @@ class BGPCompiler:
         slots have no key: grouping normalizes -0.0/NaN while their
         rendered lexicals stay distinct.
         """
-        tm, pos, slot = occ.tm, occ.position, occ.slot
+        tm = occ.tm if occ.lateral is None else occ.lateral.alts[0]
+        pos, slot = occ.position, occ.slot
         if tm.template is None or tm.inferred_term_type(pos) != "IRI":
             return None
-        prov = render_key(tm, pos, slot.types)
+        prov = self._render_key(occ)
         if prov is None:
             return None
         cols = raw_columns(tm)
@@ -614,9 +720,35 @@ class BGPCompiler:
             return lex, dt, lang, "CAST(NULL AS DOUBLE)"
 
         return (
-            [(rn, slot.col(c)) for rn, c in zip(raw_names, cols)],
+            list(zip(raw_names, self._raw_cols(occ))),
             RawBinding(cols=raw_names, prov=prov, render=render),
         )
+
+    def _fold(self, slot: Slot, alts: list[TermMap]) -> Occurrence:
+        """Fold a pattern's object alternatives into its star's slot: one
+        struct per alternative (its render, NULL guard and, under a common
+        ``render_key``, raw columns), unrolled per row by a lateral view."""
+        keys = {render_key(tm, "O", slot.types) for tm in alts}
+        key = keys.pop() if len(keys) == 1 else None
+        prefix = f"__f{len(slot.laterals) + 1}_"
+        fields = ["lex", "dt", "lang", "num", "ok"]
+        if key is not None:
+            fields += [f"raw{i}" for i in range(len(raw_columns(alts[0])))]
+        structs = []
+        for tm in alts:
+            occ = Occurrence(tm=tm, slot=slot, position="O")
+            lex, dt, lang = self._render(occ)
+            values = [lex, dt, lang, self._num_col(occ, lex),
+                      self._raw_null_guard(occ) or "true"]
+            if key is not None:
+                values += self._raw_cols(occ)
+            structs.append("struct(" + ", ".join(
+                f"{v} AS {f}" for v, f in zip(values, fields)) + ")")
+        view = (f"LATERAL VIEW inline(array({', '.join(structs)})) AS "
+                + ", ".join(sql_ident(prefix + f) for f in fields))
+        lateral = Lateral(prefix=prefix, alts=tuple(alts), key=key, view=view)
+        slot.laterals.append(lateral)
+        return Occurrence(tm=None, slot=slot, position="O", lateral=lateral)
 
     def compile(self, patterns: list, graph_term=None,
                 dataset=None) -> tuple[DataFrame, set[str], dict]:
@@ -642,11 +774,8 @@ class BGPCompiler:
         # every logical source of the mapping is built on the first query,
         # so later queries analyze only their own statement
         self.compiler.build_sources([tmap.source for tmap in self.tmaps])
-        cand_lists = [self.candidates(s, p, o, graph_term, dataset)
-                      for (s, p, o) in patterns]
-        n_assignments = 1
-        for c in cand_lists:
-            n_assignments *= max(len(c), 1)
+        choice_lists = self.choices(patterns, graph_term, dataset)
+        n_assignments = math.prod(max(len(c), 1) for c in choice_lists)
         if n_assignments > MAX_ASSIGNMENTS:
             raise SparqlNotImplemented(
                 f"BGP has {n_assignments} arm assignments (> {MAX_ASSIGNMENTS})"
@@ -654,12 +783,13 @@ class BGPCompiler:
 
         self._args = {}
         arms: list[tuple[dict, str, dict]] = []
-        for assignment in itertools.product(*cand_lists):
+        for assignment in itertools.product(*choice_lists):
             if len(assignment) != len(patterns):
                 continue
-            if not self._statically_consistent(patterns, assignment):
+            assignment = self._statically_consistent(patterns, assignment)
+            if assignment is None:
                 continue  # pruned before any SQL text is built
-            arm = self.compile_assignment(patterns, list(assignment), graph_term)
+            arm = self.compile_assignment(patterns, assignment, graph_term)
             if arm is not None:
                 arms.append(arm)
         arms = arms or [({}, "WHERE false", {})]

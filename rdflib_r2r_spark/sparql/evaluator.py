@@ -6,7 +6,11 @@ Join/LeftJoin/Union/Minus/BGP/AggregateJoin/Group/OrderBy/Slice/Distinct/
 values/ToMultiSet) with the same "raise on anything else" contract
 (SURVEY.md §2 A14). BGPs compile against the mapping via
 :mod:`rdflib_r2r_spark.sparql.bgp`; everything above the BGP is plain
-DataFrame algebra, so Catalyst sees one declarative plan per query.
+DataFrame algebra, so Catalyst sees one declarative plan per query.  The
+BGPs of one group (split by a FILTER, or written as adjacent ``{}``
+groups) are merged into one before they compile: inner join is
+associative and commutative, and ``Join(BGP1, BGP2)`` is ``BGP(P1 ∪ P2)``,
+so the group is one statement whose static pruning sees every pattern.
 
 Binding representation: each solution variable ``v`` is four columns —
 ``v`` (term-encoded lexical: ``<iri>``, ``_:b...``, or literal lexical),
@@ -44,7 +48,7 @@ from rdflib_r2r_spark.sparql.ast_nodes import (
     Var,
 )
 from rdflib_r2r_spark.compiler import sql_ident
-from rdflib_r2r_spark.sparql.bgp import SHADOWS, BGPCompiler
+from rdflib_r2r_spark.sparql.bgp import MAX_ASSIGNMENTS, SHADOWS, BGPCompiler
 from rdflib_r2r_spark.sparql.parser import SparqlNotImplemented
 
 
@@ -668,7 +672,7 @@ class Evaluator:
                     conjuncts.append(x)
 
             flat(p)
-            frames = [self.eval_pattern(c) for c in conjuncts]
+            frames = [self.eval_pattern(c) for c in self._merge_bgps(conjuncts)]
             acc = frames[0]
             rest = frames[1:]
             bound = set(acc.all_vars)
@@ -702,18 +706,30 @@ class Evaluator:
         self._fresh_n += 1
         return f"__pv{self._fresh_n}"
 
-    def eval_bgp(self, p: A.BGP) -> BindingFrame:
-        if not p.triples:
-            return BindingFrame(self.spark.range(1).select(F.lit(1).alias("__one")), set())
-        counter = [0]
+    def _merge_bgps(self, conjuncts: list) -> list:
+        """The inner-join conjuncts with the BGPs of one graph concatenated
+        into the first of them.  A merge that would give the BGP compiler
+        more than ``MAX_ASSIGNMENTS`` assignments leaves the BGPs apart."""
+        out: list = []
+        at: dict = {}  # graph term -> index in ``out`` of its merged BGP
+        for c in conjuncts:
+            if isinstance(c, A.BGP):
+                i = at.get(c.graph)
+                if i is not None:
+                    both = A.BGP(out[i].triples + c.triples, graph=c.graph)
+                    if max(self.bgp.assignment_count(plain, both.graph, self.dataset)
+                           for plain, _ in self._resolve(both)) <= MAX_ASSIGNMENTS:
+                        out[i] = both
+                        continue
+                at[c.graph] = len(out)
+            out.append(c)
+        return out
 
-        def fresh():
-            counter[0] += 1
-            return Var(f"__path{counter[0]}")
-
-        alts = list(pathmod.resolve_paths(p.triples, fresh))
-        parts: list[BindingFrame] = []
-        for alt in alts:
+    def _resolve(self, p: A.BGP):
+        """Per path-free alternative of the BGP: its plain patterns and its
+        special (dump, closure, negated-set) ones.  Path variables are
+        fresh for the whole query, so two BGPs never share one."""
+        for alt in pathmod.resolve_paths(p.triples, lambda: Var(self._fresh_var())):
             plain: list = []
             special: list = []
             for s, pred, o in alt:
@@ -729,6 +745,13 @@ class Evaluator:
                     plain.append((s, IRI(pred.iri), o))
                 else:
                     raise SparqlNotImplemented(f"path {pred!r}")
+            yield plain, special
+
+    def eval_bgp(self, p: A.BGP) -> BindingFrame:
+        if not p.triples:
+            return BindingFrame(self.spark.range(1).select(F.lit(1).alias("__one")), set())
+        parts: list[BindingFrame] = []
+        for plain, special in self._resolve(p):
             bfs: list[BindingFrame] = []
             if plain:
                 df, var_names, raws = self.bgp.compile(plain, p.graph,

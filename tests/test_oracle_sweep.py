@@ -40,3 +40,22 @@ def test_every_query_has_an_oracle_twin():
     assert o <= q, f"oracles without queries: {o - q}"
     # genuinely non-SQL-expressible ops may omit the oracle; today none do
     assert not q - o, f"queries without oracle twins: {q - o}"
+
+
+def test_table_read_is_memoized_until_its_file_changes(spark, tmp_path):
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "nation.parquet"
+    pq.write_table(pa.table({"k": [1, 2]}), path)
+    first = entry._t(spark, str(tmp_path), "nation")
+    assert entry._t(spark, str(tmp_path), "nation") is first
+    # same size, new contents: the modification time tells them apart
+    pq.write_table(pa.table({"k": [3, 4]}), path)
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    again = entry._t(spark, str(tmp_path), "nation")
+    assert again is not first
+    assert sorted(r.k for r in again.collect()) == [3, 4]

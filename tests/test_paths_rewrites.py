@@ -79,6 +79,24 @@ def test_eval_seq_path(geo_store):
     assert "ASIA" in names and len(names) == 5
 
 
+@pytest.mark.parametrize("query", [
+    "SELECT ?s ?o ?t ?u { ?s ex:inRegion/ex:name ?o . ?t ex:inRegion/ex:name ?u }",
+    # a FILTER splits the group into two BGPs, each expanding its own path
+    "SELECT ?s ?o ?t ?u { ?s ex:inRegion/ex:name ?o . FILTER(true) "
+    "?t ex:inRegion/ex:name ?u }",
+    "SELECT ?s ?o ?t ?u { { ?s ex:inRegion/ex:name ?o } { ?t ex:inRegion/ex:name ?u } }",
+    "SELECT ?s ?o ?t ?u { ?s ex:inRegion/ex:name ?o "
+    "OPTIONAL { ?t ex:inRegion/ex:name ?u } }",
+], ids=["one-bgp", "filter-split", "two-groups", "optional"])
+def test_two_sequence_paths_do_not_share_their_hidden_variable(geo_store, query):
+    """Each expanded path gets its own intermediate variable: the two
+    independent paths are a cross product of 25 x 25 nations, never joined
+    on a shared hidden region."""
+    rows = geo_store.query(query).collect()
+    assert len(rows) == 625
+    assert len({r["t"] for r in rows}) == 25
+
+
 def test_eval_alt_inv_path(geo_store):
     """(ex:name|^ex:inRegion) is the UNION of the plain and swapped arms."""
     got = _pairs(geo_store.query("SELECT DISTINCT ?s ?o { ?s (ex:name|^ex:inRegion) ?o }"))

@@ -56,6 +56,23 @@ def test_dim_joins_are_broadcast(registry, spark, name):
     assert "BroadcastHashJoin" in plan, f"{name} lost its broadcast dim join"
 
 
+def _scans(df) -> list[str]:
+    """The tables the physical plan scans, once per scan."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sorted(re.findall(r"FileScan parquet .*/(\w+)\.parquet\]", plan))
+
+
+def test_bsbm_stars_scan_their_source_once_per_slot(registry, spark):
+    # explore5's FILTERs split its group into three BGPs, merged into one:
+    # the label arms of vendors and persons are pruned, and each of its two
+    # product stars folds its two ProductFeature arms into one part scan
+    assert _scans(registry["bsbm_explore5"](spark, SF_DIR)) == ["part", "part"]
+    # bi4's two sub-selects each read the offers once
+    assert _scans(registry["bsbm_bi4"](spark, SF_DIR)).count("lineitem") == 2
+
+
 def test_kg_mentions_uses_inline_intersect_path(registry, spark):
     # round 7: kg_mentions takes the pipeline's array-intersect fast path
     # (mention_entities) — the bounded alias dict is inlined as a literal,
