@@ -22,25 +22,39 @@ def _ensure_pythonpath() -> None:
         os.environ["PYTHONPATH"] = (pp + os.pathsep if pp else "") + _REPO_ROOT
 
 
-def get_spark(app_name: str = "rdflib_r2r_spark") -> SparkSession:
-    """Build (or reuse) a SparkSession on ``local[$SPARK_GRAFT_CPUS]``
-    (``local[*]`` when unset).  Shuffle partitions are the core count, at
-    least 8 (local mode: shuffles are on-box, 200 default just adds task
-    overhead; on a real cluster size this to 2-3x total cores).
+def engine_builder(app_name: str) -> SparkSession.Builder:
+    """A session builder named ``app_name`` with the engine settings every
+    entry point runs with (:func:`get_spark` and ``spark_submit_main.py``):
+    AQE, UTC, the optimizer-rule exclusion, SQL dialect, Arrow, call-site
+    capture and code-generation caching.  Master, parallelism and memory
+    are left to the caller.
+
+    Generated code is compiled once per session.  Spark caches compiled
+    classes in an LRU of ``spark.sql.codegen.cache.maxEntries`` (default
+    100), but one BSBM query mix compiles 158-172 distinct classes, one
+    KG build 102-124 and one round of the 102-query sweep about 830.  A
+    repeated working set larger than an LRU never hits it: each class is
+    evicted before its next use, so at 100 entries a warm mix still
+    compiled 162 classes and a warm KG build about 95.  At 2000 a warm KG
+    build compiles none, the sweep's second round 2-4 and a warm BSBM mix
+    about 20, the stages whose new integer constants Spark inlines into
+    the Java text.
+
+    ``useIdInClassName=false`` drops AQE's run-order-dependent stage id
+    from whole-stage class names, so identical stages of different queries,
+    or of one query materialized in another order, share one class: it
+    takes the cold KG build 124 -> 102 compiles and the second build 20 ->
+    0 (both with the 2000-entry cache).  The cost: generated class names
+    in stack traces lose the stage id (``explain(mode="codegen")`` still
+    prints it).
 
     PySpark's per-call DataFrame call-site capture is off
     (``spark.python.sql.dataFrameDebugging.enabled``).  The cost: error
     messages lose their Python call-site section.  Job-group tags are
     unaffected.
     """
-    _ensure_pythonpath()
-    env = os.environ.get("SPARK_GRAFT_CPUS")
-    master = f"local[{env}]" if env else "local[*]"
-    n = int(env) if env else (os.cpu_count() or 8)
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(max(n, 8)))
+    return (
+        SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -50,21 +64,6 @@ def get_spark(app_name: str = "rdflib_r2r_spark") -> SparkSession:
         # SQL are single-quoted throughout, so this is safe to enable
         .config("spark.sql.ansi.doubleQuotedIdentifiers", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # stay under the compressed-OOPs limit: heaps >~32g disable pointer
-        # compression and anti-scale with thread count (measured: md5 bench
-        # 2.5s @16g/32thr vs 16.9s @32g/32thr). Spill goes to disk anyway.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        # throughput GC: the allocation-heavy array/string stages are bound
-        # by G1's concurrent overhead at high thread counts (measured:
-        # signature stage 24s G1 -> 15.6s ParallelGC @ local[32]); batch
-        # analytics prefers max-throughput stop-the-world collection. On a
-        # cluster, set the same via spark.executor.extraJavaOptions.
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
-        # default 128m packs this box's small inputs into fewer read
-        # partitions than cores, starving map stages (e.g. 1.2GB corpus ->
-        # 10 tasks on 32 cores). 32m keeps scans wide here; clusters reading
-        # 100TB keep the default (splits are plentiful there).
-        .config("spark.sql.files.maxPartitionBytes", str(32 << 20))
         .config("spark.sql.parquet.compression.codec", "snappy")
         # InferFiltersFromGenerate adds `size(arr) > 0` under every
         # non-outer explode and pushes it below the projection, INLINING
@@ -81,12 +80,49 @@ def get_spark(app_name: str = "rdflib_r2r_spark") -> SparkSession:
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
-        .config("spark.ui.enabled", "false")
         # PySpark wraps every DataFrame and Column call to capture its
         # Python call site for error messages: a stack walk plus about four
         # py4j round trips per call (measured: compiling the 8 BSBM queries
         # at sf0.001 makes 49,460 py4j calls with it, 18,973 without)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # above the measured working sets (see the docstring); a static
+        # setting, read once when the session starts
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
+    )
+
+
+def get_spark(app_name: str = "rdflib_r2r_spark") -> SparkSession:
+    """Build (or reuse) a SparkSession on ``local[$SPARK_GRAFT_CPUS]``
+    (``local[*]`` when unset) with :func:`engine_builder`'s settings.
+    Shuffle partitions are the core count, at least 8 (local mode:
+    shuffles are on-box, 200 default just adds task overhead; on a real
+    cluster size this to 2-3x total cores).
+    """
+    _ensure_pythonpath()
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    master = f"local[{env}]" if env else "local[*]"
+    n = int(env) if env else (os.cpu_count() or 8)
+    builder = (
+        engine_builder(app_name)
+        .master(master)
+        .config("spark.sql.shuffle.partitions", str(max(n, 8)))
+        # stay under the compressed-OOPs limit: heaps >~32g disable pointer
+        # compression and anti-scale with thread count (measured: md5 bench
+        # 2.5s @16g/32thr vs 16.9s @32g/32thr). Spill goes to disk anyway.
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # throughput GC: the allocation-heavy array/string stages are bound
+        # by G1's concurrent overhead at high thread counts (measured:
+        # signature stage 24s G1 -> 15.6s ParallelGC @ local[32]); batch
+        # analytics prefers max-throughput stop-the-world collection. On a
+        # cluster, set the same via spark.executor.extraJavaOptions.
+        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
+        # default 128m packs small local inputs into fewer read partitions
+        # than cores, starving map stages (e.g. 1.2GB corpus -> 10 tasks
+        # on 32 cores). 32m keeps scans wide in local mode; clusters reading
+        # 100TB keep the default (splits are plentiful there).
+        .config("spark.sql.files.maxPartitionBytes", str(32 << 20))
+        .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -7,8 +7,6 @@ rdflib_r2r/r2r_store.py):
 - ``exec(sparql)``        -> iterator of {var: typed Python value} rows, the
   SQL-value -> RDF-term decoding of ``make_node`` (r2r_store.py:125-148)
 - ``triples((s, p, o))``  -> pattern-scan iterator (r2r_store.py:150-169)
-- ``__len__`` / ``nb_subjects`` / ``nb_predicates`` / ``nb_objects`` —
-  store statistics (r2r_store.py:96-119)
 - ``get_sql(...)``        -> executable SQL text for the mapping dump /
   a SPARQL query's plan, the ``SQLConverter.getSQL`` equivalent
   (sql_converter.py:284-289)
@@ -222,20 +220,6 @@ class SparkR2RStore:
                 make_node(row["pred"]),
                 make_node(row["obj"], row["obj_dt"], row["obj_lang"]),
             )
-
-    # -- statistics (reference: r2r_store.py:96-119) --------------------------------
-
-    def __len__(self) -> int:
-        return self.dump().count()
-
-    def nb_subjects(self) -> int:
-        return self.dump().select("subj").distinct().count()
-
-    def nb_predicates(self) -> int:
-        return self.dump().select("pred").distinct().count()
-
-    def nb_objects(self) -> int:
-        return self.dump().select("obj", "obj_dt", "obj_lang").distinct().count()
 
     # -- offline SQL export (reference: sql_converter.py:284-289 getSQL) ------------
 

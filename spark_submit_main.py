@@ -20,6 +20,18 @@ import json
 import time
 
 
+def session_builder(shuffle_partitions: int | None = None):
+    """The session builder: the engine settings ``get_spark`` uses too, and
+    ``shuffle_partitions`` when given.  Master and executor sizing come from
+    spark-submit."""
+    from rdflib_r2r_spark.session import engine_builder
+
+    builder = engine_builder("rdflib_r2r_spark_kg")
+    if shuffle_partitions:
+        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return builder
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="dir containing documents.parquet")
@@ -30,17 +42,7 @@ def main() -> None:
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
-    builder = SparkSession.builder.appName("rdflib_r2r_spark_kg")
-    if args.shuffle_partitions:
-        builder = builder.config("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
-    builder = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-    )
-    spark = builder.getOrCreate()
+    spark = session_builder(args.shuffle_partitions).getOrCreate()
 
     from rdflib_r2r_spark.pipeline import KGPipeline
 
