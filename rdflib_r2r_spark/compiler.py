@@ -26,8 +26,8 @@ Scale design (the part that matters at 100 TB):
   runtime (a small parent table becomes a broadcast join by its size).
 - **Renders are Spark SQL text.** ``term_columns`` returns SQL text for
   every term map, so a caller parses all of its renders in one call (one
-  ``selectExpr`` per arm group here, one statement per BGP in
-  ``sparql/bgp.py``), not one gateway round trip per function.  Each
+  ``selectExpr`` per arm group here, one statement per SPARQL query in
+  ``sparql/``), not one gateway round trip per function.  Each
   logical source is built once per compiler; ``source_sql`` is its text in
   a FROM clause, over one compiler-private temp view per table.
 
@@ -38,6 +38,7 @@ term encoding per ``terms`` module.
 from __future__ import annotations
 
 import itertools
+import re
 from collections import defaultdict
 from functools import reduce
 
@@ -71,6 +72,15 @@ _TABLE_NUMBERS = itertools.count(1)
 def sql_ident(name: str) -> str:
     """Backtick-quoted Spark SQL identifier."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def _identifiers(sql: str) -> set[str]:
+    """Every word and quoted name of an SQL text, lower-cased: a superset
+    of the tables it names (a word that names no table costs one unused
+    CTE; a table left out would be read from the session's catalog)."""
+    words = re.findall(r'"((?:[^"]|"")*)"|`((?:[^`]|``)*)`|(\w+)', sql)
+    return {(dq.replace('""', '"') or bq.replace("``", "`") or w).lower()
+            for dq, bq, w in words}
 
 
 class SparkMappingCompiler:
@@ -128,10 +138,10 @@ class SparkMappingCompiler:
         compiler is read through a temp view private to it (temp views are
         session-wide, so a user's view of the same name stays as it is):
         an rr:tableName source is that view, an rr:sqlQuery source a
-        derived table whose CTEs give the tables their mapping names over
-        the views, so the query reads this compiler's tables whatever the
-        session binds those names to.  A table the compiler was not given
-        is read from the catalog by its name."""
+        derived table whose CTEs give the tables it names their mapping
+        names over the views, so the query reads this compiler's tables
+        whatever the session binds those names to.  A table the compiler
+        was not given is read from the catalog by its name."""
         if self._table_view is None:
             self._table_view = {}
             for name, df in self.tables.items():
@@ -143,8 +153,10 @@ class SparkMappingCompiler:
             return source.table if view is None else sql_ident(view)
         if source.sql_query is None:
             raise MappingError("logical source needs table or sql_query")
+        named = _identifiers(source.sql_query)
         ctes = ", ".join(f"{sql_ident(name)} AS (SELECT * FROM {sql_ident(view)})"
-                         for name, view in self._table_view.items())
+                         for name, view in self._table_view.items()
+                         if name.lower() in named)
         with_ = f"WITH {ctes} " if ctes else ""
         return f"({with_}SELECT * FROM ({source.sql_query}))"
 

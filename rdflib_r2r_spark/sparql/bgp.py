@@ -4,9 +4,10 @@ This is the reference's core query algorithm (reference:
 rdflib_r2r/sql_converter.py:291-329 ``queryBGP``: enumerate every consistent
 assignment of triple patterns to triples-map arms, emit one SELECT per
 assignment, UNION ALL them) re-expressed for Spark: the whole BGP is ONE
-``spark.sql`` statement, its assignments' SELECTs UNION ALLed in the text,
-each reading the logical sources by their ``SparkMappingCompiler.source_sql``
-text, with the query's constants bound as named parameters:
+query block of the query's statement (:mod:`.statement`), its assignments'
+SELECTs UNION ALLed in the text, each reading the logical sources through
+the statement (a table's view, an ``rr:sqlQuery`` source's CTE), with the
+query's constants bound as named parameters:
 
 - **Predicate index**: a pattern with a constant predicate only ever touches
   the arms that can produce that predicate — no scan of the full dump.
@@ -23,9 +24,12 @@ text, with the query's constants bound as named parameters:
   with ``LATERAL VIEW inline(array(struct(<alt render>), ...))`` (the SQL
   form of the dump compiler's ``explode(array(struct...))``), so the
   source is scanned once per slot and the assignments are a sum over the
-  arms, not a product.  Alternatives that can never agree with another
-  occurrence of the variable (``templates.may_collide``) are dropped
-  first; one that is left compiles as a plain arm.
+  arms, not a product.  Alternatives of one ``render_key`` unroll only
+  their raw columns, and the term is rendered from them where it is read:
+  Catalyst prunes the render when nothing reads it, which it cannot do
+  for a field of the generated struct.  Alternatives that can never agree
+  with another occurrence of the variable (``templates.may_collide``) are
+  dropped first; one that is left compiles as a plain arm.
 - **Constant pushdown**: constant subjects/objects are inverted through the
   term-map template (reference: rdflib_r2r/sql_converter.py:148-161,
   conversion_utils.py:517-531) into typed filters on raw columns, so the
@@ -50,7 +54,6 @@ import itertools
 import math
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from rdflib_r2r_spark import terms
@@ -58,6 +61,7 @@ from rdflib_r2r_spark.compiler import SparkMappingCompiler, sql_ident
 from rdflib_r2r_spark.mapping import TermMap, TriplesMap, xsd_for_spark_type
 from rdflib_r2r_spark.sparql.ast_nodes import BNodeT, IRI, Lit, Var
 from rdflib_r2r_spark.sparql.parser import SparqlNotImplemented
+from rdflib_r2r_spark.sparql.statement import Statement
 from rdflib_r2r_spark.templates import (
     expand_template_py,
     invert_template_py,
@@ -133,10 +137,10 @@ def enumerate_arms(tmaps: list[TriplesMap]) -> list[Arm]:
 @dataclass
 class Lateral:
     """A folded pattern's object alternatives, unrolled per row of the
-    star's slot: the generated columns ``<prefix>lex``, ``dt``, ``lang``,
-    ``num``, ``ok`` (the alternative's NULL guard) and, when every
-    alternative has the same ``render_key``, ``raw0``... (its raw
-    columns)."""
+    star's slot: the generated columns ``<prefix>ok`` (the alternative's
+    NULL guard) and, when every alternative has the same ``render_key``,
+    ``raw0``... (its raw columns), else ``lex``, ``dt``, ``lang`` and
+    ``num`` (its render)."""
 
     prefix: str
     alts: tuple  # the alternatives' object term maps
@@ -147,7 +151,7 @@ class Lateral:
 @dataclass
 class Slot:
     alias: str
-    source: str  # SQL text of the logical source (compiler.source_sql)
+    source: str  # the logical source in a FROM clause (Statement.source)
     types: dict  # column -> spark DataType
     laterals: list = field(default_factory=list)
 
@@ -243,16 +247,14 @@ def _same_literal_type(term: Lit, dt: str | None, lang: str | None) -> bool:
 
 class BGPCompiler:
     """Compiles a list of (s, p_iri, o) patterns (constant predicates) into
-    one DataFrame of variable bindings."""
+    one query block of variable bindings."""
 
-    def __init__(self, spark: SparkSession, tmaps: list[TriplesMap],
-                 compiler: SparkMappingCompiler):
-        self.spark = spark
+    def __init__(self, tmaps: list[TriplesMap], compiler: SparkMappingCompiler):
         self.tmaps = tmaps
         self.compiler = compiler
         self.arms = enumerate_arms(tmaps)
         self._alias_n = 0
-        self._args: dict = {}  # named parameters of the BGP being built
+        self._stmt: Statement | None = None  # the statement being built
 
     # -- candidate matching ---------------------------------------------------
 
@@ -347,33 +349,26 @@ class BGPCompiler:
     def _new_slot(self, source) -> Slot:
         self._alias_n += 1
         return Slot(alias=f"bgp{self._alias_n}",
-                    source=self.compiler.source_sql(source),
+                    source=self._stmt.source(source),
                     types=self.compiler.source_types(source))
-
-    def _param(self, value) -> str:
-        """Bind a query constant as a named parameter of the BGP's
-        statement (never spliced into the text)."""
-        name = f"c{len(self._args)}"
-        self._args[name] = value
-        return ":" + name
 
     def _typed_lit(self, value: str, col: str, slot: Slot) -> str:
         dtype = slot.types.get(col)
         if dtype is None:
-            return self._param(value)
+            return self._stmt.param(value)
         if isinstance(dtype, _NUMERIC_SPARK):
             try:
                 num = float(value) if "." in value or "e" in value.lower() else int(value)
             except ValueError:
                 # non-numeric lexical can never equal a numeric column
                 raise _Prune() from None
-            return f"CAST({self._param(num)} AS {dtype.simpleString()})"
-        return f"CAST({self._param(value)} AS {dtype.simpleString()})"
+            return f"CAST({self._stmt.param(num)} AS {dtype.simpleString()})"
+        return f"CAST({self._stmt.param(value)} AS {dtype.simpleString()})"
 
     def _lex_eq(self, tm: TermMap, slot: Slot, position: str, lex: str) -> list[str]:
         """The term map's rendered lexical equals ``lex``."""
         rendered = self._render(Occurrence(tm=tm, slot=slot, position=position))[0]
-        return [f"{rendered} = {self._param(lex)}"]
+        return [f"{rendered} = {self._stmt.param(lex)}"]
 
     def _invert_filters(self, const: str, tm: TermMap, slot: Slot,
                         position: str) -> list[str]:
@@ -411,7 +406,7 @@ class BGPCompiler:
             if tm.template is not None:
                 return self._invert_filters(term.value, tm, slot, position)
             if tm.column is not None and not tm.base_iri:
-                return [f"CAST({slot.col(tm.column)} AS STRING) = {self._param(term.value)}"]
+                return [f"CAST({slot.col(tm.column)} AS STRING) = {self._stmt.param(term.value)}"]
             if tm.column is not None:
                 return self._lex_eq(tm, slot, position, terms.wrap_iri(term.value))
             raise _Prune()
@@ -478,7 +473,8 @@ class BGPCompiler:
 
     @staticmethod
     def _raw_cols(occ: Occurrence) -> list[str]:
-        """SQL texts of the raw columns an occurrence renders, in slot order."""
+        """SQL texts of the raw columns an occurrence renders, in slot order
+        (a folded pattern's only when its alternatives share a key)."""
         if occ.lateral is not None:
             n = len(raw_columns(occ.lateral.alts[0]))
             return [occ.slot.col(f"{occ.lateral.prefix}raw{i}") for i in range(n)]
@@ -499,18 +495,24 @@ class BGPCompiler:
         return f"({self._render(occ)[0]}) IS NOT NULL"
 
     def _render(self, occ: Occurrence) -> tuple[str, str, str]:
-        if occ.lateral is not None:
-            return tuple(occ.slot.col(occ.lateral.prefix + f)
-                         for f in ("lex", "dt", "lang"))
+        lat = occ.lateral
+        if lat is None:
+            return self.compiler.term_columns(
+                occ.tm, occ.position, occ.slot.col, occ.slot.types)
+        if lat.key is None:
+            return tuple(occ.slot.col(lat.prefix + f) for f in ("lex", "dt", "lang"))
+        # one render_key: every alternative renders its raws alike
+        by = dict(zip(raw_columns(lat.alts[0]), self._raw_cols(occ)))
         return self.compiler.term_columns(
-            occ.tm, occ.position, occ.slot.col, occ.slot.types)
+            lat.alts[0], occ.position, by.__getitem__, occ.slot.types)
 
     def _num_col(self, occ: Occurrence, lex: str) -> str:
-        if occ.lateral is not None:
-            return occ.slot.col(occ.lateral.prefix + "num")
-        tm = occ.tm
+        lat = occ.lateral
+        if lat is not None and lat.key is None:
+            return occ.slot.col(lat.prefix + "num")
+        tm = occ.tm if lat is None else lat.alts[0]
         if tm.column is not None and isinstance(occ.slot.types.get(tm.column), _NUMERIC_SPARK):
-            return f"CAST({occ.slot.col(tm.column)} AS DOUBLE)"
+            return f"CAST({self._raw_cols(occ)[0]} AS DOUBLE)"
         dt = _effective_dt(tm, occ.slot)
         if tm.inferred_term_type(occ.position) == "Literal" and (dt is None or dt in terms.NUMERIC_XSD):
             return f"try_cast({lex} AS DOUBLE)"
@@ -726,22 +728,23 @@ class BGPCompiler:
 
     def _fold(self, slot: Slot, alts: list[TermMap]) -> Occurrence:
         """Fold a pattern's object alternatives into its star's slot: one
-        struct per alternative (its render, NULL guard and, under a common
-        ``render_key``, raw columns), unrolled per row by a lateral view."""
+        struct per alternative (its NULL guard and, under a common
+        ``render_key``, its raw columns, else its render), unrolled per row
+        by a lateral view."""
         keys = {render_key(tm, "O", slot.types) for tm in alts}
         key = keys.pop() if len(keys) == 1 else None
         prefix = f"__f{len(slot.laterals) + 1}_"
-        fields = ["lex", "dt", "lang", "num", "ok"]
-        if key is not None:
-            fields += [f"raw{i}" for i in range(len(raw_columns(alts[0])))]
+        fields = ["ok"] + ([f"raw{i}" for i in range(len(raw_columns(alts[0])))]
+                           if key is not None else ["lex", "dt", "lang", "num"])
         structs = []
         for tm in alts:
             occ = Occurrence(tm=tm, slot=slot, position="O")
-            lex, dt, lang = self._render(occ)
-            values = [lex, dt, lang, self._num_col(occ, lex),
-                      self._raw_null_guard(occ) or "true"]
+            values = [self._raw_null_guard(occ) or "true"]
             if key is not None:
                 values += self._raw_cols(occ)
+            else:
+                lex, dt, lang = self._render(occ)
+                values += [lex, dt, lang, self._num_col(occ, lex)]
             structs.append("struct(" + ", ".join(
                 f"{v} AS {f}" for v, f in zip(values, fields)) + ")")
         view = (f"LATERAL VIEW inline(array({', '.join(structs)})) AS "
@@ -750,13 +753,13 @@ class BGPCompiler:
         slot.laterals.append(lateral)
         return Occurrence(tm=None, slot=slot, position="O", lateral=lateral)
 
-    def compile(self, patterns: list, graph_term=None,
-                dataset=None) -> tuple[DataFrame, set[str], dict]:
-        """All consistent assignments as ONE ``spark.sql`` statement: their
-        SELECTs UNION ALLed in the text, with named parameters numbered
-        across the whole BGP.
+    def compile(self, patterns: list, graph_term=None, dataset=None, *,
+                stmt: Statement) -> tuple[str, set[str], dict]:
+        """All consistent assignments as ONE query block of ``stmt``: their
+        SELECTs UNION ALLed in the text, with the constants bound as the
+        statement's named parameters.
 
-        Returns (df, var names, raw bindings).  Every arm projects the same
+        Returns (SQL text, var names, raw bindings).  Every arm projects the same
         columns in the same order: each variable's four term columns (a
         typed NULL where an arm does not bind it), followed by its raw
         shadows (see :class:`RawBinding`) when every arm binds it with the
@@ -781,7 +784,7 @@ class BGPCompiler:
                 f"BGP has {n_assignments} arm assignments (> {MAX_ASSIGNMENTS})"
             )
 
-        self._args = {}
+        self._stmt = stmt
         arms: list[tuple[dict, str, dict]] = []
         for assignment in itertools.product(*choice_lists):
             if len(assignment) != len(patterns):
@@ -809,4 +812,4 @@ class BGPCompiler:
             "SELECT " + ", ".join(f"{columns.get(c, null)} AS {sql_ident(c)}"
                                   for c, null in out) + " " + tail
             for columns, tail, _ in arms)
-        return self.spark.sql(text, args=self._args), set(names), keep
+        return text, set(names), keep

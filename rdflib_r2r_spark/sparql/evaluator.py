@@ -1,34 +1,39 @@
-"""Evaluate the SPARQL algebra over DataFrames.
+"""Evaluate the SPARQL algebra as one Spark SQL statement.
 
 Dispatch mirrors the reference's ``queryPart`` (reference:
 rdflib_r2r/query_conversions.py:388-419: SelectQuery/Project/Extend/Filter/
 Join/LeftJoin/Union/Minus/BGP/AggregateJoin/Group/OrderBy/Slice/Distinct/
 values/ToMultiSet) with the same "raise on anything else" contract
-(SURVEY.md §2 A14). BGPs compile against the mapping via
-:mod:`rdflib_r2r_spark.sparql.bgp`; everything above the BGP is plain
-DataFrame algebra, so Catalyst sees one declarative plan per query.  The
-BGPs of one group (split by a FILTER, or written as adjacent ``{}``
-groups) are merged into one before they compile: inner join is
-associative and commutative, and ``Join(BGP1, BGP2)`` is ``BGP(P1 ∪ P2)``,
-so the group is one statement whose static pruning sees every pattern.
+(SURVEY.md §2 A14), and like the reference it rewrites the whole query
+into one SQL query: each BGP compiles against the mapping via
+:mod:`rdflib_r2r_spark.sparql.bgp` into a query block of the query's
+:class:`~rdflib_r2r_spark.sparql.statement.Statement`, every operator above
+it is one more block over its operands' blocks (as derived tables), and
+expressions compile to SQL text.  Spark analyzes the query once, in one
+``spark.sql`` call.  The BGPs of one group (split by a FILTER, or written
+as adjacent ``{}`` groups) are merged into one before they compile: inner
+join is associative and commutative, and ``Join(BGP1, BGP2)`` is
+``BGP(P1 ∪ P2)``, so the group is one query block whose static pruning
+sees every pattern.  A FILTER's (NOT) EXISTS is an ``EXISTS`` subquery,
+which Catalyst plans as a semi or anti join (a marker join under OR).
 
 Binding representation: each solution variable ``v`` is four columns —
 ``v`` (term-encoded lexical: ``<iri>``, ``_:b...``, or literal lexical),
 ``v__dt``, ``v__lang``, and ``v__num`` (double shadow for typed
 filters/aggregates) — except expression-born variables, which are single
 native-typed columns (count -> bigint etc.), matching what the reference's
-SQL SELECT list produces.
+SQL SELECT list produces.  :class:`BindingFrame` describes the columns of
+one query block at compile time.
 """
 
 from __future__ import annotations
 
 import re
 
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass, field as dc_field, replace
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from rdflib_r2r_spark import paths as pathmod
 from rdflib_r2r_spark import terms
@@ -50,31 +55,37 @@ from rdflib_r2r_spark.sparql.ast_nodes import (
 from rdflib_r2r_spark.compiler import sql_ident
 from rdflib_r2r_spark.sparql.bgp import MAX_ASSIGNMENTS, SHADOWS, BGPCompiler
 from rdflib_r2r_spark.sparql.parser import SparqlNotImplemented
+from rdflib_r2r_spark.sparql.statement import Statement
+
+NULL_S = "CAST(NULL AS STRING)"
+NULL_D = "CAST(NULL AS DOUBLE)"
 
 
-def _render_raws(df: DataFrame, raw_vars: dict) -> DataFrame:
-    """Append each raw-keyed var's four term columns, rendered from its raw
-    shadows (``RawBinding.render``), in one projection."""
-    if not raw_vars:
-        return df
-    return df.selectExpr("*", *[
-        f"{e} AS {sql_ident(v + s)}"
-        for v, rb in raw_vars.items() for e, s in zip(rb.render(), SHADOWS)
-    ])
+def _q(alias: str, col: str) -> str:
+    """SQL text of column ``col`` of the relation aliased ``alias``."""
+    return f"{alias}.{sql_ident(col)}"
 
 
-def _term_columns(name: str, lex: Column, dt: Column | None = None,
-                  lang: Column | None = None, num: Column | None = None
-                  ) -> list[Column]:
-    """Term variable ``name``'s four columns from its lexical, datatype,
-    language and numeric shadow; a missing one is a typed NULL."""
-    null = F.lit(None)
-    return [c.alias(name + s) for c, s in zip(
-        (lex,
-         null.cast("string") if dt is None else dt,
-         null.cast("string") if lang is None else lang,
-         null.cast("double") if num is None else num),
-        SHADOWS)]
+def _block(body: str) -> str:
+    """A query block as a derived table: referenced once, it needs no name."""
+    return f"({body})"
+
+
+def _select_list(items: list[str]) -> str:
+    # a frame without variables still has a row per solution
+    return ", ".join(items) or "1 AS `__one`"
+
+
+def _renders(raw_vars: dict) -> list[str]:
+    """Each raw-keyed var's four term columns, rendered from its raw
+    shadows (``RawBinding.render``)."""
+    return [f"{e} AS {sql_ident(v + s)}"
+            for v, rb in raw_vars.items() for e, s in zip(rb.render(), SHADOWS)]
+
+
+def _str_sql(value: str | None) -> str:
+    """An engine constant (a datatype IRI, a fixed text) as SQL text."""
+    return NULL_S if value is None else terms.spark_str_sql(value)
 
 
 def encode_term(t) -> tuple[str | None, str | None, str | None]:
@@ -90,7 +101,7 @@ def encode_term(t) -> tuple[str | None, str | None, str | None]:
 
 @dataclass
 class BindingFrame:
-    df: DataFrame
+    rel: str  # the query block holding the solutions, as a derived table
     term_vars: set[str]
     native_vars: dict[str, str] = dc_field(default_factory=dict)  # var -> kind
     # vars that MAY be unbound (NULL lex) in some solutions: produced by
@@ -99,10 +110,10 @@ class BindingFrame:
     # keeping the common always-bound path a plain hash-joinable equi-join.
     maybe_null: set[str] = dc_field(default_factory=set)
     # var -> bgp.RawBinding: the var's lexical is an injective render of the
-    # raw shadow columns listed there (present in df).  GROUP BY and inner
-    # frame joins key on the raws (narrow, join-pushable) and re-render
-    # after the exchange; every operator that cannot prove preservation
-    # simply strips the raws (columns + metadata) — losing only the
+    # raw shadow columns listed there (present in the relation).  GROUP BY
+    # and inner frame joins key on the raws (narrow, join-pushable) and
+    # re-render after the exchange; every operator that cannot prove
+    # preservation simply drops the raws from the frame — losing only the
     # optimization, never correctness.
     raw_vars: dict = dc_field(default_factory=dict)
 
@@ -115,6 +126,18 @@ class BindingFrame:
             return [v + s for s in SHADOWS]
         return [v]
 
+    def columns(self) -> list[str]:
+        """Every column the frame reads from its relation."""
+        out: list[str] = []
+        for v in sorted(self.all_vars):
+            out += self.columns_for(v)
+            if v in self.raw_vars:
+                out += self.raw_vars[v].cols
+        return out
+
+    def select(self, alias: str = "t", skip=()) -> list[str]:
+        return [_q(alias, c) for c in self.columns() if c not in skip]
+
 
 # --------------------------------------------------------------------------
 # expression values
@@ -122,15 +145,15 @@ class BindingFrame:
 
 @dataclass
 class EV:
-    """A compiled expression: lazy views over one value."""
+    """A compiled expression: lazy views over one value, as SQL texts."""
 
-    lex: Column | None = None       # encoded lexical
-    num: Column | None = None       # double view
-    dt: Column | None = None
-    lang: Column | None = None
-    boolean: Column | None = None
-    native: Column | None = None    # preferred typed output
-    kind: str = "term"              # term|num|str|bool
+    lex: str | None = None       # encoded lexical
+    num: str | None = None       # double view
+    dt: str | None = None
+    lang: str | None = None
+    boolean: str | None = None
+    native: str | None = None    # preferred typed output
+    kind: str = "term"           # term|num|str|bool
     # round 7: "never" marks operands whose numeric view is STATICALLY
     # NULL (string literals that do not parse as a number, IRI
     # constants).  Catalyst does not fold the dead numeric arm of the
@@ -139,75 +162,64 @@ class EV:
     # filters), so _cmp/_eq prune it at compile time instead.  The
     # result is identical: with one side's num always NULL, the CASE
     # condition is always false and the lexical branch always runs.
-    static_num: str = "maybe"       # maybe|never
+    static_num: str = "maybe"    # maybe|never
     # raw-keyed term var (BindingFrame.raw_vars): equality against another
     # EV with the SAME raw_prov compares the raw shadow columns instead of
     # rendering both lexicals per row (raw eq <=> lex eq, injective render)
     raw_cols: tuple | None = None
     raw_prov: tuple | None = None
 
-    def as_num(self) -> Column:
+    def as_num(self) -> str:
         if self.num is not None:
             return self.num
         if self.native is not None:
-            return self.native.cast("double")
+            return f"CAST({self.native} AS DOUBLE)"
         assert self.lex is not None
-        return self.lex.try_cast("double")
+        return f"try_cast({self.lex} AS DOUBLE)"
 
-    def as_str(self) -> Column:
+    def as_str(self) -> str:
         """SPARQL STR(): IRIs lose brackets, literals keep lexical."""
         if self.kind == "str" and self.native is not None:
             return self.native
         if self.native is not None:
-            return self.native.cast("string")
+            return f"CAST({self.native} AS STRING)"
         lex = self.lex
         assert lex is not None
-        return F.when(
-            lex.startswith("<") & lex.endswith(">"),
-            lex.substr(F.lit(2), F.length(lex) - 2),
-        ).otherwise(lex)
+        return (f"CASE WHEN startswith({lex}, '<') AND endswith({lex}, '>') "
+                f"THEN substr({lex}, 2, length({lex}) - 2) ELSE {lex} END")
 
-    def as_bool(self) -> Column:
+    def as_bool(self) -> str:
         """SPARQL effective boolean value."""
         if self.boolean is not None:
             return self.boolean
         if self.kind == "num":
             n = self.as_num()
-            return n.isNotNull() & (n != 0)
+            return f"({n} IS NOT NULL AND {n} != 0)"
         if self.native is not None and self.kind == "bool":
             return self.native
         lex = self.lex
         assert lex is not None
         n = self.as_num()
-        is_bool_dt = (
-            self.dt.eqNullSafe(F.lit(terms.XSD_BOOLEAN))
-            if self.dt is not None
-            else F.lit(False)
-        )
-        return (
-            F.when(is_bool_dt, lex == "true")
-            .when(n.isNotNull(), n != 0)
-            .otherwise(lex.isNotNull() & (F.length(lex) > 0))
-        )
+        is_bool_dt = (f"{self.dt} <=> {_str_sql(terms.XSD_BOOLEAN)}"
+                      if self.dt is not None else "false")
+        return (f"CASE WHEN {is_bool_dt} THEN {lex} = 'true' "
+                f"WHEN {n} IS NOT NULL THEN {n} != 0 "
+                f"ELSE {lex} IS NOT NULL AND length({lex}) > 0 END")
 
-    def as_lex(self) -> Column:
+    def as_lex(self) -> str:
         if self.lex is not None:
             return self.lex
         assert self.native is not None
-        return self.native.cast("string")
+        return f"CAST({self.native} AS STRING)"
 
-    def dt_col(self) -> Column:
-        if self.dt is not None:
-            return self.dt
-        return F.lit(None).cast("string")
+    def dt_col(self) -> str:
+        return self.dt if self.dt is not None else NULL_S
 
-    def lang_col(self) -> Column:
-        if self.lang is not None:
-            return self.lang
-        return F.lit(None).cast("string")
+    def lang_col(self) -> str:
+        return self.lang if self.lang is not None else NULL_S
 
-    def out_col(self) -> Column:
-        """Column for a projected/ordered expression result."""
+    def out_col(self) -> str:
+        """SQL text of a projected/ordered expression result."""
         if self.native is not None:
             return self.native
         assert self.lex is not None
@@ -234,15 +246,15 @@ def _never_numeric_value(value: str) -> bool:
     return _MAYBE_NUMERIC_RE.fullmatch(value) is None
 
 
-def ev_num(c: Column) -> EV:
-    return EV(num=c.cast("double"), native=c, kind="num")
+def ev_num(c: str) -> EV:
+    return EV(num=f"CAST({c} AS DOUBLE)", native=c, kind="num")
 
 
-def ev_bool(c: Column) -> EV:
+def ev_bool(c: str) -> EV:
     return EV(boolean=c, native=c, kind="bool")
 
 
-def ev_str(c: Column) -> EV:
+def ev_str(c: str) -> EV:
     return EV(lex=c, native=c, kind="str")
 
 
@@ -256,9 +268,17 @@ class Evaluator:
         self.spark = spark
         self.bgp = bgp_compiler
         self._dump_provider = dump_provider  # () -> DataFrame (6-col dump)
-        self._marker_n = 0
+        self.stmt = Statement(spark, bgp_compiler.compiler)
         self._fresh_n = 0
         self.dataset = None  # FROM / FROM NAMED (SPARQL 1.1 13.2)
+
+    def _derive(self, bf: BindingFrame, body: str, **changes) -> BindingFrame:
+        """``bf`` with ``changes`` over the new query block ``body``."""
+        return replace(bf, rel=_block(body), **changes)
+
+    def _result(self, bf: BindingFrame) -> DataFrame:
+        """The statement, selecting every column of ``bf``."""
+        return self.stmt.run(f"SELECT {_select_list(bf.select())} FROM {bf.rel} AS t")
 
     # -- entry points ---------------------------------------------------------
 
@@ -266,15 +286,22 @@ class Evaluator:
         self.dataset = q.dataset
         bf = self._eval_select_bf(q)
         # final projection: plain columns only
-        cols = []
-        for v in sorted(bf.all_vars):
-            cols.append(F.col(v))
-        return bf.df.select(*cols)
+        names = sorted(bf.all_vars)
+        df = self.stmt.run(
+            f"SELECT {_select_list([_q('t', v) for v in names])} FROM {bf.rel} AS t")
+        return df if names else df.select()
+
+    def select_frame(self, q: A.SelectQuery) -> tuple[DataFrame, BindingFrame]:
+        """A SELECT's solutions with every term column, and their frame."""
+        self.dataset = q.dataset
+        bf = self._eval_select_bf(q)
+        return self._result(bf), bf
 
     def eval_ask(self, q: A.AskQuery) -> DataFrame:
         self.dataset = q.dataset
         bf = self.eval_pattern(q.where)
-        return bf.df.limit(1).agg((F.count(F.lit(1)) > 0).alias("found"))
+        one = _block(f"SELECT * FROM {bf.rel} AS t LIMIT 1")
+        return self.stmt.run(f"SELECT count(1) > 0 AS found FROM {one} AS t")
 
     def eval_describe(self, q: A.DescribeQuery) -> DataFrame:
         """DESCRIBE: all triples whose subject is a described node (simple
@@ -299,8 +326,9 @@ class Evaluator:
             else:
                 # DESCRIBE * — every variable the WHERE clause binds
                 names = sorted(v for v in bf.term_vars if not v.startswith("__"))
+            where = self._result(bf) if names else None
             for name in names:
-                nodes = bf.df.select(F.col(name).alias("__n")).distinct()
+                nodes = where.select(F.col(name).alias("__n")).distinct()
                 parts.append(
                     dump.join(nodes, dump["subj"] == nodes["__n"], "left_semi")
                 )
@@ -313,9 +341,10 @@ class Evaluator:
 
     def eval_construct(self, q: A.ConstructQuery) -> DataFrame:
         self.dataset = q.dataset
-        bf = self.eval_pattern(q.where)
         if not q.template:  # legal: CONSTRUCT { } WHERE { ... } -> empty graph
             return self._dump_df().limit(0)
+        bf = self.eval_pattern(q.where)
+        where = self._result(bf)
         parts = []
         for s, p, o in q.template:
             if isinstance(p, pathmod.Pred):
@@ -328,7 +357,7 @@ class Evaluator:
                 self._tmpl_shadow(bf, o, "__lang").alias("obj_lang"),
                 F.lit(None).cast("string").alias("graph"),
             ]
-            parts.append(bf.df.select(*cols).filter(
+            parts.append(where.select(*cols).filter(
                 F.col("subj").isNotNull() & F.col("pred").isNotNull() & F.col("obj").isNotNull()
             ))
         out = parts[0]
@@ -341,7 +370,7 @@ class Evaluator:
             out = out.limit(q.limit)
         return out
 
-    def _tmpl_col(self, bf: BindingFrame, t, alias: str) -> Column:
+    def _tmpl_col(self, bf: BindingFrame, t, alias: str):
         if isinstance(t, Var):
             if t.name in bf.term_vars:
                 return F.col(t.name).alias(alias)
@@ -351,7 +380,7 @@ class Evaluator:
         lex, _, _ = encode_term(t)
         return F.lit(lex).alias(alias)
 
-    def _tmpl_shadow(self, bf: BindingFrame, t, shadow: str) -> Column:
+    def _tmpl_shadow(self, bf: BindingFrame, t, shadow: str):
         if isinstance(t, Var) and t.name in bf.term_vars:
             return F.col(t.name + shadow)
         if isinstance(t, Lit):
@@ -388,23 +417,20 @@ class Evaluator:
             proj_names = sorted(v for v in bf.all_vars if not v.startswith("__"))
 
         def sort_frame(frame: BindingFrame) -> BindingFrame:
-            sort_cols: list[Column] = []
+            keys: list[str] = []
             for e, asc in q.order_by:
                 ev = self.compile_expr(e, frame)
+                way = "ASC" if asc else "DESC"
                 if ev.kind == "term":
                     # numeric view first (numeric terms order numerically,
                     # NULL for non-numerics), lexical as tiebreak/fallback
-                    num, lex = ev.as_num(), ev.as_lex()
-                    sort_cols.append(num.asc() if asc else num.desc())
-                    sort_cols.append(lex.asc() if asc else lex.desc())
+                    keys += [f"{ev.as_num()} {way}", f"{ev.as_lex()} {way}"]
                 else:
-                    c = ev.out_col()
-                    sort_cols.append(c.asc() if asc else c.desc())
-            if not sort_cols:
+                    keys.append(f"{ev.out_col()} {way}")
+            if not keys:
                 return frame
-            return BindingFrame(frame.df.orderBy(*sort_cols), frame.term_vars,
-                                frame.native_vars, frame.maybe_null,
-                                frame.raw_vars)
+            return self._derive(frame, f"SELECT * FROM {frame.rel} AS t "
+                                       f"ORDER BY {', '.join(keys)}")
 
         if not (q.distinct or q.reduced):
             # ORDER BY may reference non-projected vars: sort BEFORE
@@ -413,23 +439,22 @@ class Evaluator:
             bf = sort_frame(bf)
 
         keep: list[str] = []
+        native = {v: k for v, k in bf.native_vars.items() if v in proj_names}
         for name in proj_names:
             if name in bf.term_vars:
-                keep.extend(name + s for s in SHADOWS)
+                keep += [_q("t", name + s) for s in SHADOWS]
                 if name in bf.raw_vars:
-                    keep.extend(bf.raw_vars[name].cols)
+                    keep += [_q("t", c) for c in bf.raw_vars[name].cols]
             elif name in bf.native_vars:
-                keep.append(name)
+                keep.append(_q("t", name))
             else:
                 # projected but never bound: NULL column
-                bf.df = bf.df.withColumn(name, F.lit(None).cast("string"))
-                bf.native_vars[name] = "str"
-                keep.append(name)
-        df = bf.df.select(*[F.col(c) for c in keep])
+                keep.append(f"{NULL_S} AS {sql_ident(name)}")
+                native[name] = "str"
         out = BindingFrame(
-            df,
+            _block(f"SELECT {_select_list(keep)} FROM {bf.rel} AS t"),
             {v for v in proj_names if v in bf.term_vars},
-            {v: k for v, k in bf.native_vars.items() if v in proj_names},
+            native,
             {v for v in proj_names if v in bf.maybe_null or v not in bf.all_vars},
             {v: rb for v, rb in bf.raw_vars.items() if v in proj_names},
         )
@@ -442,22 +467,17 @@ class Evaluator:
             # raws + remaining columns yields the same multiset — the
             # distinct exchange then carries bigints and the pre-distinct
             # render is pruned; shadows are re-rendered per distinct row.
+            drop = {v + s for v in out.raw_vars for s in SHADOWS}
+            distinct = _block(
+                f"SELECT DISTINCT {_select_list(out.select(skip=drop))} FROM {out.rel} AS t")
             if out.raw_vars:
-                drop_cols = [v + s for v in out.raw_vars for s in SHADOWS]
-                ddf = _render_raws(out.df.drop(*drop_cols).distinct(),
-                                   out.raw_vars)
-                out = BindingFrame(ddf, out.term_vars, out.native_vars,
-                                   out.maybe_null, out.raw_vars)
-            else:
-                out = BindingFrame(out.df.distinct(), out.term_vars,
-                                   out.native_vars, out.maybe_null)
-            out = sort_frame(out)
+                distinct = _block(f"SELECT *, {', '.join(_renders(out.raw_vars))} "
+                                  f"FROM {distinct} AS t")
+            out = sort_frame(replace(out, rel=distinct))
         if q.offset:
-            out = BindingFrame(out.df.offset(q.offset), out.term_vars,
-                               out.native_vars, out.maybe_null, out.raw_vars)
+            out = self._derive(out, f"SELECT * FROM {out.rel} AS t OFFSET {int(q.offset)}")
         if q.limit is not None:
-            out = BindingFrame(out.df.limit(q.limit), out.term_vars,
-                               out.native_vars, out.maybe_null, out.raw_vars)
+            out = self._derive(out, f"SELECT * FROM {out.rel} AS t LIMIT {int(q.limit)}")
         return out
 
     # -- grouping / aggregation ---------------------------------------------------
@@ -512,49 +532,52 @@ class Evaluator:
         for e, _ in q.order_by:
             collect(e)
 
-        agg_cols = [self._compile_aggregate(c, bf).alias(n) for c, n in aggs.items()]
-        key_cols: list[str] = []
+        agg_cols = [f"{self._compile_aggregate(c, bf)} AS {sql_ident(n)}"
+                    for c, n in aggs.items()]
         # raw-keyed group vars: group on the narrow raw shadows (the lexical
         # is an injective function of them, so the groups are identical) and
         # re-render the term columns AFTER the aggregate — Catalyst prunes
         # the per-row render and the exchange carries bigints, not IRIs
-        raw_keyed = [v for v in key_vars if v in bf.term_vars and v in bf.raw_vars]
+        raw_keyed = {v: bf.raw_vars[v] for v in key_vars
+                     if v in bf.term_vars and v in bf.raw_vars}
+        key_cols: list[str] = []
         for v in key_vars:
-            if v in raw_keyed:
-                key_cols.extend(bf.raw_vars[v].cols)
-            else:
-                key_cols.extend(bf.columns_for(v))
-        if key_cols:
-            gdf = bf.df.groupBy(*[F.col(c) for c in key_cols]).agg(*agg_cols)
+            key_cols += raw_keyed[v].cols if v in raw_keyed else bf.columns_for(v)
+        keys = [_q("t", c) for c in key_cols]
+        if keys:
+            body = (f"SELECT {', '.join(keys + agg_cols)} FROM {bf.rel} AS t "
+                    f"GROUP BY {', '.join(keys)}")
+        elif agg_cols:
+            body = f"SELECT {', '.join(agg_cols)} FROM {bf.rel} AS t"
         else:
-            gdf = bf.df.agg(*agg_cols) if agg_cols else bf.df.limit(1)
-        gdf = _render_raws(gdf, {v: bf.raw_vars[v] for v in raw_keyed})
+            body = f"SELECT 1 AS `__one` FROM {bf.rel} AS t LIMIT 1"
+        grouped = _block(body)
 
+        term_vars = {v for v in key_vars if v in bf.term_vars}
+        native_vars = {v: k for v, k in bf.native_vars.items() if v in key_vars}
+        cols = [_q("g", c) for c in key_cols] + _renders(raw_keyed)
+        for c, n in aggs.items():
+            if c.name in ("MIN", "MAX") and self._agg_arg_kind(c, bf) == "term":
+                # unpack the term struct back into term-var shadow columns
+                cols += [f"{_q('g', n)}.{f} AS {sql_ident(n + s)}"
+                         for f, s in zip(("lex", "dt", "lang", "num"), SHADOWS)]
+                term_vars.add(n)
+                continue
+            cols.append(_q("g", n))
+            if c.name == "GROUP_CONCAT" or (
+                    c.name == "SAMPLE" and self._agg_arg_kind(c, bf) == "term"):
+                native_vars[n] = "str"
+            else:
+                native_vars[n] = "num"
         out = BindingFrame(
-            gdf,
-            {v for v in key_vars if v in bf.term_vars},
-            {v: k for v, k in bf.native_vars.items() if v in key_vars},
+            _block(f"SELECT {_select_list(cols)} FROM {grouped} AS g"),
+            term_vars,
+            native_vars,
             # null keys group together; aggregates over empty/all-null input
             # (e.g. SUM of an OPTIONAL var) can come back NULL
             {v for v in key_vars if v in bf.maybe_null} | set(aggs.values()),
-            {v: bf.raw_vars[v] for v in raw_keyed},
+            raw_keyed,
         )
-        for c, n in aggs.items():
-            if c.name == "GROUP_CONCAT":
-                out.native_vars[n] = "str"
-            elif c.name in ("MIN", "MAX") and self._agg_arg_kind(c, bf) == "term":
-                # unpack the term struct back into term-var shadow columns
-                out.df = out.df.withColumns({
-                    f"{n}__dt": F.col(n)["dt"],
-                    f"{n}__lang": F.col(n)["lang"],
-                    f"{n}__num": F.col(n)["num"],
-                    n: F.col(n)["lex"],
-                })
-                out.term_vars.add(n)
-            elif c.name == "SAMPLE" and self._agg_arg_kind(c, bf) == "term":
-                out.native_vars[n] = "str"
-            else:
-                out.native_vars[n] = "num"
 
         # rewrite outer expressions: aggregate calls -> synthetic vars
         def rewrite(e):
@@ -575,12 +598,10 @@ class Evaluator:
                 e, v = p
                 out = self._extend(out, v.name, rewrite(e))
         for h in q.having:
-            hv = self.compile_expr(rewrite(h), out)
-            out = BindingFrame(out.df.filter(hv.as_bool()), out.term_vars,
-                               out.native_vars, raw_vars=out.raw_vars)
+            out = self._filter(out, rewrite(h))
         q.order_by = [(rewrite(e), asc) for e, asc in q.order_by]
-        # drop synthetic agg vars from the frame's visible set (they remain
-        # as columns for ORDER BY)
+        # the synthetic agg vars stay in the frame for ORDER BY; the
+        # projection drops them
         return out
 
     def _agg_arg_kind(self, c: Call, bf: BindingFrame) -> str:
@@ -588,65 +609,54 @@ class Evaluator:
             return "num"
         return self.compile_expr(c.args[0], bf).kind
 
-    def _compile_aggregate(self, c: Call, bf: BindingFrame) -> Column:
+    def _compile_aggregate(self, c: Call, bf: BindingFrame) -> str:
         name = c.name
         if name == "COUNT":
             if not c.args or c.args[0] == "*":
-                return F.count(F.lit(1))
+                return "count(1)"
             # raw-keyed var: the lexical is null iff a raw shadow is null and
             # distinct raws <=> distinct lexicals (injective render), so the
             # count never needs the rendered IRI at all
             if isinstance(c.args[0], Var) and c.args[0].name in bf.raw_vars:
-                rcols = [F.col(rc) for rc in bf.raw_vars[c.args[0].name].cols]
+                rcols = [_q("t", rc) for rc in bf.raw_vars[c.args[0].name].cols]
                 if c.distinct:
-                    return F.count_distinct(*rcols)
+                    return f"count(DISTINCT {', '.join(rcols)})"
                 if len(rcols) == 1:
-                    return F.count(rcols[0])
-                nn = rcols[0].isNotNull()
-                for rc in rcols[1:]:
-                    nn = nn & rc.isNotNull()
-                return F.count(F.when(nn, F.lit(1)))
-            ev = self.compile_expr(c.args[0], bf)
-            col = ev.out_col()
-            return F.countDistinct(col) if c.distinct else F.count(col)
+                    return f"count({rcols[0]})"
+                nn = " AND ".join(f"{rc} IS NOT NULL" for rc in rcols)
+                return f"count(CASE WHEN {nn} THEN 1 END)"
+            col = self.compile_expr(c.args[0], bf).out_col()
+            return f"count(DISTINCT {col})" if c.distinct else f"count({col})"
         ev = self.compile_expr(c.args[0], bf)
+        distinct = "DISTINCT " if c.distinct else ""
         if name in ("SUM", "AVG"):
             # exact decimal sums -> engine-order-independent doubles
-            n = ev.as_num().cast("decimal(28,6)")
-            if c.distinct:
-                s = F.sum_distinct(n)
-            else:
-                s = F.sum(n)
+            s = f"CAST(sum({distinct}CAST({ev.as_num()} AS DECIMAL(28,6))) AS DOUBLE)"
             if name == "SUM":
-                return s.cast("double")
-            cnt = (F.count_distinct(ev.as_num()) if c.distinct
-                   else F.count(ev.as_num()))
+                return s
             # divide as doubles: decimal division rounds at the result scale
             # (half-up in Spark, different in other engines) and breaks
             # cross-engine parity on .5-at-scale boundaries
-            return s.cast("double") / cnt
+            return f"({s} / count({distinct}{ev.as_num()}))"
         if name in ("MIN", "MAX"):
-            fn = F.min if name == "MIN" else F.max
+            fn = name.lower()
             if ev.kind == "term":
                 # aggregate the TERM: an orderable struct whose leading flag
                 # prefers numeric values (SPARQL MIN/MAX order numerics
                 # numerically; all-string groups fall back to lexical order)
-                flag = ev.as_num().isNull() if name == "MIN" else ev.as_num().isNotNull()
-                s = F.struct(
-                    flag.alias("nn"),
-                    ev.as_num().alias("num"),
-                    ev.as_lex().alias("lex"),
-                    ev.dt_col().alias("dt"),
-                    ev.lang_col().alias("lang"),
-                )
-                return fn(s)
-            return fn(ev.as_num()).cast("double") if ev.kind == "num" else fn(ev.out_col())
+                flag = f"{ev.as_num()} IS {'' if name == 'MIN' else 'NOT '}NULL"
+                return (f"{fn}(named_struct('nn', {flag}, 'num', {ev.as_num()}, "
+                        f"'lex', {ev.as_lex()}, 'dt', {ev.dt_col()}, "
+                        f"'lang', {ev.lang_col()}))")
+            if ev.kind == "num":
+                return f"CAST({fn}({ev.as_num()}) AS DOUBLE)"
+            return f"{fn}({ev.out_col()})"
         if name == "SAMPLE":
-            return F.min(ev.out_col())
+            return f"min({ev.out_col()})"
         if name == "GROUP_CONCAT":
-            sep = c.separator if c.separator is not None else " "
-            lst = F.collect_set(ev.as_str()) if c.distinct else F.collect_list(ev.as_str())
-            return F.concat_ws(sep, F.array_sort(lst))
+            sep = self.stmt.param(c.separator if c.separator is not None else " ")
+            lst = "collect_set" if c.distinct else "collect_list"
+            return f"concat_ws({sep}, array_sort({lst}({ev.as_str()})))"
         raise SparqlNotImplemented(f"aggregate {name}")
 
     # -- pattern dispatch -----------------------------------------------------------
@@ -685,7 +695,8 @@ class Evaluator:
                 bound |= nxt.all_vars
             return acc
         if isinstance(p, A.LeftJoin):
-            return self._left_join(self.eval_pattern(p.left), self.eval_pattern(p.right), p.expr)
+            return self._join(self.eval_pattern(p.left), self.eval_pattern(p.right),
+                              outer=True, filter_expr=p.expr)
         if isinstance(p, A.Union):
             return self._union(self.eval_pattern(p.left), self.eval_pattern(p.right))
         if isinstance(p, A.Minus):
@@ -749,14 +760,14 @@ class Evaluator:
 
     def eval_bgp(self, p: A.BGP) -> BindingFrame:
         if not p.triples:
-            return BindingFrame(self.spark.range(1).select(F.lit(1).alias("__one")), set())
+            return BindingFrame(_block("SELECT 1 AS `__one`"), set())
         parts: list[BindingFrame] = []
         for plain, special in self._resolve(p):
             bfs: list[BindingFrame] = []
             if plain:
-                df, var_names, raws = self.bgp.compile(plain, p.graph,
-                                                       dataset=self.dataset)
-                bfs.append(BindingFrame(df, var_names, raw_vars=raws))
+                text, var_names, raws = self.bgp.compile(
+                    plain, p.graph, dataset=self.dataset, stmt=self.stmt)
+                bfs.append(BindingFrame(_block(text), var_names, raw_vars=raws))
             for kind, s, pred, o in special:
                 if kind == "dump":
                     bfs.append(self._dump_pattern(s, pred, o, p.graph))
@@ -786,59 +797,61 @@ class Evaluator:
             return dump.filter(F.col("graph").isin([f"<{g}>" for g in ds.default]))
         return dump.filter(F.lit(False))
 
-    def _dump_pattern(self, s, pred, o, graph) -> BindingFrame:
+    def _graphs_in(self, graphs) -> str:
+        return f"graph IN ({', '.join(self.stmt.param(f'<{g}>') for g in graphs)})"
+
+    def _dump_pattern(self, s, pred, o, graph, where=()) -> BindingFrame:
         """Variable-predicate pattern: scan the (virtual) dump."""
-        df = self._dump_df()
         ds = self.dataset
+        where = list(where)
         if graph is None:
             if ds is None:
-                df = df.filter(F.col("graph").isNull())
+                where.append("graph IS NULL")
             elif ds.default:
                 # FROM: the default graph is EXACTLY the merge of the listed
                 # graphs; store-default (graph-less) triples are excluded
-                df = df.filter(
-                    F.col("graph").isin([f"<{g}>" for g in ds.default])
-                )
+                where.append(self._graphs_in(ds.default))
             else:
-                df = df.filter(F.lit(False))
+                where.append("false")
         elif isinstance(graph, IRI):
             if ds is not None and graph.value not in ds.named:
-                df = df.filter(F.lit(False))
+                where.append("false")
             else:
-                df = df.filter(F.col("graph") == f"<{graph.value}>")
+                where.append(f"graph = {self.stmt.param(f'<{graph.value}>')}")
         term_vars: set[str] = set()
-        cols: list[Column] = []
+        cols: list[str] = []
 
-        def bind(term, lex_col, dt_col, lang_col):
-            nonlocal df
+        def bind(term, lex_col, dt_col=None, lang_col=None, num=True):
             if isinstance(term, (Var, BNodeT)):
                 name = term.name if isinstance(term, Var) else "__bn_" + term.label
                 term_vars.add(name)
-                cols.extend(_term_columns(
-                    name, F.col(lex_col), dt_col and F.col(dt_col),
-                    lang_col and F.col(lang_col), F.col(lex_col).try_cast("double")))
+                cols.extend(f"{e} AS {sql_ident(name + sfx)}" for e, sfx in zip(
+                    (lex_col, dt_col or NULL_S, lang_col or NULL_S,
+                     f"try_cast({lex_col} AS DOUBLE)" if num else NULL_D),
+                    SHADOWS))
             else:
                 lex, dt, lang = encode_term(term)
-                df = df.filter(F.col(lex_col) == lex)
+                where.append(f"{lex_col} = {self.stmt.param(lex)}")
                 if dt_col:
-                    df = df.filter(F.col(dt_col).eqNullSafe(F.lit(dt)))
+                    where.append(f"{dt_col} <=> "
+                                 f"{NULL_S if dt is None else self.stmt.param(dt)}")
 
-        bind(s, "subj", None, None)
-        bind(pred, "pred", None, None)
+        bind(s, "subj")
+        bind(pred, "pred")
         bind(o, "obj", "obj_dt", "obj_lang")
         if isinstance(graph, Var):
-            term_vars.add(graph.name)
-            cols.extend(_term_columns(graph.name, F.col("graph")))
+            bind(graph, "graph", num=False)
             if ds is None:
-                df = df.filter(F.col("graph").isNotNull())
+                where.append("graph IS NOT NULL")
             elif ds.named:
-                df = df.filter(
-                    F.col("graph").isin([f"<{g}>" for g in ds.named])
-                )
+                where.append(self._graphs_in(ds.named))
             else:
-                df = df.filter(F.lit(False))
-        return BindingFrame(df.select(*cols) if cols else df.select(F.lit(1).alias("__one")),
-                            term_vars)
+                where.append("false")
+        dump = self.stmt.view(self._dump_df())
+        body = f"SELECT {_select_list(cols)} FROM {dump} AS d"
+        if where:
+            body += " WHERE " + " AND ".join(f"({w})" for w in where)
+        return BindingFrame(_block(body), term_vars)
 
     def _negset_pattern(self, s, pred, o, graph) -> BindingFrame:
         """Negated property set ``!(:p|^:q)`` — SPARQL 1.1 §18.2.2.3:
@@ -858,18 +871,13 @@ class Evaluator:
         parts: list[BindingFrame] = []
         for excluded, st, ot in specs:
             pv = Var(self._fresh_var())
-            bf = self._dump_pattern(st, pv, ot, graph)
-            df = bf.df
+            where = []
             if excluded:
-                df = df.filter(
-                    ~F.col(pv.name).isin([f"<{i}>" for i in excluded])
-                )
-            drop = {pv.name, f"{pv.name}__dt", f"{pv.name}__lang", f"{pv.name}__num"}
-            parts.append(BindingFrame(
-                df.select(*[c for c in df.columns if c not in drop]),
-                bf.term_vars - {pv.name},
-                maybe_null=bf.maybe_null - {pv.name},
-            ))
+                where.append("NOT (pred IN ("
+                             + ", ".join(self.stmt.param(f"<{i}>") for i in excluded)
+                             + "))")
+            bf = self._dump_pattern(st, pv, ot, graph, where)
+            parts.append(replace(bf, term_vars=bf.term_vars - {pv.name}))
         out = parts[0]
         for other in parts[1:]:
             out = self._union(out, other)
@@ -877,12 +885,18 @@ class Evaluator:
 
     def _closure_pattern(self, s, pred, o, graph) -> BindingFrame:
         """Transitive-path pattern (+ / * / ?) — the closure support the
-        reference lacks (reference: plan.md:22 "some day: recursive CTEs")."""
+        reference lacks (reference: plan.md:22 "some day: recursive CTEs").
+        The closure is a fixpoint of Spark jobs over the path's base
+        relation, its own statement; this statement reads the result."""
         inner = pred.part
         min0 = isinstance(pred, Maybe) or (isinstance(pred, Closure) and pred.min0)
         sv, ov = Var(self._fresh_var()), Var(self._fresh_var())
-        base = self.eval_bgp(A.BGP([(sv, inner, ov)], graph=graph))
-        pairs = base.df.select(F.col(sv.name).alias("s"), F.col(ov.name).alias("o"))
+        sub = Evaluator(self.spark, self.bgp, self._dump_provider)
+        sub.dataset, sub._fresh_n = self.dataset, self._fresh_n
+        base = sub.eval_bgp(A.BGP([(sv, inner, ov)], graph=graph))
+        self._fresh_n = sub._fresh_n
+        pairs = sub.stmt.run(f"SELECT {_q('t', sv.name)} AS s, {_q('t', ov.name)} AS o "
+                             f"FROM {base.rel} AS t")
         if isinstance(pred, Closure):
             pairs = transitive_closure(pairs, "s", "o")
         if min0:
@@ -892,45 +906,39 @@ class Evaluator:
             ).distinct()
 
         term_vars: set[str] = set()
-        cols: list[Column] = []
-        df = pairs
-
-        def bind(term, col):
-            nonlocal df
+        cols: list[str] = []
+        where: list[str] = []
+        for term, col in ((s, "s"), (o, "o")):
             if isinstance(term, (Var, BNodeT)):
                 name = term.name if isinstance(term, Var) else "__bn_" + term.label
                 term_vars.add(name)
-                cols.extend(_term_columns(name, F.col(col),
-                                          num=F.col(col).try_cast("double")))
+                cols += [f"{e} AS {sql_ident(name + sfx)}" for e, sfx in zip(
+                    (col, NULL_S, NULL_S, f"try_cast({col} AS DOUBLE)"), SHADOWS)]
             else:
-                lex, _, _ = encode_term(term)
-                df = df.filter(F.col(col) == lex)
-
-        bind(s, "s")
-        bind(o, "o")
-        return BindingFrame(df.select(*cols) if cols else df.select(F.lit(1).alias("__one")),
-                            term_vars)
+                where.append(f"{col} = {self.stmt.param(encode_term(term)[0])}")
+        body = f"SELECT {_select_list(cols)} FROM {self.stmt.view(pairs)} AS p"
+        if where:
+            body += " WHERE " + " AND ".join(where)
+        return BindingFrame(_block(body), term_vars)
 
     # -- binary operators ------------------------------------------------------------
 
-    def _strip_raw(self, bf: BindingFrame, only: set | None = None) -> BindingFrame:
-        """Drop raw shadow columns + metadata (all vars, or just ``only``)."""
+    @staticmethod
+    def _strip_raw(bf: BindingFrame, only: set | None = None) -> BindingFrame:
+        """Forget the raw shadows of all vars, or just of ``only``."""
         victims = set(bf.raw_vars) if only is None else set(bf.raw_vars) & only
         if not victims:
             return bf
-        cols = [c for v in victims for c in bf.raw_vars[v].cols]
-        return BindingFrame(
-            bf.df.drop(*cols), bf.term_vars, bf.native_vars, bf.maybe_null,
-            {v: rb for v, rb in bf.raw_vars.items() if v not in victims},
-        )
+        return replace(bf, raw_vars={v: rb for v, rb in bf.raw_vars.items()
+                                     if v not in victims})
 
     @staticmethod
     def _var_eq(v: str, a: BindingFrame, b: BindingFrame,
-                sfx: str) -> tuple[Column, list[str]]:
-        """Equality of the RDF terms ``v`` binds in a row of ``a`` (columns
-        as named) and a row of ``b`` (columns renamed with ``sfx``), and the
-        ``b`` columns it reads.  The one rule of JOIN, MINUS and EXISTS;
-        each keeps its own handling of unbound vars.
+                la: str, lb: str) -> tuple[str, list[str]]:
+        """Equality of the RDF terms ``v`` binds in a row of ``a`` (aliased
+        ``la``) and a row of ``b`` (aliased ``lb``), and the ``b`` columns
+        it reads.  The one rule of JOIN, MINUS and EXISTS; each keeps its
+        own handling of unbound vars.
 
         Raw shadows of equal provenance compare componentwise (raw equality
         <=> term equality); two term vars compare (lex, dt, lang), so
@@ -938,21 +946,17 @@ class Evaluator:
         a term against a native var compares lexicals."""
         ra, rb = a.raw_vars.get(v), b.raw_vars.get(v)
         if ra is not None and rb is not None and ra.prov == rb.prov:
-            eq = F.lit(True)
-            for ca, cb in zip(ra.cols, rb.cols):
-                eq = eq & (F.col(ca) == F.col(cb + sfx))
-            return eq, list(rb.cols)
+            return (" AND ".join(f"{_q(la, ca)} = {_q(lb, cb)}"
+                                 for ca, cb in zip(ra.cols, rb.cols)), list(rb.cols))
         if v in a.term_vars and v in b.term_vars:
             dt, lang = v + "__dt", v + "__lang"
-            eq = ((F.col(v) == F.col(v + sfx))
-                  & F.col(dt).eqNullSafe(F.col(dt + sfx))
-                  & F.col(lang).eqNullSafe(F.col(lang + sfx)))
-            return eq, [v, dt, lang]
+            return (f"{_q(la, v)} = {_q(lb, v)} AND {_q(la, dt)} <=> {_q(lb, dt)} "
+                    f"AND {_q(la, lang)} <=> {_q(lb, lang)}", [v, dt, lang])
         if v in a.native_vars and v in b.native_vars:
-            return F.col(v) == F.col(v + sfx), [v]
-        return F.col(v).cast("string") == F.col(v + sfx).cast("string"), [v]
+            return f"{_q(la, v)} = {_q(lb, v)}", [v]
+        return f"CAST({_q(la, v)} AS STRING) = CAST({_q(lb, v)} AS STRING)", [v]
 
-    def _join(self, a: BindingFrame, b: BindingFrame, how: str = "inner",
+    def _join(self, a: BindingFrame, b: BindingFrame, outer: bool = False,
               filter_expr=None) -> BindingFrame:
         shared = a.all_vars & b.all_vars
         # SPARQL compatibility: an UNBOUND shared var matches anything.  Only
@@ -962,7 +966,7 @@ class Evaluator:
         shared = sorted(shared)
         # raw shadows survive only the plain inner equi-join path; outer
         # joins and compat vars pick sides per row, which raws do not model
-        if how != "inner":
+        if outer:
             a, b = self._strip_raw(a), self._strip_raw(b)
         elif compat:
             a, b = self._strip_raw(a, compat), self._strip_raw(b, compat)
@@ -971,49 +975,41 @@ class Evaluator:
             if (v in a.term_vars) != (v in b.term_vars):
                 a = self._coerce_to_term(a, v)
                 b = self._coerce_to_term(b, v)
-        # rename ALL b columns (raw shadows included) to avoid ambiguity
-        bdf = b.df.withColumnsRenamed({
-            c: c + "__rj"
-            for v in sorted(b.all_vars)
-            for c in b.columns_for(v) + list(b.raw_vars[v].cols if v in b.raw_vars else ())
-        })
-        cond = F.lit(True)
+        conds = []
         for v in shared:
-            eq, _ = self._var_eq(v, a, b, "__rj")
+            eq, _ = self._var_eq(v, a, b, "l", "r")
             if v in compat:
-                eq = F.col(v).isNull() | F.col(v + "__rj").isNull() | eq
-            cond = cond & eq
-
+                eq = f"{_q('l', v)} IS NULL OR {_q('r', v)} IS NULL OR {eq}"
+            conds.append(f"({eq})")
         if filter_expr is not None:
-            # LeftJoin ON expression: compile over the merged namespace where
-            # right-only vars read from the renamed columns
-            merged = self._merged_frame_for_expr(a, b)
-            cond = cond & self.compile_expr(filter_expr, merged, rj_suffix_for=b.all_vars - a.all_vars).as_bool()
+            # LeftJoin ON expression: compiled over the merged namespace,
+            # where right-only vars read from the right side
+            merged = BindingFrame(a.rel, a.term_vars | b.term_vars,
+                                  {**b.native_vars, **a.native_vars})
+            conds.append(self.compile_expr(filter_expr, merged,
+                                           rj=b.all_vars - a.all_vars).as_bool())
 
-        joined = a.df.join(bdf, on=cond, how=how)
         # keep a's columns for shared vars (merged solutions adopt the bound
         # side for compat vars); adopt b's for b-only vars
-        out_cols = []
+        cols = []
         for v in sorted(a.all_vars):
             if v in compat:
                 # the merged binding takes whichever side is bound; shadow
                 # columns must follow the lex column's side
-                pick_a = F.col(v).isNotNull()
-                for c in a.columns_for(v):
-                    out_cols.append(
-                        F.when(pick_a, F.col(c)).otherwise(F.col(c + "__rj")).alias(c)
-                    )
+                cols += [f"CASE WHEN {_q('l', v)} IS NOT NULL THEN {_q('l', c)} "
+                         f"ELSE {_q('r', c)} END AS {sql_ident(c)}"
+                         for c in a.columns_for(v)]
             else:
-                out_cols.extend(F.col(c) for c in a.columns_for(v))
-        for v, rb in a.raw_vars.items():
-            out_cols.extend(F.col(c) for c in rb.cols)
+                cols += [_q("l", c) for c in a.columns_for(v)]
+        for rb in a.raw_vars.values():
+            cols += [_q("l", c) for c in rb.cols]
         for v in sorted(b.all_vars - a.all_vars):
-            for c in b.columns_for(v):
-                out_cols.append(F.col(c + "__rj").alias(c))
+            cols += [_q("r", c) for c in b.columns_for(v)]
             if v in b.raw_vars:
-                for c in b.raw_vars[v].cols:
-                    out_cols.append(F.col(c + "__rj").alias(c))
-        df = joined.select(*out_cols)
+                cols += [_q("r", c) for c in b.raw_vars[v].cols]
+        join = "LEFT OUTER JOIN" if outer else "JOIN"
+        rel = _block(f"SELECT {_select_list(cols)} FROM {a.rel} AS l {join} "
+                            f"{b.rel} AS r ON {' AND '.join(conds) or 'true'}")
         out_raws = dict(a.raw_vars)
         for v, rb in b.raw_vars.items():
             if v not in a.all_vars:
@@ -1021,7 +1017,7 @@ class Evaluator:
         out_null = set()
         for v in a.all_vars | b.all_vars:
             if v in shared:
-                if how == "inner":
+                if not outer:
                     if v in a.maybe_null and v in b.maybe_null:
                         out_null.add(v)
                 elif v in a.maybe_null:  # left_outer keeps a's (possibly null)
@@ -1030,21 +1026,15 @@ class Evaluator:
                 if v in a.maybe_null:
                     out_null.add(v)
             else:  # b-only
-                if how != "inner" or v in b.maybe_null:
+                if outer or v in b.maybe_null:
                     out_null.add(v)
         return BindingFrame(
-            df,
+            rel,
             a.term_vars | b.term_vars,
             {**b.native_vars, **a.native_vars},
             out_null,
             out_raws,
         )
-
-    def _merged_frame_for_expr(self, a: BindingFrame, b: BindingFrame) -> BindingFrame:
-        return BindingFrame(a.df, a.term_vars | b.term_vars, {**b.native_vars, **a.native_vars})
-
-    def _left_join(self, a: BindingFrame, b: BindingFrame, expr) -> BindingFrame:
-        return self._join(a, b, how="left_outer", filter_expr=expr)
 
     def _union(self, a: BindingFrame, b: BindingFrame) -> BindingFrame:
         # raw shadows are not comparable across union branches
@@ -1058,20 +1048,20 @@ class Evaluator:
         # NULL (a term shadow typed by its suffix, a native var by the union)
         names = sorted(a.all_vars | b.all_vars)
 
-        def padded(f: BindingFrame, other: BindingFrame) -> DataFrame:
+        def padded(f: BindingFrame, other: BindingFrame) -> str:
             exprs: list[str] = []
             for v in names:
                 if v in f.all_vars:
                     exprs += [sql_ident(c) for c in f.columns_for(v)]
                 elif v in other.term_vars:
-                    exprs += [f"CAST(NULL AS {'DOUBLE' if s == '__num' else 'STRING'})"
-                              f" AS {sql_ident(v + s)}" for s in SHADOWS]
+                    exprs += [f"{NULL_D if s == '__num' else NULL_S} AS {sql_ident(v + s)}"
+                              for s in SHADOWS]
                 else:
                     exprs.append(f"NULL AS {sql_ident(v)}")
-            return f.df.selectExpr(*exprs)
+            return f"SELECT {_select_list(exprs)} FROM {f.rel} AS t"
 
         return BindingFrame(
-            padded(a, b).union(padded(b, a)),
+            _block(f"{padded(a, b)} UNION ALL {padded(b, a)}"),
             a.term_vars | b.term_vars,
             {**a.native_vars, **{k: v for k, v in b.native_vars.items()
                                  if k not in a.term_vars}},
@@ -1082,16 +1072,18 @@ class Evaluator:
     def _coerce_to_term(self, bf: BindingFrame, v: str) -> BindingFrame:
         if v in bf.term_vars:
             return bf
-        kind = bf.native_vars.pop(v)
-        df = bf.df.withColumns({
-            f"{v}__num": F.col(v).try_cast("double"),
-            f"{v}__dt": F.lit(terms.XSD_DOUBLE if kind == "num" else None).cast("string"),
-            f"{v}__lang": F.lit(None).cast("string"),
-            v: F.col(v).cast("string"),
-        })
-        bf.term_vars.add(v)
-        return BindingFrame(df, bf.term_vars, bf.native_vars, bf.maybe_null,
-                            bf.raw_vars)
+        kind = bf.native_vars[v]
+        c = _q("t", v)
+        cols = bf.select(skip={v}) + [
+            f"CAST({c} AS STRING) AS {sql_ident(v)}",
+            f"{_str_sql(terms.XSD_DOUBLE if kind == 'num' else None)} AS {sql_ident(v + '__dt')}",
+            f"{NULL_S} AS {sql_ident(v + '__lang')}",
+            f"try_cast({c} AS DOUBLE) AS {sql_ident(v + '__num')}",
+        ]
+        return self._derive(
+            bf, f"SELECT {', '.join(cols)} FROM {bf.rel} AS t",
+            term_vars=bf.term_vars | {v},
+            native_vars={k: x for k, x in bf.native_vars.items() if k != v})
 
     def _minus(self, a: BindingFrame, b: BindingFrame) -> BindingFrame:
         shared = a.all_vars & b.all_vars
@@ -1100,35 +1092,28 @@ class Evaluator:
         nullable = {v for v in shared if v in a.maybe_null or v in b.maybe_null}
         # an unbound var has no raws to compare
         b = self._strip_raw(b, nullable)
-        cond, bcols = F.lit(True), []
+        conds, bcols = [], []
         for v in sorted(shared):
-            eq, cols = self._var_eq(v, a, b, "__rj")
+            eq, cols = self._var_eq(v, a, b, "l", "r")
             if v in nullable:
-                eq = F.col(v).isNull() | F.col(v + "__rj").isNull() | eq
-            cond = cond & eq
+                eq = f"{_q('l', v)} IS NULL OR {_q('r', v)} IS NULL OR {eq}"
+            conds.append(f"({eq})")
             bcols += cols
         if nullable == shared:
             # MINUS removes μ1 only if a compatible μ2 shares ≥1 BOUND var
             # (always so when a shared var is never unbound)
-            dom = F.lit(False)
-            for v in sorted(shared):
-                dom = dom | (F.col(v).isNotNull() & F.col(v + "__rj").isNotNull())
-            cond = cond & dom
-        bdf = b.df.select(*[F.col(c).alias(c + "__rj") for c in bcols]).distinct()
-        out = a.df.join(bdf, on=cond, how="left_anti")
-        return BindingFrame(out, a.term_vars, a.native_vars, a.maybe_null,
-                            a.raw_vars)
+            conds.append("(" + " OR ".join(
+                f"{_q('l', v)} IS NOT NULL AND {_q('r', v)} IS NOT NULL"
+                for v in sorted(shared)) + ")")
+        inner = f"SELECT DISTINCT {', '.join(sql_ident(c) for c in bcols)} FROM {b.rel} AS t"
+        return self._derive(a, f"SELECT {_select_list(a.select('l'))} FROM {a.rel} AS l "
+                               f"LEFT ANTI JOIN ({inner}) AS r ON {' AND '.join(conds)}")
 
     def _values(self, p: A.ValuesPat) -> BindingFrame:
-        fields, term_vars = [], set()
-        for v in p.vars:
-            term_vars.add(v.name)
-            fields.extend([
-                T.StructField(v.name, T.StringType()),
-                T.StructField(f"{v.name}__dt", T.StringType()),
-                T.StructField(f"{v.name}__lang", T.StringType()),
-                T.StructField(f"{v.name}__num", T.DoubleType()),
-            ])
+        def typed(value, sql_type: str) -> str:
+            return (f"CAST(NULL AS {sql_type})" if value is None
+                    else f"CAST({self.stmt.param(value)} AS {sql_type})")
+
         rows = []
         undef_vars: set[str] = set()
         for row in p.rows:
@@ -1140,151 +1125,82 @@ class Evaluator:
                 num = None
                 if isinstance(t, Lit) and (t.datatype in terms.NUMERIC_XSD):
                     num = float(t.value)
-                out.extend([lex, dt, lang, num])
-            rows.append(tuple(out))
-        return BindingFrame(
-            self.spark.createDataFrame(rows, T.StructType(fields)), term_vars,
-            maybe_null=undef_vars,
-        )
+                out += [typed(lex, "STRING"), typed(dt, "STRING"),
+                        typed(lang, "STRING"), typed(num, "DOUBLE")]
+            rows.append(f"({', '.join(out) or '1'})")
+        names = [sql_ident(v.name + s) for v in p.vars for s in SHADOWS] or ["`__one`"]
+        if rows:
+            body = f"SELECT * FROM VALUES {', '.join(rows)} AS v({', '.join(names)})"
+        else:
+            body = "SELECT " + ", ".join(
+                f"{NULL_D if n.endswith('__num`') else NULL_S} AS {n}" for n in names
+            ) + " WHERE false"
+        return BindingFrame(_block(body), {v.name for v in p.vars},
+                            maybe_null=undef_vars)
 
     # -- filter / extend -------------------------------------------------------------
 
     def _filter(self, bf: BindingFrame, expr) -> BindingFrame:
-        bf, expr = self._materialize_exists(bf, expr)
-        ev = self.compile_expr(expr, bf)
-        out = bf.df.filter(ev.as_bool())
-        return self._drop_markers(
-            BindingFrame(out, bf.term_vars, bf.native_vars, bf.maybe_null,
-                         bf.raw_vars)
-        )
-
-    def _drop_markers(self, bf: BindingFrame) -> BindingFrame:
-        markers = [c for c in bf.df.columns if c.startswith("__ex_")]
-        if not markers:
-            return bf
-        return BindingFrame(
-            bf.df.drop(*markers),
-            bf.term_vars,
-            {k: v for k, v in bf.native_vars.items() if k not in set(markers)},
-            bf.maybe_null,
-            bf.raw_vars,
-        )
-
-    def _materialize_exists(self, bf: BindingFrame, expr):
-        """Replace EXISTS/NOT EXISTS subexpressions with marker columns via
-        left-outer marker joins (general boolean composition)."""
-
-        def walk(e):
-            nonlocal bf
-            if isinstance(e, ExistsExpr):
-                self._marker_n += 1
-                marker = f"__ex_{self._marker_n}"
-                inner = self.eval_pattern(e.pattern)
-                shared = sorted(bf.all_vars & inner.all_vars)
-                if not shared:
-                    # uncorrelated EXISTS: constant marker
-                    flag = not inner.df.isEmpty()
-                    bf = BindingFrame(bf.df.withColumn(marker, F.lit(flag)),
-                                      bf.term_vars, {**bf.native_vars, marker: "bool"},
-                                      bf.maybe_null, bf.raw_vars)
-                else:
-                    # SPARQL compatibility: an UNBOUND shared var on EITHER
-                    # side is compatible with any binding of the other —
-                    # outer vars can be null after OPTIONAL/UNION upstream,
-                    # inner vars after OPTIONAL/UNION inside the EXISTS body
-                    nullable = [
-                        v for v in shared
-                        if v in bf.maybe_null or v in inner.maybe_null
-                    ]
-                    # never-null shared vars with equal raw provenance on
-                    # both sides match on the raw shadows — the inner
-                    # side's per-row IRI render is then pruned entirely
-                    inner = self._strip_raw(inner, set(nullable))
-                    cond, icols = F.lit(True), []
-                    for v in shared:
-                        eq, cols = self._var_eq(v, bf, inner, "__exr")
-                        if v in bf.maybe_null:
-                            eq = F.col(v).isNull() | eq
-                        if v in inner.maybe_null:
-                            eq = F.col(v + "__exr").isNull() | eq
-                        cond = cond & eq
-                        icols += cols
-                    exr_cols = [c + "__exr" for c in icols]
-                    idf = (inner.df.select(*[F.col(c).alias(c + "__exr") for c in icols])
-                           .distinct().withColumn(marker, F.lit(True)))
-                    if not nullable:
-                        joined = (
-                            bf.df.join(idf, on=cond, how="left_outer")
-                            .drop(*exr_cols)
-                            .withColumn(marker, F.coalesce(F.col(marker), F.lit(False)))
-                        )
-                    else:
-                        # a NULL outer var can match several distinct inner
-                        # rows; collapse back to one row per outer solution
-                        rid = f"__ex_rid_{self._marker_n}"
-                        src = bf.df.withColumn(rid, F.monotonically_increasing_id())
-                        j = src.join(idf, on=cond, how="left_outer")
-                        keep = [c for c in bf.df.columns]
-                        joined = (
-                            j.groupBy(rid)
-                            .agg(
-                                *[F.first(c, ignorenulls=False).alias(c) for c in keep],
-                                F.max(F.coalesce(F.col(marker), F.lit(False))).alias(marker),
-                            )
-                            .drop(rid)
-                        )
-                    bf = BindingFrame(
-                        joined,
-                        bf.term_vars, {**bf.native_vars, marker: "bool"},
-                        bf.maybe_null, bf.raw_vars,
-                    )
-                flag_col = Var(marker)
-                return Op("!", (flag_col,)) if e.negated else flag_col
-            if isinstance(e, Op):
-                return Op(e.op, tuple(walk(a) for a in e.args))
-            if isinstance(e, Call):
-                return Call(e.name, tuple(a if a == "*" else walk(a) for a in e.args),
-                            e.distinct, e.separator)
-            if isinstance(e, InExpr):
-                return InExpr(walk(e.expr), e.options, e.negated)
-            return e
-
-        return_expr = walk(expr)
-        return bf, return_expr
+        cond = self.compile_expr(expr, bf).as_bool()
+        return self._derive(bf, f"SELECT * FROM {bf.rel} AS t WHERE {cond}")
 
     def _extend(self, bf: BindingFrame, name: str, expr) -> BindingFrame:
-        bf, expr = self._materialize_exists(bf, expr)
         ev = self.compile_expr(expr, bf)
         if ev.kind == "term":
-            df = bf.df.withColumns({
-                name: ev.as_lex(),
-                f"{name}__dt": ev.dt_col(),
-                f"{name}__lang": ev.lang_col(),
-                f"{name}__num": ev.as_num(),
-            })
-            tv = set(bf.term_vars)
-            tv.add(name)
-            # a BIND whose expression errors leaves the var unbound (NULL)
-            return self._drop_markers(
-                BindingFrame(df, tv, bf.native_vars, bf.maybe_null | {name},
-                             bf.raw_vars)
-            )
-        df = bf.df.withColumn(name, ev.out_col())
-        nv = dict(bf.native_vars)
-        nv[name] = ev.kind
-        return self._drop_markers(
-            BindingFrame(df, bf.term_vars, nv, bf.maybe_null | {name},
-                         bf.raw_vars)
-        )
+            new = dict(zip((name + s for s in SHADOWS),
+                           (ev.as_lex(), ev.dt_col(), ev.lang_col(), ev.as_num())))
+            term_vars = bf.term_vars | {name}
+            native_vars = {k: x for k, x in bf.native_vars.items() if k != name}
+        else:
+            new = {name: ev.out_col()}
+            term_vars = bf.term_vars - {name}
+            native_vars = {**bf.native_vars, name: ev.kind}
+        cols = bf.select(skip=set(new)) + [f"{e} AS {sql_ident(c)}" for c, e in new.items()]
+        # a BIND whose expression errors leaves the var unbound (NULL)
+        return self._derive(bf, f"SELECT {', '.join(cols)} FROM {bf.rel} AS t",
+                            term_vars=term_vars, native_vars=native_vars,
+                            maybe_null=bf.maybe_null | {name},
+                            raw_vars={k: rb for k, rb in bf.raw_vars.items() if k != name})
+
+    def _exists(self, e: ExistsExpr, bf: BindingFrame) -> EV:
+        """(NOT) EXISTS as a correlated ``EXISTS`` subquery over the pattern's
+        block.  In a FILTER's conjunction Catalyst plans it as a LEFT SEMI
+        (LEFT ANTI) join, under OR, NOT or in a BIND as a marker
+        (existence) join, and without shared variables as a scalar
+        subquery run with the query, not while it compiles."""
+        inner = self.eval_pattern(e.pattern)
+        shared = sorted(bf.all_vars & inner.all_vars)
+        # SPARQL compatibility: an UNBOUND shared var on EITHER side is
+        # compatible with any binding of the other — outer vars can be null
+        # after OPTIONAL/UNION upstream, inner vars after OPTIONAL/UNION
+        # inside the EXISTS body.  Never-null shared vars with equal raw
+        # provenance on both sides match on the raw shadows — the inner
+        # side's per-row IRI render is then pruned entirely.
+        inner = self._strip_raw(inner, {v for v in shared if v in bf.maybe_null
+                                        or v in inner.maybe_null})
+        conds = []
+        for v in shared:
+            eq, _ = self._var_eq(v, bf, inner, "t", "x")
+            if v in bf.maybe_null:
+                eq = f"{_q('t', v)} IS NULL OR {eq}"
+            if v in inner.maybe_null:
+                eq = f"{_q('x', v)} IS NULL OR {eq}"
+            conds.append(f"({eq})")
+        where = f" WHERE {' AND '.join(conds)}" if conds else ""
+        sub = f"EXISTS (SELECT 1 FROM {inner.rel} AS x{where})"
+        return ev_bool(f"(NOT {sub})" if e.negated else f"({sub})")
 
     # -- expression compiler ------------------------------------------------------------
 
-    def compile_expr(self, e, bf: BindingFrame, rj_suffix_for: set | None = None) -> EV:
-        rj = rj_suffix_for or set()
+    def compile_expr(self, e, bf: BindingFrame, rj: set | None = None) -> EV:
+        """SQL text of ``e`` over a row of ``bf`` aliased ``t``; in a join's
+        ON clause (``rj`` given) over ``l``, and ``r`` for the vars in
+        ``rj``."""
 
-        def col_of(v: str, shadow: str = "") -> Column:
-            c = v + shadow
-            return F.col(c + "__rj") if v in rj else F.col(c)
+        def col_of(v: str, shadow: str = "") -> str:
+            if rj is None:
+                return _q("t", v + shadow)
+            return _q("r" if v in rj else "l", v + shadow)
 
         if isinstance(e, Var):
             v = e.name
@@ -1292,11 +1208,12 @@ class Evaluator:
                 kind = bf.native_vars[v]
                 c = col_of(v)
                 if kind == "num":
-                    return EV(num=c.cast("double"), native=c, kind="num",
-                              lex=c.cast("string"))
+                    return EV(num=f"CAST({c} AS DOUBLE)", native=c, kind="num",
+                              lex=f"CAST({c} AS STRING)")
                 if kind == "bool":
-                    return EV(boolean=c, native=c, kind="bool", lex=c.cast("string"))
-                return EV(lex=c.cast("string"), native=c, kind="str")
+                    return EV(boolean=c, native=c, kind="bool",
+                              lex=f"CAST({c} AS STRING)")
+                return EV(lex=f"CAST({c} AS STRING)", native=c, kind="str")
             if v in bf.term_vars:
                 ev = EV(
                     lex=col_of(v),
@@ -1305,44 +1222,45 @@ class Evaluator:
                     lang=col_of(v, "__lang"),
                     kind="term",
                 )
-                if v in bf.raw_vars and v not in rj:
+                if v in bf.raw_vars and not (rj and v in rj):
                     rb = bf.raw_vars[v]
-                    ev.raw_cols = tuple(F.col(c) for c in rb.cols)
+                    ev.raw_cols = tuple(col_of(c) for c in rb.cols)
                     ev.raw_prov = rb.prov
                 return ev
             # never-bound variable: NULL term (BOUND() -> false)
-            null_s = F.lit(None).cast("string")
-            return EV(lex=null_s, num=F.lit(None).cast("double"),
-                      dt=null_s, lang=null_s, kind="term")
+            return EV(lex=NULL_S, num=NULL_D, dt=NULL_S, lang=NULL_S, kind="term")
         if isinstance(e, Lit):
+            param = self.stmt.param
             if e.datatype in terms.NUMERIC_XSD:
                 val = float(e.value)
-                return EV(num=F.lit(val), native=F.lit(int(val) if val.is_integer() and e.datatype == terms.XSD_INTEGER else val),
-                          lex=F.lit(e.value), kind="num")
+                native = (int(val) if val.is_integer() and e.datatype == terms.XSD_INTEGER
+                          else val)
+                return EV(num=param(val), native=param(native),
+                          lex=param(e.value), kind="num")
             if e.datatype == terms.XSD_BOOLEAN:
-                return ev_bool(F.lit(e.value == "true"))
-            return EV(lex=F.lit(e.value), dt=F.lit(e.datatype).cast("string"),
-                      lang=F.lit(e.language).cast("string"),
-                      native=F.lit(e.value), kind="str",
+                return ev_bool("true" if e.value == "true" else "false")
+            return EV(lex=param(e.value),
+                      dt=NULL_S if e.datatype is None else f"CAST({param(e.datatype)} AS STRING)",
+                      lang=NULL_S if e.language is None else f"CAST({param(e.language)} AS STRING)",
+                      native=param(e.value), kind="str",
                       static_num=("never" if _never_numeric_value(e.value)
                                   else "maybe"))
         if isinstance(e, IRI):
-            return EV(lex=F.lit(f"<{e.value}>"), kind="term",
-                      num=F.lit(None).cast("double"), static_num="never")
+            return EV(lex=self.stmt.param(f"<{e.value}>"), kind="term",
+                      num=NULL_D, static_num="never")
         if isinstance(e, Op):
             return self._compile_op(e, bf, rj)
         if isinstance(e, Call):
             return self._compile_call(e, bf, rj)
         if isinstance(e, InExpr):
             sub = self.compile_expr(e.expr, bf, rj)
-            opts = [self.compile_expr(o, bf, rj) for o in e.options]
-            conds = [self._eq(sub, o) for o in opts]
-            c = conds[0]
-            for extra in conds[1:]:
-                c = c | extra
-            return ev_bool(~c if e.negated else c)
+            c = " OR ".join(self._eq(sub, self.compile_expr(o, bf, rj))
+                            for o in e.options)
+            return ev_bool(f"(NOT ({c}))" if e.negated else f"({c})")
         if isinstance(e, ExistsExpr):
-            raise SparqlNotImplemented("EXISTS outside FILTER/BIND")
+            if rj is not None:
+                raise SparqlNotImplemented("EXISTS in an OPTIONAL's filter")
+            return self._exists(e, bf)
         raise SparqlNotImplemented(f"expression {e!r}")
 
     @staticmethod
@@ -1353,75 +1271,61 @@ class Evaluator:
         return any(e.static_num == "never" for e in evs)
 
     @staticmethod
-    def _raw_eq(acols: tuple, bcols: tuple) -> Column:
+    def _raw_eq(acols: tuple, bcols: tuple) -> str:
         """Componentwise raw equality with the lexical path's exact NULL
         semantics: any NULL input makes the result NULL (a partially-null
         raw tuple renders a NULL lexical, and NULL = x is NULL, never
         false — plain AND-folding could yield false instead)."""
-        eq = None
-        for ca, cb in zip(acols, bcols):
-            e = ca == cb
-            eq = e if eq is None else eq & e
+        eq = " AND ".join(f"{ca} = {cb}" for ca, cb in zip(acols, bcols))
         if len(acols) == 1:
-            return eq
-        nn = None
-        for c in list(acols) + list(bcols):
-            n = c.isNotNull()
-            nn = n if nn is None else nn & n
-        return F.when(nn, eq).otherwise(F.lit(None).cast("boolean"))
+            return f"({eq})"
+        nn = " AND ".join(f"{c} IS NOT NULL" for c in list(acols) + list(bcols))
+        return f"CASE WHEN {nn} THEN {eq} ELSE CAST(NULL AS BOOLEAN) END"
 
-    def _eq(self, a: EV, b: EV) -> Column:
+    def _eq(self, a: EV, b: EV) -> str:
         if a.raw_prov is not None and a.raw_prov == b.raw_prov:
             return self._raw_eq(a.raw_cols, b.raw_cols)
         if a.kind == "num" or b.kind == "num":
-            return a.as_num() == b.as_num()
+            return f"({a.as_num()} = {b.as_num()})"
         if self._never_numeric(a, b):
-            return a.as_lex() == b.as_lex()
+            return f"({a.as_lex()} = {b.as_lex()})"
         if a.kind == "term" and b.kind == "term":
             an, bn = a.as_num(), b.as_num()
-            return F.when(an.isNotNull() & bn.isNotNull(), an == bn).otherwise(
-                a.as_lex() == b.as_lex()
-            )
-        return a.as_lex() == b.as_lex()
+            return (f"CASE WHEN {an} IS NOT NULL AND {bn} IS NOT NULL THEN {an} = {bn} "
+                    f"ELSE {a.as_lex()} = {b.as_lex()} END")
+        return f"({a.as_lex()} = {b.as_lex()})"
 
-    def _cmp(self, op: str, a: EV, b: EV) -> Column:
-        import operator
-
-        ops = {"<": operator.lt, ">": operator.gt, "<=": operator.le, ">=": operator.ge}
-        f = ops[op]
+    def _cmp(self, op: str, a: EV, b: EV) -> str:
         if a.kind == "num" or b.kind == "num":
-            return f(a.as_num(), b.as_num())
+            return f"({a.as_num()} {op} {b.as_num()})"
         if self._never_numeric(a, b):
-            return f(a.as_lex(), b.as_lex())
+            return f"({a.as_lex()} {op} {b.as_lex()})"
         an, bn = a.as_num(), b.as_num()
-        return F.when(an.isNotNull() & bn.isNotNull(), f(an, bn)).otherwise(
-            f(a.as_lex(), b.as_lex())
-        )
+        return (f"CASE WHEN {an} IS NOT NULL AND {bn} IS NOT NULL THEN {an} {op} {bn} "
+                f"ELSE {a.as_lex()} {op} {b.as_lex()} END")
 
-    def _compile_op(self, e: Op, bf: BindingFrame, rj: set) -> EV:
+    def _compile_op(self, e: Op, bf: BindingFrame, rj: set | None) -> EV:
         args = [self.compile_expr(a, bf, rj) for a in e.args]
         op = e.op
         if op == "||":
-            return ev_bool(args[0].as_bool() | args[1].as_bool())
+            return ev_bool(f"({args[0].as_bool()} OR {args[1].as_bool()})")
         if op == "&&":
-            return ev_bool(args[0].as_bool() & args[1].as_bool())
+            return ev_bool(f"({args[0].as_bool()} AND {args[1].as_bool()})")
         if op == "!":
-            return ev_bool(~args[0].as_bool())
+            return ev_bool(f"(NOT {args[0].as_bool()})")
         if op == "=":
             return ev_bool(self._eq(args[0], args[1]))
         if op == "!=":
-            return ev_bool(~self._eq(args[0], args[1]))
+            return ev_bool(f"(NOT {self._eq(args[0], args[1])})")
         if op in ("<", ">", "<=", ">="):
             return ev_bool(self._cmp(op, args[0], args[1]))
         if op in ("+", "-", "*", "/"):
-            x, y = args[0].as_num(), args[1].as_num()
-            out = {"+": x + y, "-": x - y, "*": x * y, "/": x / y}[op]
-            return ev_num(out)
+            return ev_num(f"({args[0].as_num()} {op} {args[1].as_num()})")
         if op == "neg":
-            return ev_num(-args[0].as_num())
+            return ev_num(f"(- {args[0].as_num()})")
         raise SparqlNotImplemented(f"operator {op}")
 
-    def _compile_call(self, e: Call, bf: BindingFrame, rj: set) -> EV:
+    def _compile_call(self, e: Call, bf: BindingFrame, rj: set | None) -> EV:
         name = e.name
         if name in AGGREGATES:
             raise SparqlNotImplemented(f"aggregate {name} outside GROUP context")
@@ -1429,122 +1333,112 @@ class Evaluator:
         if name == "STR":
             return ev_str(args[0].as_str())
         if name == "LANG":
-            return ev_str(F.coalesce(args[0].lang_col(), F.lit("")))
+            return ev_str(f"coalesce({args[0].lang_col()}, '')")
         if name == "LANGMATCHES":
-            return ev_bool(
-                (F.lower(args[1].as_str()) == "*") & (F.length(args[0].as_str()) > 0)
-                | (F.lower(args[0].as_str()) == F.lower(args[1].as_str()))
-            )
+            tag, rng = args[0].as_str(), args[1].as_str()
+            return ev_bool(f"((lower({rng}) = '*' AND length({tag}) > 0) "
+                           f"OR lower({tag}) = lower({rng}))")
         if name == "DATATYPE":
-            return ev_str(F.coalesce(args[0].dt_col(), F.lit(terms.XSD_STRING)))
+            return ev_str(f"coalesce({args[0].dt_col()}, {_str_sql(terms.XSD_STRING)})")
         if name == "BOUND":
-            return ev_bool(args[0].as_lex().isNotNull())
+            return ev_bool(f"({args[0].as_lex()} IS NOT NULL)")
         if name in ("IRI", "URI"):
-            return EV(lex=F.concat(F.lit("<"), args[0].as_str(), F.lit(">")),
-                      num=F.lit(None).cast("double"), kind="term")
+            return EV(lex=f"concat('<', {args[0].as_str()}, '>')", num=NULL_D, kind="term")
         if name == "STRLEN":
-            return ev_num(F.length(args[0].as_str()).cast("bigint"))
+            return ev_num(f"CAST(length({args[0].as_str()}) AS BIGINT)")
         if name == "UCASE":
-            return ev_str(F.upper(args[0].as_str()))
+            return ev_str(f"upper({args[0].as_str()})")
         if name == "LCASE":
-            return ev_str(F.lower(args[0].as_str()))
+            return ev_str(f"lower({args[0].as_str()})")
         if name == "CONCAT":
-            return ev_str(F.concat(*[a.as_str() for a in args]))
-        if name == "CONTAINS":
-            return ev_bool(F.contains(args[0].as_str(), args[1].as_str()))
-        if name == "STRSTARTS":
-            return ev_bool(F.startswith(args[0].as_str(), args[1].as_str()))
-        if name == "STRENDS":
-            return ev_bool(F.endswith(args[0].as_str(), args[1].as_str()))
+            return ev_str(f"concat({', '.join(a.as_str() for a in args)})")
+        if name in ("CONTAINS", "STRSTARTS", "STRENDS"):
+            fn = {"CONTAINS": "contains", "STRSTARTS": "startswith",
+                  "STRENDS": "endswith"}[name]
+            return ev_bool(f"{fn}({args[0].as_str()}, {args[1].as_str()})")
         if name == "STRBEFORE":
             s, t = args[0].as_str(), args[1].as_str()
-            pos = F.instr(s, t)
-            return ev_str(F.when(pos > 0, F.substring(s, 1, pos - 1)).otherwise(F.lit("")))
+            return ev_str(f"CASE WHEN instr({s}, {t}) > 0 "
+                          f"THEN substring({s}, 1, instr({s}, {t}) - 1) ELSE '' END")
         if name == "STRAFTER":
             s, t = args[0].as_str(), args[1].as_str()
-            pos = F.instr(s, t)
-            return ev_str(
-                F.when(pos > 0, s.substr(pos + F.length(t), F.length(s))).otherwise(F.lit(""))
-            )
+            return ev_str(f"CASE WHEN instr({s}, {t}) > 0 "
+                          f"THEN substr({s}, instr({s}, {t}) + length({t}), length({s})) "
+                          f"ELSE '' END")
         if name == "REPLACE":
-            return ev_str(F.regexp_replace(args[0].as_str(), args[1].as_str(), args[2].as_str()))
+            return ev_str(f"regexp_replace({args[0].as_str()}, {args[1].as_str()}, "
+                          f"{args[2].as_str()})")
         if name == "SUBSTR":
             s = args[0].as_str()
-            start = args[1].as_num().cast("int")
-            if len(args) > 2:
-                return ev_str(s.substr(start, args[2].as_num().cast("int")))
-            return ev_str(s.substr(start, F.length(s)))
+            start = f"CAST({args[1].as_num()} AS INT)"
+            n = f"CAST({args[2].as_num()} AS INT)" if len(args) > 2 else f"length({s})"
+            return ev_str(f"substr({s}, {start}, {n})")
         if name == "REGEX":
             pat = e.args[1]
             flags = ""
             if len(e.args) > 2 and isinstance(e.args[2], Lit):
                 flags = e.args[2].value
             if isinstance(pat, Lit):
-                p = ("(?i)" if "i" in flags else "") + pat.value
-                return ev_bool(args[0].as_str().rlike(p))
-            return ev_bool(args[0].as_str().rlike(args[1].as_str()))
+                p = self.stmt.param(("(?i)" if "i" in flags else "") + pat.value)
+                return ev_bool(f"({args[0].as_str()} RLIKE {p})")
+            return ev_bool(f"({args[0].as_str()} RLIKE {args[1].as_str()})")
         if name == "ABS":
-            return ev_num(F.abs(args[0].as_num()))
-        if name == "CEIL":
-            return ev_num(F.ceil(args[0].as_num()).cast("double"))
-        if name == "FLOOR":
-            return ev_num(F.floor(args[0].as_num()).cast("double"))
+            return ev_num(f"abs({args[0].as_num()})")
+        if name in ("CEIL", "FLOOR"):
+            return ev_num(f"CAST({name.lower()}({args[0].as_num()}) AS DOUBLE)")
         if name == "ROUND":
-            if len(args) > 1:
-                return ev_num(F.round(args[0].as_num(), 0))
-            return ev_num(F.round(args[0].as_num(), 0))
+            return ev_num(f"round({args[0].as_num()}, 0)")
         if name in ("YEAR", "MONTH", "DAY", "HOURS", "MINUTES", "SECONDS"):
-            ts = args[0].as_str().try_cast("timestamp")
-            fn = {"YEAR": F.year, "MONTH": F.month, "DAY": F.dayofmonth,
-                  "HOURS": F.hour, "MINUTES": F.minute, "SECONDS": F.second}[name]
-            return ev_num(fn(ts))
+            fn = {"YEAR": "year", "MONTH": "month", "DAY": "dayofmonth",
+                  "HOURS": "hour", "MINUTES": "minute", "SECONDS": "second"}[name]
+            return ev_num(f"{fn}(try_cast({args[0].as_str()} AS TIMESTAMP))")
         if name == "MD5":
-            return ev_str(F.md5(args[0].as_str()))
+            return ev_str(f"md5({args[0].as_str()})")
         if name == "SHA256":
-            return ev_str(F.sha2(args[0].as_str(), 256))
+            return ev_str(f"sha2({args[0].as_str()}, 256)")
         if name == "IF":
             c = args[0].as_bool()
             a, b = args[1], args[2]
+
+            def pick(x: str, y: str) -> str:
+                return f"CASE WHEN {c} THEN {x} ELSE {y} END"
+
             if a.kind == "num" or b.kind == "num":
-                return ev_num(F.when(c, a.as_num()).otherwise(b.as_num()))
+                return ev_num(pick(a.as_num(), b.as_num()))
             if a.kind == "term" and b.kind == "term":
                 return EV(
-                    lex=F.when(c, a.as_lex()).otherwise(b.as_lex()),
-                    num=F.when(c, a.as_num()).otherwise(b.as_num()),
-                    dt=F.when(c, a.dt_col()).otherwise(b.dt_col()),
-                    lang=F.when(c, a.lang_col()).otherwise(b.lang_col()),
+                    lex=pick(a.as_lex(), b.as_lex()),
+                    num=pick(a.as_num(), b.as_num()),
+                    dt=pick(a.dt_col(), b.dt_col()),
+                    lang=pick(a.lang_col(), b.lang_col()),
                     kind="term",
                 )
-            return ev_str(F.when(c, a.as_str()).otherwise(b.as_str()))
+            return ev_str(pick(a.as_str(), b.as_str()))
         if name == "COALESCE":
             if all(a.kind == "num" for a in args):
-                return ev_num(F.coalesce(*[a.as_num() for a in args]))
-            return ev_str(F.coalesce(*[a.as_str() for a in args]))
+                return ev_num(f"coalesce({', '.join(a.as_num() for a in args)})")
+            return ev_str(f"coalesce({', '.join(a.as_str() for a in args)})")
         if name == "SAMETERM":
             a, b = args
-            return ev_bool(
-                a.as_lex().eqNullSafe(b.as_lex())
-                & a.dt_col().eqNullSafe(b.dt_col())
-                & a.lang_col().eqNullSafe(b.lang_col())
-            )
+            return ev_bool(f"({a.as_lex()} <=> {b.as_lex()} AND {a.dt_col()} <=> {b.dt_col()} "
+                           f"AND {a.lang_col()} <=> {b.lang_col()})")
         if name in ("ISIRI", "ISURI"):
-            lx = args[0].as_lex()
-            return ev_bool(lx.startswith("<"))
+            return ev_bool(f"startswith({args[0].as_lex()}, '<')")
         if name == "ISBLANK":
-            return ev_bool(args[0].as_lex().startswith("_:"))
+            return ev_bool(f"startswith({args[0].as_lex()}, '_:')")
         if name == "ISLITERAL":
             lx = args[0].as_lex()
-            return ev_bool(lx.isNotNull() & ~lx.startswith("<") & ~lx.startswith("_:"))
+            return ev_bool(f"({lx} IS NOT NULL AND NOT startswith({lx}, '<') "
+                           f"AND NOT startswith({lx}, '_:'))")
         if name == "ISNUMERIC":
-            return ev_bool(args[0].as_num().isNotNull())
+            return ev_bool(f"({args[0].as_num()} IS NOT NULL)")
         if name == "ENCODE_FOR_URI":
-            return ev_str(terms.iri_safe_col(args[0].as_str()))
+            return ev_str(terms.iri_safe_sql_spark(args[0].as_str()))
         if name == "STRDT":
-            return EV(lex=args[0].as_str(), dt=args[1].as_str(), kind="term",
-                      num=args[0].as_str().try_cast("double"))
+            s = args[0].as_str()
+            return EV(lex=s, dt=args[1].as_str(), kind="term", num=f"try_cast({s} AS DOUBLE)")
         if name == "STRLANG":
-            return EV(lex=args[0].as_str(), lang=args[1].as_str(), kind="term",
-                      num=F.lit(None).cast("double"))
+            return EV(lex=args[0].as_str(), lang=args[1].as_str(), kind="term", num=NULL_D)
         if name == "BNODE":
             raise SparqlNotImplemented("BNODE()")
         if name.startswith("IRI_FUNC:"):
@@ -1552,7 +1446,9 @@ class Evaluator:
             # (reference: rdflib_r2r/conversion_utils.py SQL_FUNC namespace):
             # the local name is the engine function name
             fname = name.rsplit("/", 1)[-1].rsplit("#", 1)[-1]
-            c = F.call_function(fname, *[a.out_col() for a in args])
-            return EV(native=c, lex=c.cast("string"),
-                      num=c.cast("string").try_cast("double"), kind="str")
+            if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", fname):
+                raise SparqlNotImplemented(f"function {fname!r}")
+            c = f"{fname}({', '.join(a.out_col() for a in args)})"
+            return EV(native=c, lex=f"CAST({c} AS STRING)",
+                      num=f"try_cast(CAST({c} AS STRING) AS DOUBLE)", kind="str")
         raise SparqlNotImplemented(f"function {name}")

@@ -106,7 +106,7 @@ class SparkR2RStore:
     def _evaluator(self) -> Evaluator:
         return Evaluator(
             self.spark,
-            BGPCompiler(self.spark, self.tmaps, self.compiler),
+            BGPCompiler(self.tmaps, self.compiler),
             self.dump,
         )
 
@@ -124,9 +124,9 @@ class SparkR2RStore:
         joining a one-row VALUES relation onto the pattern."""
         if not init_bindings:
             # prepared-plan cache: compiling SPARQL to a DataFrame costs
-            # real driver time (BGP candidate enumeration, one spark.sql
-            # statement per BGP, the evaluator's DataFrame calls, each
-            # analyzed by Spark); DataFrames are immutable, so repeated
+            # real time (BGP candidate enumeration, building the query's
+            # statement, Spark's analysis of it); DataFrames are
+            # immutable, so repeated
             # query TEXT reuses the compiled plan exactly like a prepared
             # statement.  The logical sources and the tables' views are
             # built once per store by the mapping compiler, not here.
@@ -176,21 +176,22 @@ class SparkR2RStore:
             return ev.eval_describe(q)
         raise TypeError(f"unsupported query form {type(q).__name__}")
 
-    def _query_bf(self, sparql: str, init_ns=None) -> BindingFrame:
+    def _query_bf(self, sparql: str, init_ns=None) -> tuple[DataFrame, BindingFrame]:
+        """A SELECT's solutions with every term column, and their frame."""
         q = self._parse(sparql, init_ns)
         if not isinstance(q, A.SelectQuery):
             raise TypeError("exec() requires a SELECT query")
-        return self._evaluator()._eval_select_bf(q)
+        return self._evaluator().select_frame(q)
 
     def exec(self, sparql: str, init_ns: dict[str, str] | None = None
              ) -> Iterator[dict[str, object]]:
         """Typed binding iterator: each solution is {var: Python value} with
         SQL values decoded to RDF-term types (reference: r2r_store.py:150-169
         ``exec`` + make_node)."""
-        bf = self._query_bf(sparql, init_ns)
+        df, bf = self._query_bf(sparql, init_ns)
         term_vars = sorted(bf.term_vars)
         native_vars = sorted(bf.native_vars)
-        for row in bf.df.toLocalIterator():
+        for row in df.toLocalIterator():
             d = row.asDict()
             out: dict[str, object] = {}
             for v in term_vars:

@@ -1,8 +1,8 @@
-"""RDF term model + lexical encoding, with THREE synchronized backends:
+"""RDF term model + lexical encoding, with synchronized backends:
 
 1. pure Python (used by the mapping kernel, template inversion, tests),
-2. Spark ``Column`` expressions (JVM-side, whole-stage-codegen friendly —
-   no Python in the hot path),
+2. Spark SQL text (JVM-side, whole-stage-codegen friendly — no Python in
+   the hot path),
 3. ANSI-SQL text (so DuckDB oracles can reproduce the exact same bytes).
 
 Term encoding in DataFrames (cf. SURVEY.md §1.1): each of subj/pred/obj is a
@@ -23,8 +23,6 @@ from __future__ import annotations
 import re
 import urllib.parse
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 RR = "http://www.w3.org/ns/r2rml#"
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -71,25 +69,6 @@ _UNSAFE_CLASS = "[" + "".join(
 ) + "]"
 
 
-def iri_safe_col(col: Column) -> Column:
-    """Spark Column twin: chain of literal string replaces (JVM-side,
-    codegen-able; no regex engine involved).
-
-    Round 7 (guide §1.2 "per-task work"): the 29-replace chain re-scans
-    and re-allocates the string once per pair, per row — for template
-    slots over numeric keys (most subject IRIs) every pass is a no-op.
-    A single containment test gates the chain, so clean values (digits,
-    plain names) pay one regex scan instead of 29 string rebuilds; rows
-    that do contain an unsafe char take the identical chain.  NULL
-    propagates through both branches identically (rlike(NULL) is NULL ->
-    otherwise -> NULL, matching the chain's NULL-in/NULL-out)."""
-    s = col.cast("string")
-    out = s
-    for ch, rep in PERCENT_PAIRS:
-        out = F.replace(out, F.lit(ch), F.lit(rep))
-    return F.when(s.rlike(_UNSAFE_CLASS), out).otherwise(s)
-
-
 def iri_safe_sql(expr: str) -> str:
     """SQL twin: nested replace() calls, same order. Emits the dialect
     subset BOTH DuckDB and Spark SQL parse (chr(92) instead of a backslash
@@ -105,10 +84,12 @@ def iri_safe_sql(expr: str) -> str:
 
 
 def iri_safe_sql_spark(expr: str) -> str:
-    """Spark-ONLY SQL text with the same row-gating as
-    :func:`iri_safe_col`: one RLIKE containment test skips the 29-replace
-    chain for values with nothing to encode (numeric template keys, plain
-    names).  Never parsed by DuckDB, so Spark escaping rules apply.
+    """Spark-ONLY SQL text of the replace chain, gated: the 29 replaces
+    re-scan and re-allocate the string once per pair, per row, and for
+    template slots over numeric keys (most subject IRIs) every pass is a
+    no-op, so one RLIKE containment test skips the chain for values with
+    nothing to encode.  NULL propagates through both branches alike.
+    Never parsed by DuckDB, so Spark escaping rules apply.
     Value-identical to :func:`iri_safe_sql` (parity pinned by tests)."""
     s = f"CAST({expr} AS STRING)"
     out = s

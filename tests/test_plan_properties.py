@@ -216,3 +216,89 @@ def test_no_inferred_filter_recompute_under_explode(registry, spark):
             raise AssertionError(
                 "inferred size-filter recomputes the array chain:\n" + line
             )
+
+
+BSBM = ["bsbm_bi1", "bsbm_bi2", "bsbm_bi3", "bsbm_bi4", "bsbm_bi5", "bsbm_bi7",
+        "bsbm_explore1", "bsbm_explore5"]
+
+# the initial physical plan's operators per BSBM shape at sf0.001: each
+# join by strategy and type, shuffle and broadcast exchanges, hash
+# aggregates and parquet scans per table.  A change to how queries compile
+# must keep them unless it means to change the plan
+PLAN_SHAPES = {
+    "bsbm_bi1": {"BroadcastExchange": 6, "BroadcastHashJoin:Inner": 6, "Exchange": 3,
+                 "FileScan:customer": 1, "FileScan:lineitem": 1, "FileScan:nation": 1,
+                 "FileScan:orders": 1, "FileScan:part": 3, "HashAggregate": 6},
+    "bsbm_bi2": {"BroadcastExchange": 2, "BroadcastHashJoin:Cross": 1,
+                 "BroadcastHashJoin:Inner": 1, "Exchange": 1, "FileScan:part": 3,
+                 "HashAggregate": 2},
+    "bsbm_bi3": {"BroadcastExchange": 2, "BroadcastHashJoin:Inner": 2, "Exchange": 2,
+                 "FileScan:lineitem": 2, "FileScan:orders": 2, "HashAggregate": 4,
+                 "SortMergeJoin:Inner": 1},
+    "bsbm_bi4": {"BroadcastExchange": 4, "BroadcastHashJoin:Inner": 2,
+                 "BroadcastHashJoin:LeftAnti": 1, "BroadcastNestedLoopJoin:Inner": 1,
+                 "Exchange": 3, "FileScan:lineitem": 2, "FileScan:part": 4,
+                 "HashAggregate": 6, "SortMergeJoin:Inner": 1},
+    "bsbm_bi5": {"BroadcastExchange": 9, "BroadcastHashJoin:Inner": 9, "Exchange": 8,
+                 "FileScan:customer": 2, "FileScan:lineitem": 3, "FileScan:nation": 2,
+                 "FileScan:orders": 2, "FileScan:part": 3, "HashAggregate": 8,
+                 "SortMergeJoin:Inner": 2},
+    "bsbm_bi7": {"BroadcastExchange": 3, "BroadcastHashJoin:Inner": 3, "Exchange": 3,
+                 "FileScan:lineitem": 2, "FileScan:nation": 1, "FileScan:part": 1,
+                 "FileScan:supplier": 1, "HashAggregate": 2, "SortMergeJoin:LeftAnti": 1},
+    "bsbm_explore1": {"Exchange": 1, "FileScan:part": 2, "HashAggregate": 2},
+    "bsbm_explore5": {"BroadcastExchange": 1, "BroadcastHashJoin:Inner": 1,
+                      "Exchange": 1, "FileScan:part": 2, "HashAggregate": 2},
+}
+
+
+def _plan_shape(df) -> dict:
+    import collections
+    import re
+
+    joins = (r"(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin|"
+             r"BroadcastNestedLoopJoin|CartesianProduct)\b(.*)")
+    kinds = r"\b(Inner|LeftOuter|RightOuter|FullOuter|LeftSemi|LeftAnti|ExistenceJoin|Cross)\b"
+    shape = collections.Counter()
+    # a new projection plans afresh: once a query has run, its own adaptive
+    # plan shows the final plan beside the initial one
+    plan = df.select("*")._jdf.queryExecution().executedPlan().toString()
+    for line in plan.splitlines():
+        if m := re.search(joins, line):
+            kind = re.search(kinds, m.group(2))
+            shape[f"{m.group(1)}:{kind.group(1) if kind else 'Cross'}"] += 1
+        if re.search(r"\bExchange (hashpartitioning|SinglePartition|rangepartitioning|"
+                     r"RoundRobin)", line):
+            shape["Exchange"] += 1
+        shape["BroadcastExchange"] += "BroadcastExchange" in line
+        shape["HashAggregate"] += bool(re.search(r"\bHashAggregate\(", line))
+        if m := re.search(r"FileScan parquet .*/(\w+)\.parquet\]", line):
+            shape["FileScan:" + m.group(1)] += 1
+    return {k: n for k, n in shape.items() if n}
+
+
+@pytest.mark.parametrize("name", BSBM)
+def test_bsbm_plan_shapes(registry, spark, name):
+    assert _plan_shape(registry[name](spark, SF_DIR)) == PLAN_SHAPES[name]
+
+
+@pytest.mark.parametrize("name", ["bsbm_bi4", "bsbm_bi7"])
+def test_not_exists_is_an_anti_join(registry, spark, name):
+    # FILTER NOT EXISTS is a correlated subquery that Catalyst rewrites
+    # into a LEFT ANTI join: no marker column, no DISTINCT of the inner side
+    plan = _plan(registry, spark, name)
+    assert "LeftAnti" in plan
+    assert "__ex_" not in plan
+
+
+def test_folded_alternatives_render_where_read(registry, spark):
+    # explore5 and bi2 join their ProductFeature stars on the raw columns
+    # and never project a feature: the folded alternatives carry only raws
+    # and the render is pruned.  bi4 renders ?feature once, for its answer
+    def renders(name):
+        df = registry[name](spark, SF_DIR)
+        return df._jdf.queryExecution().optimizedPlan().toString().count("ProductFeature")
+
+    assert renders("bsbm_explore5") == 0
+    assert renders("bsbm_bi2") == 0
+    assert renders("bsbm_bi4") == 1

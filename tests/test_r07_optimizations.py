@@ -18,12 +18,12 @@ TRICKY = [
 ]
 
 
-def test_iri_safe_col_gated_matches_python(spark):
+def test_iri_safe_sql_spark_gated_matches_python(spark):
     from rdflib_r2r_spark import terms
 
     df = spark.createDataFrame([(v,) for v in TRICKY] + [(None,)], "v string")
     got = {r["v"]: r["enc"] for r in df.select(
-        "v", terms.iri_safe_col(F.col("v")).alias("enc")).collect()}
+        "v", F.expr(terms.iri_safe_sql_spark("v")).alias("enc")).collect()}
     for v in TRICKY:
         assert got[v] == terms.iri_safe_py(v), v
     assert got[None] is None

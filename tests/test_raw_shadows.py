@@ -60,9 +60,15 @@ def test_bi3_scan_filters_never_render(registry, spark):
 
 
 def test_bi7_exists_matches_on_raw(registry, spark):
-    # the NOT EXISTS semi side must join on the renamed raw shadow
+    # the NOT EXISTS anti join must key both sides on the raw shadow
+    import re
+
     plan = plan_of(registry["bsbm_bi7"](spark, SF_DIR))
-    assert "__raw0__exr" in plan, "bsbm_bi7 EXISTS fell back to lexical match"
+    anti = [b for b in plan.split("\n\n") if "Join type: LeftAnti" in b]
+    assert len(anti) == 1, "bsbm_bi7 NOT EXISTS is not one anti join"
+    keys = re.findall(r"(Left|Right) keys \[1\]: \[(\w+)#", anti[0])
+    assert [k for _, k in keys] == ["product__raw0"] * 2, (
+        "bsbm_bi7 EXISTS fell back to lexical match")
 
 
 def test_raw_binding_eligibility_guards(spark):
@@ -120,8 +126,8 @@ def test_raw_eq_null_semantics(spark):
         [(1, 2, 2, 5), (1, None, 2, 5), (None, None, None, None), (1, 2, 1, 2)],
         "a1 long, a2 long, b1 long, b2 long",
     )
-    eq = Evaluator._raw_eq((F.col("a1"), F.col("a2")), (F.col("b1"), F.col("b2")))
-    got = [r[0] for r in df.select(eq.alias("e")).collect()]
+    eq = Evaluator._raw_eq(("a1", "a2"), ("b1", "b2"))
+    got = [r[0] for r in df.select(F.expr(eq).alias("e")).collect()]
     assert got == [False, None, None, True]
 
 

@@ -127,7 +127,7 @@ def test_in_repo_sql_query_case_through_sparql(spark):
                           mapping_from_ttl(case.mapping_ttl))
     expected = rdb2rdf.parse_nq(case.expected_nq)
     for pred in sorted({q[1] for q in expected}):
-        df = store._query_bf(f"SELECT ?s ?o {{ ?s {pred} ?o }}").df
+        df, _ = store._query_bf(f"SELECT ?s ?o {{ ?s {pred} ?o }}")
         got = {(r["s"], pred, r["o"], r["o__dt"] or "", r["o__lang"] or "", "")
                for r in df.collect()}
         assert got == {q for q in expected if q[1] == pred}, pred

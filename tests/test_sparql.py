@@ -618,6 +618,36 @@ def test_not_exists_compares_terms_not_lexicals(typed_vs_plain):
     assert df.count() == 0
 
 
+def test_not_exists_over_an_optional_var(store):
+    # an unbound outer ?d is compatible with every inner solution, so the
+    # NOT EXISTS removes order 4 (no shippeddate) along with order 3, whose
+    # shippeddate is an orderdate
+    df = store.query(
+        """select ?o { ?o a Demo:Orders OPTIONAL { ?o Demo:shippeddate ?d }
+           FILTER NOT EXISTS { ?x Demo:orderdate ?d } }"""
+    )
+    assert rows(df, "o") == {(f"<{BASE}orders/1>",), (f"<{BASE}orders/2>",)}
+
+
+def test_uncorrelated_exists_runs_no_job_to_compile(spark, store):
+    # an EXISTS that shares no variable is a subquery of the query's one
+    # statement: building the DataFrame runs no Spark job, and the answer
+    # is every outer solution or none
+    sc = spark.sparkContext
+    group = "uncorrelated-exists-compile"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        found = store.query("select ?o { ?o a Demo:Orders "
+                            "FILTER EXISTS { ?s Demo:shipperid 2 } }")
+        missing = store.query("select ?o { ?o a Demo:Orders "
+                              "FILTER NOT EXISTS { ?s Demo:shipperid 2 } }")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert rows(found, "o") == {(f"<{BASE}orders/{i}>",) for i in range(1, 5)}
+    assert missing.count() == 0
+
+
 # -- negated property sets (SPARQL 1.1 9.1 — beyond the reference's
 # Seq/Alt/Inv coverage, sql_converter.py:208-229) ---------------------------
 
@@ -932,9 +962,13 @@ def test_bsbm_compile_captures_no_call_site(spark, monkeypatch):
     assert calls == []
 
 
+BSBM_MIX = ("bsbm_bi1", "bsbm_bi2", "bsbm_bi3", "bsbm_bi4",
+            "bsbm_bi5", "bsbm_bi7", "bsbm_explore1", "bsbm_explore5")
+
+
 def test_bsbm_compile_budget(spark, monkeypatch):
     """Compiling the 8 BSBM shapes through one store is a few coarse calls:
-    the py4j round trips stay under a pinned ceiling, each BGP is ONE
+    the py4j round trips stay under a pinned ceiling, each query is ONE
     spark.sql statement, each rr:sqlQuery source is analyzed once per
     store, and the only temp views are one per table, registered during the
     first query under names no table has."""
@@ -943,16 +977,14 @@ def test_bsbm_compile_budget(spark, monkeypatch):
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
     from rdflib_r2r_spark import bsbm
-    from rdflib_r2r_spark.sparql.bgp import BGPCompiler
 
     store = bsbm.bsbm_store(spark, {t: spark.read.parquet(f"/root/testdata/sf0.001/{t}.parquet")
                                     for t in bsbm.BSBM_TABLES})
-    sent, texts, views, per_bgp = [0], [], [], []
+    sent, texts, views = [0], [], []
     query_no = [0]
     real_send = cs.ClientServerConnection.send_command
     real_sql = SparkSession.sql
     real_view = ClassicDataFrame.createOrReplaceTempView
-    real_compile = BGPCompiler.compile
 
     def send(self, command, *a, **k):
         # py4j's releases of Python-side proxies ("m" commands) follow the
@@ -961,39 +993,86 @@ def test_bsbm_compile_budget(spark, monkeypatch):
         return real_send(self, command, *a, **k)
 
     def sql(self, text, *a, **k):
-        texts.append(text)
+        texts.append((query_no[0], text))
         return real_sql(self, text, *a, **k)
 
     def view(self, name):
         views.append((query_no[0], name))
         return real_view(self, name)
 
-    def compile_bgp(self, *a, **k):
-        first = len(texts)
-        out = real_compile(self, *a, **k)
-        per_bgp.append(texts[first:])
-        return out
-
     monkeypatch.setattr(cs.ClientServerConnection, "send_command", send)
     monkeypatch.setattr(SparkSession, "sql", sql)
     monkeypatch.setattr(ClassicDataFrame, "createOrReplaceTempView", view)
-    monkeypatch.setattr(BGPCompiler, "compile", compile_bgp)
-    for name in ("bsbm_bi1", "bsbm_bi2", "bsbm_bi3", "bsbm_bi4",
-                 "bsbm_bi5", "bsbm_bi7", "bsbm_explore1", "bsbm_explore5"):
+    for name in BSBM_MIX:
         store.query(bsbm.QUERIES[name])
         query_no[0] += 1
-    # measured 3,105 at sf0.001, plus 20%
-    assert sent[0] < 3726, sent[0]
+    # measured 282 at sf0.001, plus 20%
+    assert sent[0] < 339, sent[0]
     source_texts = {"SELECT * FROM " + store.compiler.source_sql(tm.source)
                     for tm in bsbm.bsbm_tmaps() if tm.source.sql_query is not None}
     for text in source_texts:
-        assert texts.count(text) == 1, text
-    assert per_bgp and all(
-        len([t for t in bgp if t not in source_texts]) == 1 for bgp in per_bgp
-    ), [len(bgp) for bgp in per_bgp]
+        assert [t for _, t in texts].count(text) == 1, text
+    statements = [q for q, t in texts if t not in source_texts]
+    assert statements == list(range(len(BSBM_MIX))), statements
     assert views and {q for q, _ in views} == {0}, views
     assert len(views) <= len(bsbm.BSBM_TABLES), views
     assert not {n.lower() for _, n in views} & set(bsbm.BSBM_TABLES), views
+
+
+def test_warm_bsbm_request_is_one_statement(spark, monkeypatch):
+    """Once a store has built its sources, a BSBM request is one spark.sql
+    statement and at most 3 DataFrames: Spark analyzes the query once, not
+    once per operator."""
+    from pyspark.sql import SparkSession
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    import __spark_entry__ as entry
+    from rdflib_r2r_spark import bsbm
+
+    store = bsbm.bsbm_store(spark, {t: spark.read.parquet(f"{entry.SF1}/{t}.parquet")
+                                    for t in bsbm.BSBM_TABLES})
+    for name in BSBM_MIX:
+        store.query(bsbm.QUERIES[name])
+    store._plan_cache.clear()
+    statements, frames = [0], [0]
+    real_sql, real_init = SparkSession.sql, ClassicDataFrame.__init__
+
+    def sql(self, *a, **k):
+        statements[0] += 1
+        return real_sql(self, *a, **k)
+
+    def init(self, *a, **k):
+        frames[0] += 1
+        return real_init(self, *a, **k)
+
+    monkeypatch.setattr(SparkSession, "sql", sql)
+    monkeypatch.setattr(ClassicDataFrame, "__init__", init)
+    for name in BSBM_MIX:
+        statements[0] = frames[0] = 0
+        store.query(bsbm.QUERIES[name])
+        assert statements[0] == 1 and frames[0] <= 3, (name, statements[0], frames[0])
+
+
+def test_sql_query_reads_the_tables_it_names_in_any_spelling(spark):
+    """An rr:sqlQuery source aliases only the tables it names, matched as
+    identifiers: upper case and double quotes still read the store's
+    table, not a session view of the same name."""
+    spark.createDataFrame([(9, "view")], "id int, v string").createOrReplaceTempView("t")
+    try:
+        for text in ("SELECT id, v FROM T", 'SELECT "id", "v" FROM "t"',
+                     "SELECT x.id, x.v FROM (SELECT * FROM T) AS x"):
+            tmaps = [TriplesMap(
+                name="q", source=LogicalSource(sql_query=text),
+                subject_map=SubjectMap(template="http://x/{id}"),
+                pomaps=(PredicateObjectMap(predicates=(const_iri("http://x/p"),),
+                                           objects=(TermMap(column="v"),)),),
+            )]
+            store = SparkR2RStore(
+                spark, {"t": spark.createDataFrame([(1, "a")], "id int, v string")}, tmaps)
+            got = store.query("SELECT ?s ?v { ?s <http://x/p> ?v }")
+            assert rows(got, "s", "v") == {("<http://x/1>", "a")}, text
+    finally:
+        spark.catalog.dropTempView("t")
 
 
 def test_store_leaves_the_session_namespace_alone(spark):
