@@ -41,6 +41,7 @@ from rdflib_r2r_spark.oracle import mapping_to_duckdb_sql
 from rdflib_r2r_spark.templates import invert_template_py
 from rdflib_r2r_spark.terms import iri_unsafe_py
 from rdflib_r2r_spark.sparql import SparkR2RStore
+from rdflib_r2r_spark.sparql.bgp import BGPCompiler
 from rdflib_r2r_spark.web import mentions as men, pages as pg
 from rdflib_r2r_spark.web.extract import extract_text
 
@@ -305,7 +306,7 @@ def _subject_lookup_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         typed = F.lit(iri_unsafe_py(raw)).cast(src.schema[col].dataType)
         src = src.filter(F.col(col) == typed)
     comp = SparkMappingCompiler(spark, {"orders": src})
-    return comp.compile([tmap])
+    return BGPCompiler([tmap], comp).dump()
 
 
 def _pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,7 +341,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: KG dump over web pages (HTML->text UDF + mapping compile)
     plus mention triples, at sf0.001."""
     pages = _pages_df(spark, SF1)
-    base = SparkMappingCompiler(spark, {"pages": pages}).compile(pages_tmaps())
+    base = BGPCompiler(pages_tmaps(), SparkMappingCompiler(spark, {"pages": pages})).dump()
     adict = men.build_alias_dict(pages)
     mt = men.mention_triples(men.mention_entities(pages, adict))
     return base.unionByName(mt)
@@ -354,7 +355,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         comp = SparkMappingCompiler(
             spark, {n: _t(spark, sf, n) for n in ("nation", "region")}
         )
-        return comp.compile(geo_tmaps())
+        return BGPCompiler(geo_tmaps(), comp).dump()
 
     q["kg_dump_geo"] = kg_dump_geo
 
@@ -362,7 +363,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         comp = SparkMappingCompiler(
             spark, {"supplier": _t(spark, sf, "supplier"), "nation": _t(spark, sf, "nation")}
         )
-        return comp.compile(_direct_tmaps())
+        return BGPCompiler(_direct_tmaps(), comp).dump()
 
     q["kg_direct_mapping"] = kg_direct_mapping
 
@@ -370,7 +371,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def kg_dump_pages(spark, sf):
         pages = _pages_df(spark, sf)
-        return SparkMappingCompiler(spark, {"pages": pages}).compile(pages_tmaps())
+        return BGPCompiler(pages_tmaps(), SparkMappingCompiler(spark, {"pages": pages})).dump()
 
     q["kg_dump_pages"] = kg_dump_pages
 
@@ -392,7 +393,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         comp = SparkMappingCompiler(
             spark, {n: _t(spark, sf, n) for n in ("nation", "region")}
         )
-        return comp.compile(chain_tmaps())
+        return BGPCompiler(chain_tmaps(), comp).dump()
 
     q["kg_chain_dump"] = kg_chain_dump
 
@@ -722,7 +723,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ),
         )
         comp = SparkMappingCompiler(spark, {"nation": _t(spark, sf, "nation")})
-        dump = comp.compile([tmap])
+        dump = BGPCompiler([tmap], comp).dump()
         # GRAPH-scoped query: only the names graph
         return dump.filter(F.col("graph") == f"<{EX}g/names>")
 
@@ -740,7 +741,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         comp = SparkMappingCompiler(
             spark, {n: _t(spark, sf, n) for n in ("nation", "region")}
         )
-        dump = comp.compile(geo_tmaps())
+        dump = BGPCompiler(geo_tmaps(), comp).dump()
         names = dump.filter(F.col("pred") == f"<{EX}name>")
         return names.select(
             F.col("subj"),
@@ -854,8 +855,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def sparql_path_negated(spark, sf):
         # negated property set (SPARQL 1.1 §9.1) — beyond the reference's
-        # Seq/Alt/Inv coverage (sql_converter.py:208-229). Excluded arms are
-        # pruned at plan time (constant-pred literals fold the NOT IN).
+        # Seq/Alt/Inv coverage (sql_converter.py:208-229). Excluded
+        # constant-predicate arms are no candidates of the BGP compiler.
         return _geo_store(spark, sf).query(
             "SELECT ?s ?o { ?s !(a|ex:inRegion) ?o }"
         )

@@ -6,7 +6,8 @@ Spark-first pipeline:
 
 - R2RML-style triples-maps (template / column / constant term maps, typed
   literals, blank-node skolemization, referencing-object-map joins) compiled
-  into Catalyst logical plans (``compiler.SparkMappingCompiler``).
+  into Spark SQL statements: the term maps by ``compiler``, SPARQL basic
+  graph patterns and the full dump by ``sparql.bgp.BGPCompiler``.
 - Web-document generalization per the north star: HTML->text extraction
   (Arrow pandas UDF), mention detection + broadcast alias dictionary,
   MinHash-LSH candidate blocking, hash-min connected-components

@@ -53,10 +53,8 @@ class NegSet:
     ``forward`` / ``inverse`` are the IRIs of the non-inverted / ``^``-inverted
     members.  Matches (s,o) linked by ANY predicate not in ``forward``, plus
     (s,o) with (o,p,s) for any p not in ``inverse`` when inverse members are
-    present.  Evaluated over the triple dump with a ``pred NOT IN`` filter:
-    each dump arm carries a constant predicate literal, so Catalyst folds the
-    filter per arm and prunes excluded arms' scans at plan time — the
-    runtime cost is only the arms that can match."""
+    present.  Evaluated as the pattern whose predicate is a variable that
+    excludes the members (``sparql.bgp.Excluding``)."""
     forward: tuple = ()
     inverse: tuple = ()
 

@@ -52,6 +52,7 @@ from rdflib_r2r_spark.mapping import (
     TriplesMap,
     const_iri,
 )
+from rdflib_r2r_spark.sparql.bgp import BGPCompiler
 from rdflib_r2r_spark.web import components, linking, mentions as men, pages as pg
 from rdflib_r2r_spark.web.extract import EXTRACTOR_VERSION, extract_text
 
@@ -283,8 +284,8 @@ class KGPipeline:
             widen_scan(spark, docs_path)))
         extracted = self.stage("extracted", ["pages"], lambda: pages.select(
             "url", "warc_ts", "lang", extract_text(F.col("html")).alias("text")))
-        base_triples = self.stage("base_triples", ["extracted"], lambda: SparkMappingCompiler(
-            spark, {"pages": extracted}).compile([pages_triples_map()]))
+        base_triples = self.stage("base_triples", ["extracted"], lambda: BGPCompiler(
+            [pages_triples_map()], SparkMappingCompiler(spark, {"pages": extracted})).dump())
         alias_dict = self.stage("alias_dict", ["extracted"],
                                 lambda: men.build_alias_dict(extracted, size=self.dict_size))
         sigs = self.stage("sigs", ["extracted"],

@@ -4,8 +4,8 @@ Loads the public W3C rdb2rdf test cases (shipped as a zip alongside the
 reference's old_tests — the same suite its test_rdb2rdf.py runs), executes
 each case's ``create.sql`` in DuckDB, lifts the tables into Spark (Arrow,
 null-safe), interprets the case's R2RML document with
-:func:`rdflib_r2r_spark.ttl.mapping_from_ttl`, compiles it with
-:class:`SparkMappingCompiler`, and compares the emitted quads against the
+:func:`rdflib_r2r_spark.ttl.mapping_from_ttl`, compiles its dump with
+:meth:`BGPCompiler.dump`, and compares the emitted quads against the
 expected ``mapped*.nq`` under blank-node isomorphism.
 
 Nothing from the suite is vendored into this repo: the zip is located at
@@ -200,14 +200,15 @@ def tables_from_sql(spark, create_sql: str) -> dict:
 def run_case(spark, case: SuiteCase) -> tuple[set[tuple], set[tuple]]:
     """-> (produced, expected) quad sets in the common encoding."""
     from rdflib_r2r_spark.compiler import SparkMappingCompiler
+    from rdflib_r2r_spark.sparql.bgp import BGPCompiler
     from rdflib_r2r_spark.ttl import mapping_from_ttl
 
     tables = tables_from_sql(spark, case.create_sql)
     tmaps = mapping_from_ttl(case.mapping_ttl)
     produced: set[tuple] = set()
     if tmaps:
-        comp = SparkMappingCompiler(spark, tables)
-        for row in comp.compile(tmaps).collect():
+        dump = BGPCompiler(tmaps, SparkMappingCompiler(spark, tables)).dump()
+        for row in dump.collect():
             produced.add(
                 (
                     row["subj"], row["pred"], row["obj"],

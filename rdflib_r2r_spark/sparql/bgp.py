@@ -17,19 +17,22 @@ query's constants bound as named parameters:
   parent slot merges with the star of the object variable when the parent
   map matches, so ``?n ex:inRegion ?r . ?r ex:name ?rn`` is a single
   child->parent join, not a three-way self-join.
-- **Arm folding**: a pattern with a variable object whose candidate arms
-  share a triples map, predicate map and graph map (two pomaps of one
-  predicate, a class arm beside an ``rdf:type`` pomap) is ONE choice, not
-  one assignment per arm: the star's slot unrolls the alternatives per row
-  with ``LATERAL VIEW inline(array(struct(<alt render>), ...))`` (the SQL
-  form of the dump compiler's ``explode(array(struct...))``), so the
-  source is scanned once per slot and the assignments are a sum over the
-  arms, not a product.  Alternatives of one ``render_key`` unroll only
-  their raw columns, and the term is rendered from them where it is read:
-  Catalyst prunes the render when nothing reads it, which it cannot do
-  for a field of the generated struct.  Alternatives that can never agree
-  with another occurrence of the variable (``templates.may_collide``) are
-  dropped first; one that is left compiles as a plain arm.
+- **Arm folding**: a pattern's candidate arms over one logical source that
+  differ only where the pattern has a variable (two pomaps of one
+  predicate, a class arm beside an ``rdf:type`` pomap, every arm of a map
+  under ``?s ?p ?o``) are ONE choice, not one assignment per arm: the
+  star's slot unrolls them per row with ``LATERAL VIEW
+  inline(array(struct(<arm's terms>), ...))``, so the source is scanned
+  once per slot and the assignments are a sum over the arms, not a
+  product.  A struct holds only the terms that differ between the arms;
+  terms of one ``render_key`` unroll only their raw columns, and the term
+  is rendered from them where it is read: Catalyst prunes the render when
+  nothing reads it, which it cannot do for a field of the generated
+  struct.  Arms that can never agree with another occurrence of a
+  variable (``templates.may_collide``) are dropped first; one that is left
+  compiles as a plain arm.
+- **The dump is a BGP**: ``?s ?p ?o`` over every graph (``dump``), so each
+  logical source of the mapping is one scan with one ``Generate``.
 - **Constant pushdown**: constant subjects/objects are inverted through the
   term-map template (reference: rdflib_r2r/sql_converter.py:148-161,
   conversion_utils.py:517-531) into typed filters on raw columns, so the
@@ -53,11 +56,13 @@ from __future__ import annotations
 import itertools
 import math
 from dataclasses import dataclass, field
+from decimal import Context, Decimal
 
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from rdflib_r2r_spark import terms
-from rdflib_r2r_spark.compiler import SparkMappingCompiler, sql_ident
+from rdflib_r2r_spark.compiler import NULL_STR, SparkMappingCompiler, sql_ident
 from rdflib_r2r_spark.mapping import TermMap, TriplesMap, xsd_for_spark_type
 from rdflib_r2r_spark.sparql.ast_nodes import BNodeT, IRI, Lit, Var
 from rdflib_r2r_spark.sparql.parser import SparqlNotImplemented
@@ -73,22 +78,39 @@ from rdflib_r2r_spark.terms import iri_unsafe_py
 
 MAX_ASSIGNMENTS = 5000
 
-_NUMERIC_SPARK = (
-    T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-    T.FloatType, T.DoubleType, T.DecimalType,
-)
+_INTEGRAL_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
+_NUMERIC_SPARK = (*_INTEGRAL_BITS, T.FloatType, T.DoubleType, T.DecimalType)
+_NULL_D = "CAST(NULL AS DOUBLE)"
 
 
 # a term variable ``v`` is four columns: these suffixes on ``v``
 SHADOWS = ("", "__dt", "__lang", "__num")
+_TERM_PARTS = ("lex", "dt", "lang")  # a folded render's generated fields
 
 
 class _Prune(Exception):
     """Assignment is inconsistent — contributes no rows."""
 
 
+class EveryGraph(Var):
+    """The dump's graph term: a variable that every arm binds, to NULL
+    where the arm has no graph map.  It is never NULL-guarded: a triple
+    whose graph map is NULL on a row is in the default graph (R2RML
+    §11.1)."""
+
+
+@dataclass(frozen=True)
+class Excluding(Var):
+    """A negated property set's predicate (SPARQL 1.1 §9.1): a variable
+    bound to every predicate but the ``excluded`` IRIs.  An arm whose
+    constant predicate is excluded is no candidate; a template or column
+    predicate map is filtered per row."""
+
+    excluded: tuple = ()
+
+
 # --------------------------------------------------------------------------
-# arm model (one per (triples-map, predicate, object) like the dump compiler)
+# arm model: one per (triples map, predicate, object, graph)
 # --------------------------------------------------------------------------
 
 @dataclass(frozen=True)
@@ -131,21 +153,21 @@ def enumerate_arms(tmaps: list[TriplesMap]) -> list[Arm]:
 
 
 # --------------------------------------------------------------------------
-# slots: one aliased scan of a logical source per (term, tmap) group
+# slots: one aliased scan of a logical source per (term, triples maps) group
 # --------------------------------------------------------------------------
 
-@dataclass
+@dataclass(frozen=True)
 class Lateral:
-    """A folded pattern's object alternatives, unrolled per row of the
-    star's slot: the generated columns ``<prefix>ok`` (the alternative's
-    NULL guard) and, when every alternative has the same ``render_key``,
-    ``raw0``... (its raw columns), else ``lex``, ``dt``, ``lang`` and
-    ``num`` (its render)."""
+    """One position of a folded pattern: its term map in each arm (None
+    where an arm has no graph map), unrolled per row of the star's slot as
+    the generated columns ``<prefix>raw0``... (its raw columns) when every
+    term map has the same ``render_key``, else as whichever of
+    ``<prefix>lex``, ``dt`` and ``lang`` differ between the arms."""
 
     prefix: str
-    alts: tuple  # the alternatives' object term maps
+    alts: tuple
     key: tuple | None  # their common render_key, or None
-    view: str  # the LATERAL VIEW clause
+    render: tuple | None  # (lex, dt, lang) texts when ``key`` is None
 
 
 @dataclass
@@ -153,7 +175,7 @@ class Slot:
     alias: str
     source: str  # the logical source in a FROM clause (Statement.source)
     types: dict  # column -> spark DataType
-    laterals: list = field(default_factory=list)
+    folds: list = field(default_factory=list)  # (ok column, LATERAL VIEW)
 
     def col(self, name: str) -> str:
         """SQL text of one of the slot's columns."""
@@ -164,10 +186,10 @@ class Slot:
         table under the same alias, so a join on a generated column is an
         equi-join like any other."""
         named = f"{self.source} AS {sql_ident(self.alias)}"
-        if not self.laterals:
+        if not self.folds:
             return named
-        views = " ".join(lat.view for lat in self.laterals)
-        ok = " AND ".join(sql_ident(lat.prefix + "ok") for lat in self.laterals)
+        views = " ".join(view for _, view in self.folds)
+        ok = " AND ".join(sql_ident(ok) for ok, _ in self.folds)
         return f"(SELECT * FROM {named} {views} WHERE {ok}) AS {sql_ident(self.alias)}"
 
 
@@ -208,6 +230,11 @@ class RawBinding:
     render: object  # Callable[[], tuple[str, str, str, str]]
 
 
+def _arm_terms(arm: Arm) -> tuple:
+    """An arm's subject, predicate, object and graph term maps."""
+    return arm.tmap.subject_map, arm.pred_tm, arm.obj_tm, arm.graph_tm
+
+
 def _var_name(t) -> str | None:
     """Column name of a pattern variable (a blank node is one too), or
     None for a constant term."""
@@ -234,6 +261,15 @@ def _effective_dt(tm: TermMap, slot: Slot) -> str | None:
     return None
 
 
+def numeric_shadow(lex: str, dt: str) -> str:
+    """SQL text of a term's numeric shadow from its rendered lexical and
+    datatype: the value of a literal whose datatype is numeric or absent
+    (an IRI or a blank node lexical casts to NULL)."""
+    numeric = ", ".join(map(terms.spark_str_sql, sorted(terms.NUMERIC_XSD)))
+    return (f"CASE WHEN {dt} IS NULL OR {dt} IN ({numeric}) "
+            f"THEN try_cast({lex} AS DOUBLE) END")
+
+
 def _same_literal_type(term: Lit, dt: str | None, lang: str | None) -> bool:
     """Can a pattern literal match a term map of datatype ``dt`` and
     language ``lang``?  Tags compare case-insensitively; a plain literal is
@@ -246,8 +282,8 @@ def _same_literal_type(term: Lit, dt: str | None, lang: str | None) -> bool:
 
 
 class BGPCompiler:
-    """Compiles a list of (s, p_iri, o) patterns (constant predicates) into
-    one query block of variable bindings."""
+    """Compiles a list of (s, p, o) patterns into one query block of
+    variable bindings."""
 
     def __init__(self, tmaps: list[TriplesMap], compiler: SparkMappingCompiler):
         self.tmaps = tmaps
@@ -260,7 +296,7 @@ class BGPCompiler:
 
     def _pred_matches(self, arm: Arm, p) -> bool:
         if isinstance(p, Var):
-            return True
+            return not (isinstance(p, Excluding) and arm.pred_tm.constant in p.excluded)
         assert isinstance(p, IRI)
         if arm.pred_tm.constant is not None:
             return arm.pred_tm.constant == p.value
@@ -289,52 +325,47 @@ class BGPCompiler:
             if not (self._static_ok(o, arm.parent.subject_map, "S")
                     if arm.parent is not None else self._static_ok(o, arm.obj_tm, "O")):
                 continue
-            if dataset is None:
-                # graph dispatch: GRAPH-scoped patterns only match arms with
-                # a graph map; default-graph patterns only match arms
-                # without one
-                if g is None and arm.graph_tm is not None:
-                    continue
-                if g is not None and arm.graph_tm is None:
-                    continue
-                if isinstance(g, IRI) and arm.graph_tm is not None and \
-                        arm.graph_tm.constant is not None and arm.graph_tm.constant != g.value:
+            if isinstance(g, EveryGraph):
+                pass  # the dump: every arm, in its graph or the default one
+            elif arm.graph_tm is None:
+                # a graph-less arm is in the store's default graph, which a
+                # dataset clause replaces (13.2: FROM is EXACTLY the merge)
+                if g is not None or dataset is not None:
                     continue
             else:
-                # FROM / FROM NAMED (13.2): the default graph is EXACTLY the
-                # FROM merge (graph-less arms are excluded), GRAPH ranges
-                # over the FROM NAMED list only.  Dispatch is static, so the
-                # arm's graph map must be constant.
-                if arm.graph_tm is None:
-                    continue
+                # graph dispatch: a default-graph pattern matches a graph
+                # map only where it renders NULL, GRAPH ranges over the
+                # FROM NAMED list when there is one.  A constant graph map
+                # is dispatched here, any other per row (``_graph_filter``)
                 const = arm.graph_tm.constant
-                if const is None:
-                    raise SparqlNotImplemented(
-                        "non-constant graph map under a dataset clause"
-                    )
-                if g is None:
-                    if const not in dataset.default:
-                        continue
+                graphs = None if dataset is None else (
+                    dataset.default if g is None else dataset.named)
+                if isinstance(g, IRI) and const not in (None, g.value):
+                    continue
+                if graphs is None:
+                    if g is None and const is not None:
+                        continue  # a constant graph is never NULL
                 else:
-                    if const not in dataset.named:
-                        continue
-                    if isinstance(g, IRI) and const != g.value:
+                    fixed = const if const is not None else getattr(g, "value", None)
+                    if not graphs or fixed is not None and fixed not in graphs:
                         continue
             out.append(arm)
         return out
 
     def choices(self, patterns: list, graph_term=None,
                 dataset=None) -> list[list[tuple[Arm, ...]]]:
-        """Each pattern's choices of arms: a pattern with a variable object
-        folds its arms of one triples map, predicate map and graph map (no
-        referencing-object arm) into one choice; every other arm is a
-        choice of its own."""
+        """Each pattern's choices of arms: a pattern folds its arms over one
+        logical source that differ only where the pattern has a variable
+        into one choice, so the source is scanned once; a
+        referencing-object arm is a choice of its own."""
         out = []
         for s, p, o in patterns:
+            folded = [_var_name(t) is not None for t in (s, p, o, graph_term)]
             groups: dict = {}
             for i, arm in enumerate(self.candidates(s, p, o, graph_term, dataset)):
-                key = (i,) if arm.parent is not None or _var_name(o) is None \
-                    else (arm.tmap.name, arm.pred_tm, arm.graph_tm)
+                key = (i,) if arm.parent is not None else (
+                    arm.tmap.source.key(), *(tm for tm, f in zip(
+                        _arm_terms(arm), folded) if not f))
                 groups.setdefault(key, []).append(arm)
             out.append([tuple(arms) for arms in groups.values()])
         return out
@@ -362,8 +393,32 @@ class BGPCompiler:
             except ValueError:
                 # non-numeric lexical can never equal a numeric column
                 raise _Prune() from None
+            if type(dtype) in _INTEGRAL_BITS:
+                # the cast would truncate 7.5 to 7, and fail on a value out
+                # of the type's range: neither can equal the column
+                if isinstance(num, float) and not num.is_integer():
+                    raise _Prune()
+                num, half = int(num), 1 << (_INTEGRAL_BITS[type(dtype)] - 1)
+                if not -half <= num < half:
+                    raise _Prune()
+            elif isinstance(dtype, T.DecimalType):
+                # the cast would round 7.125 to 7.13 in a decimal(p, 2), and
+                # fail on a value of more than p - 2 integer digits
+                exact = Decimal(value)
+                if not exact.is_finite() or abs(exact) >= 10 ** (dtype.precision - dtype.scale) \
+                        or exact != exact.quantize(Decimal(1).scaleb(-dtype.scale),
+                                                   context=Context(prec=dtype.precision)):
+                    raise _Prune()
+                num = format(exact, "f")
+            elif isinstance(num, int) and not -(1 << 63) <= num < 1 << 63:
+                num = float(num)  # a parameter is at most a bigint
             return f"CAST({self._stmt.param(num)} AS {dtype.simpleString()})"
         return f"CAST({self._stmt.param(value)} AS {dtype.simpleString()})"
+
+    def _lex_in(self, occ: Occurrence, iris) -> str:
+        """The occurrence's rendered lexical is one of the IRIs."""
+        listed = ", ".join(self._stmt.param(terms.wrap_iri(i)) for i in iris)
+        return f"{self._render(occ)[0]} IN ({listed})"
 
     def _lex_eq(self, tm: TermMap, slot: Slot, position: str, lex: str) -> list[str]:
         """The term map's rendered lexical equals ``lex``."""
@@ -500,70 +555,80 @@ class BGPCompiler:
             return self.compiler.term_columns(
                 occ.tm, occ.position, occ.slot.col, occ.slot.types)
         if lat.key is None:
-            return tuple(occ.slot.col(lat.prefix + f) for f in ("lex", "dt", "lang"))
+            return lat.render
         # one render_key: every alternative renders its raws alike
         by = dict(zip(raw_columns(lat.alts[0]), self._raw_cols(occ)))
         return self.compiler.term_columns(
             lat.alts[0], occ.position, by.__getitem__, occ.slot.types)
 
     def _num_col(self, occ: Occurrence, lex: str) -> str:
+        """The numeric shadow: the value of a literal whose datatype is
+        numeric or absent, else NULL.  Folded alternatives without a common
+        key decide it from the datatype they render, outside their struct,
+        so a reader of the term alone never computes it."""
         lat = occ.lateral
         if lat is not None and lat.key is None:
-            return occ.slot.col(lat.prefix + "num")
+            alts = [Occurrence(tm=tm, slot=occ.slot, position=occ.position)
+                    for tm in lat.alts if tm is not None]
+            if all(self._num_col(alt, lex) == _NULL_D for alt in alts):
+                return _NULL_D
+            return numeric_shadow(lex, lat.render[1])
         tm = occ.tm if lat is None else lat.alts[0]
+        dt = _effective_dt(tm, occ.slot)
+        if tm.inferred_term_type(occ.position) != "Literal" or (
+                dt is not None and dt not in terms.NUMERIC_XSD):
+            return _NULL_D
         if tm.column is not None and isinstance(occ.slot.types.get(tm.column), _NUMERIC_SPARK):
             return f"CAST({self._raw_cols(occ)[0]} AS DOUBLE)"
-        dt = _effective_dt(tm, occ.slot)
-        if tm.inferred_term_type(occ.position) == "Literal" and (dt is None or dt in terms.NUMERIC_XSD):
-            return f"try_cast({lex} AS DOUBLE)"
-        return "CAST(NULL AS DOUBLE)"
+        return f"try_cast({lex} AS DOUBLE)"
 
     def _statically_consistent(self, patterns: list,
                                assignment) -> list[tuple[Arm, ...]] | None:
         """Cheap metadata-only unification check so impossible assignments
         (the big product of the reference's queryBGP) never build slots or
         plans — the reference's try_match_templates pruning, done eagerly.
-        Returns the assignment with each folded choice narrowed to the
-        alternatives that may agree with every other occurrence of the
-        variable, or None when some occurrence has none left."""
+        Returns the assignment with each folded choice narrowed to the arms
+        whose every variable may agree with each other occurrence of that
+        variable (in another pattern, with some arm left there; in the same
+        pattern, with the same arm), or None when some choice has no arm
+        left."""
         types = self.compiler.source_types
-        occs: dict[str, list[list[tuple]]] = {}
-        objects: list[list[tuple]] = []
 
-        def add(term, alts: list[tuple]) -> list[tuple]:
-            if (name := _var_name(term)) is not None:
-                occs.setdefault(name, []).append(alts)
-            return alts
+        def subject(arm):
+            return arm.tmap.subject_map, "S", types(arm.tmap.source)
 
-        for (s, p, o), choice in zip(patterns, assignment):
-            arm = choice[0]
-            add(s, [(arm.tmap.subject_map, "S", types(arm.tmap.source), arm)])
-            add(p, [(arm.pred_tm, "P", types(arm.tmap.source), arm)])
+        def predicate(arm):
+            return arm.pred_tm, "P", types(arm.tmap.source)
+
+        def obj(arm):
             if arm.parent is not None:
-                objects.append(add(o, [(arm.parent.subject_map, "S",
-                                        types(arm.parent.source), arm)]))
-            else:
-                objects.append(add(o, [(a.obj_tm, "O", types(a.tmap.source), a)
-                                       for a in choice]))
+                return arm.parent.subject_map, "S", types(arm.parent.source)
+            return arm.obj_tm, "O", types(arm.tmap.source)
 
-        def agree(x: tuple, others: list[tuple]) -> bool:
-            return any(may_collide(*x[:3], *y[:3]) for y in others)
+        live = [list(choice) for choice in assignment]
+        occs: dict[str, list[tuple]] = {}  # variable -> (pattern, render of an arm)
+        for k, (s, p, o) in enumerate(patterns):
+            for term, at in ((s, subject), (p, predicate), (o, obj)):
+                if (name := _var_name(term)) is not None:
+                    occs.setdefault(name, []).append((k, at))
 
-        for lists in occs.values():
-            changed = True
-            while changed:
-                changed = False
-                for alts in lists:
-                    kept = [x for x in alts
-                            if all(agree(x, other) for other in lists if other is not alts)]
+        changed = True
+        while changed:
+            changed = False
+            for lists in occs.values():
+                for i, (k, at) in enumerate(lists):
+                    kept = [a for a in live[k] if all(
+                        any(may_collide(*at(a), *other(b))
+                            for b in ([a] if j == k else live[j]))
+                        for n, (j, other) in enumerate(lists) if n != i)]
                     if not kept:
                         return None
-                    changed |= len(kept) < len(alts)
-                    alts[:] = kept
-        return [tuple(x[3] for x in alts) for alts in objects]
+                    changed |= len(kept) < len(live[k])
+                    live[k] = kept
+        return [tuple(arms) for arms in live]
 
     def compile_assignment(self, patterns: list, assignment: list[tuple[Arm, ...]],
-                           graph_term) -> tuple[dict, str, dict] | None:
+                           graph_term, dataset=None) -> tuple[dict, str, dict] | None:
         """One consistent assignment (a choice of arms per pattern) ->
         (columns, tail, raw bindings per variable), or None if statically
         inconsistent.  ``columns`` maps
@@ -578,17 +643,19 @@ class BGPCompiler:
         conditions: list[tuple[Slot, Slot, str]] = []
         null_guards: list[Occurrence] = []
 
-        def slot_for(term, tmap: TriplesMap) -> Slot:
-            key = (_term_key(term), tmap.name, tmap.source.key())
+        def slot_for(term, tmaps: list[TriplesMap]) -> Slot:
+            key = (_term_key(term), tuple(dict.fromkeys(t.name for t in tmaps)),
+                   tmaps[0].source.key())
             if key not in slots:
-                slots[key] = self._new_slot(tmap.source)
+                slots[key] = self._new_slot(tmaps[0].source)
             return slots[key]
 
         def add_occ(term, tm: TermMap, slot: Slot, position: str) -> None:
             occ = Occurrence(tm=tm, slot=slot, position=position)
             if (name := _var_name(term)) is not None:
                 occurrences.setdefault(name, []).append(occ)
-                null_guards.append(occ)
+                if not isinstance(term, EveryGraph):
+                    null_guards.append(occ)
             else:
                 # equalities with a constant reject NULL: no guard needed
                 for cond in self._const_conditions(term, tm, slot, position):
@@ -597,14 +664,34 @@ class BGPCompiler:
         try:
             for (s, p, o), choice in zip(patterns, assignment):
                 arm = choice[0]
-                child = slot_for(s, arm.tmap)
-                add_occ(s, arm.tmap.subject_map, child, "S")
-                add_occ(p, arm.pred_tm, child, "P")
-                if graph_term is not None and arm.graph_tm is not None:
+                child = slot_for(s, [a.tmap for a in choice])
+                # a folded choice unrolls its arms' terms where they differ
+                # (only where the pattern has a variable)
+                fold = {}
+                for pos, t, alts in zip("SPOG", (s, p, o, graph_term),
+                                        zip(*map(_arm_terms, choice))):
+                    if len(set(alts)) > 1:
+                        fold[pos] = (t, list(alts))
+                if "S" not in fold:
+                    add_occ(s, arm.tmap.subject_map, child, "S")
+                if "P" not in fold:
+                    add_occ(p, arm.pred_tm, child, "P")
+                if "G" not in fold and graph_term is not None and arm.graph_tm is not None:
                     add_occ(graph_term, arm.graph_tm, child, "G")
+                folded = self._fold(child, len(choice), fold) if len(choice) > 1 else {}
+                for pos, occ in folded.items():
+                    occurrences.setdefault(_var_name(fold[pos][0]), []).append(occ)
+                if isinstance(p, Excluding) and any(a.pred_tm.constant is None for a in choice):
+                    occ = folded.get("P") or Occurrence(tm=arm.pred_tm, slot=child, position="P")
+                    conditions.append((child, child, f"NOT ({self._lex_in(occ, p.excluded)})"))
+                if not isinstance(graph_term, EveryGraph) and any(
+                        a.graph_tm is not None and a.graph_tm.constant is None for a in choice):
+                    occ = folded.get("G") or Occurrence(tm=arm.graph_tm, slot=child, position="G")
+                    for cond in self._graph_filter(occ, graph_term, dataset):
+                        conditions.append((child, child, cond))
                 if arm.parent is not None:
                     if arm.obj_tm.join_conditions:
-                        parent = slot_for(o, arm.parent)
+                        parent = slot_for(o, [arm.parent])
                         for jc in arm.obj_tm.join_conditions:
                             jcond = self._col_eq(child, jc.child, parent, jc.parent)
                             if jcond is not None:
@@ -613,10 +700,7 @@ class BGPCompiler:
                     else:
                         # same-table referencing map: same row, no join
                         add_occ(o, arm.parent.subject_map, child, "S")
-                elif len(choice) > 1:
-                    occ = self._fold(child, [a.obj_tm for a in choice])
-                    occurrences.setdefault(_var_name(o), []).append(occ)
-                else:
+                elif "O" not in fold:
                     add_occ(o, arm.obj_tm, child, "O")
 
             # unify shared variables (pairwise against the first occurrence)
@@ -694,6 +778,20 @@ class BGPCompiler:
             tail += " WHERE " + " AND ".join(f"({w})" for w in where)
         return columns, tail, raws
 
+    def _graph_filter(self, occ: Occurrence, graph_term, dataset) -> list[str]:
+        """Per-row graph dispatch of a template or column graph map: in the
+        default graph the triple is there where the map renders NULL (R2RML
+        §11.1), and under a dataset clause the rendered graph is one the
+        clause lists (a GRAPH pattern's own term is bound as any other)."""
+        if dataset is not None:
+            return [self._lex_in(occ, dataset.default if graph_term is None else dataset.named)]
+        if graph_term is None:
+            guard = self._raw_null_guard(occ)
+            if guard is None:
+                raise _Prune()  # the map never renders NULL
+            return [f"NOT ({guard})"]
+        return []
+
     def _raw_binding(
         self, name: str, occ: Occurrence
     ) -> tuple[list[tuple[str, str]], RawBinding] | None:
@@ -703,12 +801,10 @@ class BGPCompiler:
         slots have no key: grouping normalizes -0.0/NaN while their
         rendered lexicals stay distinct.
         """
+        prov = self._render_key(occ)
         tm = occ.tm if occ.lateral is None else occ.lateral.alts[0]
         pos, slot = occ.position, occ.slot
-        if tm.template is None or tm.inferred_term_type(pos) != "IRI":
-            return None
-        prov = self._render_key(occ)
-        if prov is None:
+        if prov is None or tm.template is None or tm.inferred_term_type(pos) != "IRI":
             return None
         cols = raw_columns(tm)
         raw_names = tuple(f"{name}__raw{i}" for i in range(len(cols)))
@@ -726,32 +822,54 @@ class BGPCompiler:
             RawBinding(cols=raw_names, prov=prov, render=render),
         )
 
-    def _fold(self, slot: Slot, alts: list[TermMap]) -> Occurrence:
-        """Fold a pattern's object alternatives into its star's slot: one
-        struct per alternative (its NULL guard and, under a common
-        ``render_key``, its raw columns, else its render), unrolled per row
-        by a lateral view."""
-        keys = {render_key(tm, "O", slot.types) for tm in alts}
-        key = keys.pop() if len(keys) == 1 else None
-        prefix = f"__f{len(slot.laterals) + 1}_"
-        fields = ["ok"] + ([f"raw{i}" for i in range(len(raw_columns(alts[0])))]
-                           if key is not None else ["lex", "dt", "lang", "num"])
-        structs = []
-        for tm in alts:
-            occ = Occurrence(tm=tm, slot=slot, position="O")
-            values = [self._raw_null_guard(occ) or "true"]
+    def _fold(self, slot: Slot, n_arms: int,
+              positions: dict[str, tuple]) -> dict[str, Occurrence]:
+        """Fold a choice's ``n_arms`` arms into its star's slot: one struct
+        per arm, unrolled per row by a lateral view.  ``positions`` maps
+        each position where the arms differ to its pattern term and the
+        arms' term maps there.  An arm's struct holds its NULL guard (not
+        on the dump's graph) and, per position, its raw columns under a
+        common ``render_key``, else the parts of its render that differ
+        between the arms.  A part the arms share is rendered outside the
+        struct, where Catalyst prunes it if nothing reads it; it cannot
+        prune a field of the generated struct."""
+        prefix = f"__f{len(slot.folds) + 1}_"
+        fields = ["ok"]
+        values: list[list[str]] = [[] for _ in range(n_arms)]
+        guards: list[list[str]] = [[] for _ in range(n_arms)]
+        occs: dict[str, Occurrence] = {}
+        for pos, (term, alts) in positions.items():
+            at = prefix + ("" if pos == "O" else pos.lower() + "_")
+            each = [tm and Occurrence(tm=tm, slot=slot, position=pos) for tm in alts]
+            for arm_guards, occ in zip(guards, each):
+                guard = occ and not isinstance(term, EveryGraph) and self._raw_null_guard(occ)
+                if guard:
+                    arm_guards.append(guard)
+            keys = {occ and render_key(occ.tm, pos, slot.types) for occ in each}
+            key = keys.pop() if len(keys) == 1 else None
+            render = None
             if key is not None:
-                values += self._raw_cols(occ)
+                names = [f"raw{i}" for i in range(len(raw_columns(alts[0])))]
+                cols = [self._raw_cols(occ) for occ in each]
             else:
-                lex, dt, lang = self._render(occ)
-                values += [lex, dt, lang, self._num_col(occ, lex)]
-            structs.append("struct(" + ", ".join(
-                f"{v} AS {f}" for v, f in zip(values, fields)) + ")")
-        view = (f"LATERAL VIEW inline(array({', '.join(structs)})) AS "
-                + ", ".join(sql_ident(prefix + f) for f in fields))
-        lateral = Lateral(prefix=prefix, alts=tuple(alts), key=key, view=view)
-        slot.laterals.append(lateral)
-        return Occurrence(tm=None, slot=slot, position="O", lateral=lateral)
+                renders = [self._render(occ) if occ else (NULL_STR,) * 3 for occ in each]
+                parts = [i for i in range(3) if len({r[i] for r in renders}) > 1]
+                names = [_TERM_PARTS[i] for i in parts]
+                cols = [[r[i] for i in parts] for r in renders]
+                render = tuple(slot.col(at + _TERM_PARTS[i]) if i in parts else renders[0][i]
+                               for i in range(3))
+            fields += [at[len(prefix):] + f for f in names]
+            for arm_values, arm_cols in zip(values, cols):
+                arm_values += arm_cols
+            occs[pos] = Occurrence(tm=None, slot=slot, position=pos,
+                                   lateral=Lateral(at, tuple(alts), key, render))
+        structs = ["struct(" + ", ".join(
+            f"{v} AS {f}" for v, f in zip([" AND ".join(g) or "true", *vals], fields)) + ")"
+                   for g, vals in zip(guards, values)]
+        slot.folds.append((prefix + "ok",
+                           f"LATERAL VIEW inline(array({', '.join(structs)})) AS "
+                           + ", ".join(sql_ident(prefix + f) for f in fields)))
+        return occs
 
     def compile(self, patterns: list, graph_term=None, dataset=None, *,
                 stmt: Statement) -> tuple[str, set[str], dict]:
@@ -792,7 +910,7 @@ class BGPCompiler:
             assignment = self._statically_consistent(patterns, assignment)
             if assignment is None:
                 continue  # pruned before any SQL text is built
-            arm = self.compile_assignment(patterns, assignment, graph_term)
+            arm = self.compile_assignment(patterns, assignment, graph_term, dataset)
             if arm is not None:
                 arms.append(arm)
         arms = arms or [({}, "WHERE false", {})]
@@ -813,3 +931,16 @@ class BGPCompiler:
                                   for c, null in out) + " " + tail
             for columns, tail, _ in arms)
         return text, set(names), keep
+
+    def dump(self) -> DataFrame:
+        """The mapping's triples as the columns ``subj, pred, obj, obj_dt,
+        obj_lang, graph``: the pattern ``?subj ?pred ?obj`` over every
+        graph, ONE statement.  Each logical source is one scan with its
+        arms folded (one ``Generate``); each referencing-object arm is one
+        join."""
+        self.compiler.validate(self.tmaps)
+        stmt = Statement(self.compiler.spark, self.compiler)
+        text, _, _ = self.compile([(Var("subj"), Var("pred"), Var("obj"))],
+                                  EveryGraph("graph"), stmt=stmt)
+        return stmt.run("SELECT subj, pred, obj, obj__dt AS obj_dt, obj__lang AS obj_lang, "
+                        f"graph FROM ({text}) AS t")

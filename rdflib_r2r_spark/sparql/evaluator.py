@@ -53,7 +53,13 @@ from rdflib_r2r_spark.sparql.ast_nodes import (
     Var,
 )
 from rdflib_r2r_spark.compiler import sql_ident
-from rdflib_r2r_spark.sparql.bgp import MAX_ASSIGNMENTS, SHADOWS, BGPCompiler
+from rdflib_r2r_spark.sparql.bgp import (
+    MAX_ASSIGNMENTS,
+    SHADOWS,
+    BGPCompiler,
+    Excluding,
+    numeric_shadow,
+)
 from rdflib_r2r_spark.sparql.parser import SparqlNotImplemented
 from rdflib_r2r_spark.sparql.statement import Statement
 
@@ -738,16 +744,20 @@ class Evaluator:
 
     def _resolve(self, p: A.BGP):
         """Per path-free alternative of the BGP: its plain patterns and its
-        special (dump, closure, negated-set) ones.  Path variables are
-        fresh for the whole query, so two BGPs never share one."""
+        special (own block, closure, negated-set) ones.  A variable-predicate
+        pattern is plain while the plain patterns' assignment count stays
+        within ``MAX_ASSIGNMENTS`` (the bound ``_merge_bgps`` applies), else
+        a block of its own.  Path variables are fresh for the whole query,
+        so two BGPs never share one."""
         for alt in pathmod.resolve_paths(p.triples, lambda: Var(self._fresh_var())):
             plain: list = []
             special: list = []
+            var_pred: list = []
             for s, pred, o in alt:
                 if isinstance(pred, str):
                     plain.append((s, IRI(pred), o))
                 elif isinstance(pred, Var):
-                    special.append(("dump", s, pred, o))
+                    var_pred.append((s, pred, o))
                 elif isinstance(pred, (Closure, Maybe)):
                     special.append(("closure", s, pred, o))
                 elif isinstance(pred, pathmod.NegSet):
@@ -756,6 +766,12 @@ class Evaluator:
                     plain.append((s, IRI(pred.iri), o))
                 else:
                     raise SparqlNotImplemented(f"path {pred!r}")
+            for t in var_pred:
+                if self.bgp.assignment_count(plain + [t], p.graph,
+                                             self.dataset) <= MAX_ASSIGNMENTS:
+                    plain.append(t)
+                else:
+                    special.append(("block", *t))
             yield plain, special
 
     def eval_bgp(self, p: A.BGP) -> BindingFrame:
@@ -765,12 +781,10 @@ class Evaluator:
         for plain, special in self._resolve(p):
             bfs: list[BindingFrame] = []
             if plain:
-                text, var_names, raws = self.bgp.compile(
-                    plain, p.graph, dataset=self.dataset, stmt=self.stmt)
-                bfs.append(BindingFrame(_block(text), var_names, raw_vars=raws))
+                bfs.append(self._bgp_frame(plain, p.graph))
             for kind, s, pred, o in special:
-                if kind == "dump":
-                    bfs.append(self._dump_pattern(s, pred, o, p.graph))
+                if kind == "block":
+                    bfs.append(self._bgp_frame([(s, pred, o)], p.graph))
                 elif kind == "negset":
                     bfs.append(self._negset_pattern(s, pred, o, p.graph))
                 else:
@@ -783,6 +797,12 @@ class Evaluator:
         for other in parts[1:]:
             out = self._union(out, other)
         return out
+
+    def _bgp_frame(self, patterns: list, graph) -> BindingFrame:
+        """The patterns compiled by the BGP compiler as one query block."""
+        text, var_names, raws = self.bgp.compile(
+            patterns, graph, dataset=self.dataset, stmt=self.stmt)
+        return BindingFrame(_block(text), var_names, raw_vars=raws)
 
     def _dump_df(self) -> DataFrame:
         return self._dump_provider()
@@ -797,72 +817,15 @@ class Evaluator:
             return dump.filter(F.col("graph").isin([f"<{g}>" for g in ds.default]))
         return dump.filter(F.lit(False))
 
-    def _graphs_in(self, graphs) -> str:
-        return f"graph IN ({', '.join(self.stmt.param(f'<{g}>') for g in graphs)})"
-
-    def _dump_pattern(self, s, pred, o, graph, where=()) -> BindingFrame:
-        """Variable-predicate pattern: scan the (virtual) dump."""
-        ds = self.dataset
-        where = list(where)
-        if graph is None:
-            if ds is None:
-                where.append("graph IS NULL")
-            elif ds.default:
-                # FROM: the default graph is EXACTLY the merge of the listed
-                # graphs; store-default (graph-less) triples are excluded
-                where.append(self._graphs_in(ds.default))
-            else:
-                where.append("false")
-        elif isinstance(graph, IRI):
-            if ds is not None and graph.value not in ds.named:
-                where.append("false")
-            else:
-                where.append(f"graph = {self.stmt.param(f'<{graph.value}>')}")
-        term_vars: set[str] = set()
-        cols: list[str] = []
-
-        def bind(term, lex_col, dt_col=None, lang_col=None, num=True):
-            if isinstance(term, (Var, BNodeT)):
-                name = term.name if isinstance(term, Var) else "__bn_" + term.label
-                term_vars.add(name)
-                cols.extend(f"{e} AS {sql_ident(name + sfx)}" for e, sfx in zip(
-                    (lex_col, dt_col or NULL_S, lang_col or NULL_S,
-                     f"try_cast({lex_col} AS DOUBLE)" if num else NULL_D),
-                    SHADOWS))
-            else:
-                lex, dt, lang = encode_term(term)
-                where.append(f"{lex_col} = {self.stmt.param(lex)}")
-                if dt_col:
-                    where.append(f"{dt_col} <=> "
-                                 f"{NULL_S if dt is None else self.stmt.param(dt)}")
-
-        bind(s, "subj")
-        bind(pred, "pred")
-        bind(o, "obj", "obj_dt", "obj_lang")
-        if isinstance(graph, Var):
-            bind(graph, "graph", num=False)
-            if ds is None:
-                where.append("graph IS NOT NULL")
-            elif ds.named:
-                where.append(self._graphs_in(ds.named))
-            else:
-                where.append("false")
-        dump = self.stmt.view(self._dump_df())
-        body = f"SELECT {_select_list(cols)} FROM {dump} AS d"
-        if where:
-            body += " WHERE " + " AND ".join(f"({w})" for w in where)
-        return BindingFrame(_block(body), term_vars)
-
     def _negset_pattern(self, s, pred, o, graph) -> BindingFrame:
         """Negated property set ``!(:p|^:q)`` — SPARQL 1.1 §18.2.2.3:
         ``!(F|^I)`` is the (multiset) union of NPS over the forward members
         and the inverse of NPS over the ``^`` members; an all-inverse set has
-        no forward branch.  Each branch is the variable-predicate dump
-        pattern with ``pred NOT IN excluded`` — every dump arm carries a
-        CONSTANT predicate literal, so Catalyst folds the filter per arm and
-        prunes excluded arms' scans at plan time (same mechanism as static
-        arm pruning for constant predicates).  Multiplicities are preserved
-        (NPS is a filtered triple pattern, not a distinct path closure)."""
+        no forward branch.  Each branch is the pattern's own block, its
+        predicate a variable ``Excluding`` the members: the BGP compiler
+        drops the arms of an excluded constant predicate and filters the
+        others per row.  Multiplicities are preserved (NPS is a filtered
+        triple pattern, not a distinct path closure)."""
         specs = []
         if pred.forward or not pred.inverse:
             specs.append((pred.forward, s, o))
@@ -870,13 +833,8 @@ class Evaluator:
             specs.append((pred.inverse, o, s))
         parts: list[BindingFrame] = []
         for excluded, st, ot in specs:
-            pv = Var(self._fresh_var())
-            where = []
-            if excluded:
-                where.append("NOT (pred IN ("
-                             + ", ".join(self.stmt.param(f"<{i}>") for i in excluded)
-                             + "))")
-            bf = self._dump_pattern(st, pv, ot, graph, where)
+            pv = Excluding(self._fresh_var(), tuple(excluded))
+            bf = self._strip_raw(self._bgp_frame([(st, pv, ot)], graph), {pv.name})
             parts.append(replace(bf, term_vars=bf.term_vars - {pv.name}))
         out = parts[0]
         for other in parts[1:]:
@@ -887,7 +845,13 @@ class Evaluator:
         """Transitive-path pattern (+ / * / ?) — the closure support the
         reference lacks (reference: plan.md:22 "some day: recursive CTEs").
         The closure is a fixpoint of Spark jobs over the path's base
-        relation, its own statement; this statement reads the result."""
+        relation, its own statement; this statement reads the result.  A
+        node is its whole RDF term, (lexical, datatype, language) as one
+        JSON text, so an endpoint keeps its datatype and language.  The
+        zero-length pairs of ``*`` and ``?`` pair each node of the path's
+        own pairs, and each constant endpoint, with itself: SPARQL 1.1
+        §18.4 pairs every node of the graph, so ``?s p* ?o`` leaves out a
+        node that only other predicates touch."""
         inner = pred.part
         min0 = isinstance(pred, Maybe) or (isinstance(pred, Closure) and pred.min0)
         sv, ov = Var(self._fresh_var()), Var(self._fresh_var())
@@ -895,28 +859,38 @@ class Evaluator:
         sub.dataset, sub._fresh_n = self.dataset, self._fresh_n
         base = sub.eval_bgp(A.BGP([(sv, inner, ov)], graph=graph))
         self._fresh_n = sub._fresh_n
-        pairs = sub.stmt.run(f"SELECT {_q('t', sv.name)} AS s, {_q('t', ov.name)} AS o "
-                             f"FROM {base.rel} AS t")
+        pairs = sub.stmt.run("SELECT " + ", ".join(
+            f"to_json(named_struct('lex', {_q('t', v)}, 'dt', {_q('t', v + '__dt')}, "
+            f"'lang', {_q('t', v + '__lang')})) AS {side}"
+            for side, v in (("s", sv.name), ("o", ov.name))) + f" FROM {base.rel} AS t")
         if isinstance(pred, Closure):
             pairs = transitive_closure(pairs, "s", "o")
+        rel = self.stmt.view(pairs)
         if min0:
-            nodes = pairs.select("s").union(pairs.select(F.col("o"))).distinct()
-            pairs = pairs.unionByName(
-                nodes.select(F.col("s"), F.col("s").alias("o"))
-            ).distinct()
+            zero = [f"SELECT s, s FROM {rel}", f"SELECT o, o FROM {rel}"]
+            for term in (s, o):
+                if not isinstance(term, (Var, BNodeT)):
+                    node = "to_json(named_struct(" + ", ".join(
+                        f"'{f}', {NULL_S if v is None else self.stmt.param(v)}"
+                        for f, v in zip(("lex", "dt", "lang"), encode_term(term))) + "))"
+                    zero.append(f"SELECT {node}, {node}")
+            rel = _block(f"SELECT s, o FROM {rel} UNION " + " UNION ".join(zero))
+        node = "'lex STRING, dt STRING, lang STRING'"
+        rel = _block(f"SELECT from_json(s, {node}) AS s, from_json(o, {node}) AS o FROM {rel}")
 
         term_vars: set[str] = set()
         cols: list[str] = []
         where: list[str] = []
-        for term, col in ((s, "s"), (o, "o")):
+        for term, side in ((s, "s"), (o, "o")):
+            lex, dt, lang = (f"p.{side}.{f}" for f in ("lex", "dt", "lang"))
             if isinstance(term, (Var, BNodeT)):
                 name = term.name if isinstance(term, Var) else "__bn_" + term.label
                 term_vars.add(name)
                 cols += [f"{e} AS {sql_ident(name + sfx)}" for e, sfx in zip(
-                    (col, NULL_S, NULL_S, f"try_cast({col} AS DOUBLE)"), SHADOWS)]
+                    (lex, dt, lang, numeric_shadow(lex, dt)), SHADOWS)]
             else:
-                where.append(f"{col} = {self.stmt.param(encode_term(term)[0])}")
-        body = f"SELECT {_select_list(cols)} FROM {self.stmt.view(pairs)} AS p"
+                where.append(f"{lex} = {self.stmt.param(encode_term(term)[0])}")
+        body = f"SELECT {_select_list(cols)} FROM {rel} AS p"
         if where:
             body += " WHERE " + " AND ".join(where)
         return BindingFrame(_block(body), term_vars)

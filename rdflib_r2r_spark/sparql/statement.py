@@ -57,9 +57,8 @@ class Statement:
         return self._sources[key]
 
     def view(self, df: DataFrame) -> str:
-        """A DataFrame the statement reads (a transitive closure, the
-        dump), under a temp view that exists only while the statement is
-        analyzed."""
+        """A DataFrame the statement reads (a transitive closure), under a
+        temp view that exists only while the statement is analyzed."""
         for name, known in self.views.items():
             if known is df:
                 return name

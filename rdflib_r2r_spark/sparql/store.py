@@ -98,7 +98,7 @@ class SparkR2RStore:
         """The full (virtual) triple dump: a lazy DataFrame plan, compiled
         once and reused."""
         if self._dump is None:
-            self._dump = self.compiler.compile(self.tmaps)
+            self._dump = BGPCompiler(self.tmaps, self.compiler).dump()
         return self._dump
 
     # -- query --------------------------------------------------------------------

@@ -23,6 +23,7 @@ from rdflib_r2r_spark.mapping import (
     direct_mapping,
 )
 from rdflib_r2r_spark.oracle import mapping_to_duckdb_sql
+from rdflib_r2r_spark.sparql.bgp import BGPCompiler
 
 D = "http://localhost:8890/Demo/"
 
@@ -92,7 +93,7 @@ def run_both(spark, tmaps, tables):
         spark,
         {name: spark.createDataFrame(pdf) for name, pdf in tables.items()},
     )
-    got = comp.compile(tmaps).toPandas()
+    got = BGPCompiler(tmaps, comp).dump().toPandas()
     con = duckdb.connect()
     for name, pdf in tables.items():
         con.register(name, pdf)
@@ -133,7 +134,7 @@ def test_blank_node_and_sql_query_source(spark):
         ),
     )
     comp = SparkMappingCompiler(spark, {"LIKES": spark.createDataFrame(likes)})
-    got = comp.compile([tmap]).toPandas()
+    got = BGPCompiler([tmap], comp).dump().toPandas()
     con = duckdb.connect()
     con.register("LIKES", likes)
     want = con.execute(mapping_to_duckdb_sql([tmap])).fetchdf()
@@ -152,7 +153,7 @@ def test_direct_mapping_generator(spark):
         foreign_keys={"EMP": [(["deptno"], "DEPT", ["deptno"])]},
     )
     comp = SparkMappingCompiler(spark, {"DEPT": sdep, "EMP": semp})
-    got = comp.compile(tmaps).toPandas()
+    got = BGPCompiler(tmaps, comp).dump().toPandas()
     con = duckdb.connect()
     con.register("DEPT", dept)
     con.register("EMP", emp)
@@ -179,7 +180,7 @@ def test_graph_map(spark):
         ),
     )
     comp = SparkMappingCompiler(spark, {"t": spark.createDataFrame(t)})
-    got = comp.compile([tmap]).toPandas()
+    got = BGPCompiler([tmap], comp).dump().toPandas()
     assert list(got["graph"]) == ["<http://ex/g1>"]
 
 

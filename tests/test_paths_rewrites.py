@@ -19,6 +19,7 @@ from rdflib_r2r_spark.oracle import mapping_to_duckdb_sql
 from rdflib_r2r_spark.paths import Alt, Inv, Pred, Seq, resolve_paths, transitive_closure
 from rdflib_r2r_spark.rewrites import add_chain_maps, chain_pred
 from rdflib_r2r_spark.sparql import SparkR2RStore
+from rdflib_r2r_spark.sparql.bgp import BGPCompiler
 
 EX = "http://ex.org/"
 
@@ -182,7 +183,7 @@ def test_chain_maps_rewrite_and_compile(spark):
         spark,
         {n: spark.read.parquet(f"/root/testdata/sf0.001/{n}.parquet") for n in ("nation", "region")},
     )
-    dump = comp.compile(tmaps)
+    dump = BGPCompiler(tmaps, comp).dump()
     import duckdb
 
     con = duckdb.connect()
@@ -226,7 +227,7 @@ def test_same_table_tmaps_share_one_scan(spark):
         pomaps=(PredicateObjectMap(predicates=(const_iri(EX + "v"),),
                                    objects=(TermMap(column="v"),)),),
     )
-    df = SparkMappingCompiler(spark, {"T": t}).compile([main, aux])
+    df = BGPCompiler([main, aux], SparkMappingCompiler(spark, {"T": t})).dump()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan ") == 1, plan
     assert df.count() == 4
@@ -243,3 +244,58 @@ def test_transitive_closure_nonconvergence_raises(spark):
     # and with enough rounds the same graph converges fine
     tc = {(r["src"], r["dst"]) for r in transitive_closure(edges, max_iter=10).collect()}
     assert (0, 6) in tc and len(tc) == 21
+
+
+# -- closures through the SPARQL front end ------------------------------------
+
+
+@pytest.fixture(scope="module")
+def chain_store(spark):
+    t = spark.createDataFrame([(1, 2, 7, "one"), (2, 3, 8, "two"), (3, None, 9, None)],
+                              "id int, nxt int, n int, lab string")
+    tmap = TriplesMap(
+        name="t", source=LogicalSource(table="t"),
+        subject_map=SubjectMap(template=EX + "a{id}"),
+        pomaps=(
+            PredicateObjectMap(predicates=(const_iri(EX + "next"),),
+                               objects=(TermMap(template=EX + "a{nxt}", term_type="IRI"),)),
+            PredicateObjectMap(predicates=(const_iri(EX + "n"),),
+                               objects=(TermMap(column="n"),)),
+            PredicateObjectMap(predicates=(const_iri(EX + "lab"),),
+                               objects=(TermMap(column="lab", language="en"),)),
+        ),
+    )
+    return SparkR2RStore(spark, {"t": t}, [tmap], init_ns={"ex": EX})
+
+
+def test_zero_or_more_path(chain_store):
+    """``p*`` pairs each node of its pairs with itself, and the ``p+``
+    pairs: a1 -> a2 -> a3."""
+    a = [f"<{EX}a{i}>" for i in (1, 2, 3)]
+    df = chain_store.query("SELECT ?s ?o { ?s ex:next* ?o }")
+    assert {(r["s"], r["o"]) for r in df.collect()} == {
+        (a[0], a[0]), (a[1], a[1]), (a[2], a[2]), (a[0], a[1]), (a[1], a[2]), (a[0], a[2])}
+    df = chain_store.query("SELECT ?o { ex:a1 ex:next* ?o }")
+    assert {r["o"] for r in df.collect()} == set(a)
+
+
+@pytest.mark.parametrize("query", ["SELECT ?o { ex:zz ex:next* ?o }",
+                                   "SELECT ?o { ex:zz ex:next? ?o }",
+                                   "SELECT ?o { ?o ex:next* ex:zz }"])
+def test_zero_length_path_from_a_constant_on_no_edge(chain_store, query):
+    """A constant endpoint is its own zero-length match (SPARQL 1.1
+    §18.5), though no edge of the path touches it."""
+    assert {r["o"] for r in chain_store.query(query).collect()} == {f"<{EX}zz>"}
+
+
+@pytest.mark.parametrize("pred", ["ex:n", "ex:lab"])
+def test_closure_endpoint_keeps_its_datatype_and_language(chain_store, pred):
+    """A literal reached by ``p+`` is the term ``p`` reaches: its lexical,
+    datatype and language."""
+    def terms_of(query):
+        df, _ = chain_store._query_bf(query)
+        return {(r["o"], r["o__dt"], r["o__lang"]) for r in df.collect()}
+
+    plain = terms_of(f"SELECT ?o {{ ex:a1 {pred} ?o }}")
+    assert terms_of(f"SELECT ?o {{ ex:a1 {pred}+ ?o }}") == plain
+    assert plain in ({("7", terms.XSD_INTEGER, None)}, {("one", None, "en")})

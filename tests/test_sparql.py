@@ -9,6 +9,8 @@ reference could only check by executing.
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -841,8 +843,8 @@ def test_from_moves_named_graph_into_default(quads_store):
 
 
 def test_from_merges_graphs_dump_path(quads_store):
-    # variable predicate -> dump-scan path; two FROM clauses merge both
-    # named graphs into the default graph
+    # a variable predicate; two FROM clauses merge both named graphs into
+    # the default graph
     df = quads_store.query(
         "select ?s ?p ?o from <http://ex.org/g/names> "
         "from <http://ex.org/g/keys> { ?s ?p ?o }"
@@ -1196,7 +1198,8 @@ def test_plan_text_does_not_depend_on_hash_seed():
 
 
 def _dump_terms(tables: dict, tmaps) -> list[tuple]:
-    """The mapping's triples from its DuckDB dump, each term (lex, dt, lang)."""
+    """The mapping's quads from its DuckDB dump, each term (lex, dt, lang),
+    the graph None in the default graph."""
     import duckdb
 
     from rdflib_r2r_spark.oracle import mapping_to_duckdb_sql
@@ -1208,13 +1211,15 @@ def _dump_terms(tables: dict, tmaps) -> list[tuple]:
                     + ", ".join(f'"{c}" {t.replace("string", "VARCHAR")}' for c, t in cols)
                     + ")")
         con.executemany(f'INSERT INTO "{name}" VALUES ({", ".join("?" * len(cols))})', data)
-    return [((s, None, None), (p, None, None), (o, dt, lang))
-            for s, p, o, dt, lang, _g in con.execute(mapping_to_duckdb_sql(tmaps)).fetchall()]
+    return [((s, None, None), (p, None, None), (o, dt, lang), g and (g, None, None))
+            for s, p, o, dt, lang, g in con.execute(mapping_to_duckdb_sql(tmaps)).fetchall()]
 
 
-def _match(triples: list[tuple], patterns: list[tuple], names: list[str]) -> list[tuple]:
-    """A BGP's solutions over the triples by nested loops (RDF term
-    equality), projected to the variables' lexicals."""
+def _match(quads: list[tuple], patterns: list[tuple], names: list[str],
+           graph: str | None = None) -> list[tuple]:
+    """A BGP's solutions over the quads by nested loops (RDF term
+    equality), in the default graph or, under ``graph``, in a named graph,
+    projected to the variables' lexicals."""
     def bind(sol: dict, t: str, term: tuple) -> bool:
         if t.startswith("?"):
             return sol.setdefault(t, term) == term
@@ -1224,9 +1229,10 @@ def _match(triples: list[tuple], patterns: list[tuple], names: list[str]) -> lis
     for pattern in patterns:
         matched = []
         for sol in sols:
-            for triple in triples:
+            for *triple, g in quads:
                 b = dict(sol)
-                if all(bind(b, t, term) for t, term in zip(pattern, triple)):
+                in_graph = g is None if graph is None else g is not None and bind(b, graph, g)
+                if in_graph and all(bind(b, t, term) for t, term in zip(pattern, triple)):
                     matched.append(b)
         sols = matched
     return sorted(tuple(sol["?" + n][0] for n in names) for sol in sols)
@@ -1254,12 +1260,25 @@ def _iri(template: str) -> TermMap:
     return TermMap(template=_X + template, term_type="IRI")
 
 
-@pytest.mark.parametrize("tables, tmaps, patterns, names, folded", [
+def _pom(pred: str, obj: TermMap, *graphs: TermMap) -> PredicateObjectMap:
+    return PredicateObjectMap(predicates=(const_iri(_X + pred),), objects=(obj,), graphs=graphs)
+
+
+# a class arm, two predicates, and a graph map on each predicate-object map
+# (b's graph is NULL where a is NULL)
+_CLASS_AND_GRAPHS = TriplesMap(
+    name="T", source=LogicalSource(table="T"),
+    subject_map=SubjectMap(template=_X + "t{id}", classes=(_X + "C",)),
+    pomaps=(_pom("p", TermMap(column="a", datatype=_INT), const_iri(_X + "g1")),
+            _pom("q", TermMap(column="b", datatype=_INT), _iri("g{a}"))))
+
+
+@pytest.mark.parametrize("tables, tmaps, patterns, names, folded, graph", [
     pytest.param(
         _INT_OR_STR_IRI,
         [_tmap(_X + "t{id}", (_X + "f", _iri("f{a}")), (_X + "f", _iri("f{s}")), name="T"),
          _tmap(_X + "u{k}", (_X + "g", _iri("f{b}")), name="U")],
-        [("?x", "f", "?o"), ("?y", "g", "?o")], ["x", "o", "y"], True,
+        [("?x", "f", "?o"), ("?y", "g", "?o")], ["x", "o", "y"], True, None,
         id="int-and-string-slot-render-one-iri"),
     pytest.param(
         _IRI_OR_LITERAL,
@@ -1267,7 +1286,7 @@ def _iri(template: str) -> TermMap:
                name="T"),
          _tmap(_X + "u{k}", (_X + "w", TermMap(column="t")), (_X + "w", _iri("f{b}")),
                name="U")],
-        [("?x", "v", "?o"), ("?y", "w", "?o")], ["x", "o", "y"], True,
+        [("?x", "v", "?o"), ("?y", "w", "?o")], ["x", "o", "y"], True, None,
         id="iri-and-literal-alternatives"),
     pytest.param(
         # ?o is a subject too, so the literal alternative is dropped
@@ -1275,41 +1294,117 @@ def _iri(template: str) -> TermMap:
         [_tmap(_X + "t{id}", (_X + "v", _iri("f{a}")), (_X + "v", TermMap(column="s")),
                name="T"),
          _tmap(_X + "f{id}", (_X + "name", TermMap(column="name")), name="R")],
-        [("?x", "v", "?o"), ("?o", "name", "?n")], ["x", "o", "n"], False,
+        [("?x", "v", "?o"), ("?o", "name", "?n")], ["x", "o", "n"], False, None,
         id="literal-alternative-cannot-be-a-subject"),
     pytest.param(
         _NULL_ALTS,
         [_tmap(_X + "t{id}", (_X + "p", TermMap(column="a", datatype=_INT)),
                (_X + "p", TermMap(column="b", datatype=_INT)), name="T"),
          _tmap(_X + "u{k}", (_X + "q", TermMap(column="c", datatype=_INT)), name="U")],
-        [("?x", "p", "?o"), ("?y", "q", "?o")], ["x", "o", "y"], True,
+        [("?x", "p", "?o"), ("?y", "q", "?o")], ["x", "o", "y"], True, None,
         id="alternative-null-on-some-rows"),
     pytest.param(
         _NULL_ALTS,
         [_tmap(_X + "t{id}", (_X + "p", TermMap(column="a", datatype=_INT)),
                (_X + "p", TermMap(column="b", datatype=_INT)), name="T")],
-        [("?x", "p", "?o"), ("?x", "p", "?o2")], ["x", "o", "o2"], True,
+        [("?x", "p", "?o"), ("?x", "p", "?o2")], ["x", "o", "o2"], True, None,
         id="two-folded-patterns-in-one-star"),
+    pytest.param(
+        _NULL_ALTS,
+        [TriplesMap(name="T", source=LogicalSource(table="T"),
+                    subject_map=SubjectMap(template=_X + "t{id}", classes=(_X + "C",)),
+                    pomaps=(_pom("p", TermMap(column="a", datatype=_INT)),
+                            _pom("q", TermMap(column="b", datatype=_INT))))],
+        [("?s", "?p", "?o")], ["s", "p", "o"], True, None,
+        id="variable-predicate-with-a-class-arm"),
+    pytest.param(
+        # the shared ?p drops q from T's fold against U, not against T
+        _NULL_ALTS,
+        [_tmap(_X + "t{id}", (_X + "p", TermMap(column="a", datatype=_INT)),
+               (_X + "q", TermMap(column="b", datatype=_INT)), name="T"),
+         _tmap(_X + "u{k}", (_X + "p", TermMap(column="c", datatype=_INT)), name="U")],
+        [("?s", "?p", "?o"), ("?x", "?p", "?y")], ["s", "p", "o", "x", "y"], True, None,
+        id="shared-variable-predicate"),
+    pytest.param(
+        _NULL_ALTS, [_CLASS_AND_GRAPHS],
+        [("?s", "?p", "?o")], ["s", "p", "o", "g"], True, "?g",
+        id="variable-predicate-in-named-graphs"),
+    pytest.param(
+        # q's template graph is NULL where a is: those triples are in the
+        # default graph, beside the class arm's
+        _NULL_ALTS, [_CLASS_AND_GRAPHS],
+        [("?s", "?p", "?o")], ["s", "p", "o"], False, None,
+        id="variable-predicate-over-a-null-graph"),
 ])
 def test_folded_alternatives_answer_as_the_dump(spark, tables, tmaps, patterns, names,
-                                                folded):
+                                                folded, graph):
     """A pattern whose arms share a triples map is one scan of its star,
     its alternatives unrolled per row: each answer equals the BGP matched
     over the mapping's DuckDB dump, so alternatives with different renders
     compare their terms, not their raw values, and a NULL alternative
     yields no triple on its row.  An alternative that can never agree
     with another occurrence of its variable is dropped before the fold, and
-    one left alone is a plain arm (``folded`` False)."""
+    one left alone is a plain arm (``folded`` False).  A variable predicate
+    or graph folds the arms' predicates and graphs too."""
     store = SparkR2RStore(spark, {name: spark.createDataFrame(data, schema)
                                   for name, (schema, data) in tables.items()}, tmaps)
     where = " . ".join(" ".join(t if t.startswith("?") else f"<{_X}{t}>" for t in pattern)
                        for pattern in patterns)
+    if graph is not None:
+        where = f"GRAPH {graph} {{ {where} }}"
     df = store.query(f"SELECT {' '.join('?' + n for n in names)} {{ {where} }}")
     got = sorted(tuple(r[n] for n in names) for r in df.collect())
-    assert got == _match(_dump_terms(tables, tmaps), patterns, names)
+    assert got == _match(_dump_terms(tables, tmaps), patterns, names, graph)
     assert got, "the case must have answers"
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert ("Generate inline" in plan) == folded
+
+
+def _tables_store(spark, tables: dict, tmaps) -> SparkR2RStore:
+    return SparkR2RStore(spark, {name: spark.createDataFrame(data, schema)
+                                 for name, (schema, data) in tables.items()}, tmaps)
+
+
+def test_dataset_clause_dispatches_a_template_graph_per_row(spark):
+    """Under FROM and FROM NAMED a template graph map is kept: its
+    triples are those whose rendered graph the clause lists, as in the
+    dump's graph column (FROM <g1> takes p's constant graph and the row
+    where q's g{a} renders g1 or g4)."""
+    store = _tables_store(spark, _NULL_ALTS, [_CLASS_AND_GRAPHS])
+    listed = (f"<{_X}g1>", f"<{_X}g4>")
+    quads = [(g[0], s[0], p[0], o[0]) for s, p, o, g in _dump_terms(_NULL_ALTS, [_CLASS_AND_GRAPHS])
+             if g is not None and g[0] in listed]
+    assert {q[0] for q in quads} == set(listed)
+    got = store.query("SELECT ?s ?p ?o " + " ".join(f"FROM {g}" for g in listed)
+                      + " { ?s ?p ?o }")
+    assert sorted(rows(got, "s", "p", "o")) == sorted(q[1:] for q in quads)
+    got = store.query("SELECT ?g ?s ?p ?o " + " ".join(f"FROM NAMED {g}" for g in listed)
+                      + " { GRAPH ?g { ?s ?p ?o } }")
+    assert sorted(rows(got, "g", "s", "p", "o")) == sorted(quads)
+
+
+def test_negated_set_drops_the_excluded_arms(spark):
+    """An excluded constant predicate is no candidate, and a template
+    predicate is filtered per row: ``!(a|p|r1)`` over T's class, p and q
+    and U's r{c} leaves q and U's other predicates, each one plain arm, no
+    fold left to unroll."""
+    u = TriplesMap(
+        name="U", source=LogicalSource(table="U"), subject_map=SubjectMap(template=_X + "u{k}"),
+        pomaps=(PredicateObjectMap(predicates=(_iri("r{c}"),),
+                                   objects=(TermMap(column="c", datatype=_INT),)),))
+    t = TriplesMap(name="T", source=LogicalSource(table="T"),
+                   subject_map=SubjectMap(template=_X + "t{id}", classes=(_X + "C",)),
+                   pomaps=(_pom("p", TermMap(column="a", datatype=_INT)),
+                           _pom("q", TermMap(column="b", datatype=_INT))))
+    tmaps = [t, u]
+    store = _tables_store(spark, _NULL_ALTS, tmaps)
+    excluded = {terms.RDF_TYPE, _X + "p", _X + "r1"}
+    want = sorted((s[0], o[0]) for s, p, o, _ in _dump_terms(_NULL_ALTS, tmaps)
+                  if p[0][1:-1] not in excluded)
+    df = store.query(f"SELECT ?s ?o {{ ?s !(a|<{_X}p>|<{_X}r1>) ?o }}")
+    assert sorted((r["s"], r["o"]) for r in df.collect()) == want
+    assert {s for s, _ in want} >= {f"<{_X}t2>", f"<{_X}u11>"}
+    assert "Generate" not in df._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_group_bgps_merge_within_the_assignment_bound(spark, monkeypatch):
@@ -1340,3 +1435,34 @@ def test_group_bgps_merge_within_the_assignment_bound(spark, monkeypatch):
         (f"<{_X}a1>", f"<{_X}a1>"), (f"<{_X}a1>", f"<{_X}b1>"),
         (f"<{_X}b1>", f"<{_X}a1>"), (f"<{_X}b1>", f"<{_X}b1>"),
         (f"<{_X}a2>", f"<{_X}a2>"), (f"<{_X}b3>", f"<{_X}b3>")}
+
+
+# -- one literal-matching rule for both pattern shapes ------------------------
+
+
+@pytest.fixture(scope="module")
+def numbers_store(spark):
+    return _store_over(spark, [(1, 7, 3.5, "x", Decimal("3.50")), (2, 8, 1.0, "7", Decimal("7.13"))],
+                       "id int, n int, d double, s string, m decimal(12,2)",
+                       [_tmap(_X + "a{id}", (_X + "n", TermMap(column="n")),
+                              (_X + "d", TermMap(column="d")), (_X + "s", TermMap(column="s")),
+                              (_X + "m", TermMap(column="m")))])
+
+
+@pytest.mark.parametrize("literal, expected", [
+    ("7", {"a1"}), ("7.0", {"a1"}), ("7.5", set()), ("7.9e0", set()), ("8.2", set()),
+    ("3.50", {"a1"}), ("3.5e0", {"a1"}), ('"7"', {"a2"}), ("99999999999", set()),
+    ("99999999999999999999999", set()), ("7.125", set()), ("7.13", {"a2"}),
+])
+def test_variable_predicate_matches_a_literal_as_each_predicate_does(numbers_store, literal,
+                                                                     expected):
+    """``?s ?p L`` answers what ``?s <p> L`` answers over every predicate:
+    a numeric literal matches a numeric column by value, one that an
+    integral or decimal column cannot hold exactly never matches it (no
+    cast truncates, rounds or overflows), and a plain literal matches only
+    a string."""
+    def subjects(where: str) -> set:
+        return {r["s"] for r in numbers_store.query(f"SELECT ?s {{ {where} }}").collect()}
+
+    each = set().union(*(subjects(f"?s <{_X}{p}> {literal}") for p in "ndsm"))
+    assert subjects(f"?s ?p {literal}") == each == {f"<{_X}{a}>" for a in expected}

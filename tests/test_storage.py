@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from rdflib_r2r_spark import storage
 from rdflib_r2r_spark.compiler import SparkMappingCompiler
+from rdflib_r2r_spark.sparql.bgp import BGPCompiler
 
 
 def _small_triples(spark):
@@ -22,7 +23,7 @@ def _small_triples(spark):
         spark,
         {n: spark.read.parquet(f"/root/testdata/sf0.001/{n}.parquet") for n in ("nation", "region")},
     )
-    return comp.compile(E.geo_tmaps())
+    return BGPCompiler(E.geo_tmaps(), comp).dump()
 
 
 def _write_bucketed(df, target, num_buckets):

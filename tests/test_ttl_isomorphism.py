@@ -12,6 +12,7 @@ import pytest
 from rdflib_r2r_spark.compiler import SparkMappingCompiler
 from rdflib_r2r_spark.isomorphism import canonicalize, graph_diff, isomorphic
 from rdflib_r2r_spark.oracle import mapping_to_duckdb_sql
+from rdflib_r2r_spark.sparql.bgp import BGPCompiler
 from rdflib_r2r_spark.ttl import mapping_from_ttl, parse_ttl_with_base
 
 # -- D009/D014-style: FK ref-object map, sqlQuery source, bnode subjects ----
@@ -71,7 +72,7 @@ def test_parse_ttl_basics():
 def _compile_both(spark, ttl, tables):
     tmaps = mapping_from_ttl(ttl)
     comp = SparkMappingCompiler(spark, {n: spark.createDataFrame(df) for n, df in tables.items()})
-    got = comp.compile(tmaps).toPandas()
+    got = BGPCompiler(tmaps, comp).dump().toPandas()
     con = duckdb.connect()
     for n, df in tables.items():
         con.register(n, df)
